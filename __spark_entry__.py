@@ -1192,14 +1192,7 @@ def _sql_zorder(bits: int = 16) -> str:
 
 def _q_minhash_sig(spark, sf):
     docs = load_table(spark, sf, "documents")
-    hs = (
-        spread_scan(docs.select("doc_id", "text"), by="doc_id")
-        .select("doc_id", fn.normalize(F.col("text")).alias("__n"))
-        .withColumn("__sh", fn.shingles(F.col("__n"), 3))
-        .withColumn("__hs", F.transform(F.col("__sh"), lambda t: fn.md5_long(t)))
-        .select("doc_id", "__hs")
-        .transform(stage, eager=False)  # 8 perm mins below each reference __hs
-    )
+    hs = llm._shingle_hashes(docs, "doc_id", "text", 3)  # staged: 8 perm mins read __hs
     return hs.select(
         "doc_id", F.to_json(fn.minhash_signature_from_hashes(F.col("__hs"), 8)).alias("sig")
     )

@@ -20,13 +20,14 @@ needs.  Design rules:
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from backend_spark import functions as fn
 from backend_spark.operators.graph import connected_components
-from backend_spark.scale import LoopCuts, spread_scan, stage, undersplit
+from backend_spark.scale import LoopCuts, spread_scan, stage
 
 
 # ---------------------------------------------------------------------------
@@ -56,6 +57,181 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str, normalize: bool = Fal
     )
 
 
+# ---------------------------------------------------------------------------
+# similarity-join kernel: minhash_lsh_pairs / crosscorpus_neardup (MinHash
+# bands) and ngram_jaccard_pairs / containment_pairs (PPJoin prefixes) are
+# parameter sets over these stages
+# ---------------------------------------------------------------------------
+
+# Verify steps compare round(metric, 6) >= threshold, so the smallest
+# qualifying overlap i satisfies i/n >= threshold - 5e-7.  Every prefix /
+# length / positional bound therefore ceils over (threshold - _CEIL_EPS):
+# a float-rounded-UP ceil of the bare product (e.g. ceil(0.28*25) = 8,
+# true ceil 7) would shorten a prefix and silently drop qualifying pairs.
+# Erring low only lengthens prefixes — exactness is preserved.
+_CEIL_EPS = 5e-7
+
+
+def _shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int,
+    distinct: bool = False, spread: bool = True,
+) -> DataFrame:
+    """Staged ``(id_col, __hs)``: md5_long of each ``shingle_n``-char
+    shingle of the normalized text (``distinct``: as a set).  ``spread``
+    first, as this chain is the dominant per-row compute.  The stage cut
+    is load-bearing: ``__hs`` is read inside ``num_perm`` min-fold
+    lambdas, where a computed array re-runs the chain per reference
+    (measured ~10x)."""
+    src = df.select(F.col(id_col), F.col(text_col))
+    if spread:
+        src = spread_scan(src, by=id_col)
+    sh = fn.shingles(fn.normalize(F.col(text_col)), shingle_n)
+    hs = F.transform(sh, lambda t: fn.md5_long(t))
+    return src.select(
+        F.col(id_col), (F.array_distinct(hs) if distinct else hs).alias("__hs")
+    ).transform(stage, eager=False)
+
+
+def _minhash_bands(
+    df: DataFrame, id_col: str, text_col: str, num_perm: int, bands: int,
+    shingle_n: int, spread: bool = True, keys_col: str = "__keys",
+) -> tuple[DataFrame, DataFrame]:
+    """``(hashes, banded)``: (id, sorted ``__hs``, ``|__hs|``) for
+    :func:`_jaccard_verify`, and one (id, ``keys_col`` band-key array,
+    ``__band``, ``__key``) row per band for :func:`_band_pairs` — the
+    shingle arrays never enter the band join."""
+    if num_perm % bands:
+        raise ValueError(
+            f"num_perm ({num_perm}) must be divisible by bands ({bands}); a "
+            "remainder would compute signature permutations that never get "
+            "banded, silently lowering recall vs the requested num_perm"
+        )
+    rows = num_perm // bands
+    sig = (
+        _shingle_hashes(df, id_col, text_col, shingle_n, spread=spread)
+        .withColumn("__sig", fn.minhash_signature_from_hashes(F.col("__hs"), num_perm))
+        .transform(stage, eager=False)
+    )
+    keys = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.concat_ws(
+            "-", F.transform(F.slice("__sig", b * rows + 1, rows), lambda x: x.cast("string"))
+        ),
+    )
+    banded = sig.select(F.col(id_col), keys.alias(keys_col)).select(
+        F.col(id_col), F.col(keys_col), F.posexplode(keys_col).alias("__band", "__key")
+    )
+    return sig.select(F.col(id_col), F.array_sort("__hs"), F.size("__hs")), banded
+
+
+def _band_pairs(banded1: DataFrame, banded2: DataFrame, self_join: bool = False) -> DataFrame:
+    """Candidate pairs (id1, id2) of two :func:`_minhash_bands` sides by
+    (band, key) equi-join: id1 < id2 for a ``self_join``, else
+    ``banded2`` is the small, broadcast side (the two sides then need
+    distinct id and ``keys_col`` names).  A pair agreeing in several
+    bands joins once per band; keeping only its FIRST agreeing band is an
+    in-stage filter that replaces a candidate ``distinct`` and its
+    exchange (bench corpus: 1.60M instances -> the same 1.48M pairs).
+    posexplode's band index is 0-based, array_position 1-based."""
+    if self_join:
+        banded1, banded2 = (banded1.toDF(f"id{i}", f"__k{i}", "__band", "__key") for i in (1, 2))
+    id1, k1, id2, k2 = banded1.columns[:2] + banded2.columns[:2]
+    agree = F.zip_with(k1, k2, lambda a, b: a == b)
+    first = F.col("__band") == F.array_position(agree, F.lit(True)) - 1
+    return (
+        banded1.join(banded2 if self_join else F.broadcast(banded2), ["__band", "__key"])
+        .where(((F.col(id1) < F.col(id2)) & first) if self_join else first)
+        .select(F.col(id1).alias("id1"), F.col(id2).alias("id2"))
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, hashes1: DataFrame, hashes2: DataFrame, threshold: float,
+    broadcast: bool = False,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs (id1, id2) over sorted hash
+    arrays -> (id1, id2, jaccard), rounded to 6 and >= ``threshold``.
+    Two exact prunes skip the intersect, each with a 1e-6 slack (round
+    lifts a boundary value by <= 5e-7): size ratio (jaccard <= min/max
+    of the sizes) and PPJoin prefix overlap (a qualifying pair shares
+    alpha = ceil((t - 1e-6) * max(n1, n2)) hashes, so the smallest one
+    sits in the first n - alpha + 1 of BOTH sorted arrays; bench corpus:
+    1.48M candidates, 256 verified)."""
+    h2 = hashes2.toDF("id2", "__h2", "__n2")
+    verified = cand.join(hashes1.toDF("id1", "__h1", "__n1"), "id1").join(
+        F.broadcast(h2) if broadcast else h2, "id2"
+    )
+    t = F.lit(float(threshold)) - F.lit(1e-6)
+    longest = F.greatest("__n1", "__n2").cast("double")
+    verified = verified.where(F.least("__n1", "__n2").cast("double") >= t * longest)
+    if threshold > 1e-6:
+        alpha = F.ceil(t * longest).cast("int")
+        p1 = F.greatest(F.col("__n1") - alpha + 1, F.lit(0))
+        p2 = F.greatest(F.col("__n2") - alpha + 1, F.lit(0))
+        verified = verified.where(F.arrays_overlap(F.slice("__h1", 1, p1), F.slice("__h2", 1, p2)))
+    inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
+    union = (F.col("__n1") + F.col("__n2")).cast("double") - inter
+    return (
+        verified.withColumn("jaccard", F.round(inter / union, 6))
+        .where(F.col("jaccard") >= threshold)
+        .select("id1", "id2", "jaccard")
+    )
+
+
+def _rare_first_prefix(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, threshold: float,
+    matches: Callable[[DataFrame, Callable[..., DataFrame]], DataFrame],
+    measure: str, ratio: Callable[[Column], Column],
+) -> DataFrame:
+    """PPJoin pair kernel over distinct shingle sets -> (id1, id2,
+    ``measure``) with ``measure = round(ratio(|S1 ∩ S2|), 6) >= threshold``
+    over the hash arrays ``__h1``/``__h2``.  ``matches(ranked, pin)`` is
+    the operator's prefix join, returning (id1, id2) match instances;
+    ``ranked`` = (id, ``__ord``, ``__n``, ``__plen``) orders shingles
+    rare-first by (document frequency, hash), so frequent ones sort past
+    the pigeonhole prefix ``__plen = n - ceil(t*n) + 1``.
+
+    ``pin`` repartitions to an explicit count when the input under-splits
+    (one probe, via :func:`spread_scan`): AQE byte-coalesces these tiny
+    exchanges onto a few tasks, starving the compute (sf0.1, 1m floor:
+    268 s / 130 s executor time on 10 tasks), and never coalesces a
+    user-numbered shuffle.  ``ranked`` (arrays, before any explode) and
+    the deduped candidates pin ROUND-ROBIN — keyed by id they would
+    collapse into the groupBy's coalescible exchange.  A join on ``__h``
+    pins its sides by that key, replacing its own exchange."""
+    src = df.select(F.col(id_col), F.col(text_col))
+    scan = spread_scan(src, by=id_col)
+    undersplit = scan is not src  # spread_scan returns its input when well split
+    p = df.sparkSession.sparkContext.defaultParallelism
+
+    def pin(d: DataFrame, *keys: str) -> DataFrame:
+        return d.repartition(p, *keys) if undersplit else d
+
+    sh = _shingle_hashes(scan, id_col, text_col, shingle_n, distinct=True, spread=False)
+    tok = sh.select(F.col(id_col), F.explode("__hs").alias("__h"))
+    dfreq = tok.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
+    ranked = (
+        tok.join(dfreq, "__h")
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_list(F.struct("__df", "__h"))).alias("__sorted"))
+        .select(F.col(id_col), F.transform("__sorted", lambda s: s["__h"]).alias("__ord"))
+        .withColumn("__n", F.size("__ord"))
+        .withColumn(
+            "__plen",
+            F.col("__n") - F.ceil(F.lit(threshold - _CEIL_EPS) * F.col("__n")).cast("int") + 1,
+        )
+    )
+    cand = pin(matches(pin(ranked), pin).select("id1", "id2").distinct())
+    inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
+    return (
+        cand.join(sh.toDF("id1", "__h1"), "id1")
+        .join(sh.toDF("id2", "__h2"), "id2")
+        .withColumn(measure, F.round(ratio(inter), 6))
+        .where(F.col(measure) >= threshold)
+        .select("id1", "id2", measure)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -69,139 +245,16 @@ def minhash_lsh_pairs(
     Jaccard verification on the candidates only.
 
     signature (num_perm min-hashes over `shingle_n`-char shingles) →
-    split into `bands` band-keys → equi-join on (band, key) → distinct
-    (id1<id2) candidates → verify true shingle-set Jaccard ≥ threshold.
+    split into `bands` band-keys → equi-join on (band, key), one row per
+    id1<id2 pair → verify true shingle-set Jaccard ≥ threshold.
 
     The only shuffles are the band-key self-join and the final verify
     join; no all-pairs stage exists at any scale.  Returns
     (id1, id2, jaccard).
     """
-    if num_perm % bands:
-        raise ValueError(
-            f"num_perm ({num_perm}) must be divisible by bands ({bands}); a "
-            "remainder would compute signature permutations that never get "
-            "banded, silently lowering recall vs the requested num_perm"
-        )
-    rows_per_band = num_perm // bands
-    # stage each expensive expression as its own column: expressions
-    # referenced inside higher-order lambdas are re-evaluated per element,
-    # so normalize/shingles must be materialized attributes, not inlined
-    # barrier after the hash arrays: the signature's num_perm permutation
-    # mins each reference __hs, and an inlined chain would re-run
-    # normalize+shingle+md5 once per permutation (measured ~10x cost)
-    # spread before the per-doc hash chain: a single-row-group input is
-    # scanned by one task, and normalize+shingle+md5 is the operator's
-    # dominant compute (guide §2.5 input skew; no-op on well-split input)
-    hs_df = (
-        spread_scan(df.select(F.col(id_col), F.col(text_col)), by=id_col)
-        .select(F.col(id_col), fn.normalize(F.col(text_col)).alias("__n"))
-        .withColumn("__sh", fn.shingles(F.col("__n"), shingle_n))
-        .withColumn("__hs", F.transform(F.col("__sh"), lambda t: fn.md5_long(t)))
-        .select(F.col(id_col), F.col("__hs"))
-        .transform(stage, eager=False)
-    )
-    sig = hs_df.withColumn("__sig", fn.minhash_signature_from_hashes(F.col("__hs"), num_perm))
-    # three consumers (banding + both verify sides): materialize once
-    sig = sig.transform(stage, eager=False)
-
-    # verify on the (distinct) shingle *hashes*: same set cardinalities
-    # as the string shingles (md5_long is collision-free at corpus
-    # scale), but the 363k-pair intersect works on bigints, not strings.
-    # The arrays are SORTED here (content-neutral for the set intersect)
-    # so the verify stage can run the PPJoin-style prefix-overlap prune
-    # below — position in a sorted array is what makes the pigeonhole
-    # bound checkable.
-    hash_tbl = sig.select(
-        F.col(id_col), F.array_sort("__hs").alias("__hs"), F.size("__hs").alias("__n")
-    )
-
-    # band the ids + the per-doc band-key array — the heavy shingle
-    # arrays still never enter the band self-join shuffle, and the
-    # `bands` short key strings riding each (id, band, key) row are what
-    # lets a pure codegen predicate keep exactly the pair instance whose
-    # join band is the pair's FIRST agreeing band (the simhash_neardup
-    # first-agree trick).  That replaces the old candidate `distinct` —
-    # a full exchange + hash aggregate of every match instance — with an
-    # in-stage filter, so candidates flow straight into the verify join
-    # (guide §2.4: remove shuffles outright; round-15 measurement:
-    # instances 1.60M -> the same 1.48M distinct pairs, one exchange
-    # round cheaper).
-    keys = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat_ws(
-            "-",
-            F.transform(
-                F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-        ),
-    )
-    banded = sig.select(F.col(id_col), keys.alias("__keys")).select(
-        F.col(id_col),
-        F.col("__keys"),
-        F.posexplode("__keys").alias("__band", "__key"),
-    )
-
-    left = banded.select(
-        F.col(id_col).alias("id1"), "__band", "__key", F.col("__keys").alias("__k1")
-    )
-    right = banded.select(
-        F.col(id_col).alias("id2"), "__band", "__key", F.col("__keys").alias("__k2")
-    )
-    # posexplode's band index is 0-based; array_position is 1-based
-    first_agree = (
-        F.array_position(
-            F.zip_with("__k1", "__k2", lambda a, b: a == b), F.lit(True)
-        )
-        - 1
-    )
-    cand = (
-        left.join(right, ["__band", "__key"])
-        .where((F.col("id1") < F.col("id2")) & (F.col("__band") == first_agree))
-        .select("id1", "id2")
-    )
-    s1 = hash_tbl.select(F.col(id_col).alias("id1"), F.col("__hs").alias("__h1"), F.col("__n").alias("__n1"))
-    s2 = hash_tbl.select(F.col(id_col).alias("id2"), F.col("__hs").alias("__h2"), F.col("__n").alias("__n2"))
-    # exact size-ratio prune BEFORE the O(|shingles|) intersect:
-    # jaccard = i/u with i <= min(n1,n2) and u >= max(n1,n2), so
-    # jaccard <= min/max — a pair whose set-size ratio is below the
-    # threshold can never verify, and skipping it costs one comparison
-    # instead of an array intersect.  The 1e-6 slack covers the
-    # round(.,6) on the final jaccard (which can raise a boundary value
-    # by at most 5e-7), so no pair that would pass is ever pruned.
-    verified = cand.join(s1, "id1").join(s2, "id2").where(
-        F.least("__n1", "__n2").cast("double")
-        >= (F.lit(float(jaccard_threshold)) - F.lit(1e-6))
-        * F.greatest("__n1", "__n2").cast("double")
-    )
-    if jaccard_threshold > 1e-6:
-        # PPJoin prefix-overlap prune (exact, pigeonhole): a qualifying
-        # pair has i = |A∩B| >= alpha := ceil((t - 1e-6) * max(n1, n2))
-        # common hashes (same slack argument as the size-ratio prune),
-        # and in a SORTED array the smallest common element must sit
-        # within the first n - alpha + 1 positions of BOTH sides — so if
-        # the two prefixes share nothing, the pair cannot verify.  The
-        # overlap probe touches ~(1-t) of each array instead of all of
-        # it; only prefix-colliding pairs (the real matches plus a thin
-        # margin) pay the full intersect.  Round-15 measurement on the
-        # bench corpus: 1.48M candidates, 256 verified — the prune is
-        # where the verify stage's time was going.
-        alpha = F.ceil(
-            (F.lit(float(jaccard_threshold)) - F.lit(1e-6))
-            * F.greatest("__n1", "__n2").cast("double")
-        ).cast("int")
-        p1 = F.greatest(F.col("__n1") - alpha + 1, F.lit(0))
-        p2 = F.greatest(F.col("__n2") - alpha + 1, F.lit(0))
-        verified = verified.where(
-            F.arrays_overlap(F.slice("__h1", 1, p1), F.slice("__h2", 1, p2))
-        )
-    inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
-    union = (F.col("__n1") + F.col("__n2")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    hashes, banded = _minhash_bands(df, id_col, text_col, num_perm, bands, shingle_n)
+    cand = _band_pairs(banded, banded, self_join=True)
+    return _jaccard_verify(cand, hashes, hashes, jaccard_threshold)
 
 
 def dedup_minhash(
@@ -280,14 +333,6 @@ def dedup_keep_best(
     )
 
 
-# Verify steps compare round(metric, 6) >= threshold, so the smallest
-# qualifying overlap i satisfies i/n >= threshold - 5e-7.  Every prefix /
-# length / positional bound therefore ceils over (threshold - _CEIL_EPS):
-# a float-rounded-UP ceil of the bare product (e.g. ceil(0.28*25) = 8,
-# true ceil 7) would shorten a prefix and silently drop qualifying pairs.
-# Erring low only lengthens prefixes — exactness is preserved.
-_CEIL_EPS = 5e-7
-
 # tfidf_cosine_pairs: max documents-per-term the fractional df cap may
 # admit before the C(df,2) inverted-index fan-out is declared quadratic
 # and the plan fails fast (round-13 scale probe: the 0.5 fractional
@@ -321,125 +366,40 @@ def ngram_jaccard_pairs(
     document's shingles (the frequent shingles that would create hot
     blocking keys sort to the suffix and never enter the join).
 
-    Shuffles: one groupBy for global shingle document-frequency, one
-    prefix-token equi-join, one verify join — all keyed, no all-pairs
-    stage.  Returns (id1, id2, jaccard), jaccard rounded to 6.
+    Shuffles: shingle document-frequency groupBy, prefix-token join,
+    candidate distinct, verify join — all keyed, no all-pairs stage.
+    Returns (id1, id2, jaccard), jaccard rounded to 6.
     """
-    # shingle+md5 folds are the scan-stage compute: spread single-
-    # row-group inputs first (guide §2.5; no-op on real layouts).  The
-    # same degenerate-layout signal gates the prefix-join parallelism
-    # pin below.
-    spread = undersplit(df.select(F.col(id_col)))
-    p = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        spread_scan(df.select(F.col(id_col), F.col(text_col)), by=id_col)
-        .select(F.col(id_col), fn.normalize(F.col(text_col)).alias("__n"))
-        .withColumn("__sh", fn.shingles(F.col("__n"), shingle_n))
-        .withColumn("__hs", F.array_distinct(F.transform(F.col("__sh"), lambda t: fn.md5_long(t))))
-        .select(id_col, "__hs")
-    )
-    sh = sh.transform(stage, eager=False)  # reused by DF count, prefix, verify
-
-    tok = sh.select(F.col(id_col), F.explode("__hs").alias("__h"))
-    dfreq = tok.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
-    # rare-first ordering: (document frequency, hash) — deterministic
-    ranked = (
-        tok.join(dfreq, "__h")
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list(F.struct("__df", "__h"))).alias("__sorted"))
-        .select(
+    def matches(ranked: DataFrame, pin: Callable[..., DataFrame]) -> DataFrame:
+        # a SELF-join on __h: both sides pin by that key.  posexplode
+        # keeps each prefix token's position for the positional filter
+        pref = ranked.select(
             F.col(id_col),
-            F.transform("__sorted", lambda s: s["__h"]).alias("__ord"),
+            F.col("__n"),
+            F.posexplode(F.slice("__ord", 1, F.col("__plen"))).alias("__i", "__h"),
         )
-        .withColumn("__n", F.size("__ord"))
-        .withColumn(
-            "__plen",
-            F.col("__n") - F.ceil(F.lit(threshold - _CEIL_EPS) * F.col("__n")).cast("int") + 1,
+        left = pin(pref.toDF("id1", "__n1", "__i1", "__h"), "__h")
+        right = pin(pref.toDF("id2", "__n2", "__i2", "__h"), "__h")
+        # length filter: Jaccard >= t forces t*|y| <= |x|.  Positional
+        # filter, per match INSTANCE: Jaccard >= t needs overlap
+        # alpha = ceil(t/(1+t) * (n1+n2)); a qualifying pair's globally-
+        # smallest shared token sits inside BOTH prefixes (alpha >=
+        # ceil(t*n) by the length filter) with every other shared token
+        # after it in both arrays, so that instance has
+        # 1 + min(n1-1-i1, n2-1-i2) >= alpha and the pair survives.
+        n1, n2 = F.col("__n1"), F.col("__n2")
+        t = threshold - _CEIL_EPS
+        alpha = F.ceil(F.lit(threshold / (1.0 + threshold) - _CEIL_EPS) * (n1 + n2))
+        return left.join(right, "__h").where(
+            (F.col("id1") < F.col("id2"))
+            & (n1 >= F.ceil(F.lit(t) * n2))
+            & (n2 >= F.ceil(F.lit(t) * n1))
+            & (1 + F.least(n1 - 1 - F.col("__i1"), n2 - 1 - F.col("__i2")) >= alpha)
         )
-    )
-    if spread:
-        # the self-join probe stage rides ``ranked``'s exchange, which
-        # AQE byte-coalesces to a handful of tasks on a physically tiny
-        # pipeline, starving the operator's dominant compute (guide
-        # §2.5 — measured 2.7x at sf0.1 with the default 1m floor).
-        # Pin with an explicit-count ROUND-ROBIN repartition (a user-
-        # numbered shuffle AQE never coalesces; keying by id would
-        # collapse into the groupBy's coalescible exchange) in the
-        # cheap ARRAY form before the explode.  Gated on the
-        # degenerate-layout signal: no-op at real scale.
-        ranked = ranked.repartition(p)
-    # posexplode keeps each prefix token's position in the globally-ordered
-    # array — fuel for the PPJoin positional filter below
-    pref = ranked.select(
-        F.col(id_col),
-        F.col("__n"),
-        F.posexplode(F.slice("__ord", 1, F.col("__plen"))).alias("__i", "__h"),
-    )
-    left = pref.select(
-        F.col(id_col).alias("id1"), F.col("__n").alias("__n1"), F.col("__i").alias("__i1"), "__h"
-    )
-    right = pref.select(
-        F.col(id_col).alias("id2"), F.col("__n").alias("__n2"), F.col("__i").alias("__i2"), "__h"
-    )
-    if spread:
-        # unlike containment's broadcast probe, this SELF-join sort-
-        # merges on __h, so its own ENSURE exchange (coalescible) feeds
-        # the dominant reduce stage (measured: 130 s executor time on
-        # 10 tasks at sf0.1/1m floor).  An explicit-count repartition
-        # on the join key REPLACES that exchange (the join reuses the
-        # partitioning — same key, same count), so this ships zero
-        # extra bytes while pinning the reduce at full parallelism.
-        left = left.repartition(p, "__h")
-        right = right.repartition(p, "__h")
-    # length filter in the join condition: Jaccard >= t forces t*|y| <= |x|
-    matches = left.join(right, "__h").where(
-        (F.col("id1") < F.col("id2"))
-        & (F.col("__n1") >= F.ceil(F.lit(threshold - _CEIL_EPS) * F.col("__n2")))
-        & (F.col("__n2") >= F.ceil(F.lit(threshold - _CEIL_EPS) * F.col("__n1")))
-    )
-    # positional filter, applied per match INSTANCE (round-15): both
-    # arrays are sorted by the same global order, and Jaccard >= t
-    # needs overlap >= alpha = ceil(t/(1+t) * (n1+n2)).  For a
-    # qualifying pair the globally-smallest shared token sits inside
-    # BOTH prefixes (alpha >= ceil(t*n) follows from the length
-    # filter) and every other shared token sorts after it in both
-    # arrays — so its instance satisfies 1 + min(n1-1-i1, n2-1-i2) >=
-    # alpha, and the pair always survives the instance-level bound.
-    # This is strictly stronger than the previous pair-level filter on
-    # (min i1, min i2) — which mixed the best positions of DIFFERENT
-    # instances — and it prunes before the distinct's shuffle, so the
-    # expensive array-intersect verify below runs on fewer survivors.
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold) - _CEIL_EPS) * (F.col("__n1") + F.col("__n2"))
-    )
-    cand = (
-        matches.where(
-            1
-            + F.least(
-                F.col("__n1") - 1 - F.col("__i1"), F.col("__n2") - 1 - F.col("__i2")
-            )
-            >= alpha
-        )
-        .select("id1", "id2")
-        .distinct()
-    )
-    if spread:
-        # the array-intersect verify below runs in whatever stage the
-        # distinct's (coalescible) exchange feeds; a round-robin user-
-        # numbered repartition of the DEDUPED pairs (small rows, after
-        # the map-side partial distinct has done its work) pins the
-        # verify at full parallelism.
-        cand = cand.repartition(p)
-    s1 = sh.select(F.col(id_col).alias("id1"), F.col("__hs").alias("__h1"))
-    s2 = sh.select(F.col(id_col).alias("id2"), F.col("__hs").alias("__h2"))
-    inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
-    union = (F.size("__h1") + F.size("__h2")).cast("double") - inter
-    return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
+
+    return _rare_first_prefix(
+        df, id_col, text_col, shingle_n, threshold, matches, "jaccard",
+        lambda inter: inter / ((F.size("__h1") + F.size("__h2")).cast("double") - inter),
     )
 
 
@@ -760,114 +720,17 @@ def crosscorpus_neardup(
     scanned once with a map-side join and only candidate ids enter the
     verify shuffle.  The corpus is never self-joined.
     """
-    if num_perm % bands:
-        raise ValueError(
-            f"num_perm ({num_perm}) must be divisible by bands ({bands}); a "
-            "remainder would compute signature permutations that never get "
-            "banded, silently lowering recall vs the requested num_perm"
-        )
-    rows_per_band = num_perm // bands
-
-    def _sig(df: DataFrame, idc: str, txt: str, spread: bool = False) -> DataFrame:
-        # The corpus side carries the heavy per-row compute (normalize +
-        # shingle md5 chain + num_perm minhash folds) and on a coarse
-        # layout (one row group) would run it on one task — spread it.
-        # The bench side is small by contract and gets broadcast; the
-        # extra exchange there would cost more than it spreads.
-        src = df.select(F.col(idc), F.col(txt))
-        if spread:
-            src = spread_scan(src, by=idc)
-        # The post-shingle cut is load-bearing: __hs is referenced
-        # inside num_perm higher-order lambdas downstream, and a
-        # *computed* array re-evaluates per lambda — the cut makes it an
-        # attribute so the md5 chain runs once per row, not 16x.
-        hs = (
-            src.select(F.col(idc), fn.normalize(F.col(txt)).alias("__n"))
-            .withColumn("__sh", fn.shingles(F.col("__n"), shingle_n))
-            .withColumn("__hs", F.transform(F.col("__sh"), lambda t: fn.md5_long(t)))
-            .select(F.col(idc), F.col("__hs"))
-            .transform(stage, eager=False)
-        )
-        return hs.withColumn(
-            "__sig", fn.minhash_signature_from_hashes(F.col("__hs"), num_perm)
-        ).transform(stage, eager=False)
-
-    def _banded(sig: DataFrame, idc: str, kname: str) -> DataFrame:
-        # carries the full band-key array so the join can keep only each
-        # pair's FIRST agreeing band (see minhash_lsh_pairs — the same
-        # first-agree dedup that replaces the candidate `distinct`)
-        keys = F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.concat_ws(
-                "-",
-                F.transform(
-                    F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band),
-                    lambda x: x.cast("string"),
-                ),
-            ),
-        )
-        return sig.select(F.col(idc), keys.alias(kname)).select(
-            F.col(idc),
-            F.col(kname),
-            F.posexplode(kname).alias("__band", "__key"),
-        )
-
-    csig = _sig(corpus, corpus_id, corpus_text, spread=True)
-    bsig = _sig(bench, bench_id, bench_text)
-    # posexplode's band index is 0-based; array_position is 1-based.
-    # A (corpus, bench) pair agreeing in several bands joins once per
-    # agreeing band; keeping only the first-agreeing instance yields
-    # exactly the old distinct's pair set without its exchange + hash
-    # aggregate (guide §2.4) — candidates flow straight into the verify
-    # join.
-    first_agree = (
-        F.array_position(
-            F.zip_with("__kc", "__kb", lambda a, b: a == b), F.lit(True)
-        )
-        - 1
+    # bench: small by contract, so broadcast and never spread
+    chashes, cbanded = _minhash_bands(
+        corpus, corpus_id, corpus_text, num_perm, bands, shingle_n, keys_col="__k1"
     )
-    cand = (
-        _banded(csig, corpus_id, "__kc")
-        .join(F.broadcast(_banded(bsig, bench_id, "__kb")), ["__band", "__key"])
-        .where(F.col("__band") == first_agree)
-        .select(corpus_id, bench_id)
+    bhashes, bbanded = _minhash_bands(
+        bench, bench_id, bench_text, num_perm, bands, shingle_n, spread=False, keys_col="__k2"
     )
-    # verify arrays sorted once per doc (content-neutral for the set
-    # intersect) so the exact PPJoin prefix-overlap prune below works
-    s1 = csig.select(
-        F.col(corpus_id), F.array_sort("__hs").alias("__h1"), F.size("__hs").alias("__n1")
-    )
-    s2 = bsig.select(
-        F.col(bench_id), F.array_sort("__hs").alias("__h2"), F.size("__hs").alias("__n2")
-    )
-    verified = cand.join(s1, corpus_id).join(F.broadcast(s2), bench_id)
-    if jaccard_threshold > 1e-6:
-        # exact pre-prunes lifted from minhash_lsh_pairs (size ratio,
-        # then sorted-prefix overlap): both are necessary conditions for
-        # round(i/u, 6) >= t with the same 1e-6 slack, so no qualifying
-        # pair is ever dropped; non-matching candidates skip the full
-        # intersect.
-        verified = verified.where(
-            F.least("__n1", "__n2").cast("double")
-            >= (F.lit(float(jaccard_threshold)) - F.lit(1e-6))
-            * F.greatest("__n1", "__n2").cast("double")
-        )
-        alpha = F.ceil(
-            (F.lit(float(jaccard_threshold)) - F.lit(1e-6))
-            * F.greatest("__n1", "__n2").cast("double")
-        ).cast("int")
-        p1 = F.greatest(F.col("__n1") - alpha + 1, F.lit(0))
-        p2 = F.greatest(F.col("__n2") - alpha + 1, F.lit(0))
-        verified = verified.where(
-            F.arrays_overlap(F.slice("__h1", 1, p1), F.slice("__h2", 1, p2))
-        )
-    inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
-    union = (F.col("__n1") + F.col("__n2")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select(corpus_id, bench_id, "jaccard")
-    )
+    cand = _band_pairs(cbanded, bbanded)
+    return _jaccard_verify(
+        cand, chashes, bhashes, jaccard_threshold, broadcast=True
+    ).toDF(corpus_id, bench_id, "jaccard")
 
 
 def decontaminate_fuzzy(
@@ -3220,101 +3083,35 @@ def containment_pairs(
     pairs.  Returns (id1, id2, containment) with id1 ≠ id2 (both
     directions can legitimately appear), rounded to 6.
     """
-    # shingle+md5 folds are the scan-stage compute: spread single-
-    # row-group inputs first (guide §2.5; no-op on real layouts).  The
-    # same degenerate-layout signal gates the prefix-join parallelism
-    # pin below.
-    spread = undersplit(df.select(F.col(id_col)))
-    p = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        spread_scan(df.select(F.col(id_col), F.col(text_col)), by=id_col)
-        .select(F.col(id_col), fn.normalize(F.col(text_col)).alias("__nrm"))
-        .withColumn("__sh", fn.shingles(F.col("__nrm"), shingle_n))
-        .withColumn(
-            "__hs", F.array_distinct(F.transform(F.col("__sh"), lambda t: fn.md5_long(t)))
+    def matches(ranked: DataFrame, pin: Callable[..., DataFrame]) -> DataFrame:
+        # cross-prefix positional filter: both arrays share the
+        # SAME global order, so for a qualifying pair the globally-smallest
+        # shared token — always inside S1's pigeonhole prefix — must also
+        # sit inside S2's first n2 - o_min + 1 positions, where
+        # o_min = n1 - plen1 + 1 is the required overlap: all o_min shared
+        # tokens sort after it in BOTH arrays.  Applied per match INSTANCE
+        # it prunes the fanout before the distinct; measured at sf0.1 it
+        # cuts the verify set ~10x (26.4M instances -> 12.1M pairs
+        # unfiltered) on the templated shingle distribution.
+        pref = ranked.select(
+            F.col(id_col).alias("id1"),
+            F.col("__n").alias("__n1"),
+            F.col("__plen").alias("__plen1"),
+            F.explode(F.slice("__ord", 1, F.col("__plen"))).alias("__h"),
         )
-        .select(id_col, "__hs")
-    )
-    sh = sh.transform(stage, eager=False)  # reused by DF count, prefix, index, verify
-
-    tok = sh.select(F.col(id_col), F.explode("__hs").alias("__h"))
-    dfreq = tok.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
-    ranked = (
-        tok.join(dfreq, "__h")
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list(F.struct("__df", "__h"))).alias("__sorted"))
-        .select(
-            F.col(id_col),
-            F.transform("__sorted", lambda s: s["__h"]).alias("__ord"),
+        index = ranked.select(
+            F.col(id_col).alias("id2"),
+            F.col("__n").alias("__n2"),
+            F.posexplode("__ord").alias("__i2", "__h"),
         )
-        .withColumn("__n", F.size("__ord"))
-        .withColumn(
-            "__plen",
-            F.col("__n") - F.ceil(F.lit(threshold - _CEIL_EPS) * F.col("__n")).cast("int") + 1,
-        )
-    )
-    # cross-prefix positional filter (round-15): both arrays share the
-    # SAME global (df, hash) order, so for a qualifying pair the
-    # globally-smallest shared token — which is always inside S1's
-    # pigeonhole prefix — must also sit inside S2's first
-    # n2 - o_min + 1 positions, where o_min = n1 - plen1 + 1 is the
-    # required overlap: all o_min shared tokens sort after it in BOTH
-    # arrays.  Applying that bound per match INSTANCE in the join
-    # predicate prunes the fanout before the distinct's shuffle, and a
-    # qualifying pair always survives via its smallest shared token.
-    # Measured at sf0.1: 26.4M match instances -> 12.1M candidate
-    # pairs unfiltered; the instance bound cuts the verify set ~10x on
-    # the templated shingle distribution.
-    if spread:
-        # the probe stage of the prefix join — posexplode of the full
-        # inverted index + the broadcast-join probe + instance filter —
-        # runs on whatever partitioning ``ranked``'s exchange left
-        # behind, and AQE byte-coalesces that tiny exchange (~14 MB at
-        # sf0.1) down to a handful of tasks, starving the operator's
-        # dominant compute (measured: 268 s executor time on 10 tasks
-        # with the default 1m floor).  Pin it with an explicit-count
-        # ROUND-ROBIN repartition — AQE never coalesces a user-numbered
-        # shuffle, and keying it by id would collapse into the groupBy's
-        # (coalescible) exchange — in the cheap ARRAY form, before the
-        # explode multiplies the bytes ~9x.  Gated on the degenerate-
-        # layout signal: no-op at real scale (guide §2.5).
-        ranked = ranked.repartition(p)
-    pref = ranked.select(
-        F.col(id_col).alias("id1"),
-        F.col("__n").alias("__n1"),
-        F.col("__plen").alias("__plen1"),
-        F.explode(F.slice("__ord", 1, F.col("__plen"))).alias("__h"),
-    )
-    index = ranked.select(
-        F.col(id_col).alias("id2"),
-        F.col("__n").alias("__n2"),
-        F.posexplode("__ord").alias("__i2", "__h"),
-    )
-    cand = (
-        pref.join(index, "__h")
-        .where(
+        return pref.join(index, "__h").where(
             (F.col("id1") != F.col("id2"))
             & (F.col("__i2") <= F.col("__n2") - F.col("__n1") + F.col("__plen1") - 1)
         )
-        .select("id1", "id2")
-        .distinct()
-    )
-    if spread:
-        # the array-intersect verify below runs in whatever stage the
-        # distinct's (coalescible) exchange feeds; a round-robin user-
-        # numbered repartition of the DEDUPED pairs (small rows, after
-        # the map-side partial distinct has done its work) pins the
-        # verify at full parallelism.
-        cand = cand.repartition(p)
-    s1 = sh.select(F.col(id_col).alias("id1"), F.col("__hs").alias("__h1"))
-    s2 = sh.select(F.col(id_col).alias("id2"), F.col("__hs").alias("__h2"))
-    inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
-    return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("containment", F.round(inter / F.size("__h1"), 6))
-        .where(F.col("containment") >= threshold)
-        .select("id1", "id2", "containment")
+
+    return _rare_first_prefix(
+        df, id_col, text_col, shingle_n, threshold, matches, "containment",
+        lambda inter: inter / F.size("__h1"),
     )
 
 

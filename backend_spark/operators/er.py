@@ -63,11 +63,14 @@ def er_resolve(
     the cap, raise with the offending cluster ids and sizes instead of
     letting the aggregate die opaquely mid-shuffle; the fix belongs
     upstream (see ``skew_report``).  Pass ``None`` to disable.  With a
-    ``mode`` rule the check runs up front as its own count-only job
-    (it must fail BEFORE the unbounded collect_list aggregate); without
-    one every aggregate carries bounded state, so the guard rides the
-    survivorship aggregate itself (zero extra jobs) and raises at
-    action time with the offending cluster id.
+    ``mode`` rule the check runs up front as its own count-only job (it
+    must fail BEFORE the unbounded collect_list aggregate) and raises
+    an eager ``ValueError``.  Without one every aggregate carries
+    bounded state, so the guard is a filter on the survivorship
+    aggregate's output (zero extra jobs): it raises
+    ``SparkRuntimeException`` with the offending cluster id at action
+    time, however the result is consumed (``collect``, ``count``, a
+    narrow ``select``).
     """
     for attr, rule in survivorship.items():
         if rule not in _RULES:
@@ -93,36 +96,12 @@ def er_resolve(
         # guard must run (and fail) BEFORE that aggregate, as its own
         # count-only job
         check_cluster_cap(comp, max_cluster_size, "er_resolve")
-    n = F.count(F.lit(1))
-    if max_cluster_size is not None and not mode_attrs:
-        # round-16 (guide §1.4/§2.4): without a mode rule every
-        # survivorship aggregate carries bounded state (min/min_by/max/
-        # sum), so a mega-cluster cannot OOM the aggregate itself and
-        # the guard doesn't need its own up-front job — fold it into
-        # the n_members expression of the survivorship aggregate,
-        # raising with the offending cluster id DURING that single
-        # pass.  One driver action saved per call; the guard still
-        # fires before any downstream consumer sees an oversized
-        # entity.
-        n = F.when(n <= F.lit(max_cluster_size), n).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("er_resolve: cluster "),
-                    F.col("comp").cast("string"),
-                    F.lit(
-                        f" exceeds max_cluster_size={max_cluster_size}; "
-                        "upstream blocking is likely broken — inspect "
-                        "with skew_report or raise the cap"
-                    ),
-                )
-            ).cast("long")
-        )
     members = records.join(
         comp.withColumnRenamed("node", id_col), id_col, "inner"
     )
     aggs = [
         F.min(id_col).alias("entity_id"),
-        n.alias("n_members"),
+        F.count(F.lit(1)).alias("n_members"),
     ]
     for attr, rule in survivorship.items():
         if rule == "first":
@@ -160,7 +139,29 @@ def er_resolve(
                 f"__cnt_{attr}",
                 F.when(F.col(attr).isNotNull(), F.count(attr).over(w)),
             )
-    return members.groupBy("comp").agg(*aggs).drop("comp")
+    out = members.groupBy("comp").agg(*aggs)
+    if max_cluster_size is not None and not mode_attrs:
+        # without a mode rule the aggregate state is bounded (min/min_by/
+        # max/sum), so a mega-cluster cannot OOM it and the guard needs
+        # no up-front job.  It is a FILTER, not a projection: ColumnPruning
+        # drops an unread raise_error column under count() or a narrow
+        # select, but a row filter survives every consumer.  The OR
+        # short-circuits, so raise_error only runs on an oversized cluster.
+        out = out.where(
+            (F.col("n_members") <= F.lit(max_cluster_size))
+            | F.raise_error(
+                F.concat(
+                    F.lit("er_resolve: cluster "),
+                    F.col("comp").cast("string"),
+                    F.lit(
+                        f" exceeds max_cluster_size={max_cluster_size}; "
+                        "upstream blocking is likely broken — inspect "
+                        "with skew_report or raise the cap"
+                    ),
+                )
+            ).isNull()
+        )
+    return out.drop("comp")
 
 
 _PAIR_KINDS = ("exact", "lev_norm", "jw", "abs_diff")

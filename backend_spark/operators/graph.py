@@ -19,7 +19,7 @@ expressed entirely as DataFrame joins/aggregations:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from backend_spark.scale import LoopCuts, stage
 
@@ -669,6 +669,15 @@ def closeness_centrality(
     return per_src.select(F.col("s").alias("node"), c.alias("closeness"))
 
 
+def _norm_divisor(norm: Column) -> Column:
+    """Power-iteration L2 divisor, one rule for a literal (tol=0) or
+    in-plan (tol>0) norm: a positive norm divides, a zero or null norm
+    leaves the vector as is, and a NaN norm propagates (Spark orders
+    NaN above every number).  A literal norm constant-folds, so tol=0
+    keeps its literal division."""
+    return F.when(norm > 0, norm).otherwise(F.lit(1.0))
+
+
 def eigenvector_centrality(
     edges: DataFrame,
     src: str = "src",
@@ -748,14 +757,11 @@ def eigenvector_centrality(
             # float round-trips bit-identically, and the division tree
             # is unchanged.
             norm_v = norm_df.collect()[0]["__norm"]
-            x = unnorm.select(
-                "node",
-                (F.col("__u") / F.lit(norm_v if norm_v and norm_v > 0 else 1.0)).alias("__x"),
-            )
+            x = unnorm.select("node", (F.col("__u") / _norm_divisor(F.lit(norm_v))).alias("__x"))
             continue
         # tol>0: norm stays in-plan (broadcast 1-row cross join) so the
         # delta read below stays the round's only driver action
-        norm_x = F.col("__u") / F.when(F.col("__norm") > 0, F.col("__norm")).otherwise(F.lit(1.0))
+        norm_x = F.col("__u") / _norm_divisor(F.col("__norm"))
         new_cols = ["node", norm_x.alias("__x")]
         if tol > 0:
             new_cols.append(F.abs(norm_x - F.col("__old")).alias("__d"))

@@ -225,58 +225,51 @@ class LoopCuts:
         return out
 
 
-def spread_scan(df: DataFrame, by: "str | None" = None, factor: int = 1) -> DataFrame:
+def spread_scan(df: DataFrame, by: "str | None" = None) -> DataFrame:
     """Raise the parallelism of a compute-heavy pipeline whose INPUT
     LAYOUT under-splits (guide: input skew / small-file layout, §2.5,
     §6).  Parquet can only split at row-group boundaries, so a table
     written as one fat row group is read by ONE task no matter how many
     cores the cluster has — and every per-row expression downstream of
     that scan (md5 shingle chains, regex scans, decimal moment sums)
-    runs serially.  The same failure mode appears mid-pipeline: AQE
-    coalesces post-shuffle partitions by BYTE size, which starves
-    compute-bound stages whose cost per byte is high.
+    runs serially.
 
-    This helper round-robins (or hash-partitions, when ``by`` is given)
-    the frame to ``factor * defaultParallelism`` partitions — but ONLY
-    when the frame's current partitioning is below that target, so on a
-    well-laid-out 100 TB input (thousands of splits) it is a provable
-    no-op and costs nothing.  The repartition ships each row once;
-    callers should project to the needed columns first so the exchange
-    carries only what the downstream compute reads.
+    When :func:`undersplit` says so, this round-robins (or
+    hash-partitions, when ``by`` is given) the frame to
+    ``defaultParallelism`` partitions; otherwise it returns ``df``
+    itself, so on a well-laid-out 100 TB input (thousands of splits) it
+    is a provable no-op and callers can tell by identity whether it
+    fired.  The repartition ships each row once; callers should project
+    to the needed columns first so the exchange carries only what the
+    downstream compute reads.  Same SCAN-or-STAGED caveat as
+    :func:`undersplit`.
 
     Content-neutral: repartitioning never changes row multiset, and
     every result in this engine is partition-order-independent by the
     hash-exactness design (integer/decimal folds, keyed windows).  Do
     NOT insert it upstream of ``spark_partition_id``-dependent logic
     (``assign_row_ids``/global ``ks_test`` manage their own layout).
-
-    Call it on SCAN or STAGED (checkpointed) frames only: the partition
-    probe materializes the physical plan, and under AQE a frame with a
-    pending Exchange would execute its upstream stages right there.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism * factor
-    try:
-        parts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - planning failure => leave as-is
+    if not undersplit(df):
         return df
-    if parts >= target:
-        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target, F.col(by)) if by else df.repartition(target)
 
 
 def undersplit(df: DataFrame) -> bool:
     """True when ``df``'s physical partitioning sits below
-    ``defaultParallelism`` — the :func:`spread_scan` trigger condition,
-    exposed for operators that must pin DOWNSTREAM shuffle parallelism
-    (not just the scan's).  AQE coalesces post-shuffle partitions by
-    BYTE size, which starves compute-dense stages whose cost per byte
-    is high (prefix joins, array-intersect verifies) whenever the whole
-    pipeline's data is physically tiny; on a well-split 100 TB layout
-    this returns False and callers leave AQE fully in charge.
+    ``defaultParallelism`` — the one partition probe behind
+    :func:`spread_scan`, exposed for operators that must pin DOWNSTREAM
+    shuffle parallelism (not just the scan's).  AQE coalesces
+    post-shuffle partitions by BYTE size, which starves compute-dense
+    stages whose cost per byte is high (prefix joins, array-intersect
+    verifies) whenever the whole pipeline's data is physically tiny; on
+    a well-split 100 TB layout this returns False and callers leave AQE
+    fully in charge.
 
-    Same caveat as :func:`spread_scan`: call it on SCAN or STAGED
-    frames only — the partition probe materializes the physical plan.
+    Call it on SCAN or STAGED (checkpointed) frames only: the probe
+    materializes the physical plan, and under AQE a frame with a pending
+    Exchange would execute its upstream stages right there.
     """
     spark = df.sparkSession
     try:
