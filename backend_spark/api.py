@@ -123,11 +123,16 @@ class ApiServer:
             def log_message(self, *a):  # quiet
                 pass
 
-            def _auth(self, right: str, project: str) -> bool:
+            def _auth(self, right: str | None = None, project: str | None = None) -> bool:
                 """Reference @login_required + @authorize(right=...)
                 (code/api.py route decorators; rights walk
                 code/security.py:16-47).  Sends 401/403 and returns
-                False when the request may not proceed."""
+                False when the request may not proceed.  ``right=None``
+                is the list routes' bare ``@login_required`` (no project
+                authorize, code/api.py list routes): any authenticated
+                user may enumerate — a user granted rights on one
+                project must not 403 on every listing for lacking an
+                _all grant."""
                 sec = outer.security
                 if sec is None or sec.no_auth:
                     return True
@@ -143,29 +148,8 @@ class ApiServer:
                     self.end_headers()
                     self.wfile.write(body)
                     return False
-                if not sec.check_rights(user, project, right):
+                if right is not None and not sec.check_rights(user, project, right):
                     self._send(403, {"error": f"user {user} lacks {right} on {project}"})
-                    return False
-                return True
-
-            def _auth_list(self) -> bool:
-                """List routes mirror the reference's bare
-                ``@login_required`` (no project authorize,
-                code/api.py list routes): any authenticated user may
-                enumerate — a user granted rights on one project must
-                not 403 on every listing for lacking an _all grant."""
-                sec = outer.security
-                if sec is None or sec.no_auth:
-                    return True
-                user = sec.authenticate(self.headers.get("Authorization"))
-                if user is None:
-                    body = json.dumps({"error": "authentication required"}).encode()
-                    self.send_response(401)
-                    self.send_header("WWW-Authenticate", 'Basic realm="backend_spark"')
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
                     return False
                 return True
 
@@ -193,12 +177,12 @@ class ApiServer:
                 if self.path == "/health":  # liveness stays unauthenticated
                     return self._send(200, {"status": "up"})
                 if self.path == "/jobs":
-                    if not self._auth_list():
+                    if not self._auth():
                         return None
                     return self._send(200, outer.jobs.snapshot())
                 parts = self.path.strip("/").split("/")
                 if len(parts) == 1:  # bare listing: authenticated-only
-                    if not self._auth_list():
+                    if not self._auth():
                         return None
                 elif not self._auth("read", parts[1]):
                     return None

@@ -1870,7 +1870,10 @@ def ks_test(
     instead the global path uses the assign_row_ids prefix-sum trick
     (range exchange + partition-local running sums + one-row-per-
     partition offsets broadcast), so a billion-distinct-value KS still
-    distributes.  Output: by-cols + (n_a, n_b, d_stat, p_approx).
+    distributes.  Its partition-local stage is cut once (``stage``): the
+    cut freezes the sampled range boundaries that the offset pass and
+    the final join must share, so it must not be removed.
+    Output: by-cols + (n_a, n_b, d_stat, p_approx).
     """
     keys = [] if by is None else ([by] if isinstance(by, str) else list(by))
     missing = [c for c in [*keys, sample_col, value_col] if c not in df.columns]
@@ -1909,7 +1912,7 @@ def ks_test(
             "__pid",
             F.sum("__ca").over(wr).alias("__la"),
             F.sum("__cb").over(wr).alias("__lb"),
-        ).transform(stage, eager=False, pin=True)
+        ).transform(stage, eager=False)
         ptot = local.groupBy("__pid").agg(
             F.max("__la").alias("__ta"), F.max("__lb").alias("__tb")
         )

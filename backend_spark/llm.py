@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from backend_spark import functions as fn
 from backend_spark.operators.graph import connected_components
-from backend_spark.scale import LoopCuts, spread_scan, stage
+from backend_spark.scale import spread_scan, stage
 
 
 # ---------------------------------------------------------------------------
@@ -2934,7 +2934,6 @@ def kmeans_assign(
     salt: str = "km",
     scale: int = 1_000_000,
     ndigits: int = 6,
-    return_centroids: bool = False,
 ) -> DataFrame:
     """Deterministic Lloyd's KMeans over an embedding column — the real
     iterative-refinement upgrade of :func:`semdedup`'s one-shot
@@ -3046,14 +3045,9 @@ def kmeans_assign(
             for ci, old in centroids.items()
         }
 
-    out = _assign(centroids).select(
+    return _assign(centroids).select(
         F.col("__id").alias(id_col), "cluster", F.col("__d").alias("dist")
     )
-    if return_centroids:
-        # k×dim driver state — what an ADC/PQ consumer needs alongside
-        # the assignment (ann_pq builds its distance tables from these)
-        return out, centroids
-    return out
 
 
 def containment_pairs(
@@ -3890,7 +3884,6 @@ def bpe_train(
     ).transform(stage, eager=False)
 
     merges: list[tuple] = []
-    cuts = LoopCuts()  # persist mode: unpersist seqs >2 merge ranks old
     for rank in range(1, n_merges + 1):
         toks = F.split(F.trim("seq"), " +")
         adj = F.zip_with(
@@ -3914,7 +3907,7 @@ def bpe_train(
         seqs = seqs.select(
             F.replace("seq", F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs + rhs} ")).alias("seq"),
             "wf",
-        ).transform(cuts.cut, eager=False)
+        ).transform(stage, eager=False)
 
     return df.sparkSession.createDataFrame(
         merges, "rank int, lhs string, rhs string, merged string, cnt bigint"

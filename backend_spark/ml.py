@@ -661,16 +661,11 @@ def auc_score(
     by score, per-partition local running sums, and a broadcast of the
     per-partition offsets — the only partition-less window runs over
     the #shuffle-partitions offset rows, never over data-shaped input.
-    The local stage is pinned via :func:`backend_spark.scale.stage` so
-    the offset pass and the rank pass see the same sampled range
-    boundaries; under the default ``local`` mode the pinned blocks are
-    non-replayable (executor loss aborts the query — acceptable on
-    local/on-demand fleets), while ``stage.mode=reliable`` keeps the
-    same exactness with fault tolerance.  Plain ``persist`` would NOT
-    be safe here — a recomputed partition could re-sample range
-    boundaries — so the cut passes ``pin=True`` and ``stage`` upgrades
-    it to ``reliable``/``local`` under ``persist`` mode (see SCALING.md
-    "Lineage cuts and fault tolerance").
+    The local stage is cut once via :func:`backend_spark.scale.stage`:
+    the cut freezes the sampled range boundaries that the offset pass
+    and the rank pass must share, so it must not be removed (both stage
+    modes give a cut that is never recomputed; see SCALING.md "Lineage
+    cuts and fault tolerance").
 
     Returns one row: (auc, n_pos, n_neg).  Degenerate inputs (no
     positives or no negatives) yield NULL auc rather than a division
@@ -691,7 +686,7 @@ def auc_score(
     # distributed prefix sum of __cnt in __s order: local running sums
     # within range partitions + broadcast per-partition offsets (exactly
     # reproduces the global cumulative regardless of boundary placement;
-    # localCheckpoint pins the sampled range boundaries across the two
+    # the stage cut pins the sampled range boundaries across the two
     # reads of `local`)
     ranged = per.repartitionByRange("__s").withColumn(
         "__pid", F.spark_partition_id()
@@ -707,7 +702,7 @@ def auc_score(
         "__cnt",
         "__pos",
         F.sum("__cnt").over(w_local).alias("__lcum"),
-    ).transform(stage, eager=False, pin=True)
+    ).transform(stage, eager=False)
     ptot = local.groupBy("__pid").agg(F.max("__lcum").alias("__t"))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = ptot.select(

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from backend_spark.scale import LoopCuts, stage
+from backend_spark.scale import stage
 
 
 def connected_components(
@@ -64,7 +64,6 @@ def connected_components(
     )
 
     comp_type = dict(labels.dtypes)["comp"]
-    cuts = LoopCuts()  # persist mode: unpersist cuts >2 iterations old
     for _ in range(max_iter):
         # hash-min step as ONE aggregate (round-15): neighbor label
         # contributions union'd with each node's own label, min'd per
@@ -102,7 +101,7 @@ def connected_components(
         # materializes the checkpoint AND returns the change count in
         # the same job — the old (eager cut job, then limit-1 count
         # job) pattern paid two scheduler round-trips per iteration
-        new_labels = cuts.cut(new_labels, eager=False)
+        new_labels = stage(new_labels, eager=False)
         changed = new_labels.agg(F.count_if("__chg")).collect()[0][0]
         labels = new_labels.drop("__chg")
         if changed == 0:
@@ -241,7 +240,6 @@ def pagerank(
         return deg.select("node", F.lit(0.0).alias("pagerank"))
     base = (1.0 - alpha) / n_nodes
     ranks = deg.withColumn("__r", F.lit(1.0 / n_nodes))
-    cuts = LoopCuts()
     for _ in range(max_iter):
         contribs = (
             sym.join(ranks.withColumnRenamed("node", "a"), "a")
@@ -263,7 +261,7 @@ def pagerank(
         if tol > 0:
             # lazy cut + summing convergence read: ONE job materializes
             # the checkpoint and returns the delta
-            new_ranks = cuts.cut(new_ranks, eager=False)
+            new_ranks = stage(new_ranks, eager=False)
             delta = new_ranks.agg(F.sum("__d").alias("d")).collect()[0].d
             ranks = new_ranks.drop("__d")
             if delta is not None and delta < n_nodes * tol:
@@ -272,7 +270,7 @@ def pagerank(
             # fixed-round mode has no convergence read; eager cut is
             # the per-round action that truncates lineage NOW so the
             # loop never builds a max_iter-deep plan for Catalyst
-            ranks = cuts.cut(new_ranks, eager=True)
+            ranks = stage(new_ranks, eager=True)
     out = ranks.select("node", F.col("__r").alias("pagerank"))
     if round_to is not None:
         out = out.withColumn("pagerank", F.round("pagerank", round_to))
@@ -321,7 +319,6 @@ def k_truss(
     )
     n_edges = e.count()
     supp = None
-    cuts = LoopCuts()  # one cut per round -> keep two rounds
     for _ in range(max_rounds):
         sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         n1 = sym.select(F.col("a").alias("__u"), F.col("b").alias("__w"))
@@ -339,7 +336,7 @@ def k_truss(
         scored = (
             e.join(tri, ["a", "b"], "left")
             .select("a", "b", F.coalesce(F.col("support"), F.lit(0)).alias("support"))
-            .transform(cuts.cut, eager=False)
+            .transform(stage, eager=False)
         )
         n2_edges = scored.agg(
             F.count_if(F.col("support") >= k - 2).alias("n")
@@ -387,7 +384,6 @@ def personalized_pagerank(
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("__deg"))
     tele = F.when(F.col("node").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
     ranks = deg.withColumn("__r", tele)
-    cuts = LoopCuts()
     for _ in range(max_iter):
         contribs = (
             sym.join(ranks.withColumnRenamed("node", "a"), "a")
@@ -406,7 +402,7 @@ def personalized_pagerank(
                     + F.lit(alpha) * F.coalesce(F.col("__in"), F.lit(0.0))
                 ).alias("__r"),
             )
-            .transform(cuts.cut, eager=True)
+            .transform(stage, eager=True)
         )
     out = ranks.select("node", F.col("__r").alias("ppr"))
     if round_to is not None:
@@ -458,7 +454,6 @@ def hits(
     )
     hv = nodes.withColumn("__h", F.lit(1).cast("long"))
     av = None
-    cuts = LoopCuts(keep=4)  # av + hv cuts per round -> keep two rounds
     for _ in range(max_iter):
         a_in = (
             e.join(hv.withColumnRenamed("node", "s"), "s")
@@ -470,7 +465,7 @@ def hits(
             .select("node", F.coalesce(F.col("__a"), F.lit(0)).cast("long").alias("__a"))
             # lazy: hv's eager cut below reads av, so ONE action per
             # round materializes both checkpoints (round-15 fusion)
-            .transform(cuts.cut, eager=False)
+            .transform(stage, eager=False)
         )
         h_out = (
             e.join(av.withColumnRenamed("node", "d"), "d")
@@ -480,7 +475,7 @@ def hits(
         hv = (
             nodes.join(h_out, "node", "left")
             .select("node", F.coalesce(F.col("__h"), F.lit(0)).cast("long").alias("__h"))
-            .transform(cuts.cut, eager=True)
+            .transform(stage, eager=True)
         )
     joined = hv.join(av, "node")
     totals = joined.agg(
@@ -637,7 +632,6 @@ def closeness_centrality(
         F.col("node").alias("s"), F.col("node").alias("v"), F.lit(0).alias("d")
     ).transform(stage, eager=True)
     frontier = known
-    cuts = LoopCuts(keep=4)  # nxt + known cuts per hop -> keep two hops
     for hop in range(1, max_hops + 1):
         # lazy cuts + ONE counting action per hop (round-15 fusion):
         # nxt.count() materializes the nxt checkpoint — and, because
@@ -649,11 +643,11 @@ def closeness_centrality(
             .select("s", F.col("b").alias("v"), F.lit(hop).alias("d"))
             .distinct()
             .join(known.select("s", "v"), ["s", "v"], "left_anti")
-            .transform(cuts.cut, eager=False)
+            .transform(stage, eager=False)
         )
         if nxt.count() == 0:
             break
-        known = known.unionByName(nxt).transform(cuts.cut, eager=False)
+        known = known.unionByName(nxt).transform(stage, eager=False)
         frontier = nxt
     per_src = known.groupBy("s").agg(
         F.count(F.lit(1)).alias("__r"), F.sum("d").alias("__sum")
@@ -717,7 +711,6 @@ def eigenvector_centrality(
     ordered_sum = lambda col: F.aggregate(  # noqa: E731 — fixed-order float fold
         F.array_sort(F.collect_list(col)), F.lit(0.0), lambda a, v: a + v["v"]
     )
-    cuts = LoopCuts()
     for _ in range(max_iter):
         contrib = (
             sym.join(x.select(F.col("node").alias("a"), "__x"), "a")
@@ -737,7 +730,7 @@ def eigenvector_centrality(
         # executed plan: duplicated SortMergeJoin/Exchange chains).
         # One cut computes it once and bounds the plan, so the round
         # output needs no cut of its own in fixed-round mode.
-        unnorm = cuts.cut(unnorm, eager=False)
+        unnorm = stage(unnorm, eager=False)
         norm_df = unnorm.agg(
             F.sqrt(
                 F.aggregate(
@@ -769,7 +762,7 @@ def eigenvector_centrality(
         if tol > 0:
             # lazy cut + summing convergence read: ONE job per round
             # materializes the checkpoint and returns the L1 delta
-            new_x = cuts.cut(new_x, eager=False)
+            new_x = stage(new_x, eager=False)
             delta = new_x.agg(F.sum("__d").alias("d")).collect()[0].d
             x = new_x.drop("__d")
             if delta is not None and delta < n_nodes * tol:
@@ -917,7 +910,6 @@ def closeness_centrality_approx(
     n_nodes = state.count()
     if n_nodes == 0:
         return state.select("node", F.lit(0.0).alias("closeness"))
-    cuts = LoopCuts()
     for hop in range(1, max_hops + 1):
         nbr = (
             sym.join(state.select(F.col("node").alias("a"), "__sk"), "a")
@@ -944,7 +936,7 @@ def closeness_centrality_approx(
                 F.col("__sumdist")
                 + F.lit(float(hop)) * F.greatest(F.col("__est") - F.col("__prev"), F.lit(0)),
             )
-            .transform(cuts.cut, eager=False)
+            .transform(stage, eager=False)
         )
         n_grew = new_state.agg(
             F.count_if(F.col("__est") > F.col("__prev")).alias("n")
@@ -989,7 +981,6 @@ def k_core(
     """
     alive = _sym_edges(edges, src, dst).transform(stage, eager=True)
     n_alive = alive.count()
-    cuts = LoopCuts()
     for _ in range(max_iter):
         deg = alive.groupBy("a").agg(F.count(F.lit(1)).alias("__d"))
         keep = deg.where(F.col("__d") >= k).select("a")
@@ -999,7 +990,7 @@ def k_core(
             .select("a", "b")
             # lazy: the count below materializes the checkpoint in the
             # same job (round-15 fusion; was eager cut + count)
-            .transform(cuts.cut, eager=False)
+            .transform(stage, eager=False)
         )
         n_pruned = pruned.count()
         converged = n_pruned == n_alive
@@ -1047,7 +1038,6 @@ def label_propagation(
         .withColumn("lbl", F.col("node"))
         .transform(stage, eager=True)
     )
-    cuts = LoopCuts()
     for _ in range(n_rounds):
         freq = (
             sym.join(labels.select(F.col("node").alias("b"), "lbl"), "b")
@@ -1067,7 +1057,7 @@ def label_propagation(
                 ).alias("__m")
             )
             .select(F.col("a").alias("node"), F.col("__m.l").alias("lbl"))
-            .transform(cuts.cut, eager=True)
+            .transform(stage, eager=True)
         )
     return labels.select("node", F.col("lbl").alias("community"))
 
@@ -1268,7 +1258,6 @@ def shortest_paths(
     )
     frontier = dist
     n_frontier = frontier.count()
-    cuts = LoopCuts(keep=4)  # frontier + dist cuts per round -> keep two rounds
     for _ in range(max_iter):
         if n_frontier == 0:
             break
@@ -1286,12 +1275,12 @@ def shortest_paths(
         # job; the old shape paid eager cut + count + eager cut.
         frontier = (
             reached.join(dist.select("node"), "node", "left_anti")
-            .transform(cuts.cut, eager=False)
+            .transform(stage, eager=False)
         )
         n_frontier = frontier.count()
         if n_frontier == 0:
             break
-        dist = dist.unionByName(frontier).transform(cuts.cut, eager=False)
+        dist = dist.unionByName(frontier).transform(stage, eager=False)
     return dist
 
 

@@ -10,23 +10,19 @@ bucketed storage removes the shuffle entirely.
 from __future__ import annotations
 
 import functools
-import logging
 import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-_LOG = logging.getLogger(__name__)
 
 _AGG = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 STAGE_MODE_CONF = "spark.backend_spark.stage.mode"
 STAGE_DIR_CONF = "spark.backend_spark.stage.dir"
-_STAGE_MODES = ("local", "reliable", "persist")
+_STAGE_MODES = ("local", "reliable")
 
 
-def stage(df: DataFrame, eager: bool = False, pin: bool = False) -> DataFrame:
+def stage(df: DataFrame, eager: bool = False) -> DataFrame:
     """Cut lineage / pin an intermediate result, with the storage
     strategy selected at runtime by the session conf
     ``spark.backend_spark.stage.mode`` — the single funnel for every
@@ -34,67 +30,31 @@ def stage(df: DataFrame, eager: bool = False, pin: bool = False) -> DataFrame:
     in operator code; raw ``DataFrame.localCheckpoint`` is reserved to
     this helper).
 
-    ``pin=True`` marks a CORRECTNESS pin: the cut freezes a
-    nondeterministic upstream (sampled ``repartitionByRange``
-    boundaries) that two downstream reads must see identically
-    (``assign_row_ids``, ``auc_score``, ``ks_test``,
-    ``compaction_plan``).  ``persist`` mode keeps lineage, so a lost
-    block would be *recomputed* — silently re-rolling the boundaries
-    and corrupting the result.  A pinned cut therefore refuses plain
-    ``persist``: it upgrades to ``reliable`` when a checkpoint
-    directory is configured, else to ``local`` (logged either way).
-
     Modes (see SCALING.md "Lineage cuts and fault tolerance"):
 
     * ``local`` (default) — ``localCheckpoint``: blocks live in
-      executor storage.  Fastest (no DFS round-trip), and the pinned
-      blocks are never recomputed, so nondeterministic upstreams
-      (sampled range boundaries, ``F.rand``) stay frozen.  NOT
+      executor storage.  Fastest (no DFS round-trip), but NOT
       fault-tolerant: checkpointed partitions are non-replayable, so
       one lost executor aborts the query.  Right for ``local[*]`` and
-      on-demand fleets; wrong for spot instances at 100 TB.
+      on-demand fleets.
     * ``reliable`` — ``DataFrame.checkpoint()`` to the cluster
       checkpoint directory (``sc.setCheckpointDir`` or the
       ``spark.backend_spark.stage.dir`` conf, e.g. an HDFS/S3 path).
-      Survives any executor loss and still freezes nondeterminism;
-      costs one DFS write+read per cut.  The right mode for long jobs
-      on preemptible fleets.
-    * ``persist`` — ``persist(DISK_ONLY)`` + LOGICAL-PLAN TRUNCATION:
-      the persisted frame is re-wrapped as a ``LogicalRDD`` over its
-      own physical RDD (the same re-rooting ``Dataset.checkpoint``
-      performs, minus the RDD checkpoint), so iterative loops keep a
-      bounded analyzed plan — without the truncation, pagerank's
-      power iteration grew its plan until Catalyst hung (measured,
-      round 13) — while RDD-level lineage survives: lost blocks are
-      recomputed instead of failing the job.  Remaining caveat:
-      recomputation re-rolls nondeterministic expressions — which is
-      why correctness pins (``pin=True``) refuse this mode and
-      upgrade themselves.  Executor-disk growth across loop
-      iterations is bounded by :class:`LoopCuts` (every iterative
-      loop in the engine cuts through one); one-shot cuts live until
-      session end or ``clearCache``.
+      Survives any executor loss; costs one DFS write+read per cut.
+      The right mode for long jobs on preemptible fleets.
 
-    ``eager`` forces materialization now (``local``/``reliable``
-    honor it natively; ``persist`` is always lazy — the first action
-    materializes, which every loop here performs via its convergence
-    read).
+    The rule: a staged frame is never recomputed from its lineage in
+    either mode, so a nondeterministic upstream (sampled
+    ``repartitionByRange`` boundaries, ``F.rand``) is frozen at the cut
+    and every downstream read sees the same rows.  Callers that need
+    this for correctness (``assign_row_ids``, ``compaction_plan``,
+    ``auc_score``, ``ks_test``) rely on it; a storage mode that
+    recomputes lost blocks would break them.
+
+    ``eager`` forces materialization now.
     """
     spark = df.sparkSession
     mode = spark.conf.get(STAGE_MODE_CONF, "local")
-    if mode == "persist" and pin:
-        sc = spark.sparkContext
-        has_ckdir = sc.getCheckpointDir() is not None or bool(
-            spark.conf.get(STAGE_DIR_CONF, None)
-        )
-        upgraded = "reliable" if has_ckdir else "local"
-        _LOG.warning(
-            "%s=persist is unsafe for a correctness pin (recomputation "
-            "re-rolls sampled range boundaries); upgrading this cut to "
-            "%r",
-            STAGE_MODE_CONF,
-            upgraded,
-        )
-        mode = upgraded
     if mode == "local":
         return df.localCheckpoint(eager=eager)
     if mode == "reliable":
@@ -109,120 +69,9 @@ def stage(df: DataFrame, eager: bool = False, pin: bool = False) -> DataFrame:
                 )
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
-    if mode == "persist":
-        cached = df.persist(StorageLevel.DISK_ONLY)
-        # re-root the plan on the persisted frame's physical RDD:
-        # bounded plans for loops, recomputable lineage for block loss.
-        # Preferred path (round-15): the same LogicalRDD.fromDataset
-        # re-root Dataset.checkpoint uses.  Investigating the round-13
-        # advisor's "persist-mode re-root loses outputPartitioning"
-        # caveat showed the REAL cost was lost STATS, not partitioning:
-        # under AQE every checkpoint variant's plan root reports
-        # UnknownPartitioning (AdaptiveSparkPlanExec cannot promise a
-        # layout statically — measured, local mode included), but
-        # internalCreateDataFrame also drops sizeInBytes to
-        # Long.MaxValue, so every downstream join against ANY staged
-        # cut was forced to sort-merge (both sides shuffled) no matter
-        # how small the cut — in a loop that joins a shrinking staged
-        # frontier to a big table, that is a full-data shuffle per
-        # iteration.  fromDataset carries the origin stats (measured:
-        # 4.68 MB vs Long.Max on sf0.01 lineitem; keyed agg+self-join
-        # on a cut, 2 exchanges -> 1, now at parity with local mode —
-        # tools/persist_partitioning_probe.py, SCALING.md).
-        # fromDataset/ofRows are private[sql] (public in bytecode);
-        # fall back to internalCreateDataFrame (no stats, still
-        # correct) if the JVM surface moves.
-        # Caveat (round-13 advisor, unchanged by this): stage() must be
-        # called on a freshly built frame — if the Dataset's
-        # executedPlan was already forced (an explain/action on the
-        # SAME object), the lazy withCachedData substitution never sees
-        # the new cache entry and the re-rooted RDD bypasses the
-        # DISK_ONLY cache, recomputing full lineage per action.  Every
-        # in-engine call site builds the frame immediately before the
-        # cut (df.transform(stage) idiom).
-        jdf = cached._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        try:
-            jvm = spark._jvm
-            lrdd_mod = getattr(
-                jvm.org.apache.spark.sql.execution, "LogicalRDD$"
-            ).__getattr__("MODULE$")
-            ds_mod = getattr(
-                jvm.org.apache.spark.sql.classic, "Dataset$"
-            ).__getattr__("MODULE$")
-            jnew = ds_mod.ofRows(
-                spark._jsparkSession, lrdd_mod.fromDataset(jrdd, jdf, False)
-            )
-        except Exception:  # pragma: no cover - depends on Spark internals
-            _LOG.warning(
-                "LogicalRDD.fromDataset re-root unavailable; falling back "
-                "to internalCreateDataFrame (staged frame loses its STATS "
-                "— sizeInBytes reads as Long.Max, so downstream joins "
-                "against the cut lose broadcast eligibility and plan as "
-                "sort-merge; results stay correct)",
-                exc_info=True,
-            )
-            jnew = spark._jsparkSession.internalCreateDataFrame(
-                jrdd, jdf.schema(), False
-            )
-        out = DataFrame(jnew, cached.sparkSession)
-        # handle for LoopCuts: the persisted frame this cut reads through
-        out._sg_persist_handle = cached
-        return out
     raise ValueError(
         f"unknown {STAGE_MODE_CONF} {mode!r}; expected one of {_STAGE_MODES}"
     )
-
-
-class LoopCuts:
-    """Bounds persist-mode executor-disk growth in iterative loops
-    (round-14; closes the "loop cuts are never unpersisted" caveat
-    above): a per-loop tracker whose :meth:`cut` stages a frame and, in
-    persist mode, unpersists the cut ``keep`` iterations back —
-    non-blocking, after the newer cut exists, so the loop's convergence
-    read and any downstream consumer always see the latest ``keep``
-    iterations cached.  Unpersisting an older cut is safe by
-    construction in this mode: persist keeps RDD lineage, so a late
-    reader of a superseded frame recomputes instead of failing (the
-    same recompute contract persist mode already accepts for lost
-    blocks).  In ``local``/``reliable`` modes this is a pass-through —
-    those cuts have no cache entry to bound.
-
-    Usage (one tracker per loop, NOT shared across loops — two
-    interleaved loops would evict each other's working set)::
-
-        cuts = LoopCuts()
-        for _ in range(max_iter):
-            frame = cuts.cut(frame, eager=True)
-            ...
-    """
-
-    def __init__(self, keep: int = 2):
-        if keep < 1:
-            raise ValueError(f"keep must be >= 1, got {keep}")
-        self.keep = keep
-        self._handles: list[DataFrame] = []
-
-    def cut(self, df: DataFrame, eager: bool = False, pin: bool = False) -> DataFrame:
-        out = stage(df, eager=eager, pin=pin)
-        handle = getattr(out, "_sg_persist_handle", None)
-        if handle is not None:
-            # harvest-and-clear: the tracker takes sole ownership of the
-            # handle.  (stage() mints a fresh frame + fresh handle per
-            # call, so two cut() calls can never see the same handle —
-            # the round-14 advice's double-enqueue race cannot occur on
-            # this path; the delete's actual effect is that a frame
-            # returned by cut() no longer exposes a handle some later
-            # code could unpersist out from under the tracker's
-            # bookkeeping.  Direct stage() callers keep the attribute
-            # for introspection.)
-            del out._sg_persist_handle
-            self._handles.append(handle)
-            while len(self._handles) > self.keep:
-                evicted = self._handles.pop(0)
-                _LOG.debug("LoopCuts: unpersisting cut %s", evicted)
-                evicted.unpersist(blocking=False)
-        return out
 
 
 def spread_scan(df: DataFrame, by: "str | None" = None) -> DataFrame:
@@ -481,7 +330,7 @@ def assign_row_ids(
     w_local = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in cols])
     local = base.withColumn(
         "__local", F.row_number().over(w_local).cast("long")
-    ).transform(stage, eager=False, pin=True)
+    ).transform(stage, eager=False)
     counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = counts.withColumn(
@@ -908,6 +757,9 @@ def compaction_plan(
     sort — then partition-local running totals, then the one-row-per-
     partition byte offsets broadcast back.  A million-file manifest
     plans in seconds and the plan itself never funnels.
+    The partition-local stage is cut once (``stage``): the cut freezes
+    the sampled range boundaries that the offsets and the final join
+    must share, so it must not be removed.
 
     Returns (path, bytes, bin, bin_seq): feed each bin's paths to one
     rewrite task (``spark.read.parquet(*paths).coalesce(1)``-style or
@@ -930,7 +782,7 @@ def compaction_plan(
     w_local = Window.partitionBy("__pid").orderBy(F.col("bytes").desc(), F.col("path"))
     local = base.withColumn(
         "__run", F.sum("bytes").over(w_local).cast("long")
-    ).transform(stage, eager=False, pin=True)
+    ).transform(stage, eager=False)
     totals = local.groupBy("__pid").agg(F.sum("bytes").alias("__t"))
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = totals.withColumn(

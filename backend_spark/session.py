@@ -47,22 +47,6 @@ def get_session(app_name: str = "backend_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing floor: Spark's default 1m.  Round 15 lowered it
-        # to 64k so byte-based coalescing would not starve compute-dense
-        # stages (prefix joins, pair verifies: tiny shuffle bytes, huge
-        # in-stage fanout) — but the round-16 interleaved A/B convicted
-        # that as a session-wide tax on every many-small-shuffle query
-        # (attribution 1.96x, compaction_plan 1.48x, fs_em 1.24x slower
-        # at 64k, medians of 5 alternating runs) while only
-        # containment/ngram_jaccard actually needed the parallelism.
-        # Those two operators now pin their own hot shuffles via
-        # explicit-count repartitions guarded by the spread_scan
-        # degenerate-layout signal (llm.py), so the floor stays at the
-        # default.  Override via SPARK_GRAFT_MIN_PARTITION_SIZE.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # the driver's events.parquet carries TIMESTAMP(NANOS); Spark has

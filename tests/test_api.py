@@ -313,6 +313,14 @@ def test_api_auth_enforced(spark):
         assert code == 200 and body["rows"][0]["v2"] == 2
         # wrong password -> 401
         assert _req_auth(srv, "GET", "/recipes", "alice", "nope")[0] == 401
+        # a 401 from a list route and from a project route both carry
+        # the Basic challenge (RFC 7235)
+        for path in ("/recipes", "/recipes/upgrade"):
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                urllib.request.urlopen(f"http://127.0.0.1:{srv.port}{path}")
+            exc.value.close()
+            assert exc.value.code == 401
+            assert exc.value.headers["WWW-Authenticate"] == 'Basic realm="backend_spark"'
     finally:
         srv.stop()
 

@@ -2539,11 +2539,9 @@ def test_cdc_apply_backtick_key_name(spark):
 
 def test_stage_modes_switch_mechanism(spark, tmp_path):
     """scale.stage honors the session-conf switch: local (default) =
-    localCheckpoint, reliable = checkpoint() into the configured dir,
-    persist = DISK_ONLY with lineage kept; unknown mode and missing
-    checkpoint dir raise with actionable messages (VERDICT r11 #3)."""
-    from pyspark.storagelevel import StorageLevel
-
+    localCheckpoint, reliable = checkpoint() into the configured dir;
+    any other mode (``persist`` included) and a missing checkpoint dir
+    raise with actionable messages (VERDICT r11 #3)."""
     from backend_spark.scale import STAGE_DIR_CONF, STAGE_MODE_CONF, stage
 
     df = spark.range(50).toDF("x")
@@ -2553,18 +2551,11 @@ def test_stage_modes_switch_mechanism(spark, tmp_path):
         assert out.rdd.isCheckpointed() or out.rdd.getCheckpointFile() is None
         assert sorted(r.x for r in out.collect()) == list(range(50))
 
-        spark.conf.set(STAGE_MODE_CONF, "persist")
-        outp = stage(df)
-        # persist mode = DISK_ONLY cache + plan re-rooted on the
-        # persisted RDD (bounded loop plans, recomputable lineage)
-        assert "LogicalRDD" in outp._jdf.queryExecution().analyzed().toString()
-        assert outp.count() == 50
-        assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        spark.catalog.clearCache()
-
-        spark.conf.set(STAGE_MODE_CONF, "bogus")
-        with pytest.raises(ValueError, match="unknown"):
-            stage(df)
+        for bad in ("persist", "bogus"):
+            spark.conf.set(STAGE_MODE_CONF, bad)
+            with pytest.raises(ValueError, match="unknown") as exc:
+                stage(df)
+            assert "'local'" in str(exc.value) and "'reliable'" in str(exc.value)
 
         spark.conf.set(STAGE_MODE_CONF, "reliable")
         if spark.sparkContext.getCheckpointDir() is None:
@@ -2579,8 +2570,8 @@ def test_stage_modes_switch_mechanism(spark, tmp_path):
 def test_stage_modes_agree_on_iterative_query(spark, tmp_path):
     """The checkpoint-heaviest path (connected-components pointer
     jumping, one lineage cut per round) returns identical labels under
-    all three stage modes — the switch changes fault-tolerance cost,
-    never results."""
+    both stage modes — the switch changes fault-tolerance cost, never
+    results."""
     from backend_spark.operators.graph import connected_components
     from backend_spark.scale import STAGE_DIR_CONF, STAGE_MODE_CONF
 
@@ -2595,242 +2586,12 @@ def test_stage_modes_agree_on_iterative_query(spark, tmp_path):
 
     try:
         base = run()
-        spark.conf.set(STAGE_MODE_CONF, "persist")
-        assert run() == base
         spark.conf.set(STAGE_MODE_CONF, "reliable")
         if spark.sparkContext.getCheckpointDir() is None:
             spark.conf.set(STAGE_DIR_CONF, str(tmp_path / "ck2"))
         assert run() == base
     finally:
         spark.conf.set(STAGE_MODE_CONF, "local")
-
-
-def test_stage_persist_mode_upgrades_correctness_pins(spark, tmp_path, caplog):
-    """A correctness pin (pin=True) under stage.mode=persist must NOT
-    be honored as persist(DISK_ONLY) — recomputation after block loss
-    would re-roll sampled range boundaries and silently corrupt
-    row ids / AUC / KS (VERDICT r12 #2).  The pinned cut upgrades to
-    reliable/local (logged); unpinned cuts still persist as asked."""
-    import logging as _logging
-
-    from pyspark.storagelevel import StorageLevel
-
-    from backend_spark.scale import (
-        STAGE_MODE_CONF,
-        assign_row_ids,
-        stage,
-    )
-
-    df = spark.range(100).toDF("x")
-    try:
-        spark.conf.set(STAGE_MODE_CONF, "persist")
-
-        # pinned cut: refused persist, upgraded to a checkpoint variant
-        # (a checkpoint is a LogicalRDD scan and registers NO cache)
-        spark.catalog.clearCache()
-        with caplog.at_level(_logging.WARNING, logger="backend_spark.scale"):
-            pinned = stage(df, eager=True, pin=True)
-        assert pinned.storageLevel != StorageLevel.DISK_ONLY
-        assert "LogicalRDD" in pinned._jdf.queryExecution().analyzed().toString()
-        assert any("upgrading" in r.message for r in caplog.records)
-        assert pinned.count() == 100
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-        # unpinned cut: persist honored — DISK_ONLY cache registered
-        plain = stage(df)
-        assert plain.count() == 100
-        assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        spark.catalog.clearCache()
-
-        # end-to-end: the id producer stays dense and deterministic
-        # under the global persist switch
-        ids = assign_row_ids(df, "x", out_col="rid")
-        got = sorted((r.x, r.rid) for r in ids.collect())
-        assert got == [(i, i + 1) for i in range(100)]
-
-        # the hang regression: a 25-round loop cutting via stage each
-        # iteration must keep a BOUNDED analyzed plan under persist
-        # (pre-re-rooting the plan grew per round until Catalyst
-        # choked on pagerank) and still compute the right answer
-        from pyspark.sql import functions as F
-
-        cur = df.withColumn("v", F.col("x"))
-        for _ in range(25):
-            cur = stage(cur.withColumn("v", F.col("v") + 1))
-        assert len(cur._jdf.queryExecution().analyzed().toString()) < 2000
-        assert cur.agg(F.sum("v")).collect()[0][0] == sum(range(100)) + 25 * 100
-        spark.catalog.clearCache()
-    finally:
-        spark.conf.set(STAGE_MODE_CONF, "local")
-
-
-def test_loop_cuts_bound_persist_cache(spark):
-    """LoopCuts keeps at most ``keep`` persist-mode cuts cached —
-    superseded iterations are unpersisted (storage level NONE), the
-    retained working set stays DISK_ONLY, results stay correct, and in
-    local mode the tracker is a pass-through (round-13 verdict #8)."""
-    from backend_spark.scale import STAGE_MODE_CONF, LoopCuts
-
-    spark.conf.set(STAGE_MODE_CONF, "persist")
-    try:
-        cuts = LoopCuts(keep=2)
-        cur = spark.range(50).select(F.col("id").alias("v"))
-        for i in range(5):
-            cur = cuts.cut(cur.select((F.col("v") + 1).alias("v")), eager=False)
-            assert cur.agg(F.sum("v")).collect()[0][0] == sum(range(50)) + (i + 1) * 50
-        assert len(cuts._handles) == 2
-        retained = [h.storageLevel.useDisk for h in cuts._handles]
-        assert retained == [True, True]
-        # a superseded cut is recomputable, not cached: rebuild the same
-        # loop tracking every handle to observe the evicted ones directly
-        evicted: list = []
-        cuts2 = LoopCuts(keep=2)
-        cur = spark.range(50).select(F.col("id").alias("v"))
-        for _ in range(5):
-            cur = cuts2.cut(cur.select((F.col("v") + 1).alias("v")), eager=False)
-            cur.count()
-            evicted.append(cuts2._handles[-1])
-        assert [h.storageLevel.useDisk for h in evicted] == [
-            False, False, False, True, True,
-        ]
-        spark.catalog.clearCache()
-    finally:
-        spark.conf.set(STAGE_MODE_CONF, "local")
-    # local mode: no persist handle, nothing tracked
-    cuts3 = LoopCuts()
-    out = cuts3.cut(spark.range(10), eager=True)
-    assert out.count() == 10 and cuts3._handles == []
-
-
-def test_stage_persist_reroot_roundtrips_exotic_types(spark):
-    """The persist-mode re-root crosses internalCreateDataFrame with
-    raw InternalRows, so every type's binary layout must survive:
-    NaN/Inf/-0.0 doubles, unicode, dates, microsecond timestamps,
-    decimal(38,10), arrays/maps/structs with NULLs, binary, and
-    all-NULL rows round-trip byte-exact."""
-    import datetime
-    import decimal
-    import math
-
-    from pyspark.sql import Row
-
-    from backend_spark.scale import STAGE_MODE_CONF, stage
-
-    rows = [
-        Row(i=1, d=float("nan"), s="héllo \U0001f30d", b=True,
-            dt=datetime.date(2024, 2, 29),
-            ts=datetime.datetime(2024, 1, 1, 12, 0, 0, 123456),
-            dec=decimal.Decimal("12345.6789012345"),
-            arr=[1, 2, None], mp={"a": 1}, st=Row(x=1, y="z"),
-            bin=bytearray(b"\x00\xffraw")),
-        Row(i=None, d=-0.0, s=None, b=None, dt=None, ts=None, dec=None,
-            arr=None, mp=None, st=None, bin=None),
-        Row(i=-2**62, d=float("inf"), s="", b=False,
-            dt=datetime.date(1900, 1, 1),
-            ts=datetime.datetime(1969, 12, 31, 23, 59, 59),
-            dec=decimal.Decimal("-0.0000000001"),
-            arr=[], mp={}, st=Row(x=None, y=None), bin=bytearray(b"")),
-    ]
-    schema = (
-        "i long, d double, s string, b boolean, dt date, ts timestamp, "
-        "dec decimal(38,10), arr array<int>, mp map<string,int>, "
-        "st struct<x:int,y:string>, bin binary"
-    )
-    df = spark.createDataFrame(rows, schema)
-
-    def canon(rs):
-        out = []
-        for r in rs:
-            out.append(tuple(
-                "nan" if isinstance(v, float) and math.isnan(v) else repr(v)
-                for v in r
-            ))
-        return sorted(out)
-
-    base = canon(df.collect())
-    try:
-        spark.conf.set(STAGE_MODE_CONF, "persist")
-        staged = stage(df)
-        assert staged.schema == df.schema
-        assert canon(staged.collect()) == base
-    finally:
-        spark.conf.set(STAGE_MODE_CONF, "local")
-        spark.catalog.clearCache()
-
-
-def test_stage_persist_reroot_keeps_stats(spark):
-    """The persist-mode re-root preserves the origin frame's stats
-    (round-15, retires the round-13 advisor caveat): the old
-    internalCreateDataFrame re-root reported sizeInBytes=Long.Max, so
-    every downstream join against a staged cut — however small — was
-    forced to sort-merge with both sides shuffled.  The
-    LogicalRDD.fromDataset re-root carries real stats, so a small
-    staged cut joined to a big frame broadcasts, at parity with local
-    mode.  (outputPartitioning itself is UnknownPartitioning under AQE
-    in EVERY mode, local included — measured; stats were the actual
-    cost.  tools/persist_partitioning_probe.py: 2 -> 1 exchanges on
-    the keyed agg+self-join pattern.)"""
-    import re
-
-    from backend_spark.scale import STAGE_MODE_CONF, stage
-
-    _LONG_MAX = 9223372036854775807
-
-    def probe(mode):
-        spark.conf.set(STAGE_MODE_CONF, mode)
-        small = (
-            spark.range(100)
-            .select((F.col("id") % 37).alias("k"), F.col("id").alias("v"))
-        )
-        cut = stage(small, eager=True)
-        size = int(cut._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        big = spark.range(10000).select((F.col("id") % 37).alias("k"))
-        out = big.join(cut, "k")
-        assert out.count() > 0  # force AQE's final plan
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        n_ex = len(re.findall(r"\bExchange hashpartitioning", plan))
-        return size, n_ex, "BroadcastHashJoin" in plan
-
-    try:
-        size_l, ex_l, bc_l = probe("local")
-        size_p, ex_p, bc_p = probe("persist")
-        assert size_l < _LONG_MAX and bc_l, "local-mode control not broadcast"
-        assert size_p < _LONG_MAX, "persist cut lost stats (sentinel sizeInBytes)"
-        assert size_p == size_l, f"stats diverge: persist {size_p} vs local {size_l}"
-        assert bc_p, "small persist-staged cut not broadcast downstream"
-        assert ex_p == ex_l, f"exchange count: persist {ex_p} vs local {ex_l}"
-    finally:
-        spark.conf.set(STAGE_MODE_CONF, "local")
-        spark.catalog.clearCache()
-
-
-def test_stage_persist_recomputes_after_block_loss(spark):
-    """Persist mode's fault-tolerance contract under the round-15
-    fromDataset re-root: after the DISK_ONLY blocks vanish (simulated
-    by unpersisting the handle), actions on the staged frame RECOMPUTE
-    through RDD lineage instead of failing — the property that
-    distinguishes persist from local/reliable checkpoints and makes it
-    usable without a reliable FS."""
-    from backend_spark.scale import STAGE_MODE_CONF, stage
-
-    try:
-        spark.conf.set(STAGE_MODE_CONF, "persist")
-        df = spark.range(10000).select(
-            (F.col("id") % 97).alias("k"), F.col("id").alias("v")
-        )
-        cut = stage(df)
-        first = cut.agg(F.sum("v")).collect()[0][0]  # materialize the cache
-        handle = cut._sg_persist_handle
-        handle.unpersist(blocking=True)  # total block loss
-        assert cut.agg(F.sum("v")).collect()[0][0] == first
-        # downstream keyed join also survives the loss
-        joined = cut.join(
-            cut.groupBy("k").agg(F.count(F.lit(1)).alias("n")), "k"
-        )
-        assert joined.count() == 10000
-    finally:
-        spark.conf.set(STAGE_MODE_CONF, "local")
-        spark.catalog.clearCache()
 
 
 def test_rollup_merge_equals_direct(spark):

@@ -18,11 +18,8 @@ eventually diverge from its oracle on some machine.
 Usage: python tools/determinism_check.py [name ...]   (exit 1 on diff)
        python tools/determinism_check.py --cluster [--modes m1,m2] [name ...]
          — fourth shape: re-run (default: the checkpoint-heavy set) on
-         a real 2-executor ``local-cluster[2,8,4096]`` under ALL THREE
-         ``stage.mode`` settings (local / reliable / persist) and diff
-         vs local[*].  persist joined in round 13: with pin=True
-         upgrading the sampled-boundary cuts, the persist switch is
-         result-identical end-to-end and certifiable.
+         a real 2-executor ``local-cluster[2,8,4096]`` under both
+         ``stage.mode`` settings (local / reliable) and diff vs local[*].
 """
 
 from __future__ import annotations
@@ -56,13 +53,14 @@ SHAPES = (
 # two block managers — and additionally re-runs under
 # stage.mode=reliable, the honest signal that scale.stage()'s reliable
 # checkpoint path works on a multi-executor cluster, not just local[*].
+STAGE_MODES = ("local", "reliable")
 CLUSTER_DEFAULT = (
     "dup_report er_pipeline shuffle_order row_ids pagerank auc "
     "dedup_near clique det_sample".split()
 )
 
 
-def main_cluster(only=None, modes=("local", "reliable", "persist")) -> int:
+def main_cluster(only=None, modes=STAGE_MODES) -> int:
     import os
     import tempfile
 
@@ -173,17 +171,17 @@ if __name__ == "__main__":
     argv = sys.argv[1:]
     if argv and argv[0] == "--cluster":
         argv = argv[1:]
-        modes = ("local", "reliable", "persist")
+        modes = STAGE_MODES
         if "--modes" in argv:  # accept the flag at any position
             i = argv.index("--modes")
             if i + 1 >= len(argv):
                 sys.exit("--modes requires a comma-separated value, "
-                         "e.g. --modes persist")
+                         "e.g. --modes reliable")
             modes = tuple(argv[i + 1].split(","))
-            bad = [m for m in modes if m not in ("local", "reliable", "persist")]
+            bad = [m for m in modes if m not in STAGE_MODES]
             if bad:
                 sys.exit(f"unknown stage mode(s) {bad}; "
-                         "expected local/reliable/persist")
+                         "expected local/reliable")
             argv = argv[:i] + argv[i + 2:]
         sys.exit(main_cluster(set(argv) or None, modes=modes))
     sys.exit(main(set(argv) or None))

@@ -31,10 +31,10 @@ def main() -> int:
     hits: set[str] = set()
     current = {"name": None}
 
-    def spy(df, eager=False, pin=False):
+    def spy(df, eager=False):
         if current["name"] is not None:
             hits.add(current["name"])
-        return real_stage(df, eager=eager, pin=pin)
+        return real_stage(df, eager=eager)
 
     # patch both the module binding and any from-imports taken at
     # module load time
