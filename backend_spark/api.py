@@ -140,46 +140,39 @@ class ApiServer:
                 if user is None:
                     # RFC 7235: a 401 must carry the challenge, or
                     # reactive-auth clients never retry with credentials
-                    body = json.dumps({"error": "authentication required"}).encode()
-                    self.send_response(401)
-                    self.send_header("WWW-Authenticate", 'Basic realm="backend_spark"')
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                    self._reply(
+                        401,
+                        {"error": "authentication required"},
+                        headers=[("WWW-Authenticate", 'Basic realm="backend_spark"')],
+                    )
                     return False
                 if right is not None and not sec.check_rights(user, project, right):
-                    self._send(403, {"error": f"user {user} lacks {right} on {project}"})
+                    self._reply(403, {"error": f"user {user} lacks {right} on {project}"})
                     return False
                 return True
 
-            def _send(self, code: int, payload):
-                body = json.dumps(payload, default=str).encode()
+            def _reply(self, code: int, body, ctype: str = "application/json", headers=()):
+                """Write one complete response.  A ``str`` body goes out
+                as is; anything else is serialized as JSON."""
+                data = (body if isinstance(body, str) else json.dumps(body, default=str)).encode()
                 self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
+                for name, value in (*headers, ("Content-Type", ctype)):
+                    self.send_header(name, value)
+                self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
-                self.wfile.write(body)
+                self.wfile.write(data)
 
             def _body(self) -> bytes:
                 n = int(self.headers.get("Content-Length") or 0)
                 return self.rfile.read(n) if n else b""
 
-            def _send_text(self, code: int, text: str, ctype: str = "text/plain"):
-                body = text.encode()
-                self.send_response(code)
-                self.send_header("Content-Type", ctype)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
             def do_GET(self):
                 if self.path == "/health":  # liveness stays unauthenticated
-                    return self._send(200, {"status": "up"})
+                    return self._reply(200, {"status": "up"})
                 if self.path == "/jobs":
                     if not self._auth():
                         return None
-                    return self._send(200, outer.jobs.snapshot())
+                    return self._reply(200, outer.jobs.snapshot())
                 parts = self.path.strip("/").split("/")
                 if len(parts) == 1:  # bare listing: authenticated-only
                     if not self._auth():
@@ -188,23 +181,23 @@ class ApiServer:
                     return None
                 if parts[0] == "recipes":
                     if len(parts) == 1:  # conf of every recipe
-                        return self._send(200, outer.book.recipes)
+                        return self._reply(200, outer.book.recipes)
                     name = parts[1]
                     if name not in outer.book.recipes:
-                        return self._send(404, {"error": f"unknown recipe {name}"})
+                        return self._reply(404, {"error": f"unknown recipe {name}"})
                     if len(parts) == 2:  # conf of one recipe
-                        return self._send(200, outer.book.recipes[name])
+                        return self._reply(200, outer.book.recipes[name])
                     action = parts[2]
                     job = outer.jobs.latest_for(name)
                     if action == "status":
-                        return self._send(
+                        return self._reply(
                             200, {"recipe": name, "status": job["status"] if job else "down"}
                         )
                     if action == "log":
                         if job is None:
-                            return self._send_text(200, "")
+                            return self._reply(200, "", "text/plain")
                         if job["status"] != "up":  # finished -> full log, plain
-                            return self._send_text(200, "\n".join(job["log"]))
+                            return self._reply(200, "\n".join(job["log"]), "text/plain")
                         # running -> SSE tail (reference tailLog,
                         # code/api.py:908-929): replay, poll, close
                         self.send_response(200)
@@ -229,7 +222,7 @@ class ApiServer:
                             wait += 0.1
                         self.wfile.write(b"event: close\ndata: end\n\n")
                         return None
-                return self._send(404, {"error": "not found"})
+                return self._reply(404, {"error": "not found"})
 
             def do_PUT(self):
                 parts = self.path.strip("/").split("/")
@@ -239,13 +232,13 @@ class ApiServer:
                     if not self._auth("update", name):
                         return None
                     if name not in outer.book.recipes:
-                        return self._send(404, {"error": f"unknown recipe {name}"})
+                        return self._reply(404, {"error": f"unknown recipe {name}"})
                     try:
                         if action == "test":
                             df = outer.book.run(name, test=True)
                             rows = [r.asDict(recursive=True) for r in df.limit(30).collect()]
                             steps = outer.book.trace(name)
-                            return self._send(
+                            return self._reply(
                                 200,
                                 {"rows": rows, "schema": df.schema.simpleString(), "steps": steps},
                             )
@@ -253,10 +246,10 @@ class ApiServer:
                             job_id = outer.jobs.start(
                                 name, lambda: outer.book.run(name).count()
                             )
-                            return self._send(202, {"job": job_id, "status": "up"})
+                            return self._reply(202, {"job": job_id, "status": "up"})
                     except Exception as e:
-                        return self._send(500, {"error": str(e), "trace": traceback.format_exc()[-2000:]})
-                return self._send(404, {"error": "not found"})
+                        return self._reply(500, {"error": str(e), "trace": traceback.format_exc()[-2000:]})
+                return self._reply(404, {"error": "not found"})
 
             def do_POST(self):
                 parts = self.path.strip("/").split("/")
@@ -266,7 +259,7 @@ class ApiServer:
                         if not self._auth("update", name):
                             return None
                         if name not in outer.book.recipes:
-                            return self._send(404, {"error": f"unknown recipe {name}"})
+                            return self._reply(404, {"error": f"unknown recipe {name}"})
                         ctype = self.headers.get("Content-Type", "application/json")
                         raw = self._body().decode()
                         import pandas as pd
@@ -278,7 +271,7 @@ class ApiServer:
                         df = outer.spark.createDataFrame(pdf)
                         out = outer.book.compile(name)(df)
                         rows = [r.asDict(recursive=True) for r in out.collect()]
-                        return self._send(200, {"rows": rows})
+                        return self._reply(200, {"rows": rows})
                     if len(parts) >= 3 and parts[0] == "datasets" and parts[2] in ("_search", "_update"):
                         # ES API proxy (reference code/api.py:745-812):
                         # forward the JSON body to the dataset's index
@@ -289,14 +282,14 @@ class ApiServer:
                             return None
                         conf = outer.book.dataset_conf.get(name) or {}
                         if conf.get("format") != "elasticsearch":
-                            return self._send(403, {"error": "not an elasticsearch dataset"})
+                            return self._reply(403, {"error": "not an elasticsearch dataset"})
                         base = conf["url"].rstrip("/")
                         index = conf.get("table", name)
                         if action == "_search":
                             url = f"{base}/{index}/_search"
                         else:
                             if len(parts) < 4:
-                                return self._send(403, {"error": "_update needs a doc id"})
+                                return self._reply(403, {"error": "_update needs a doc id"})
                             url = f"{base}/{index}/_update/{parts[3]}"
                         req = urllib.request.Request(
                             url, data=self._body() or b"{}",
@@ -304,11 +297,11 @@ class ApiServer:
                         )
                         try:
                             with urllib.request.urlopen(req, timeout=30) as resp:
-                                return self._send_text(
+                                return self._reply(
                                     resp.status, resp.read().decode(), "application/json"
                                 )
                         except urllib.error.HTTPError as e:
-                            return self._send_text(e.code, e.read().decode(), "application/json")
+                            return self._reply(e.code, e.read().decode(), "application/json")
                     if len(parts) == 2 and parts[0] == "datasets":
                         if not self._auth("read", parts[1]):
                             return None
@@ -316,12 +309,12 @@ class ApiServer:
                         opts = json.loads(self._body() or b"{}")
                         n = int(opts.get("size", 10))
                         rows = [r.asDict(recursive=True) for r in df.limit(n).collect()]
-                        return self._send(200, {"rows": rows, "schema": dict(df.dtypes)})
+                        return self._reply(200, {"rows": rows, "schema": dict(df.dtypes)})
                 except KeyError as e:
-                    return self._send(404, {"error": str(e)})
+                    return self._reply(404, {"error": str(e)})
                 except Exception as e:
-                    return self._send(500, {"error": str(e), "trace": traceback.format_exc()[-2000:]})
-                return self._send(404, {"error": "not found"})
+                    return self._reply(500, {"error": str(e), "trace": traceback.format_exc()[-2000:]})
+                return self._reply(404, {"error": "not found"})
 
         self.httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self.httpd.server_address[1]

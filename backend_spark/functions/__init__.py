@@ -485,6 +485,24 @@ def python_repl_to_java(repl: str) -> str:
     return _re.sub(r"\\(\d)", r"$\1", repl)
 
 
+def ordered_sum(key: Column, value: Column) -> Column:
+    """Aggregate: Σ ``value`` over the group, added left to right in
+    ascending ``key`` order (ties on ``key`` by ``value``).
+
+    Float addition is not associative, so ``F.sum`` over doubles depends
+    on partition and arrival order: a total sitting on a ``round(·,
+    ndigits)`` boundary can flip with parallelism.  Sorting the
+    collected (key, value) pairs fixes the fold order, so the result is
+    bit-identical at any partition count and matches an oracle that
+    sums with ``ORDER BY key``.  The group's pairs are collected into
+    one array, so use it where groups are bounded."""
+    return F.aggregate(
+        F.array_sort(F.collect_list(F.struct(key.alias("k"), value.alias("v")))),
+        F.lit(0.0),
+        lambda a, x: a + x["v"],
+    )
+
+
 # ---------------------------------------------------------------------------
 # MinHash / SimHash signatures (LLM-pipeline primitives; cross-engine exact)
 # ---------------------------------------------------------------------------

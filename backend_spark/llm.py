@@ -875,6 +875,22 @@ def simhash_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _cosine_topk(pairs: DataFrame, k: int, round_to: int) -> DataFrame:
+    """Shared scoring tail of the cosine searches: over candidate
+    ``pairs`` (query_id, __qv, neighbor_id, __cv) drop self-matches,
+    score the cosine rounded to ``round_to``, and keep each query's
+    ``k`` best (ties to the smaller neighbor_id).  Returns (query_id,
+    neighbor_id, cosine)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (
+        pairs.where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", F.round(fn.cosine_similarity(F.col("__qv"), F.col("__cv")), round_to))
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .select("query_id", "neighbor_id", "cosine")
+    )
+
+
 def ann_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -891,17 +907,7 @@ def ann_topk_bruteforce(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(fn.cosine_similarity(F.col("__qv"), F.col("__cv")), round_to))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _cosine_topk(q.crossJoin(c), k, round_to)
 
 
 def _hyperplane_bits(vec: Column, n_planes: int, dim: int, seed: str = "plane") -> Column:
@@ -973,21 +979,14 @@ def ann_topk_lsh(
             _hyperplane_bits(F.col(vec_col), n_planes, dim).alias("__bucket"),
         )
     )
-    scored = (
-        qb.join(cb, "__bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(fn.cosine_similarity(F.col("__qv"), F.col("__cv")), round_to))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _cosine_topk(qb.join(cb, "__bucket"), k, round_to)
 
 
 def _ivf_fit(corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int, seed: int):
-    """KMeans cell assignment + centroid table for the IVF index."""
+    """KMeans cell assignment + centroid table for the IVF index.
+    Kept on pyspark.ml ``KMeans`` (k-means|| init) rather than
+    :func:`_lloyd`: its hash-rank init lost recall at pruned probes
+    (SCALING.md, IVF fit note)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -1075,20 +1074,7 @@ def ann_topk_ivf(
         .where(F.col("__pr") <= n_probe)
         .select("query_id", "__qv", "__cell")
     )
-    scored = (
-        F.broadcast(probes)
-        .join(assigned, "__cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine", F.round(fn.cosine_similarity(F.col("__qv"), F.col("__cv")), round_to)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _cosine_topk(F.broadcast(probes).join(assigned, "__cell"), k, round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -2925,6 +2911,114 @@ def blocklist_hit_rate(
     )
 
 
+def _sq_dist(v: Column, c: Column, ndigits: int) -> Column:
+    """Squared euclidean distance of two equal-length double arrays,
+    folded left to right in index order and rounded to ``ndigits`` —
+    the same IEEE fold in every engine, rounded before any comparison
+    so cross-engine float noise cannot flip an argmin/argmax."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        ndigits,
+    )
+
+
+def _lloyd(
+    sub: DataFrame,
+    id_col: str,
+    centroids: dict,
+    n_iter: int,
+    ndigits: int,
+    scale: int = 1_000_000,
+):
+    """Deterministic Lloyd's k-means over an ``(id_col, __s, __sub)``
+    frame: one codebook per subspace ``__s`` (0..m−1), all trained in
+    one fused loop — one driver action per iteration for every
+    subspace.  ``centroids`` = ``{s: {cluster: [float, ...]}}`` is the
+    caller's init (hash-ranked corpus vectors, no RNG).  Reproducible
+    bit-for-bit by a SQL oracle:
+
+    * assignment = argmin of the rounded squared distance
+      (:func:`_sq_dist`) over the row's codebook, embedded as a literal
+      array — bounded m·k·dim driver state, so no broadcast join, no
+      n×k row blow-up, no per-id window.  ``array_min`` over
+      (d², cluster) structs orders field by field: ties go to the
+      smaller cluster;
+    * update = per-(subspace, cluster, dim) MEAN of coordinates scaled
+      to integers (``floor(x*scale + 0.5)``) and summed as BIGINTs —
+      integer addition is associative, so the centroid is identical
+      under any partitioning, and the division back to double is one
+      correctly-rounded operation.  (The documented divergence from
+      textbook Lloyd's: means are of ``1/scale``-quantized coordinates,
+      1e-6 resolution.)  Empty clusters keep their previous centroid.
+
+    Runs ``n_iter`` assign+update rounds; each update is one keyed
+    BIGINT aggregate (map-side combinable, no collect of row data).
+    Returns ``(asg, centroids)``: ``asg`` = (id, __s, cluster, dist)
+    lazily assigned against the final codebooks, ``centroids`` the
+    final codebooks in the init's shape.
+    """
+
+    def assign(cents):
+        books = F.array(
+            *[
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(ci).alias("cluster"),
+                            F.array(*[F.lit(float(x)) for x in cv]).alias("cv"),
+                        )
+                        for ci, cv in sorted(cents[s].items())
+                    ]
+                )
+                for s in sorted(cents)
+            ]
+        )
+        best = F.array_min(
+            F.transform(
+                F.element_at(books, F.col("__s") + 1),
+                lambda c: F.struct(
+                    _sq_dist(F.col("__sub"), c["cv"], ndigits).alias("__d"),
+                    c["cluster"].alias("cluster"),
+                ),
+            )
+        )
+        return sub.select(
+            id_col, "__s", "__sub", best["cluster"].alias("cluster"), best["__d"].alias("__d")
+        )
+
+    for _ in range(n_iter):
+        sums = (
+            assign(centroids)
+            .select(
+                "__s",
+                "cluster",
+                F.posexplode(
+                    F.transform("__sub", lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
+                ).alias("dim", "xs"),
+            )
+            .groupBy("__s", "cluster", "dim")
+            .agg(F.sum("xs").alias("sm"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        new: dict = {s: {} for s in centroids}
+        for r in sums:
+            new[r["__s"]].setdefault(r["cluster"], {})[r["dim"]] = r["sm"] / (r["n"] * scale)
+        centroids = {
+            s: {
+                ci: [new[s][ci][d] for d in range(len(old))] if ci in new[s] else old
+                for ci, old in book.items()
+            }
+            for s, book in centroids.items()
+        }
+
+    asg = assign(centroids).select(id_col, "__s", "cluster", F.col("__d").alias("dist"))
+    return asg, centroids
+
+
 def kmeans_assign(
     df: DataFrame,
     id_col: str,
@@ -2938,33 +3032,17 @@ def kmeans_assign(
     """Deterministic Lloyd's KMeans over an embedding column — the real
     iterative-refinement upgrade of :func:`semdedup`'s one-shot
     hash-centroid assignment, usable for cluster-balanced sampling and
-    curation diagnostics.  Deterministic-by-construction so a SQL
-    oracle reproduces it bit-for-bit:
+    curation diagnostics.  Deterministic by construction, so a SQL
+    oracle reproduces it bit-for-bit: init = the ``k`` corpus vectors
+    with smallest ``md5_long(salt || ':' || id)`` (hash rank = cluster
+    index, ties by id) — no RNG; then ``n_iter`` rounds of
+    :func:`_lloyd` (rounded-distance argmin, ties → smaller cluster;
+    scaled-integer means; empty clusters keep their centroid).
 
-    * init = the ``k`` corpus vectors with smallest
-      ``md5_long(salt || id)`` (hash rank = cluster index) — no RNG;
-    * assignment = argmin squared-euclidean over the broadcast
-      centroid table, distance rounded to ``ndigits`` (ties → smaller
-      cluster);
-    * update = per-dimension MEAN computed on coordinates scaled to
-      integers (``floor(x*scale + 0.5)``) and summed as BIGINTs —
-      integer addition is associative, so the centroid is identical
-      under any partitioning/order, unlike a float sum.  The division
-      back to double is a single correctly-rounded operation.  (The
-      documented divergence from textbook Lloyd's: means are taken on
-      ``1/scale``-quantized coords — 1e-6 resolution, far below any
-      embedding's noise floor.)  Empty clusters keep their previous
-      centroid.
-
-    Runs ``n_iter`` assign+update rounds, then returns the final
-    assignment: (id, cluster, dist) with ``dist`` the rounded squared
-    euclidean to the final centroid.
-
-    Scale posture: centroids are k×dim driver state (same bounded-
-    collect class as the BPE merge table); assignment is a broadcast
-    join + per-id argmin window; the update is one keyed
-    (cluster, dim) BIGINT aggregate — map-side combinable, no
-    collect of row data, nothing quadratic.
+    Returns the final assignment: (id, cluster, dist) with ``dist`` the
+    rounded squared euclidean to the final centroid.  Centroids are
+    k×dim driver state (same bounded-collect class as the BPE merge
+    table); nothing quadratic.
     """
     base = df.select(
         F.col(id_col).alias("__id"),
@@ -2983,71 +3061,11 @@ def kmeans_assign(
         .limit(k)
         .collect()
     )
-    centroids = {ci: list(r["__v"]) for ci, r in enumerate(init)}
-
-    def _assign(cents):
-        # centroids are bounded k×dim driver state, so the argmin is a
-        # pure per-row expression over a LITERAL centroid array — no
-        # broadcast join, no n×k row blow-up, no per-id window
-        # shuffle+sort (round-15; was broadcast join + row_number).
-        # array_min over (rounded d², cluster) structs reproduces the
-        # old (\_\_d asc, cluster asc) pick exactly: struct ordering is
-        # field-by-field, and the same IEEE fold + round feed it.
-        cent_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(ci).alias("cluster"),
-                    F.array(*[F.lit(float(x)) for x in cv]).alias("cv"),
-                )
-                for ci, cv in sorted(cents.items())
-            ]
-        )
-        best = F.array_min(
-            F.transform(
-                cent_arr,
-                lambda c: F.struct(
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("__v"), c["cv"], lambda x, y: (x - y) * (x - y)
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ),
-                        ndigits,
-                    ).alias("__d"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        return base.select(
-            "__id", "__v", best["cluster"].alias("cluster"), best["__d"].alias("__d")
-        )
-
-    for _ in range(n_iter):
-        asg = _assign(centroids)
-        sums = (
-            asg.select(
-                "cluster",
-                F.posexplode(
-                    F.transform("__v", lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
-                ).alias("dim", "xs"),
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.sum("xs").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        new = {}
-        for r in sums:
-            new.setdefault(r.cluster, {})[r.dim] = r.s / (r.n * scale)
-        centroids = {
-            ci: [new[ci][d] for d in range(len(old))] if ci in new else old
-            for ci, old in centroids.items()
-        }
-
-    return _assign(centroids).select(
-        F.col("__id").alias(id_col), "cluster", F.col("__d").alias("dist")
-    )
+    # one subspace: a literal __s folds the codebook pick away
+    sub = base.select("__id", F.lit(0).alias("__s"), F.col("__v").alias("__sub"))
+    cents = {0: {ci: list(r["__v"]) for ci, r in enumerate(init)}}
+    asg, _ = _lloyd(sub, "__id", cents, n_iter, ndigits, scale)
+    return asg.select(F.col("__id").alias(id_col), "cluster", "dist")
 
 
 def containment_pairs(
@@ -3156,14 +3174,7 @@ def kcenter_coreset(
     have_mind = False
     for r in range(2, k + 1):
         cent = F.array(*[F.lit(float(x)) for x in center])
-        step = F.round(
-            F.aggregate(
-                F.zip_with(F.col("__v"), cent, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            ndigits,
-        )
+        step = _sq_dist(F.col("__v"), cent, ndigits)
         mind = F.least(F.col("__mind"), step) if have_mind else step
         base = base.select("__id", "__v", mind.alias("__mind")).transform(stage, eager=True)
         have_mind = True
@@ -3252,32 +3263,40 @@ def mmr_rerank(
     )
 
 
-def _pq_kmeans(
-    base: DataFrame,
+def _pq_fit(
+    df: DataFrame,
     id_col: str,
+    vec_col: str,
     m: int,
-    dsub: int,
     k: int,
     n_iter: int,
     salt: str,
     ndigits: int,
-    scale: int = 1_000_000,
 ):
-    """All ``m`` PQ sub-quantizers trained in ONE fused Lloyd's loop
-    (round-15).  Bit-identical to ``m`` independent
-    ``kmeans_assign(salt=f"{salt}{s}")`` calls over the subvector
-    slices — same hash-rank init per subspace (``md5_long("{salt}{s}:"
-    || id)``, ties by id), same literal-centroid rounded-d² argmin,
-    same scaled-BIGINT integer means — but the JOB structure is fused
-    over an exploded (id, subspace, subvector) frame: one driver
-    action for all m inits, one per iteration for all m updates,
-    instead of 3+ actions per subspace (driver round-trips scale with
-    m × iterations at any cluster size; guide §1.4/§2.4).
+    """Shared front of :func:`pq_encode` and :func:`ann_pq`: cast the
+    vectors to doubles, check the dimension splits into ``m``
+    subspaces, and train all ``m`` sub-quantizers with one fused
+    :func:`_lloyd` over the exploded (id, subspace, subvector) frame.
+    Subspace ``s`` starts from the ``k`` subvectors with smallest
+    ``md5_long(salt || s || ':' || id)`` (ties by id), so each codebook
+    equals ``kmeans_assign(salt=f"{salt}{s}")`` over that slice.
 
-    Returns ``(asg, centroids)``: ``asg`` = (id, __s, cluster, __d)
-    lazily re-derived from the final codebooks, ``centroids`` =
-    ``{s: {ci: [float, ...]}}`` driver state (m·k·dsub bounded).
+    Returns ``(asg, centroids, dsub)`` as :func:`_lloyd` returns them,
+    plus the subvector width; None for an empty input.
     """
+    if m < 1 or k < 1:
+        raise ValueError(f"m and k must be positive, got {m}, {k}")
+    base = df.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
+    ).transform(stage, eager=False)
+    dim_row = base.select(F.size("__v").alias("d")).limit(1).collect()
+    if not dim_row:
+        return None
+    dim = dim_row[0]["d"]
+    if dim % m != 0:
+        raise ValueError(f"vector dim {dim} is not divisible by m={m}")
+    dsub = dim // m
     sub = base.select(
         F.col(id_col),
         F.explode(
@@ -3313,72 +3332,7 @@ def _pq_kmeans(
     centroids: dict = {s: {} for s in range(m)}
     for r in init_rows:
         centroids[r["__s"]][r["__rn"] - 1] = list(r["__sub"])
-
-    def _assign(cents):
-        per_s = [
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).alias("cluster"),
-                        F.array(*[F.lit(float(x)) for x in cv]).alias("cv"),
-                    )
-                    for ci, cv in sorted(cents[s].items())
-                ]
-            )
-            for s in range(m)
-        ]
-        pick = F.element_at(F.array(*per_s), F.col("__s") + 1)
-        best = F.array_min(
-            F.transform(
-                pick,
-                lambda c: F.struct(
-                    F.round(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("__sub"), c["cv"], lambda x, y: (x - y) * (x - y)
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ),
-                        ndigits,
-                    ).alias("__d"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        return sub.select(
-            id_col, "__s", "__sub", best["cluster"].alias("cluster"), best["__d"].alias("__d")
-        )
-
-    for _ in range(n_iter):
-        sums = (
-            _assign(centroids)
-            .select(
-                "__s",
-                "cluster",
-                F.posexplode(
-                    F.transform("__sub", lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
-                ).alias("dim", "xs"),
-            )
-            .groupBy("__s", "cluster", "dim")
-            .agg(F.sum("xs").alias("sm"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        new: dict = {s: {} for s in range(m)}
-        for r in sums:
-            new[r["__s"]].setdefault(r["cluster"], {})[r["dim"]] = r["sm"] / (r["n"] * scale)
-        centroids = {
-            s: {
-                ci: [new[s][ci][d] for d in range(len(old))] if ci in new[s] else old
-                for ci, old in centroids[s].items()
-            }
-            for s in range(m)
-        }
-
-    asg = _assign(centroids).select(
-        id_col, "__s", "cluster", F.col("__d").alias("dist")
-    )
-    return asg, centroids
+    return (*_lloyd(sub, id_col, centroids, n_iter, ndigits), dsub)
 
 
 def pq_encode(
@@ -3394,12 +3348,11 @@ def pq_encode(
     """Product quantization (Jégou et al. 2011) — the compression
     behind FAISS-style IVF-PQ and the standard way a 100 TB vector
     corpus fits in serving memory: split each vector into ``m``
-    subvectors, learn a ``k``-centroid codebook per subspace
-    (:func:`kmeans_assign`'s deterministic Lloyd's — hash-rank init,
-    scaled-BIGINT means — run on the subvector slices), and store each
-    vector as ``m`` small codes (m=8, k=16 → 4 bytes/vector vs 256
-    for float32×64, a 64× compression; :func:`quantize_embeddings`'
-    int8 path is the milder 4×).
+    subvectors, learn a ``k``-centroid codebook per subspace (the
+    :func:`kmeans_assign` Lloyd's, run on the subvector slices), and
+    store each vector as ``m`` small codes (m=8, k=16 → 4 bytes/vector
+    vs 256 for float32×64, a 64× compression;
+    :func:`quantize_embeddings`' int8 path is the milder 4×).
 
     Returns (id, codes, recon_err): ``codes`` the JSON array of the m
     codebook indices in subspace order, ``recon_err`` the summed
@@ -3407,31 +3360,19 @@ def pq_encode(
     readout; fixed subspace-order fold).  Deterministic end-to-end —
     codebooks, codes and errors reproduce exactly cross-engine.
 
-    Scale: m independent kmeans runs, each the kmeans_assign shape
-    (k×d driver state, broadcast-centroid assignment, integer-mean
-    updates); the final pivot is one keyed collect_list per id.  ADC
-    search over the codes is a broadcast of the m×k codebook — the
-    ann_ivf pattern with a 64×-smaller corpus side.
+    Scale: one fused Lloyd's loop trains all m codebooks (one driver
+    action per iteration, m·k×dsub driver state, integer-mean updates);
+    the final pivot is one keyed collect_list per id.  ADC search over
+    the codes is a broadcast of the m×k codebook — the ann_ivf pattern
+    with a 64×-smaller corpus side.
     """
-    if m < 1 or k < 1:
-        raise ValueError(f"m and k must be positive, got {m}, {k}")
-    base = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    ).transform(stage, eager=False)
-    dim_row = base.select(F.size("__v").alias("d")).limit(1).collect()
-    if not dim_row:
+    fit = _pq_fit(df, id_col, vec_col, m, k, n_iter, salt, ndigits)
+    if fit is None:
         return df.sparkSession.createDataFrame(
             [], f"{id_col} long, codes string, recon_err double"
         )
-    dim = dim_row[0]["d"]
-    if dim % m != 0:
-        raise ValueError(f"vector dim {dim} is not divisible by m={m}")
-    dsub = dim // m
-    # fused multi-subspace Lloyd's (round-15): one driver action per
-    # iteration for ALL m sub-quantizers — see _pq_kmeans
-    allp, _cents = _pq_kmeans(base, id_col, m, dsub, k, n_iter, salt, ndigits)
-    return allp.groupBy(id_col).agg(
+    asg, _, _ = fit
+    return asg.groupBy(id_col).agg(
         F.to_json(
             F.transform(
                 F.array_sort(
@@ -3440,16 +3381,7 @@ def pq_encode(
                 lambda x: x["v"],
             )
         ).alias("codes"),
-        F.round(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("__s").alias("k"), F.col("dist").alias("v")))
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x["v"],
-            ),
-            ndigits,
-        ).alias("recon_err"),
+        F.round(fn.ordered_sum(F.col("__s"), F.col("dist")), ndigits).alias("recon_err"),
     )
 
 
@@ -3486,25 +3418,15 @@ def ann_pq(
     if topk < 1:
         raise ValueError(f"topk must be >= 1, got {topk}")
     spark = df.sparkSession
-    base = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    ).transform(stage, eager=False)
-    dim_row = base.select(F.size("__v").alias("d")).limit(1).collect()
-    if not dim_row:
+    fit = _pq_fit(df, id_col, vec_col, m, k, n_iter, salt, ndigits)
+    if fit is None:
         return spark.createDataFrame([], f"q_id long, {id_col} long, adist double")
-    dim = dim_row[0]["d"]
-    if dim % m != 0:
-        raise ValueError(f"vector dim {dim} is not divisible by m={m}")
-    dsub = dim // m
+    asg, cents_by_s, dsub = fit
     qrows = query_df.select(
         F.col(q_id_col).alias("qid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
     ).collect()
 
-    # fused multi-subspace Lloyd's (round-15): one driver action per
-    # iteration for ALL m sub-quantizers — see _pq_kmeans
-    asg, cents_by_s = _pq_kmeans(base, id_col, m, dsub, k, n_iter, salt, ndigits)
     codes = asg.select(F.col(id_col), F.col("__s").alias("s"), "cluster")
     tbl_rows = []
     for s in range(m):
@@ -3520,14 +3442,7 @@ def ann_pq(
         "qid", F.col(id_col), "s", F.round("qd", ndigits).alias("__qd")
     )
     ad = pairs.groupBy("qid", id_col).agg(
-        F.round(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s").alias("k"), F.col("__qd").alias("v")))),
-                F.lit(0.0),
-                lambda a, x: a + x["v"],
-            ),
-            ndigits,
-        ).alias("adist")
+        F.round(fn.ordered_sum(F.col("s"), F.col("__qd")), ndigits).alias("adist")
     )
     w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col(id_col).asc())
     return (
@@ -4115,11 +4030,7 @@ def bigram_logprob(
     )
     folded = lp.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("pos").alias("k"), F.col("__lp").alias("v")))),
-            F.lit(0.0),
-            lambda a, x: a + x["v"],
-        ).alias("__s"),
+        fn.ordered_sum(F.col("pos"), F.col("__lp")).alias("__s"),
     )
     return folded.select(
         F.col(id_col),
@@ -4203,11 +4114,7 @@ def kn_bigram_logprob(
     )
     folded = lp.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(F.col("pos").alias("k"), F.col("__lp").alias("v")))),
-            F.lit(0.0),
-            lambda a, x: a + x["v"],
-        ).alias("__s"),
+        fn.ordered_sum(F.col("pos"), F.col("__lp")).alias("__s"),
     )
     return folded.select(
         F.col(id_col),
@@ -4307,13 +4214,7 @@ def dsir_weights(
         per.groupBy(id_col)
         .agg(
             F.sum("__n").alias("n_feats"),
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("__b").alias("k"), F.col("__w").alias("v")))
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x["v"],
-            ).alias("__s"),
+            fn.ordered_sum(F.col("__b"), F.col("__w")).alias("__s"),
         )
         .select(F.col(id_col), "n_feats", F.round("__s", ndigits).alias("logweight"))
     )

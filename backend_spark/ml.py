@@ -23,6 +23,7 @@ import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from backend_spark import functions as fn
 from backend_spark.scale import stage
 
 
@@ -142,8 +143,6 @@ def model_features(
     Returns (id, <numeric cols>, <cat>_idx ..., is_test).
     """
     from pyspark.sql import Window
-
-    from backend_spark import functions as fn
 
     num_cols = (
         [c for c in df.columns if re.search(numerical, c)]
@@ -1064,25 +1063,13 @@ def ece(
     folded = bins.agg(
         F.sum("__n").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_bins_used"),
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__b"),
-                        (
-                            F.col("__n").cast("double")
-                            * F.abs(
-                                F.col("__pos").cast("double") / F.col("__n").cast("double")
-                                - F.col("__conf").cast("double")
-                                / F.lit(float(scale))
-                                / F.col("__n").cast("double")
-                            )
-                        ).alias("__w"),
-                    )
-                )
+        fn.ordered_sum(
+            F.col("__b"),
+            F.col("__n").cast("double")
+            * F.abs(
+                F.col("__pos").cast("double") / F.col("__n").cast("double")
+                - F.col("__conf").cast("double") / F.lit(float(scale)) / F.col("__n").cast("double")
             ),
-            F.lit(0.0),
-            lambda a, e: a + e["__w"],
         ).alias("__wsum"),
     )
     return folded.select(

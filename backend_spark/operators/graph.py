@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from backend_spark import functions as fn
 from backend_spark.scale import stage
 
 
@@ -686,15 +687,13 @@ def eigenvector_centrality(
     N·tol; the reference's clique ``compute`` list calls the ``_numpy``
     variant of the same fixed point, code/recipes.py:2014-2034).
 
-    Exactness posture: every float reduction is a fixed-order fold —
-    per-node neighbor contributions fold over the node's sorted
-    adjacency (``F.aggregate`` over ``array_sort(collect_list(...))``),
-    and the L2 norm folds over the sorted node vector — so the result is
-    bit-identical at any parallelism and reproducible by an oracle that
-    sums with ``ORDER BY``.  The per-node adjacency array makes a hub
-    node's row O(degree); sized for entity-resolution components
-    (bounded-degree near-cliques), same caveat as
-    :func:`closeness_centrality`.  With ``tol=0`` runs exactly
+    Exactness posture: every float reduction is a
+    :func:`~backend_spark.functions.ordered_sum` — per-node neighbor
+    contributions fold over the node's sorted adjacency, and the L2
+    norm folds over the sorted node vector.  The per-node adjacency
+    array makes a hub node's row O(degree); sized for
+    entity-resolution components (bounded-degree near-cliques), same
+    caveat as :func:`closeness_centrality`.  With ``tol=0`` runs exactly
     ``max_iter`` rounds (oracle-friendly); with ``tol>0`` raises
     ``RuntimeError`` if the L1 delta never drops below ``n*tol`` within
     ``max_iter`` rounds, mirroring networkx's
@@ -708,14 +707,11 @@ def eigenvector_centrality(
         return nodes.select("node", F.lit(0.0).alias("eigenvector"))
 
     x = nodes.withColumn("__x", F.lit(1.0 / n_nodes)).transform(stage, eager=True)
-    ordered_sum = lambda col: F.aggregate(  # noqa: E731 — fixed-order float fold
-        F.array_sort(F.collect_list(col)), F.lit(0.0), lambda a, v: a + v["v"]
-    )
     for _ in range(max_iter):
         contrib = (
             sym.join(x.select(F.col("node").alias("a"), "__x"), "a")
             .groupBy(F.col("b").alias("node"))
-            .agg(ordered_sum(F.struct(F.col("a").alias("k"), F.col("__x").alias("v"))).alias("__in"))
+            .agg(fn.ordered_sum(F.col("a"), F.col("__x")).alias("__in"))
         )
         unnorm_cols = ["node", (F.col("__x") + F.coalesce(F.col("__in"), F.lit(0.0))).alias("__u")]
         if tol > 0:
@@ -732,14 +728,7 @@ def eigenvector_centrality(
         # output needs no cut of its own in fixed-round mode.
         unnorm = stage(unnorm, eager=False)
         norm_df = unnorm.agg(
-            F.sqrt(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct(F.col("node").alias("k"),
-                                                         (F.col("__u") * F.col("__u")).alias("v")))),
-                    F.lit(0.0),
-                    lambda a, v: a + v["v"],
-                )
-            ).alias("__norm")
+            F.sqrt(fn.ordered_sum(F.col("node"), F.col("__u") * F.col("__u"))).alias("__norm")
         )
         if tol <= 0:
             # fixed-round mode has no per-round driver read, so the
@@ -1188,13 +1177,7 @@ def modularity(
         F.first("n_communities").alias("n_communities"),
         (F.first("__2m") / 2).cast("long").alias("n_edges"),
         F.round(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("__ca").alias("k"), F.col("__term").alias("v")))
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x["v"],
-            ),
+            fn.ordered_sum(F.col("__ca"), F.col("__term")),
             ndigits,
         ).alias("modularity"),
     )
@@ -1316,7 +1299,6 @@ def negative_edges(
     """
     if k < 1 or oversample < 1:
         raise ValueError(f"negative_edges: k and oversample must be >= 1, got {k}/{oversample}")
-    from backend_spark import functions as fn
 
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
     nodes = (

@@ -453,17 +453,8 @@ def hll_distinct(
     )
     folded = regs.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_registers"),
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__b").alias("k"),
-                        F.expr("1.0 / shiftleft(CAST(1 AS BIGINT), __m)").alias("v"),
-                    )
-                )
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x["v"],
+        fn.ordered_sum(
+            F.col("__b"), F.expr("1.0 / shiftleft(CAST(1 AS BIGINT), __m)")
         ).alias("__s"),
     )
     s_total = (F.lit(m) - F.col("n_registers")).cast("double") + F.col("__s")

@@ -134,6 +134,38 @@ def join_streams(
     return joined.drop(*[rw[c] for c in on])
 
 
+def _running_count(
+    df: DataFrame, keys: dict[str, str], batch_col: str | None, total_col: str
+) -> DataFrame:
+    """Per-key running event count kept in the state store across
+    micro-batches (``applyInPandasWithState``; state = one long per
+    active key).  ``keys`` maps each grouping column to its SQL type.
+    Emits one row per key per batch: the keys, the batch's count as
+    ``batch_col`` (omitted when None) and the all-time ``total_col``."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def _count(key, pdfs, state):
+        import pandas as pd
+
+        n = sum(len(pdf) for pdf in pdfs)
+        total = (state.get[0] if state.exists else 0) + n
+        state.update((total,))
+        row = dict(zip(keys, key))
+        if batch_col is not None:
+            row[batch_col] = n
+        row[total_col] = total
+        yield pd.DataFrame({c: [v] for c, v in row.items()})
+
+    counts = "".join(f", {c} long" for c in (batch_col, total_col) if c is not None)
+    return df.groupBy(*keys).applyInPandasWithState(
+        _count,
+        outputStructType=", ".join(f"{c} {t}" for c, t in keys.items()) + counts,
+        stateStructType="total long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def stateful_running_count(
     df: DataFrame,
     key_col: str,
@@ -150,27 +182,7 @@ def stateful_running_count(
     carts, rate counters — with state bounded per active key, which is
     what keeps it running at 100 TB/day.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def _count(key, pdfs, state):
-        import pandas as pd
-
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        total = (state.get[0] if state.exists else 0) + n
-        state.update((total,))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "batch_events": [n], "total_events": [total]}
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        _count,
-        outputStructType=f"{key_col} {key_type}, batch_events long, total_events long",
-        stateStructType="total long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _running_count(df, {key_col: key_type}, "batch_events", "total_events")
 
 
 def topk_stream(
@@ -198,27 +210,7 @@ def topk_stream(
     ±εN error and loses the cross-engine exactness this kernel exists
     for.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def _count(key, pdfs, state):
-        import pandas as pd
-
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        total = (state.get[0] if state.exists else 0) + n
-        state.update((total,))
-        yield pd.DataFrame(
-            {group_col: [key[0]], item_col: [key[1]], "total": [total]}
-        )
-
-    return df.groupBy(group_col, item_col).applyInPandasWithState(
-        _count,
-        outputStructType=f"{group_col} {group_type}, {item_col} {item_type}, total long",
-        stateStructType="total long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _running_count(df, {group_col: group_type, item_col: item_type}, None, "total")
 
 
 def pack_stream(

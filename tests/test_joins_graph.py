@@ -1380,6 +1380,35 @@ def test_pq_encode_codes_and_reconstruction(spark):
         llm.pq_encode(df, "vec_id", "embedding", m=3)
 
 
+def test_pq_encode_equals_kmeans_per_subspace(spark):
+    # PQ's fused per-subspace loop and kmeans_assign share one Lloyd's
+    # loop: the m=2 codes and errors must equal two kmeans runs over the
+    # vector halves, salted as PQ salts its subspaces ("pq0", "pq1")
+    import json
+
+    rows = [(i, [((i * 7 + j * 3) % 11) * 0.37 - j for j in range(4)]) for i in range(24)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pq = {
+        r.vec_id: (json.loads(r.codes), r.recon_err)
+        for r in llm.pq_encode(df, "vec_id", "embedding", m=2, k=3, n_iter=2, salt="pq").collect()
+    }
+    halves = [
+        {
+            r.vec_id: r
+            for r in llm.kmeans_assign(
+                df.select("vec_id", F.slice("embedding", 2 * s + 1, 2).alias("embedding")),
+                "vec_id", "embedding", k=3, n_iter=2, salt=f"pq{s}",
+            ).collect()
+        }
+        for s in range(2)
+    ]
+    assert set(pq) == set(range(24))
+    for i, (codes, err) in pq.items():
+        assert codes == [halves[0][i].cluster, halves[1][i].cluster]
+        assert err == round(halves[0][i].dist + halves[1][i].dist, 6)
+    assert len({tuple(c) for c, _ in pq.values()}) > 1
+
+
 def test_ann_pq_adc_approximates_exact_search(spark):
     # three separated 4-d blobs; ADC over PQ codes must put the query's
     # own blob members first

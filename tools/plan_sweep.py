@@ -10,12 +10,24 @@ CartesianProduct anywhere is a hard failure (exit 1); everything else
 prints for review (SMJ/NLJ have documented-legitimate uses:
 comparable-size graph joins, broadcast-scalar attachment).
 
-Usage: python tools/plan_sweep.py            (exit 1 on any cartesian)
+``--dump PATH`` also writes every swept query's executed physical plan
+(the initial adaptive plan: queries are built, not run) to PATH as one
+JSON object ``{query: {"node", "detail", "children"}}``.  Expression
+ids, plan ids and lambda-variable numbers are stripped, so the dumps
+of two checkouts diff cleanly, e.g. ``diff <(jq -S . a.json) <(jq -S .
+b.json)``.
+
+Usage: python tools/plan_sweep.py [--dump PATH] [query ...]
+       (exit 1 on any cartesian; no names = the whole registry)
 """
 
 from __future__ import annotations
 
+import argparse
+import json
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
@@ -24,20 +36,64 @@ from backend_spark.session import get_session  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
+# name#123 / name#123L expression ids, [plan_id=45], the per-session
+# counter pyspark appends to lambda variables (lambda x_17# -> lambda
+# x#), and the random directories queries that write an index create
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1#"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\],\s]+"), "<tmpdir>"),
+)
+
+
+def _normalize(s: str) -> str:
+    for pat, rep in _VOLATILE:
+        s = pat.sub(rep, s)
+    return s
+
+
+def _tree(node) -> dict:
+    """One physical node as JSON; an adaptive root is unwrapped to the
+    plan it currently holds."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    kids = node.children()
+    return {
+        "node": node.nodeName(),
+        "detail": _normalize(node.simpleString(1000)),
+        "children": [_tree(kids.apply(i)) for i in range(kids.size())],
+    }
+
 
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--dump", metavar="PATH", help="write normalized plans as JSON")
+    ap.add_argument("names", nargs="*", help="queries to sweep (default: all)")
+    args = ap.parse_args()
     spark = get_session("plan-sweep", cpus=8)
+    registry = entry_mod.queries()
+    unknown = sorted(set(args.names) - set(registry))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
     cartesians = []
     rows = []
-    for name, fn in entry_mod.queries().items():
+    dumps = {}
+    for name, fn in registry.items():
+        if args.names and name not in args.names:
+            continue
         if name.startswith("stream_"):  # streaming queries execute on build
             continue
         try:
             df = fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            executed = df._jdf.queryExecution().executedPlan()
+            plan = executed.toString()
         except Exception as e:  # noqa: BLE001 — report, keep sweeping
             print(f"ERR  {name}: {str(e)[:120]}")
             continue
+        if args.dump:
+            dumps[name] = _tree(executed)
         counts = (
             plan.count("SortMergeJoin"),
             plan.count("BroadcastNestedLoopJoin"),
@@ -53,6 +109,10 @@ def main() -> int:
         if smj or nlj or cart or exch > 6:
             print(f"{name:24} {smj:3} {nlj:3} {cart:4} {exch:4} {win:3}")
     print(f"\nswept {len(rows)} query plans; cartesians: {cartesians or 'none'}")
+    if args.dump:
+        with open(args.dump, "w") as f:
+            json.dump(dumps, f, indent=1, sort_keys=True)
+        print(f"wrote {len(dumps)} plans to {args.dump}")
     return 1 if cartesians else 0
 
 
