@@ -19,6 +19,7 @@ from backend_spark.operators.columns import (
 from backend_spark.operators.groupby import op_groupby
 from backend_spark.operators.joins import (
     asof_join,
+    fuzzy_dictionary,
     interval_join,
     join_strict,
     join_fuzzy,
@@ -62,7 +63,7 @@ __all__ = [
     "op_groupby", "op_unfold", "op_unnest", "op_nest", "op_ngram",
     "op_pivot", "op_melt", "rollup_agg",
     "op_list_to_tuple", "op_tuple_to_list",
-    "join_strict", "join_fuzzy", "join_topk", "asof_join", "range_join",
+    "join_strict", "join_fuzzy", "fuzzy_dictionary", "join_topk", "asof_join", "range_join",
     "interval_join",
     "compact_latest",
     "connected_components", "op_clique", "er_resolve", "pair_features", "blocking_eval",

@@ -10,10 +10,14 @@ Scale posture:
 * `join_fuzzy` replaces the reference's per-row Levenshtein automaton
   (code/automata.py:152-191) with a **deletion-neighborhood (FastSS)
   equi-join**: both sides generate their ≤1-deletion variants, the
-  dictionary side is broadcast, candidates are verified with the
-  codegen'd `F.levenshtein`, and the reference's tie-break is applied
-  with one window.  No cartesian product, no Python in the hot path;
-  the expansion factor is O(word_length) per row.
+  smaller side by the optimizer's size estimate is broadcast,
+  candidates are verified with the codegen'd `F.levenshtein`, and the
+  reference's tie-break is one argmin aggregate.  The dictionary side
+  (`fuzzy_dictionary`) depends on the referential alone, so a caller
+  can build it once and reuse it, as the reference reuses its
+  automaton (code/recipes.py:2159-2173).  No cartesian product, no
+  Python in the hot path; the expansion factor is O(word_length) per
+  row.
 * `join_topk` is blocking-join + per-left-row top-k window — the
   pure-Spark mapping of the reference's Elasticsearch msearch join
   (code/recipes.py:2265-2370): exploded blocking keys generate
@@ -99,6 +103,29 @@ def _deletion_variants(col: Column, max_dist: int = 1, max_len: int = 64) -> Col
     return arr
 
 
+def _check_max_dist(max_dist: int) -> None:
+    if not 1 <= max_dist <= 2:
+        raise ValueError(
+            f"max_dist={max_dist} unsupported: deletion-neighborhood expansion "
+            "is exact for 1-2 (the reference's automaton also stops at 2)"
+        )
+
+
+def fuzzy_dictionary(words: DataFrame, word_col: str, max_dist: int = 1) -> DataFrame:
+    """The referential side of the automata/fastcomp ``fuzzy_match``:
+    one row per distinct word ``__w`` and each of its ≤``max_dist``
+    deletion variants ``__v``.  It depends on the referential alone, so
+    a caller that matches many inputs against one referential can
+    persist it once and pass it as ``fuzzy_match(dictionary=...)``
+    (``RecipeBook`` keeps one per referential).  fastcomp matches at
+    distance 1, so its dictionary is built with ``max_dist=1``."""
+    _check_max_dist(max_dist)
+    return (
+        words.select(F.col(word_col).alias("__w")).distinct()
+        .withColumn("__v", F.explode(_deletion_variants(F.col("__w"), max_dist)))
+    )
+
+
 def fuzzy_match(
     df: DataFrame,
     words: DataFrame,
@@ -107,6 +134,7 @@ def fuzzy_match(
     out_col: str | None = None,
     max_dist: int = 1,
     method: str = "automata",
+    dictionary: DataFrame | None = None,
 ) -> DataFrame:
     """Attach to every row the reference's fuzzy match against a word
     dictionary.  ``method`` mirrors the reference's ``fuzzy_method``
@@ -123,9 +151,13 @@ def fuzzy_match(
       similarity ≥ 0.95 (tools.py:264-277).  Ties broken by word order
       (the reference keeps the first scanned — order-dependent).
 
+    ``dictionary`` (automata/fastcomp only) is ``fuzzy_dictionary(words,
+    word_col, max_dist)`` built ahead, typically persisted; without it
+    the dictionary is derived from ``words`` inline.
+
     Scale posture: automata/fastcomp is a FastSS deletion-neighborhood
     equi-join (explode ≤k-deletion variants both sides, broadcast the
-    dictionary side, verify with builtin ``F.levenshtein``).  jw has no
+    smaller side, verify with builtin ``F.levenshtein``).  jw has no
     neighborhood structure; distinct left keys × broadcast dictionary,
     pruned by an exact length-band filter (jw ≥ 0.95 forces jaro
     ≥ 0.9167, hence matches m ≥ 0.75·max_len and min_len ≥ 0.75·max_len)
@@ -139,25 +171,22 @@ def fuzzy_match(
     elif method in ("automata", "fastcomp"):
         if method == "fastcomp":
             max_dist = 1
-        if not 1 <= max_dist <= 2:
-            raise ValueError(
-                f"max_dist={max_dist} unsupported: deletion-neighborhood expansion "
-                "is exact for 1-2 (the reference's automaton also stops at 2)"
-            )
-        dict_side = (
-            words.select(F.col(word_col).alias("__w")).distinct()
-            .withColumn("__v", F.explode(_deletion_variants(F.col("__w"), max_dist)))
-        )
+        _check_max_dist(max_dist)
+        if dictionary is None:
+            dictionary = fuzzy_dictionary(words, word_col, max_dist)
         left_keys = (
             df.select(F.col(left_col).alias("__k")).where(F.col("__k").isNotNull()).distinct()
             .withColumn("__v", F.explode(_deletion_variants(F.col("__k"), max_dist)))
         )
-        # no distinct on candidates: duplicate (k, w) pairs (matched via
-        # several variants) cost only repeated cheap verifies; the per-key
-        # window picks the same best row either way, and skipping the
-        # dedup saves a full (k, w) hash-aggregate exchange
+        # both sides hinted: an inner join builds the smaller hinted side
+        # by the optimizer's size estimate, with no probe or execution.
+        # A few query rows against a large (persisted) dictionary
+        # broadcast their own variants; a large input streams past the
+        # broadcast dictionary.  No distinct on candidates: duplicate
+        # (k, w) pairs (matched via several variants) cost only repeated
+        # cheap verifies, and the argmin below picks the same row
         cand = (
-            left_keys.join(F.broadcast(dict_side), "__v")
+            F.broadcast(left_keys).join(F.broadcast(dictionary), "__v")
             .drop("__v")
             .withColumn("__d", F.levenshtein("__k", "__w"))
             .where(F.col("__d") <= max_dist)
@@ -183,7 +212,7 @@ def fuzzy_match(
     # check and OOM executors at high key cardinality.  No hint: AQE
     # broadcasts small tables at runtime from their actual shuffle
     # size; a large result falls back to the shuffle hash join on __k,
-    # reusing the partitioning the tie-break window already produced.
+    # reusing the partitioning the argmin aggregate already produced.
     return df.join(best, df[left_col] == best["__k"], "left").drop("__k")
 
 
@@ -235,6 +264,7 @@ def join_fuzzy(
     select: dict[str, str] | None = None,
     max_dist: int = 1,
     fuzzy_method: str = "automata",
+    dictionary: DataFrame | None = None,
 ) -> DataFrame:
     """Fuzzy in-memory join (reference code/recipes.py:2189-2242): for
     each fuzzy key pick the best dictionary word (see ``fuzzy_match``,
@@ -243,12 +273,14 @@ def join_fuzzy(
 
     ``fuzzy`` maps {left_col: right_col} (single entry, like the
     reference); the matched word lands in ``{left_col}_match`` and the
-    retrieved columns follow ``select`` renaming.
+    retrieved columns follow ``select`` renaming.  ``dictionary`` is the
+    referential's prebuilt ``fuzzy_dictionary`` (see ``fuzzy_match``).
     """
     (left_col, right_col), = fuzzy.items()
     match_col = f"{left_col}_match"
     out = fuzzy_match(
-        df, ref, left_col, right_col, out_col=match_col, max_dist=max_dist, method=fuzzy_method
+        df, ref, left_col, right_col, out_col=match_col, max_dist=max_dist,
+        method=fuzzy_method, dictionary=dictionary,
     )
     all_strict = {match_col: right_col, **(strict or {})}
     return join_strict(out, ref, all_strict, select=select)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +67,13 @@ class RecipeBook:
     returning one) — the referential side of joins and recipe inputs.
     File-backed datasets can be declared in the conf under ``datasets:``
     with {path, format, options}.
+
+    A fuzzy (automata/fastcomp) join against a DataFrame dataset reuses
+    one persisted ``fuzzy_dictionary`` per (dataset, word column,
+    max_dist), built at its first use.  Assigning another frame to
+    ``datasets[name]`` makes the next such join rebuild it and
+    unpersist the old one.  A callable dataset may return new data on
+    each call, so its joins build their dictionary inline.
     """
 
     def __init__(self, conf: dict, datasets: dict | None = None, spark: SparkSession | None = None):
@@ -79,6 +87,11 @@ class RecipeBook:
         # tables in a LIMIT CTE and the whole query in an outer LIMIT in
         # test mode, code/recipes.py:487-505)
         self._test_n: int | None = None
+        # (dataset, word col, max_dist) -> (referential frame, its cached
+        # dictionary); the lock serializes builds across the REST
+        # server's request threads
+        self._dictionaries: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+        self._dictionaries_lock = threading.Lock()
 
     # -- datasets ----------------------------------------------------------
 
@@ -460,18 +473,42 @@ class RecipeBook:
         """The in_memory strict/fuzzy joins (reference code/recipes.py:2120-2264).
         ES joins are expressed as top-k blocking joins — declare them
         programmatically with operators.join_topk (SURVEY.md §2.2)."""
-        ref = self.dataset(a["dataset"])
+        name = a["dataset"]
+        ref = self.dataset(name)
         select = a.get("select")
         if a.get("fuzzy"):
+            method = a.get("fuzzy_method", "automata")
+            dictionary = None
+            if method in ("automata", "fastcomp") and not callable(self.datasets[name]):
+                (word_col,) = a["fuzzy"].values()
+                dictionary = self._fuzzy_dictionary(name, ref, word_col, max_dist=1)
             return ops.join_fuzzy(
                 df,
                 ref,
                 a["fuzzy"],
                 strict=a.get("strict"),
                 select=select,
-                fuzzy_method=a.get("fuzzy_method", "automata"),
+                fuzzy_method=method,
+                dictionary=dictionary,
             )
         return ops.join_strict(df, ref, a["strict"], select=select)
+
+    def _fuzzy_dictionary(self, name: str, ref: DataFrame, word_col: str, max_dist: int) -> DataFrame:
+        """The cached ``fuzzy_dictionary`` of dataset ``name``, built and
+        materialized on first use.  ``cache()`` rather than a lineage
+        cut: evicted blocks are recomputed from the referential, so a
+        long-lived server never reads a lost block."""
+        key = (name, word_col, max_dist)
+        with self._dictionaries_lock:
+            held = self._dictionaries.get(key)
+            if held is not None and held[0] is ref:
+                return held[1]
+            if held is not None:
+                held[1].unpersist()
+            dictionary = ops.fuzzy_dictionary(ref, word_col, max_dist).cache()
+            dictionary.count()
+            self._dictionaries[key] = (ref, dictionary)
+            return dictionary
 
     def _apply_steps(self, df: DataFrame, steps: list) -> DataFrame:
         out = df

@@ -54,6 +54,11 @@ def get_session(app_name: str = "backend_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # pyspark.daemon minus a per-task re-read of pyspark.zip (daemon.py);
+        # workers import it, like the engine's UDFs, from this checkout
+        # whatever the working directory
+        .config("spark.python.daemon.module", "backend_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()

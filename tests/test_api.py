@@ -3,6 +3,7 @@
 import json
 import time
 import urllib.request
+from operator import itemgetter
 
 import pytest
 
@@ -64,6 +65,33 @@ def test_apply_csv(server):
     # tier-2 fallback evaluates python '*' on the string -> repetition,
     # so cast semantics are the caller's choice; assert row count + key
     assert len(body["rows"]) == 2 and "v2" in body["rows"][0]
+
+
+def test_apply_fuzzy_recipe_twice_equals_bulk_rows(spark):
+    conf = """
+recipes:
+  match:
+    steps:
+      - join:
+          dataset: places
+          fuzzy: {city: name}
+          select: {hit: pid}
+"""
+    places = spark.createDataFrame(
+        [("lyon", 1), ("lyons", 2), ("paris", 3), ("nantes", 4)], "name string, pid long"
+    )
+    book = RecipeBook(load_conf(conf), datasets={"places": places}, spark=spark)
+    srv = ApiServer(spark, book).start()
+    try:
+        for batch in ([{"city": "lyonn"}, {"city": "pari"}], [{"city": "nante"}, {"city": "zzz"}]):
+            code, body = _req(srv, "POST", "/recipes/match/apply", json.dumps(batch))
+            bulk = book.compile("match")(spark.createDataFrame(batch, "city string"))
+            assert code == 200
+            want = [r.asDict(recursive=True) for r in bulk.collect()]
+            assert sorted(body["rows"], key=itemgetter("city")) == sorted(want, key=itemgetter("city"))
+        assert {r["city"]: r["hit"] for r in body["rows"]} == {"nante": 4, "zzz": None}
+    finally:
+        srv.stop()
 
 
 def test_test_endpoint_truncates(server):

@@ -45,6 +45,142 @@ def test_join_fuzzy_no_cartesian(spark):
     assert "CartesianProduct" not in _plan(join_fuzzy(left, ref, {"k": "w"}))
 
 
+def test_fuzzy_dictionary_equals_inline_match(spark):
+    import random
+
+    from backend_spark.operators.joins import fuzzy_dictionary, fuzzy_match
+
+    rng = random.Random(7)
+
+    def word():
+        return "".join(rng.choice("abcd") for _ in range(rng.randint(1, 6)))
+
+    words = [word() for _ in range(40)] + [None]
+    keys = [word() for _ in range(60)] + [None, None]
+    left = spark.createDataFrame(list(enumerate(keys)), "id long, k string")
+    ref = spark.createDataFrame([(w,) for w in words], "w string")
+    for method, max_dist in (("automata", 1), ("automata", 2), ("fastcomp", 1)):
+        dictionary = fuzzy_dictionary(ref, "w", max_dist).cache()
+        try:
+            got = fuzzy_match(left, ref, "k", "w", out_col="m", max_dist=max_dist,
+                              method=method, dictionary=dictionary)
+            want = fuzzy_match(left, ref, "k", "w", out_col="m", max_dist=max_dist, method=method)
+            rows = sorted(tuple(r) for r in got.collect())
+            assert rows == sorted(tuple(r) for r in want.collect()), (method, max_dist)
+            assert len(rows) == len(keys) and any(r[2] is not None for r in rows)
+        finally:
+            dictionary.unpersist()
+
+
+_FUZZY_CONF = """
+recipes:
+  fz:
+    steps:
+      - join:
+          dataset: ref
+          fuzzy: {k: w}
+          select: {hit: rid}
+"""
+
+
+def _fuzzy_book(spark, ref):
+    from backend_spark.plans import RecipeBook, load_conf
+
+    return RecipeBook(load_conf(_FUZZY_CONF), datasets={"ref": ref}, spark=spark)
+
+
+def _plan_paths(node, path=()):
+    """(node, names of its ancestors) for every node of an executed
+    plan, descending through adaptive plans and query stages."""
+    yield node, path
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for kid in kids:
+        yield from _plan_paths(kid, path + (node.nodeName(),))
+
+
+def _output(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_recipe_book_reads_persisted_dictionary(spark):
+    ref = spark.createDataFrame([("lyon", 1), ("lyons", 2), ("paris", 3)], "w string, rid long")
+    book = _fuzzy_book(spark, ref)
+    for keys in (["lyonn", "pari"], ["lyon", "zzz"]):
+        left = spark.createDataFrame([(k,) for k in keys], "k string")
+        out = book.compile("fz")(left)
+        rows = {r.k: r.hit for r in out.collect()}
+    assert rows == {"lyon": 1, "zzz": None}
+    nodes = list(_plan_paths(out._jdf.queryExecution().executedPlan()))
+    assert any(
+        n.nodeName() == "InMemoryTableScan" and _output(n) == {"__w", "__v"} for n, _ in nodes
+    )
+    # the referential is scanned only by the strict join on the matched
+    # word: no Generate or aggregate re-derives the dictionary from it
+    ref_paths = [p for n, p in nodes if n.children().size() == 0 and "w" in _output(n)]
+    assert ref_paths
+    for path in ref_paths:
+        assert not [x for x in path if x == "Generate" or x.endswith("Aggregate")], path
+
+
+def test_recipe_book_concurrent_first_use_builds_one_dictionary(spark, monkeypatch):
+    import sys
+    import threading
+
+    from backend_spark import operators as ops
+
+    built = []
+    real = ops.fuzzy_dictionary
+
+    def counting(*a, **kw):
+        built.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(ops, "fuzzy_dictionary", counting)
+    book = _fuzzy_book(spark, spark.createDataFrame([("lyon", 1), ("paris", 3)], "w string, rid long"))
+    left = spark.createDataFrame([("lyonn",)], "k string")
+    start, errors = threading.Barrier(8), []
+
+    def use():
+        try:
+            start.wait(timeout=60)
+            book.compile("fz")(left)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=use) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(built) == 1
+    assert {r.k: r.hit for r in book.compile("fz")(left).collect()} == {"lyonn": 1}
+
+
+def test_recipe_book_replaced_dataset_rebuilds_dictionary(spark):
+    book = _fuzzy_book(spark, spark.createDataFrame([("lyon", 1)], "w string, rid long"))
+    left = spark.createDataFrame([("lyonn",), ("pariss",)], "k string")
+    assert {r.k: r.hit for r in book.compile("fz")(left).collect()} == {"lyonn": 1, "pariss": None}
+    ((_, old),) = book._dictionaries.values()
+    book.datasets["ref"] = spark.createDataFrame([("paris", 3)], "w string, rid long")
+    assert {r.k: r.hit for r in book.compile("fz")(left).collect()} == {"lyonn": None, "pariss": 3}
+    ((_, new),) = book._dictionaries.values()
+    assert new is not old and new.is_cached and not old.is_cached
+
+
 def test_join_topk_counts_and_scores(spark):
     left = spark.createDataFrame([(1, "abcd")], "id long, name string")
     left = left.withColumn("blk", fn.ngrams(F.col("name"), 2))
