@@ -20,6 +20,7 @@ ROC-AUC, persists with joblib, and scores rows 0-100.  Here:
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -190,19 +191,32 @@ def apply_model(
     ``target`` (reference apply_model, code/recipes.py:1833-1898)."""
     from pyspark.ml import PipelineModel
 
-    model = PipelineModel.load(model_path)
+    return prepare_apply_model(df, PipelineModel.load(model_path), target)(df)
+
+
+def prepare_apply_model(
+    df: DataFrame, model, target: str = "matchid_hit_score_ml"
+) -> Callable[[DataFrame], DataFrame]:
+    """``apply_model`` with an already loaded ``model``, compiled against
+    ``df``'s schema: the feature preparation and score Columns are built
+    once; the returned function scores any frame of that schema."""
     assembler_inputs: list[str] = []
     for stage in model.stages:
         inner = getattr(stage, "stages", [stage])
         for s in inner:
             if s.__class__.__name__ == "VectorAssembler":
                 assembler_inputs = [c for c in s.getInputCols() if not c.startswith("__oh_")]
-    data = _prep(df, [c for c in assembler_inputs if c in df.columns])
-    scored = model.transform(data)
-    return (
-        scored.withColumn(target, F.round(100 * F.col("__pred")).cast("int"))
-        .drop("__features", "__pred", *[c for c in scored.columns if c.startswith("__idx_") or c.startswith("__oh_")])
-    )
+    num_cols = [c for c in assembler_inputs if c in df.columns]
+    score = F.round(100 * F.col("__pred")).cast("int")
+
+    def bind(d: DataFrame) -> DataFrame:
+        scored = model.transform(_prep(d, num_cols))
+        return (
+            scored.withColumn(target, score)
+            .drop("__features", "__pred", *[c for c in scored.columns if c.startswith("__idx_") or c.startswith("__oh_")])
+        )
+
+    return bind
 
 
 def classifier_eval(

@@ -7,8 +7,9 @@ them — there is no chunk loop and no Python in the hot path.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from backend_spark import functions as fn
@@ -49,10 +50,20 @@ def op_keep(df: DataFrame, select=None, where: str | None = None) -> DataFrame:
     expression (reference internal_keep, code/recipes.py:1900-1914).
     The `where` expression goes through the tier-1 compiler, so simple
     predicates stay pushdown-able."""
-    out = df
-    if where:
-        out = out.filter(eval_expr_column(where, out, "boolean").cast("boolean"))
-    return out.select(*_select_columns(df, select))
+    return prepare_keep(df, select, where)(df)
+
+
+def prepare_keep(df: DataFrame, select=None, where: str | None = None) -> Callable[[DataFrame], DataFrame]:
+    """``op_keep`` compiled against ``df``'s schema: the predicate and
+    the kept columns are built once; the returned function filters and
+    projects any frame of that schema."""
+    cond = eval_expr_column(where, df, "boolean").cast("boolean") if where else None
+    keep = [F.col(c) for c in _select_columns(df, select)]
+
+    def bind(d: DataFrame) -> DataFrame:
+        return (d if cond is None else d.filter(cond)).select(*keep)
+
+    return bind
 
 
 def op_delete(df: DataFrame, select) -> DataFrame:
@@ -139,14 +150,21 @@ def op_normalize(df: DataFrame, select, thorough: bool = False) -> DataFrame:
     """Accent-strip + lower + despace (reference internal_normalize,
     code/recipes.py:2476-2483).  Default path is the codegen'd translate
     table; `thorough=True` switches to full-Unicode NFKD (pandas_udf)."""
-    out = df
+    return prepare_normalize(df, select, thorough)(df)
+
+
+def prepare_normalize(df: DataFrame, select, thorough: bool = False) -> Callable[[DataFrame], DataFrame]:
+    """``op_normalize`` compiled against ``df``'s schema: one normalize
+    Column per selected column, built once (the accent fold alone is
+    ~30 Column calls per column)."""
+    cols = {}
     for c in _select_columns(df, select):
         col = F.col(c)
         if thorough:
-            out = out.withColumn(c, F.trim(F.regexp_replace(F.lower(fn.nfkd_ascii(col)), r"[^a-z0-9]+", " ")))
+            cols[c] = F.trim(F.regexp_replace(F.lower(fn.nfkd_ascii(col)), r"[^a-z0-9]+", " "))
         else:
-            out = out.withColumn(c, fn.normalize(col))
-    return out
+            cols[c] = fn.normalize(col)
+    return lambda d: d.withColumns(cols)
 
 
 def op_eval(df: DataFrame, exprs: list[dict], result_type: str | None = None) -> DataFrame:
@@ -165,17 +183,37 @@ def op_eval(df: DataFrame, exprs: list[dict], result_type: str | None = None) ->
     on which tier the expression routes to.  Users comparing output
     against the reference should expect NULL where tier-1 handled the
     expression."""
+    return prepare_eval(df, exprs, result_type)(df)
+
+
+def prepare_eval(
+    df: DataFrame, exprs: list[dict], result_type: str | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """``op_eval`` compiled against ``df``'s schema: each expression is
+    compiled (tier 1, analysis-checked, else tier 2) once, against the
+    columns the expressions before it produce; the returned function
+    only adds the prebuilt Columns, in order, to any frame of that
+    schema."""
     if isinstance(exprs, dict):
         exprs = [exprs]
+    cols: list[tuple[str, Column]] = []
     out = df
     for d in exprs:
-        for col, expr in d.items():
+        for name, expr in d.items():
             if isinstance(expr, (list, tuple)):
-                cols = [eval_expr_column(e, out, result_type) for e in expr]
-                out = out.withColumn(col, F.array(*[c.cast("string") for c in cols]))
+                parts = [eval_expr_column(e, out, result_type) for e in expr]
+                col = F.array(*[c.cast("string") for c in parts])
             else:
-                out = out.withColumn(col, eval_expr_column(expr, out, result_type))
-    return out
+                col = eval_expr_column(expr, out, result_type)
+            cols.append((name, col))
+            out = out.withColumn(name, col)
+
+    def bind(d: DataFrame) -> DataFrame:
+        for name, col in cols:
+            d = d.withColumn(name, col)
+        return d
+
+    return bind
 
 
 def op_exec(df: DataFrame, statements, schema=None) -> DataFrame:

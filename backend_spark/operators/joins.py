@@ -18,6 +18,10 @@ Scale posture:
   automaton (code/recipes.py:2159-2173).  No cartesian product, no
   Python in the hot path; the expansion factor is O(word_length) per
   row.
+* `prepare_join_strict` / `prepare_join_fuzzy` / `prepare_fuzzy_match`
+  build everything that depends on the referential alone (its pruned
+  broadcast projection, every Column) once and return a function of the
+  left frame; the one-shot operators are those functions applied once.
 * `join_topk` is blocking-join + per-left-row top-k window — the
   pure-Spark mapping of the reference's Elasticsearch msearch join
   (code/recipes.py:2265-2370): exploded blocking keys generate
@@ -32,19 +36,6 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _apply_select(joined: DataFrame, select: dict[str, str] | None, drop: list[str]) -> DataFrame:
-    """Rename retrieved referential columns via {new: right_col} and drop
-    the right-side join keys (reference code/recipes.py:2244-2264)."""
-    out = joined
-    if select:
-        out = out.withColumnsRenamed({old: new for new, old in select.items()})
-        keep_old = set(select.values())
-    else:
-        keep_old = set()
-    out = out.drop(*[c for c in drop if c not in keep_old])
-    return out
 
 
 def join_strict(
@@ -63,13 +54,36 @@ def join_strict(
     before the broadcast — the reference's filtered-projection cache
     (code/recipes.py:2175-2187) is just column pruning here.
     """
+    return prepare_join_strict(ref, strict, select, broadcast)(df)
+
+
+def prepare_join_strict(
+    ref: DataFrame,
+    strict: dict[str, str],
+    select: dict[str, str] | None = None,
+    broadcast: bool = True,
+) -> Callable[[DataFrame], DataFrame]:
+    """``join_strict`` against ``ref`` as a function of the left frame:
+    the pruned (broadcast) referential projection, its key columns and
+    the rename/drop lists are built here, once; the returned function
+    runs only the join, rename and drop of its own frame."""
     needed = list(dict.fromkeys(list(strict.values()) + list((select or {}).values())))
     r = ref.select(*needed)
     if broadcast:
         r = F.broadcast(r)
-    cond = [df[l] == r[rt] for l, rt in strict.items()]
-    joined = df.join(r, cond, "left")
-    return _apply_select(joined, select, drop=list(strict.values()))
+    keys = [(l, r[rt]) for l, rt in strict.items()]
+    # retrieved columns are renamed {right_col: new}; the right join
+    # keys not retrieved are dropped (reference code/recipes.py:2244-2264)
+    renames = {old: new for new, old in (select or {}).items()}
+    drop = [c for c in strict.values() if c not in renames]
+
+    def bind(df: DataFrame) -> DataFrame:
+        out = df.join(r, [df[l] == rc for l, rc in keys], "left")
+        if renames:
+            out = out.withColumnsRenamed(renames)
+        return out.drop(*drop)
+
+    return bind
 
 
 def _one_deletions(word: Column) -> Column:
@@ -165,60 +179,84 @@ def fuzzy_match(
     reference's per-row dictionary scan, but vectorized and pruned.
     Left rows without a match keep a null ``out_col`` (never fans out,
     never drops rows)."""
+    return prepare_fuzzy_match(
+        words, left_col, word_col, out_col, max_dist, method, dictionary
+    )(df)
+
+
+def prepare_fuzzy_match(
+    words: DataFrame,
+    left_col: str,
+    word_col: str,
+    out_col: str | None = None,
+    max_dist: int = 1,
+    method: str = "automata",
+    dictionary: DataFrame | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """``fuzzy_match`` against ``words`` as a function of the left
+    frame: the dictionary side and every Column (deletion variants,
+    verify, argmin) are built here, once; the returned function runs
+    only the DataFrame operations on its own frame's keys."""
     out_col = out_col or f"{left_col}_match"
+    key = F.col(left_col).alias("__k")
+    has_key = F.col("__k").isNotNull()
     if method in ("jellyfish", "jw"):
-        best = _jw_best_match(df, words, left_col, word_col)
+        best_of = _jw_best_match(words, word_col, out_col)
     elif method in ("automata", "fastcomp"):
         if method == "fastcomp":
             max_dist = 1
         _check_max_dist(max_dist)
         if dictionary is None:
             dictionary = fuzzy_dictionary(words, word_col, max_dist)
-        left_keys = (
-            df.select(F.col(left_col).alias("__k")).where(F.col("__k").isNotNull()).distinct()
-            .withColumn("__v", F.explode(_deletion_variants(F.col("__k"), max_dist)))
-        )
-        # both sides hinted: an inner join builds the smaller hinted side
-        # by the optimizer's size estimate, with no probe or execution.
-        # A few query rows against a large (persisted) dictionary
-        # broadcast their own variants; a large input streams past the
-        # broadcast dictionary.  No distinct on candidates: duplicate
-        # (k, w) pairs (matched via several variants) cost only repeated
-        # cheap verifies, and the argmin below picks the same row
-        cand = (
-            F.broadcast(left_keys).join(F.broadcast(dictionary), "__v")
-            .drop("__v")
-            .withColumn("__d", F.levenshtein("__k", "__w"))
-            .where(F.col("__d") <= max_dist)
-        )
+        dictionary = F.broadcast(dictionary)
+        variants = F.explode(_deletion_variants(F.col("__k"), max_dist))
+        verify = [F.col("__k"), F.col("__w"), F.levenshtein("__k", "__w").alias("__d")]
+        within = F.col("__d") <= max_dist
         # argmin via one hash aggregate instead of a row_number window:
         # struct ordering is field-by-field, so min(struct(d, w)) IS the
         # (distance asc, word asc) tie-break — and unlike the window the
         # aggregate combines map-side (guide §2.3) and needs no sort
-        best = (
-            cand.groupBy("__k")
-            .agg(
-                F.min(
-                    F.struct(F.col("__d").alias("d"), F.col("__w").alias("w"))
-                ).alias("__best")
+        argmin = F.min(F.struct(F.col("__d").alias("d"), F.col("__w").alias("w"))).alias("__best")
+        pick = [F.col("__k"), F.col("__best.w").alias(out_col)]
+
+        def best_of(keys: DataFrame) -> DataFrame:
+            # both sides hinted: an inner join builds the smaller hinted
+            # side by the optimizer's size estimate, with no probe or
+            # execution.  A few query rows against a large (persisted)
+            # dictionary broadcast their own variants; a large input
+            # streams past the broadcast dictionary.  No distinct on
+            # candidates: duplicate (k, w) pairs (matched via several
+            # variants) cost only repeated cheap verifies, and the
+            # argmin below picks the same row
+            cand = (
+                F.broadcast(keys.withColumn("__v", variants)).join(dictionary, "__v")
+                .select(*verify)
+                .where(within)
             )
-            .select(F.col("__k"), F.col("__best.w").alias(out_col))
-        )
+            return cand.groupBy("__k").agg(argmin).select(*pick)
     else:
         raise ValueError(f"unknown fuzzy method {method!r} (automata|fastcomp|jellyfish|jw)")
-    best = best.withColumnRenamed(best.columns[1], out_col)
-    # the per-key result table is bounded by DISTINCT LEFT KEYS, not by
-    # the dictionary — forcing a broadcast here would bypass AQE's size
-    # check and OOM executors at high key cardinality.  No hint: AQE
-    # broadcasts small tables at runtime from their actual shuffle
-    # size; a large result falls back to the shuffle hash join on __k,
-    # reusing the partitioning the argmin aggregate already produced.
-    return df.join(best, df[left_col] == best["__k"], "left").drop("__k")
+
+    def bind(df: DataFrame) -> DataFrame:
+        best = best_of(df.select(key).where(has_key).distinct())
+        # the per-key result table is bounded by DISTINCT LEFT KEYS, not
+        # by the dictionary — forcing a broadcast here would bypass AQE's
+        # size check and OOM executors at high key cardinality.  No hint:
+        # AQE broadcasts small tables at runtime from their actual
+        # shuffle size; a large result falls back to the shuffle hash
+        # join on __k, reusing the partitioning the argmin aggregate
+        # already produced.
+        return df.join(best, df[left_col] == best["__k"], "left").drop("__k")
+
+    return bind
 
 
-def _jw_best_match(df: DataFrame, words: DataFrame, left_col: str, word_col: str) -> DataFrame:
-    """Best Jaro-Winkler dictionary word per distinct left key, kept when
-    jw ≥ 0.95 (reference match_jw, tools.py:264-277).  Exact length-band
+def _jw_best_match(
+    words: DataFrame, word_col: str, out_col: str
+) -> Callable[[DataFrame], DataFrame]:
+    """Best Jaro-Winkler dictionary word per distinct left key ``__k``,
+    kept when jw ≥ 0.95 (reference match_jw, tools.py:264-277), as a
+    function of the keys.  Exact length-band
     prune: jw = j + l·0.1·(1-j) with l ≤ 4, so jw ≥ 0.95 ⇒ j ≥ 11/12;
     j ≤ (m/l1 + m/l2 + 1)/3 with m ≤ min(l1,l2) gives
     min(l1,l2) ≥ 0.75·max(l1,l2) — rows outside the band can never pass
@@ -234,26 +272,22 @@ def _jw_best_match(df: DataFrame, words: DataFrame, left_col: str, word_col: str
     automata/fastcomp methods or block explicitly upstream."""
     from backend_spark import functions as fn
 
-    keys = df.select(F.col(left_col).alias("__k")).where(F.col("__k").isNotNull()).distinct()
     dict_side = F.broadcast(words.select(F.col(word_col).alias("__w")).distinct())
     lk, lw = F.length("__k"), F.length("__w")
-    cand = (
-        keys.join(dict_side, F.least(lk, lw) * 4 >= F.greatest(lk, lw) * 3)
-        .withColumn("__s", fn.jw(F.col("__k"), F.col("__w")))
-        .where(F.col("__s") >= 0.95)
-    )
+    band = F.least(lk, lw) * 4 >= F.greatest(lk, lw) * 3
+    score = fn.jw(F.col("__k"), F.col("__w"))
+    close = F.col("__s") >= 0.95
     # argmax via one hash aggregate (see the automata path): negating
     # the score makes min(struct) the (score desc, word asc) tie-break;
     # scores are finite non-null doubles, so the sign flip is exact
-    return (
-        cand.groupBy("__k")
-        .agg(
-            F.min(
-                F.struct((-F.col("__s")).alias("ns"), F.col("__w").alias("w"))
-            ).alias("__best")
-        )
-        .select("__k", F.col("__best.w").alias("__match"))
-    )
+    argmax = F.min(F.struct((-F.col("__s")).alias("ns"), F.col("__w").alias("w"))).alias("__best")
+    pick = [F.col("__k"), F.col("__best.w").alias(out_col)]
+
+    def best_of(keys: DataFrame) -> DataFrame:
+        cand = keys.join(dict_side, band).withColumn("__s", score).where(close)
+        return cand.groupBy("__k").agg(argmax).select(*pick)
+
+    return best_of
 
 
 def join_fuzzy(
@@ -276,14 +310,31 @@ def join_fuzzy(
     retrieved columns follow ``select`` renaming.  ``dictionary`` is the
     referential's prebuilt ``fuzzy_dictionary`` (see ``fuzzy_match``).
     """
+    return prepare_join_fuzzy(
+        ref, fuzzy, strict, select, max_dist, fuzzy_method, dictionary
+    )(df)
+
+
+def prepare_join_fuzzy(
+    ref: DataFrame,
+    fuzzy: dict[str, str],
+    strict: dict[str, str] | None = None,
+    select: dict[str, str] | None = None,
+    max_dist: int = 1,
+    fuzzy_method: str = "automata",
+    dictionary: DataFrame | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """``join_fuzzy`` against ``ref`` as a function of the left frame:
+    ``prepare_fuzzy_match`` then ``prepare_join_strict`` on the matched
+    word, both built here, once."""
     (left_col, right_col), = fuzzy.items()
     match_col = f"{left_col}_match"
-    out = fuzzy_match(
-        df, ref, left_col, right_col, out_col=match_col, max_dist=max_dist,
+    match = prepare_fuzzy_match(
+        ref, left_col, right_col, out_col=match_col, max_dist=max_dist,
         method=fuzzy_method, dictionary=dictionary,
     )
-    all_strict = {match_col: right_col, **(strict or {})}
-    return join_strict(out, ref, all_strict, select=select)
+    attach = prepare_join_strict(ref, {match_col: right_col, **(strict or {})}, select=select)
+    return lambda df: attach(match(df))
 
 
 def geo_join(

@@ -89,6 +89,11 @@ def _fuzzy_book(spark, ref):
     return RecipeBook(load_conf(_FUZZY_CONF), datasets={"ref": ref}, spark=spark)
 
 
+def _dictionaries(book):
+    """The fuzzy dictionaries held in the book's cache."""
+    return [value for key, (_, value) in book._cache.items() if key[0] == "dictionary"]
+
+
 def _plan_paths(node, path=()):
     """(node, names of its ancestors) for every node of an executed
     plan, descending through adaptive plans and query stages."""
@@ -174,10 +179,10 @@ def test_recipe_book_replaced_dataset_rebuilds_dictionary(spark):
     book = _fuzzy_book(spark, spark.createDataFrame([("lyon", 1)], "w string, rid long"))
     left = spark.createDataFrame([("lyonn",), ("pariss",)], "k string")
     assert {r.k: r.hit for r in book.compile("fz")(left).collect()} == {"lyonn": 1, "pariss": None}
-    ((_, old),) = book._dictionaries.values()
+    (old,) = _dictionaries(book)
     book.datasets["ref"] = spark.createDataFrame([("paris", 3)], "w string, rid long")
     assert {r.k: r.hit for r in book.compile("fz")(left).collect()} == {"lyonn": None, "pariss": 3}
-    ((_, new),) = book._dictionaries.values()
+    (new,) = _dictionaries(book)
     assert new is not old and new.is_cached and not old.is_cached
 
 
