@@ -21,8 +21,11 @@ that *any* reference expression still runs, at Arrow-batch cost.
 from __future__ import annotations
 
 import ast
+import logging
+import threading
 from dataclasses import dataclass
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -478,6 +481,24 @@ def compile_expr(expr: str, df) -> Column:
     return _Compiler(_schema_kinds(df)).visit(tree.body).col
 
 
+_probing = threading.local()
+
+
+class _ProbeFilter(logging.Filter):
+    """Drops PySpark's ERROR record of an AnalysisException raised by the
+    tier-1 analysis probe — the expected route to tier 2 — on the
+    probing thread only."""
+
+    def filter(self, record: logging.LogRecord) -> bool:
+        return not getattr(_probing, "on", False)
+
+
+# PySparkLogger.getLogger, never logging.getLogger: a plain Logger
+# registered first under this name rejects the keyword arguments of
+# PySpark's own logger.exception(file=...)
+PySparkLogger.getLogger("DataFrameQueryContextLogger").addFilter(_ProbeFilter())
+
+
 def eval_expr_column(expr: str, df, result_type: str | None = None) -> Column:
     """Compile `expr` to a Column; transparently fall back to the
     Arrow-vectorized Python evaluator when tier 1 can't express it —
@@ -487,7 +508,11 @@ def eval_expr_column(expr: str, df, result_type: str | None = None) -> Column:
 
     try:
         col = compile_expr(expr, df)
-        df.select(col)  # force analysis so type errors fall back too
+        _probing.on = True
+        try:
+            df.select(col)  # force analysis so type errors fall back too
+        finally:
+            _probing.on = False
         return col
     except (CompileError, AnalysisException):
         from backend_spark.expr.fallback import python_eval_column

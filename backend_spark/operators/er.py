@@ -10,10 +10,10 @@ canonical "golden" record (Talend/MDM terminology; see also Christen,
 "Data Matching", ch. 6).
 
 Scale shape: clustering is :func:`~backend_spark.operators.graph
-.connected_components` (hash-min label propagation, O(diameter)
-keyed-join rounds — dedup/ER clusters are tiny and shallow, so this
-converges in 2-3 rounds in practice); survivorship is ONE groupBy on
-the cluster id.  The ``mode`` rule folds a per-cluster value histogram
+.connected_components` (hash-min label propagation with pointer
+jumping, O(log diameter) keyed-join rounds — the perfbench dedup
+workload, seed 1, takes 5 including the confirming one);
+survivorship is ONE groupBy on the cluster id.  The ``mode`` rule folds a per-cluster value histogram
 through ``array_sort`` so ties break deterministically (highest count,
 then smallest value) — cluster sizes bound the array, and match
 clusters are small by construction (a mega-cluster means the blocking

@@ -11,10 +11,12 @@ expressed entirely as DataFrame joins/aggregations:
   map-side combinable — followed by a **pointer-jumping** shortcut
   (``label(v) := label(label(v))``), so convergence is O(log diameter)
   even on adversarial path graphs, not O(diameter);
-* lineage is truncated every iteration with ``localCheckpoint`` so the
-  plan does not grow with iteration count;
-* entity-resolution graphs are near-cliques (match groups), so in
-  practice the loop exits after 2-4 iterations.
+* every loop cuts its lineage each round with ``stage`` (through
+  :func:`_cut` where it reads a convergence scalar), so no plan grows
+  with the iteration count; the loops share one neighbour step
+  (:func:`_gather`), one power iteration (:func:`_random_walk`) and
+  one BFS (:func:`_bfs`); a fixpoint loop whose round cap runs out
+  raises (:func:`_no_fixpoint`).
 """
 
 from __future__ import annotations
@@ -23,6 +25,41 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from backend_spark import functions as fn
 from backend_spark.scale import stage
+
+
+def _cut(df: DataFrame, read: Column) -> "tuple[DataFrame, object]":
+    """Stage ``df`` lazily and return (staged frame, value of the
+    aggregate ``read``).  The rule for every loop here: a round's one
+    collected scalar (change count, L1 delta, survivor count) is the action
+    that materializes its cut, and any lazy cut upstream of ``df``, in
+    one job; an eager cut plus its own read costs two.  A fixed-round
+    loop has no read and cuts with ``stage(df, eager=True)``.
+    """
+    df = stage(df, eager=False)
+    return df, df.agg(read).collect()[0][0]
+
+
+def _gather(
+    edges: DataFrame, state: DataFrame, agg: Column, src: str = "a", dst: str = "b"
+) -> DataFrame:
+    """One message-passing step: each edge carries its ``src`` node's
+    ``state`` row to ``dst``, where ``agg`` folds the messages (one
+    equi-join + one map-side combinable aggregate).  Returns (node,
+    <agg>) for the nodes that received a message."""
+    return (
+        edges.join(state.withColumnRenamed("node", src), src)
+        .groupBy(F.col(dst).alias("node"))
+        .agg(agg)
+    )
+
+
+def _no_fixpoint(op: str, cap: str, rounds: int) -> RuntimeError:
+    """The error of a fixpoint loop whose round cap ran out: a result
+    short of its fixpoint is wrong, not approximate."""
+    return RuntimeError(
+        f"{op} did not reach its fixpoint in {cap}={rounds} rounds; raise "
+        f"{cap} (a truncated result is wrong, not approximate)"
+    )
 
 
 def connected_components(
@@ -35,7 +72,9 @@ def connected_components(
     the component (deterministic, oracle-friendly; the reference's
     uuid-per-component is an opaque id, code/recipes.py:2035-2040).
 
-    Works on any orderable node type (strings included).
+    Works on any orderable node type (strings included).  Raises
+    ``RuntimeError`` if the labels still change after ``max_iter``
+    rounds (pointer jumping needs O(log diameter) of them).
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -43,17 +82,12 @@ def connected_components(
     )
     # undirected: both directions + self loops so isolated endpoints keep labels
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    # lazy cut: the seed-label aggregate below is the first action to
-    # read it, so ONE job materializes both checkpoints (round-15 job
-    # fusion — the old eager pair paid two scheduler round-trips)
+    # lazy: the seed labels' eager cut below materializes it
     sym = sym.transform(stage, eager=False)
 
-    # seed labels with min(self, neighbors) — the same single aggregate
-    # the old distinct-nodes init cost, but it IS the first hash-min
-    # propagation, so the loop starts one round ahead (a pair/star
-    # cluster is already converged and pays only the confirming
-    # iteration).  Any component-consistent monotone init converges to
-    # the same min labels.
+    # seed labels with min(self, neighbors): the first hash-min round,
+    # so a pair/star cluster pays only the confirming iteration (any
+    # component-consistent monotone init converges to the same labels)
     labels = (
         sym.groupBy("a")
         .agg(F.min("b").alias("__nb"))
@@ -66,13 +100,9 @@ def connected_components(
 
     comp_type = dict(labels.dtypes)["comp"]
     for _ in range(max_iter):
-        # hash-min step as ONE aggregate (round-15): neighbor label
-        # contributions union'd with each node's own label, min'd per
-        # node — replaces the old (neighbor groupBy-min + re-join with
-        # labels) pair, saving a full join of the label table per
-        # iteration (guide §2.4: two operations keyed the same way
-        # share one exchange).  The own label rides along as ``__own``
-        # so the change flag needs no second look at the old labels.
+        # hash-min step as ONE aggregate over neighbor labels union'd
+        # with the node's own (``__own``, so the change flag needs no
+        # second join of the label table)
         contrib = sym.join(labels.withColumnRenamed("node", "b"), "b").select(
             F.col("a").alias("node"),
             F.col("comp"),
@@ -98,16 +128,11 @@ def connected_components(
                 (F.col("__chg") | (F.col("__gcomp") < F.col("comp"))).alias("__chg"),
             )
         )
-        # lazy cut + counting convergence read: the aggregate action
-        # materializes the checkpoint AND returns the change count in
-        # the same job — the old (eager cut job, then limit-1 count
-        # job) pattern paid two scheduler round-trips per iteration
-        new_labels = stage(new_labels, eager=False)
-        changed = new_labels.agg(F.count_if("__chg")).collect()[0][0]
+        new_labels, changed = _cut(new_labels, F.count_if("__chg"))
         labels = new_labels.drop("__chg")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise _no_fixpoint("connected_components", "max_iter", max_iter)
 
 
 def check_cluster_cap(
@@ -216,6 +241,43 @@ def node_metrics(
     return out
 
 
+def _random_walk(
+    sym: DataFrame,
+    deg: DataFrame,
+    start: Column,
+    teleport: Column,
+    alpha: float,
+    max_iter: int,
+    max_delta: float = 0.0,
+) -> DataFrame:
+    """The power iteration of :func:`pagerank` and
+    :func:`personalized_pagerank`: ``r'(v) = teleport(v) + alpha ·
+    Σ_{u~v} r(u)/deg(u)`` from ``r = start`` (Columns over ``deg``, the
+    (node, __deg) table the ranks carry along).  ``max_delta > 0``
+    stops at the first round whose L1 change is below it, and returns
+    the ``max_iter``-round vector if none is; otherwise exactly
+    ``max_iter`` rounds run.  Returns (node, __deg, __r).
+    """
+    ranks = deg.withColumn("__r", start)
+    for _ in range(max_iter):
+        contribs = _gather(sym, ranks, F.sum(F.col("__r") / F.col("__deg")).alias("__in"))
+        new_r = teleport + F.lit(alpha) * F.coalesce(F.col("__in"), F.lit(0.0))
+        step = ranks.join(contribs, "node", "left")
+        if max_delta <= 0:
+            ranks = stage(step.select("node", "__deg", new_r.alias("__r")), eager=True)
+            continue
+        new_ranks, delta = _cut(
+            step.select(
+                "node", "__deg", new_r.alias("__r"), F.abs(new_r - F.col("__r")).alias("__d")
+            ),
+            F.sum("__d"),
+        )
+        ranks = new_ranks.drop("__d")
+        if delta is not None and delta < max_delta:
+            break
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -228,50 +290,22 @@ def pagerank(
     """PageRank on the undirected matched-pairs graph (networkx
     semantics: damping ``alpha``, uniform 1/N start, L1 convergence at
     N·tol; undirected ⇒ out-degree = degree and no dangling mass).
+    ``tol=0`` runs exactly ``max_iter`` rounds.
 
     Each iteration is one equi-join + one hash aggregate on node ids
     (map-side combinable), lineage truncated per round — the same
-    shuffle budget as a groupBy per iteration, no driver-side state.
-    Returns (node, pagerank).
+    shuffle budget as a groupBy per iteration, no driver-side state
+    (see :func:`_random_walk`).  Returns (node, pagerank).
     """
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("__deg"))
     n_nodes = deg.count()
     if n_nodes == 0:
         return deg.select("node", F.lit(0.0).alias("pagerank"))
-    base = (1.0 - alpha) / n_nodes
-    ranks = deg.withColumn("__r", F.lit(1.0 / n_nodes))
-    for _ in range(max_iter):
-        contribs = (
-            sym.join(ranks.withColumnRenamed("node", "a"), "a")
-            .groupBy(F.col("b").alias("node"))
-            .agg(F.sum(F.col("__r") / F.col("__deg")).alias("__in"))
-        )
-        # ranks (not deg) on the build side: ``__deg`` rides along, so
-        # the loop never re-aggregates degrees from the edge list — one
-        # fewer shuffle stage per iteration (round-15, guide §2.3); and
-        # with the old rank in hand the L1 delta is computed INLINE
-        # (``__d``), replacing the separate new×old join + collect of
-        # the previous shape (guide §2.4: the convergence read rides
-        # the cut's materializing action, the CC fusion pattern).
-        new_r = F.lit(base) + F.lit(alpha) * F.coalesce(F.col("__in"), F.lit(0.0))
-        cols = ["node", "__deg", new_r.alias("__r")]
-        if tol > 0:
-            cols.append(F.abs(new_r - F.col("__r")).alias("__d"))
-        new_ranks = ranks.join(contribs, "node", "left").select(*cols)
-        if tol > 0:
-            # lazy cut + summing convergence read: ONE job materializes
-            # the checkpoint and returns the delta
-            new_ranks = stage(new_ranks, eager=False)
-            delta = new_ranks.agg(F.sum("__d").alias("d")).collect()[0].d
-            ranks = new_ranks.drop("__d")
-            if delta is not None and delta < n_nodes * tol:
-                break
-        else:
-            # fixed-round mode has no convergence read; eager cut is
-            # the per-round action that truncates lineage NOW so the
-            # loop never builds a max_iter-deep plan for Catalyst
-            ranks = stage(new_ranks, eager=True)
+    ranks = _random_walk(
+        sym, deg, F.lit(1.0 / n_nodes), F.lit((1.0 - alpha) / n_nodes), alpha, max_iter,
+        max_delta=n_nodes * tol,
+    )
     out = ranks.select("node", F.col("__r").alias("pagerank"))
     if round_to is not None:
         out = out.withColumn("pagerank", F.round("pagerank", round_to))
@@ -295,9 +329,9 @@ def k_truss(
     Algorithm: iterative support peeling to the FIXPOINT — per round,
     count each surviving edge's common-neighbor support and drop edges
     with support < k-2; removing an edge can break its neighbors'
-    triangles, so rounds repeat until no edge is dropped
-    (``max_rounds`` is a safety cap; peeling monotonically shrinks,
-    so termination is guaranteed regardless).  Deterministic: support
+    triangles, so rounds repeat until no edge is dropped.  A peel that
+    still drops edges in round ``max_rounds`` raises ``RuntimeError``
+    (the edges left then are not a truss).  Deterministic: support
     counts are exact integers, the peel predicate is a pure
     comparison, and the fixpoint of a monotone peel is unique — the
     oracle can unroll ANY number of rounds >= the actual fixpoint
@@ -307,7 +341,7 @@ def k_truss(
     edge×adjacency double equi-join (cost Σ_e deg products — the same
     budget as one triangle count), then ONE keyed left-join + filter;
     lineage cut each round, one driver-side scalar (the surviving
-    count) to detect the fixpoint, pagerank's collect discipline.
+    count, read by :func:`_cut`) to detect the fixpoint.
     Returns (a, b, support) with a < b, support consistent with the
     returned subgraph.
     """
@@ -319,7 +353,6 @@ def k_truss(
         .transform(stage, eager=True)
     )
     n_edges = e.count()
-    supp = None
     for _ in range(max_rounds):
         sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         n1 = sym.select(F.col("a").alias("__u"), F.col("b").alias("__w"))
@@ -330,25 +363,19 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("support"))
         )
-        # lazy cut + counting read (round-15 fusion, the CC pattern):
-        # one job materializes the scored checkpoint AND returns the
-        # surviving-edge count; the peel filter is a plain projection
-        # over the cached cut (no second checkpoint per round)
-        scored = (
+        # the peel filter is a plain projection over the cut, so a
+        # round stages one frame
+        scored, n_kept = _cut(
             e.join(tri, ["a", "b"], "left")
-            .select("a", "b", F.coalesce(F.col("support"), F.lit(0)).alias("support"))
-            .transform(stage, eager=False)
+            .select("a", "b", F.coalesce(F.col("support"), F.lit(0)).alias("support")),
+            F.count_if(F.col("support") >= k - 2),
         )
-        n2_edges = scored.agg(
-            F.count_if(F.col("support") >= k - 2).alias("n")
-        ).collect()[0].n
-        e2 = scored.where(F.col("support") >= k - 2)
-        supp = e2
-        e = e2.select("a", "b")
-        if n2_edges == n_edges:
-            break
-        n_edges = n2_edges
-    return supp if supp is not None else e.withColumn("support", F.lit(0).cast("long"))
+        supp = scored.where(F.col("support") >= k - 2)
+        e = supp.select("a", "b")
+        if n_kept == n_edges:
+            return supp
+        n_edges = n_kept
+    raise _no_fixpoint("k_truss", "max_rounds", max_rounds)
 
 
 def personalized_pagerank(
@@ -366,17 +393,15 @@ def personalized_pagerank(
     similar-entity retrieval, and trust propagation, where plain
     PageRank's global stationary distribution is the wrong question.
     Same undirected matched-pairs-graph semantics, damping and
-    iteration shape as :func:`pagerank`; the ONLY change is the
-    teleport vector (uniform ``1/|S|`` over the seeds, 0 elsewhere),
-    which is also the start distribution.  Runs exactly ``max_iter``
-    synchronous power iterations (no tol early-exit: the fixed trace
-    is what the cross-engine oracle reproduces).
+    iteration (:func:`_random_walk`) as :func:`pagerank`; the ONLY
+    change is the teleport vector (uniform ``1/|S|`` over the seeds, 0
+    elsewhere), which is also the start distribution.  Runs exactly
+    ``max_iter`` synchronous power iterations (no tol early-exit: the
+    fixed trace is what the cross-engine oracle reproduces).
 
-    Scale shape: per iteration ONE node-keyed equi-join + ONE hash
-    aggregate (map-side combinable), lineage truncated each round with
-    an eager localCheckpoint — identical shuffle budget to
-    :func:`pagerank`; the teleport set is a broadcast literal, never a
-    join.  Returns (node, ppr) for every node of the graph.
+    Scale shape: :func:`pagerank`'s shuffle budget; the teleport set is
+    a broadcast literal, never a join.  Returns (node, ppr) for every
+    node of the graph.
     """
     if not sources:
         raise ValueError("personalized_pagerank: sources must be non-empty")
@@ -384,27 +409,7 @@ def personalized_pagerank(
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("__deg"))
     tele = F.when(F.col("node").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
-    ranks = deg.withColumn("__r", tele)
-    for _ in range(max_iter):
-        contribs = (
-            sym.join(ranks.withColumnRenamed("node", "a"), "a")
-            .groupBy(F.col("b").alias("node"))
-            .agg(F.sum(F.col("__r") / F.col("__deg")).alias("__in"))
-        )
-        # ranks carries __deg, so the loop never re-aggregates degrees
-        # from the edge list (round-15; same rewrite as pagerank)
-        ranks = (
-            ranks.join(contribs, "node", "left")
-            .select(
-                "node",
-                "__deg",
-                (
-                    F.lit(1.0 - alpha) * tele
-                    + F.lit(alpha) * F.coalesce(F.col("__in"), F.lit(0.0))
-                ).alias("__r"),
-            )
-            .transform(stage, eager=True)
-        )
+    ranks = _random_walk(sym, deg, tele, F.lit(1.0 - alpha) * tele, alpha, max_iter)
     out = ranks.select("node", F.col("__r").alias("ppr"))
     if round_to is not None:
         out = out.withColumn("ppr", F.round("ppr", round_to))
@@ -456,23 +461,15 @@ def hits(
     hv = nodes.withColumn("__h", F.lit(1).cast("long"))
     av = None
     for _ in range(max_iter):
-        a_in = (
-            e.join(hv.withColumnRenamed("node", "s"), "s")
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.sum("__h").alias("__a"))
-        )
+        a_in = _gather(e, hv, F.sum("__h").alias("__a"), src="s", dst="d")
         av = (
             nodes.join(a_in, "node", "left")
             .select("node", F.coalesce(F.col("__a"), F.lit(0)).cast("long").alias("__a"))
             # lazy: hv's eager cut below reads av, so ONE action per
-            # round materializes both checkpoints (round-15 fusion)
+            # round materializes both checkpoints
             .transform(stage, eager=False)
         )
-        h_out = (
-            e.join(av.withColumnRenamed("node", "d"), "d")
-            .groupBy(F.col("s").alias("node"))
-            .agg(F.sum("__a").alias("__h"))
-        )
+        h_out = _gather(e, av, F.sum("__a").alias("__h"), src="d", dst="s")
         hv = (
             nodes.join(h_out, "node", "left")
             .select("node", F.coalesce(F.col("__h"), F.lit(0)).cast("long").alias("__h"))
@@ -601,6 +598,34 @@ def op_clique(
     return joined
 
 
+def _bfs(
+    edges: DataFrame, seeds: DataFrame, max_hops: int, by: "tuple[str, ...]" = ()
+) -> "tuple[DataFrame, bool]":
+    """Level-synchronous BFS over the (a, b) edge list from ``seeds``
+    (*by, node): one search per ``by`` group, one multi-source search
+    without.  A hop is one equi-join plus one anti-join against the
+    known pairs; every frontier node sits at the same depth, so a new
+    pair's distance is the hop number.  Returns ((*by, node, d) of
+    every reached pair, whether the frontier emptied within
+    ``max_hops``)."""
+    keys = [*by, "node"]
+    known = seeds.select(*keys, F.lit(0).alias("d")).transform(stage, eager=True)
+    frontier = known
+    for hop in range(1, max_hops + 1):
+        nxt, n_new = _cut(
+            frontier.join(edges, frontier["node"] == edges["a"])
+            .select(*by, F.col("b").alias("node"), F.lit(hop).alias("d"))
+            .distinct()
+            .join(known.select(*keys), keys, "left_anti"),
+            F.count(F.lit(1)),
+        )
+        if n_new == 0:
+            return known, True
+        known = known.unionByName(nxt).transform(stage, eager=False)
+        frontier = nxt
+    return known, False
+
+
 def closeness_centrality(
     edges: DataFrame,
     src: str = "src",
@@ -615,41 +640,25 @@ def closeness_centrality(
     metric of the reference's clique ``compute`` list
     (code/recipes.py:2014-2034).
 
-    All-pairs BFS as iterated frontier joins: state is the set of known
-    (source, node, dist) triples, each hop one equi-join + anti-join,
-    lineage truncated per round, terminating when no new pairs appear
-    (≤ graph diameter rounds).  State is O(Σ component²) — sized for
-    entity-resolution components (near-cliques, diameter 2-4), like the
-    reference's per-group networkx call; for graphs with a giant
-    component use :func:`closeness_centrality_approx` (ANF sketches,
-    O(nodes) state).  Returns (node, closeness).
+    All-pairs BFS (:func:`_bfs`, one search per source): state is the
+    set of known (source, node, dist) triples, each hop one equi-join +
+    anti-join, lineage truncated per round, terminating when no new
+    pairs appear (≤ graph diameter rounds, plus the confirming one; a
+    search still growing after ``max_hops`` raises ``RuntimeError``).
+    State is O(Σ component²) — sized for entity-resolution components
+    (near-cliques, diameter 2-4), like the reference's per-group
+    networkx call; for graphs with a giant component use
+    :func:`closeness_centrality_approx` (ANF sketches, O(nodes)
+    state).  Returns (node, closeness).
     """
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
     nodes = sym.select(F.col("a").alias("node")).distinct().transform(stage, eager=True)
     n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.select("node", F.lit(0.0).alias("closeness"))
-    known = nodes.select(
-        F.col("node").alias("s"), F.col("node").alias("v"), F.lit(0).alias("d")
-    ).transform(stage, eager=True)
-    frontier = known
-    for hop in range(1, max_hops + 1):
-        # lazy cuts + ONE counting action per hop (round-15 fusion):
-        # nxt.count() materializes the nxt checkpoint — and, because
-        # nxt anti-joins against known, the previous hop's lazy known
-        # cut — in the same job; the old shape paid eager-cut + isEmpty
-        # + eager-cut (3 scheduler round-trips per hop)
-        nxt = (
-            frontier.join(sym, frontier["v"] == sym["a"])
-            .select("s", F.col("b").alias("v"), F.lit(hop).alias("d"))
-            .distinct()
-            .join(known.select("s", "v"), ["s", "v"], "left_anti")
-            .transform(stage, eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        known = known.unionByName(nxt).transform(stage, eager=False)
-        frontier = nxt
+    known, done = _bfs(sym, nodes.select(F.col("node").alias("s"), "node"), max_hops, by=("s",))
+    if not done:
+        raise _no_fixpoint("closeness_centrality", "max_hops", max_hops)
     per_src = known.groupBy("s").agg(
         F.count(F.lit(1)).alias("__r"), F.sum("d").alias("__sum")
     )
@@ -707,66 +716,44 @@ def eigenvector_centrality(
         return nodes.select("node", F.lit(0.0).alias("eigenvector"))
 
     x = nodes.withColumn("__x", F.lit(1.0 / n_nodes)).transform(stage, eager=True)
+    norm = F.sqrt(fn.ordered_sum(F.col("node"), F.col("__u") * F.col("__u"))).alias("__norm")
     for _ in range(max_iter):
-        contrib = (
-            sym.join(x.select(F.col("node").alias("a"), "__x"), "a")
-            .groupBy(F.col("b").alias("node"))
-            .agg(fn.ordered_sum(F.col("a"), F.col("__x")).alias("__in"))
-        )
+        contrib = _gather(sym, x, fn.ordered_sum(F.col("a"), F.col("__x")).alias("__in"))
         unnorm_cols = ["node", (F.col("__x") + F.coalesce(F.col("__in"), F.lit(0.0))).alias("__u")]
         if tol > 0:
-            # carry the old value so the L1 delta is computed inline —
-            # no separate new×old join + collect per round (round-15)
+            # carry the old value so the L1 delta is computed inline
             unnorm_cols.append(F.col("__x").alias("__old"))
+        # unnorm is cut: the norm and the normalized projection both
+        # read it, and uncut its join subtree would run twice per round
         unnorm = x.join(contrib, "node", "left").select(*unnorm_cols)
-        # round-16: cut UNNORM, not just the round output — the norm
-        # aggregate and the normalized projection both read it, and
-        # without the cut the whole contrib-join subtree is planned
-        # (and its exchanges executed) TWICE per round (verified in the
-        # executed plan: duplicated SortMergeJoin/Exchange chains).
-        # One cut computes it once and bounds the plan, so the round
-        # output needs no cut of its own in fixed-round mode.
-        unnorm = stage(unnorm, eager=False)
-        norm_df = unnorm.agg(
-            F.sqrt(fn.ordered_sum(F.col("node"), F.col("__u") * F.col("__u"))).alias("__norm")
-        )
         if tol <= 0:
-            # fixed-round mode has no per-round driver read, so the
-            # norm collect IS the round's single action — it doubles as
-            # the unnorm checkpoint materializer, and the normalized
-            # vector becomes a literal-division projection (no 1-row
-            # broadcast machinery per round).  Exact: Double.toString /
-            # float round-trips bit-identically, and the division tree
-            # is unchanged.
-            norm_v = norm_df.collect()[0]["__norm"]
+            # fixed rounds: the norm is the round's read, and divides as
+            # a literal (no 1-row broadcast; a double round-trips exactly)
+            unnorm, norm_v = _cut(unnorm, norm)
             x = unnorm.select("node", (F.col("__u") / _norm_divisor(F.lit(norm_v))).alias("__x"))
             continue
-        # tol>0: norm stays in-plan (broadcast 1-row cross join) so the
-        # delta read below stays the round's only driver action
+        # tol>0: the norm stays in-plan (broadcast 1-row cross join) so
+        # the delta read is the round's only driver action
+        unnorm = stage(unnorm, eager=False)
         norm_x = F.col("__u") / _norm_divisor(F.col("__norm"))
-        new_cols = ["node", norm_x.alias("__x")]
-        if tol > 0:
-            new_cols.append(F.abs(norm_x - F.col("__old")).alias("__d"))
-        new_x = unnorm.crossJoin(F.broadcast(norm_df)).select(*new_cols)
-        if tol > 0:
-            # lazy cut + summing convergence read: ONE job per round
-            # materializes the checkpoint and returns the L1 delta
-            new_x = stage(new_x, eager=False)
-            delta = new_x.agg(F.sum("__d").alias("d")).collect()[0].d
-            x = new_x.drop("__d")
-            if delta is not None and delta < n_nodes * tol:
-                converged = True
-                break
-    else:
-        converged = tol <= 0  # tol=0 is the explicit fixed-round mode
-    if not converged:
-        # networkx raises PowerIterationFailedConvergence here; an
-        # unconverged vector is silently wrong, same policy as k_core
-        raise RuntimeError(
-            f"eigenvector_centrality: no convergence within max_iter={max_iter} "
-            f"(L1 delta never dropped below n*tol); raise max_iter or pass "
-            f"tol=0 for an explicit fixed-round run"
+        new_x, delta = _cut(
+            unnorm.crossJoin(F.broadcast(unnorm.agg(norm))).select(
+                "node", norm_x.alias("__x"), F.abs(norm_x - F.col("__old")).alias("__d")
+            ),
+            F.sum("__d"),
         )
+        x = new_x.drop("__d")
+        if delta is not None and delta < n_nodes * tol:
+            break
+    else:
+        if tol > 0:
+            # networkx raises PowerIterationFailedConvergence here; an
+            # unconverged vector is silently wrong, same policy as k_core
+            raise RuntimeError(
+                f"eigenvector_centrality: no convergence within max_iter={max_iter} "
+                f"(L1 delta never dropped below n*tol); raise max_iter or pass "
+                f"tol=0 for an explicit fixed-round run"
+            )
     out = x.select("node", F.col("__x").alias("eigenvector"))
     if round_to is not None:
         out = out.withColumn("eigenvector", F.round("eigenvector", round_to))
@@ -866,7 +853,9 @@ def closeness_centrality_approx(
     merges are max-register (commutative, associative), so results are
     partition-order deterministic — approximate in value (relative
     error ~1.6%/√2^lg_config_k) but stable run-to-run.  Terminates when
-    no node's estimate grew in a round (≤ diameter rounds).
+    no node's estimate grew in a round (≤ diameter rounds, plus the
+    confirming one); still growing after ``max_hops`` raises
+    ``RuntimeError``.
 
     ``exact_sets=True`` swaps the HLL sketch for the actual neighbor-id
     set (``array_union`` merges, ``size`` estimates): the neighborhood
@@ -900,16 +889,10 @@ def closeness_centrality_approx(
     if n_nodes == 0:
         return state.select("node", F.lit(0.0).alias("closeness"))
     for hop in range(1, max_hops + 1):
-        nbr = (
-            sym.join(state.select(F.col("node").alias("a"), "__sk"), "a")
-            .groupBy(F.col("b").alias("node"))
-            .agg(union_agg(F.col("__sk")).alias("__nsk"))
-        )
+        nbr = _gather(sym, state.select("node", "__sk"), union_agg(F.col("__sk")).alias("__nsk"))
         # __prev stays aboard through the cut: the growth check is an
-        # inline count_if in the SAME job that materializes the
-        # checkpoint — the old shape paid an eager cut plus a
-        # new×old join + isEmpty action per hop (round-15 fusion)
-        new_state = (
+        # inline count_if in the read that materializes it
+        new_state, n_grew = _cut(
             state.join(nbr, "node", "left")
             .select(
                 "node",
@@ -924,15 +907,14 @@ def closeness_centrality_approx(
                 "__sumdist",
                 F.col("__sumdist")
                 + F.lit(float(hop)) * F.greatest(F.col("__est") - F.col("__prev"), F.lit(0)),
-            )
-            .transform(stage, eager=False)
+            ),
+            F.count_if(F.col("__est") > F.col("__prev")),
         )
-        n_grew = new_state.agg(
-            F.count_if(F.col("__est") > F.col("__prev")).alias("n")
-        ).collect()[0].n
         state = new_state.drop("__prev")
         if n_grew == 0:  # no sketch grew -> every neighborhood is complete
             break
+    else:
+        raise _no_fixpoint("closeness_centrality_approx", "max_hops", max_hops)
     c = (
         F.when(F.col("__sumdist") > 0,
                ((F.col("__est") - 1) / F.lit(float(n_nodes - 1)))
@@ -973,24 +955,16 @@ def k_core(
     for _ in range(max_iter):
         deg = alive.groupBy("a").agg(F.count(F.lit(1)).alias("__d"))
         keep = deg.where(F.col("__d") >= k).select("a")
-        pruned = (
-            alive.join(keep, "a")
-            .join(keep.withColumnRenamed("a", "b"), "b")
-            .select("a", "b")
-            # lazy: the count below materializes the checkpoint in the
-            # same job (round-15 fusion; was eager cut + count)
-            .transform(stage, eager=False)
+        pruned, n_pruned = _cut(
+            alive.join(keep, "a").join(keep.withColumnRenamed("a", "b"), "b").select("a", "b"),
+            F.count(F.lit(1)),
         )
-        n_pruned = pruned.count()
         converged = n_pruned == n_alive
         alive, n_alive = pruned, n_pruned
         if converged:
             break
     else:
-        raise RuntimeError(
-            f"k_core did not reach its fixpoint in {max_iter} rounds; "
-            "raise max_iter (a correct-but-truncated core does not exist)"
-        )
+        raise _no_fixpoint("k_core", "max_iter", max_iter)
     return alive.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )
@@ -1033,11 +1007,9 @@ def label_propagation(
             .groupBy("a", "lbl")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        # arg-max as a min(struct) hash aggregate (round-15; the
-        # fuzzy_match pattern): min over (-count, label) picks the
-        # most frequent label, smallest label on ties — identical to
-        # the old row_number window pick, but map-side combinable and
-        # sort-free (guide §2.3)
+        # arg-max as a min(struct) hash aggregate: min over (-count,
+        # label) picks the most frequent label, smallest on ties —
+        # map-side combinable and sort-free, unlike a window pick
         labels = (
             freq.groupBy("a")
             .agg(
@@ -1202,15 +1174,15 @@ def shortest_paths(
     Deterministic: distances are exact minima, independent of
     iteration interleave.
 
-    Scale shape: the frontier loop is the :func:`connected_components`
-    pattern — each round ONE equi-join of the current frontier against
-    the edge list on the neighbor id plus one min-aggregate, both
-    keyed on node ids and map-side combinable; no driver-side state
-    beyond the ``sources`` literal; lineage truncated per round with
-    ``localCheckpoint``.  Rounds run = eccentricity of the source set
-    (graph diameter worst-case), each touching only edges incident to
-    the newly-settled frontier, so total work is O(E) across the whole
-    run like any BFS.
+    Scale shape: the frontier loop is :func:`_bfs` — each round ONE
+    equi-join of the current frontier against the edge list on the
+    node id plus one anti-join against the settled set, both keyed on
+    node ids; no driver-side state beyond the ``sources`` literal and
+    the frontier size; lineage truncated per round.  Rounds run =
+    eccentricity of the source set (graph diameter worst-case), each
+    touching only edges incident to the newly-settled frontier, so
+    total work is O(E) across the whole run like any BFS.  The hop
+    limit is part of the contract, so reaching it does not raise.
     """
     if not sources:
         raise ValueError("shortest_paths: sources must be non-empty")
@@ -1223,7 +1195,6 @@ def shortest_paths(
     else:
         sym = _sym_edges(edges, src, dst)
     sym = sym.transform(stage, eager=False)
-    spark = edges.sparkSession
 
     # both endpoints: in directed mode a sink-only node is still a
     # valid source (undirected sym already contains both directions)
@@ -1232,39 +1203,10 @@ def shortest_paths(
         .unionByName(sym.select(F.col("b").alias("node")))
         .distinct()
     )
-    seed = spark.createDataFrame([(s,) for s in sources], ["node"])
+    seed = edges.sparkSession.createDataFrame([(s,) for s in sources], ["node"])
     # keep only sources that exist in the graph (contract: graph nodes)
-    dist = (
-        nodes.join(seed.distinct(), "node", "left_semi")
-        .withColumn("dist", F.lit(0).cast("long"))
-        .transform(stage, eager=True)
-    )
-    frontier = dist
-    n_frontier = frontier.count()
-    for _ in range(max_iter):
-        if n_frontier == 0:
-            break
-        reached = (
-            sym.join(frontier.select(F.col("node").alias("a"), "dist"), "a")
-            .groupBy(F.col("b").alias("node"))
-            .agg((F.min("dist") + 1).alias("dist"))
-        )
-        # BFS layers: every frontier node carries the same dist, so an
-        # unseen neighbor's min is exactly layer+1 — the only check
-        # needed is "not settled yet" (one anti-join).  Lazy cuts +
-        # ONE counting action per round (round-15 fusion): the count
-        # materializes the frontier checkpoint and — through the
-        # anti-join — the previous round's lazy dist cut in the same
-        # job; the old shape paid eager cut + count + eager cut.
-        frontier = (
-            reached.join(dist.select("node"), "node", "left_anti")
-            .transform(stage, eager=False)
-        )
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            break
-        dist = dist.unionByName(frontier).transform(stage, eager=False)
-    return dist
+    dist, _ = _bfs(sym, nodes.join(seed.distinct(), "node", "left_semi"), max_iter)
+    return dist.select("node", F.col("d").cast("long").alias("dist"))
 
 
 def negative_edges(

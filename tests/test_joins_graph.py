@@ -1100,6 +1100,41 @@ def test_k_core_raises_instead_of_truncating(spark):
     assert k_core(path, k=2, max_iter=40).count() == 0
 
 
+def test_connected_components_raises_instead_of_truncating(spark):
+    # 2 rounds of pointer jumping label only part of a 200-node path
+    path = spark.createDataFrame([(i, i + 1) for i in range(199)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        connected_components(path, max_iter=2)
+
+
+def test_k_truss_raises_instead_of_truncating(spark):
+    from backend_spark.operators.graph import k_truss
+
+    # one peel round leaves (1, 2), whose triangles are gone: the
+    # 4-truss is empty, so a one-round answer must raise
+    raw = [(1, 2), (2, 3), (1, 3), (1, 4), (2, 4), (5, 6)]
+    edges = spark.createDataFrame(raw, "src long, dst long")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        k_truss(edges, k=4, max_rounds=1)
+    assert k_truss(edges, k=4, max_rounds=3).count() == 0
+
+
+def test_closeness_raises_instead_of_truncating(spark):
+    from backend_spark.operators.graph import (
+        closeness_centrality,
+        closeness_centrality_approx,
+    )
+
+    # 10-node path: two hops see only part of each node's distance sum
+    path = spark.createDataFrame([(i, i + 1) for i in range(9)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        closeness_centrality(path, max_hops=2)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        closeness_centrality_approx(path, max_hops=2, exact_sets=True)
+    got = {r.node: r.closeness for r in closeness_centrality(path).collect()}
+    assert got[0] == 0.2  # 9 reachable, distance sum 45
+
+
 def test_closeness_anf_exact_sets_equals_exact_kernel(spark):
     # the ANF recursion with exact sets must reproduce the exact kernel
     # bit-for-bit — this is the correctness pin for the HLL scale path,
@@ -2047,6 +2082,22 @@ def test_personalized_pagerank_locality_and_mass(spark):
     assert got == again
     with pytest.raises(ValueError, match="sources"):
         personalized_pagerank(edges, sources=[])
+
+
+def test_personalized_pagerank_from_every_node_is_pagerank(spark):
+    from backend_spark.operators.graph import pagerank, personalized_pagerank
+
+    # restarting uniformly over all nodes is plain PageRank: both run
+    # the same power iteration, only the teleport Column differs
+    raw = [(i, (i + 1) % 7) for i in range(7)] + [(0, 3), (2, 5), (7, 8)]
+    edges = spark.createDataFrame(raw, "src long, dst long")
+    nodes = sorted({u for e in raw for u in e})
+    ppr = personalized_pagerank(edges, sources=nodes, round_to=None).collect()
+    pr = pagerank(edges, tol=0, max_iter=10, round_to=None).collect()
+    ppr, pr = {r.node: r.ppr for r in ppr}, {r.node: r.pagerank for r in pr}
+    assert set(ppr) == set(pr) == set(nodes)
+    for v in nodes:
+        assert ppr[v] == pytest.approx(pr[v], abs=1e-12), v
 
 
 def test_hits_star_and_replica(spark):

@@ -338,6 +338,33 @@ def test_eval_analysis_error_falls_back(spark):
     assert out.collect()[0].mixed == "['a']"
 
 
+def test_eval_fallback_probe_logs_no_error(spark):
+    import logging
+
+    from pyspark.errors.exceptions.base import AnalysisException
+    from pyspark.logger import PySparkLogger
+
+    from backend_spark.expr.compiler import eval_expr_column
+
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("DataFrameQueryContextLogger")
+    logger.addHandler(handler)
+    try:
+        df = spark.createDataFrame([("bob",)], "first_name string")
+        # tier 1 compiles it, analysis rejects it: an expected fallback
+        col = eval_expr_column("sorted(set(str(first_name)))[0]", df)
+        assert df.select(col.alias("c")).first().c == "b"
+        assert records == []
+        # a genuine analysis error on the same thread still logs
+        with pytest.raises(AnalysisException):
+            df.select("missing")
+        assert [r.levelno for r in records] == [logging.ERROR]
+    finally:
+        logger.removeHandler(handler)
+
+
 def test_eval_replace_dict_and_regex_tier1(spark):
     from backend_spark.expr.compiler import eval_expr_column
 

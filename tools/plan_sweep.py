@@ -12,10 +12,17 @@ comparable-size graph joins, broadcast-scalar attachment).
 
 ``--dump PATH`` also writes every swept query's executed physical plan
 (the initial adaptive plan: queries are built, not run) to PATH as one
-JSON object ``{query: {"node", "detail", "children"}}``.  Expression
-ids, plan ids and lambda-variable numbers are stripped, so the dumps
-of two checkouts diff cleanly, e.g. ``diff <(jq -S . a.json) <(jq -S .
-b.json)``.
+JSON object ``{query: {"plan", "staged", "jobs"}}``.  A plan is a tree
+of ``{"node", "detail", "children"}``.  ``staged`` lists, in call
+order, every frame the query's build passed to ``scale.stage`` as
+``{"eager", "plan"}`` — an iterative kernel cuts its lineage each
+round, so the plan above its last cut shows only the final round, and
+the staged plans are the evidence for the loop itself.  ``jobs`` is
+the number of Spark jobs the build ran (the loops' convergence reads).
+Expression ids, plan ids and lambda-variable numbers are stripped, so
+the dumps of two checkouts diff cleanly, e.g. ``diff <(jq -S . a.json)
+<(jq -S . b.json)``; job counts of loops whose adaptive plans vary run
+to run may differ by one or two.
 
 Usage: python tools/plan_sweep.py [--dump PATH] [query ...]
        (exit 1 on any cartesian; no names = the whole registry)
@@ -66,6 +73,29 @@ def _tree(node) -> dict:
     }
 
 
+def _record_stage(staged: list) -> list:
+    """Wrap ``scale.stage`` — the module binding and every
+    ``backend_spark`` module's from-import of it, as
+    ``tools/stage_census.py`` does — so each call appends the normalized
+    initial plan of the frame it receives to ``staged``.  Returns the
+    (module, real stage) pairs to restore."""
+    import backend_spark.scale as scale_mod
+
+    real = scale_mod.stage
+
+    def spy(df, eager=False):
+        staged.append(
+            {"eager": eager, "plan": _tree(df._jdf.queryExecution().executedPlan())}
+        )
+        return real(df, eager=eager)
+
+    mods = [m for name, m in list(sys.modules.items())
+            if name.startswith("backend_spark") and getattr(m, "stage", None) is real]
+    for m in mods:
+        m.stage = spy
+    return [(m, real) for m in mods]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--dump", metavar="PATH", help="write normalized plans as JSON")
@@ -80,11 +110,16 @@ def main() -> int:
     cartesians = []
     rows = []
     dumps = {}
+    staged: list = []
+    restore = _record_stage(staged) if args.dump else []
+    tracker = spark.sparkContext.statusTracker()
     for name, fn in registry.items():
         if args.names and name not in args.names:
             continue
         if name.startswith("stream_"):  # streaming queries execute on build
             continue
+        staged.clear()
+        spark.sparkContext.setJobGroup(f"sweep-{name}", name)
         try:
             df = fn(spark, SF_DIR)
             executed = df._jdf.queryExecution().executedPlan()
@@ -93,7 +128,11 @@ def main() -> int:
             print(f"ERR  {name}: {str(e)[:120]}")
             continue
         if args.dump:
-            dumps[name] = _tree(executed)
+            dumps[name] = {
+                "plan": _tree(executed),
+                "staged": list(staged),
+                "jobs": len(tracker.getJobIdsForGroup(f"sweep-{name}")),
+            }
         counts = (
             plan.count("SortMergeJoin"),
             plan.count("BroadcastNestedLoopJoin"),
@@ -108,6 +147,8 @@ def main() -> int:
     for name, smj, nlj, cart, exch, win in sorted(rows, key=lambda r: (-r[3], -r[1])):
         if smj or nlj or cart or exch > 6:
             print(f"{name:24} {smj:3} {nlj:3} {cart:4} {exch:4} {win:3}")
+    for m, real in restore:
+        m.stage = real
     print(f"\nswept {len(rows)} query plans; cartesians: {cartesians or 'none'}")
     if args.dump:
         with open(args.dump, "w") as f:
