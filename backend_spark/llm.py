@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from backend_spark import functions as fn
-from backend_spark.operators.graph import connected_components
+from backend_spark.operators.graph import check_cluster_cap, cluster_labels, connected_components
 from backend_spark.scale import spread_scan, stage
 
 
@@ -274,8 +274,6 @@ def dedup_minhash(
     ids instead of silently anti-joining half the corpus away (the
     er_resolve mega-cluster guard, shared via
     :func:`~backend_spark.operators.graph.check_cluster_cap`)."""
-    from backend_spark.operators.graph import check_cluster_cap
-
     pairs = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
     cc = connected_components(pairs, src="id1", dst="id2")
     check_cluster_cap(cc, max_cluster_size, "dedup_minhash")
@@ -312,15 +310,10 @@ def dedup_keep_best(
     before the survivor window would funnel a corpus-sized cluster
     through one task.
     """
-    from backend_spark.operators.graph import check_cluster_cap
-
-    cc = connected_components(pairs, src="id1", dst="id2")
-    check_cluster_cap(cc, max_cluster_size, "dedup_keep_best")
-    labeled = df.withColumn("__score", score).join(
-        cc.select(F.col("node").alias(id_col), F.col("comp").alias("cluster")),
-        id_col,
-        "left",
-    ).withColumn("cluster", F.coalesce(F.col("cluster"), F.col(id_col)))
+    labeled = cluster_labels(
+        df.withColumn("__score", score), id_col, pairs, "id1", "id2",
+        max_cluster_size, "dedup_keep_best",
+    )
     order = [
         F.col("__score").desc() if higher_is_better else F.col("__score").asc(),
         F.col(id_col).asc(),
@@ -618,8 +611,6 @@ def semdedup(
         # soaking the corpus) should die with the offending cluster ids
         # before the pair join, not run for days inside it.  One
         # ids-only aggregate; reuses the shared engine guard.
-        from backend_spark.operators.graph import check_cluster_cap
-
         assigned = assigned.transform(stage, eager=False)  # cap read + join share the cut
         check_cluster_cap(
             assigned, max_cluster_size, "semdedup",
@@ -5448,19 +5439,12 @@ def dup_report(
     above ~0.35 as a candidate and shift the real cost into the
     verify intersect (see SCALING.md, round-10 LSH pairing note).
     """
-    from backend_spark.operators.graph import connected_components
-
     pairs = minhash_lsh_pairs(
         df, id_col, text_col, num_perm=num_perm, bands=bands,
         shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
     )
-    cc = connected_components(pairs, src="id1", dst="id2")
-    labeled = (
-        df.select(F.col(id_col))
-        .join(cc.withColumnRenamed("node", id_col), id_col, "left")
-        .select(F.coalesce(F.col("comp"), F.col(id_col)).alias("__c"))
-    )
-    sizes = labeled.groupBy("__c").agg(F.count(F.lit(1)).alias("size"))
+    labeled = cluster_labels(df.select(F.col(id_col)), id_col, pairs, "id1", "id2")
+    sizes = labeled.groupBy("cluster").agg(F.count(F.lit(1)).alias("size"))
     hist = sizes.groupBy("size").agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
     tot = labeled.agg(F.count(F.lit(1)).alias("__n"))
     return hist.join(F.broadcast(tot)).select(

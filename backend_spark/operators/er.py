@@ -10,12 +10,14 @@ canonical "golden" record (Talend/MDM terminology; see also Christen,
 "Data Matching", ch. 6).
 
 Scale shape: clustering is :func:`~backend_spark.operators.graph
-.connected_components` (hash-min label propagation with pointer
-jumping, O(log diameter) keyed-join rounds — the perfbench dedup
-workload, seed 1, takes 5 including the confirming one);
-survivorship is ONE groupBy on the cluster id.  The ``mode`` rule folds a per-cluster value histogram
-through ``array_sort`` so ties break deterministically (highest count,
-then smallest value) — cluster sizes bound the array, and match
+.cluster_labels` — connected components over the pair endpoints only
+(hash-min label propagation with pointer jumping, O(log diameter)
+keyed-join rounds — the perfbench dedup workload, seed 1, takes 5
+including the confirming one), then one left join that gives every
+unpaired record its own singleton cluster; survivorship is ONE
+groupBy on the cluster id.  The ``mode`` rule is Spark's
+deterministic ``mode`` aggregate (highest count, ties to the smallest
+value): its state grows with a cluster's distinct values, and match
 clusters are small by construction (a mega-cluster means the blocking
 upstream is broken, which `skew_report` is for).
 """
@@ -25,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_spark.operators.graph import check_cluster_cap, connected_components
+from backend_spark.operators.graph import cluster_labels
 from backend_spark.scale import stage
 
 _RULES = ("first", "mode", "min", "max", "sum")
@@ -48,29 +50,33 @@ def er_resolve(
     ``survivorship``: attr -> rule, one of
       * ``first`` — the canonical record's value (min record id wins)
       * ``mode``  — most frequent non-null value, ties to the smallest
+        (Spark's deterministic ``mode``; a float 0.0 and -0.0 count as
+        one value, reported as 0.0)
       * ``min`` / ``max`` / ``sum`` — plain aggregates over the cluster
 
     Returns one row per entity: ``entity_id`` (min member record id),
-    ``n_members``, and one column per survivorship attr.  Unmatched
-    records form singleton entities (self-loops are implicit: every
-    record enters clustering, not just paired ones).
+    ``n_members``, and one column per survivorship attr.  Records come
+    from :func:`~backend_spark.operators.graph.cluster_labels`: an
+    unmatched record forms a singleton entity, and a record with a
+    null id belongs to none.
 
-    ``max_cluster_size`` is the mega-cluster guard: the ``mode`` rule
-    folds a per-cluster value histogram through ``collect_list``, which
-    is bounded by cluster size — fine for real match clusters (tens of
-    members), an executor OOM when upstream blocking collapses (e.g. a
-    blank blocking key matching everything).  If any cluster exceeds
-    the cap, raise with the offending cluster ids and sizes instead of
-    letting the aggregate die opaquely mid-shuffle; the fix belongs
-    upstream (see ``skew_report``).  Pass ``None`` to disable.  With a
-    ``mode`` rule the check runs up front as its own count-only job (it
-    must fail BEFORE the unbounded collect_list aggregate) and raises
-    an eager ``ValueError``.  Without one every aggregate carries
-    bounded state, so the guard is a filter on the survivorship
-    aggregate's output (zero extra jobs): it raises
-    ``SparkRuntimeException`` with the offending cluster id at action
-    time, however the result is consumed (``collect``, ``count``, a
-    narrow ``select``).
+    ``max_cluster_size`` is the mega-cluster guard: the ``mode`` rule's
+    state grows with a cluster's distinct values — fine for real match
+    clusters (tens of members), an executor OOM when upstream blocking
+    collapses (e.g. a blank blocking key matching everything).  If any
+    cluster exceeds the cap, raise with the offending cluster ids and
+    sizes instead of letting the aggregate die opaquely mid-shuffle;
+    the fix belongs upstream (see ``skew_report``).  Pass ``None`` to
+    disable.  With a ``mode`` rule the check runs up front as its own
+    count-only job, before the mode aggregate, and raises an eager
+    ``ValueError``.  Without one every aggregate carries bounded state,
+    so the guard is a filter on the survivorship aggregate's output
+    (zero extra jobs): it raises ``SparkRuntimeException`` with the
+    offending cluster id at action time, however the result is consumed
+    (``collect``, ``count``, a narrow ``select``).  The eager guard
+    counts the ids a cluster's pairs connect, the filter its member
+    records (``n_members``): the two agree whenever every pair id is a
+    record id.
     """
     for attr, rule in survivorship.items():
         if rule not in _RULES:
@@ -81,24 +87,12 @@ def er_resolve(
         raise ValueError(
             f"max_cluster_size must be >= 1 or None, got {max_cluster_size}"
         )
-    mode_attrs = [a for a, r in survivorship.items() if r == "mode"]
-    edges = (
-        pairs.select(F.col(pair_left).alias("src"), F.col(pair_right).alias("dst"))
-        # self-loops: singletons keep a cluster label
-        .unionByName(
-            records.select(F.col(id_col).alias("src"), F.col(id_col).alias("dst"))
-        )
+    has_mode = "mode" in survivorship.values()
+    members = cluster_labels(
+        records.where(F.col(id_col).isNotNull()), id_col, pairs, pair_left, pair_right,
+        max_cluster_size if has_mode else None, "er_resolve",
     )
-    comp = connected_components(edges)  # (node, comp)
-    if mode_attrs:
-        # the mode rule folds a per-cluster collect_list, which a
-        # mega-cluster turns into an executor OOM mid-aggregate — the
-        # guard must run (and fail) BEFORE that aggregate, as its own
-        # count-only job
-        check_cluster_cap(comp, max_cluster_size, "er_resolve")
-    members = records.join(
-        comp.withColumnRenamed("node", id_col), id_col, "inner"
-    )
+    dtypes = dict(records.dtypes)
     aggs = [
         F.min(id_col).alias("entity_id"),
         F.count(F.lit(1)).alias("n_members"),
@@ -107,40 +101,15 @@ def er_resolve(
         if rule == "first":
             aggs.append(F.min_by(attr, F.col(id_col)).alias(attr))
         elif rule == "mode":
-            # deterministic mode: fold the (value, count) histogram —
-            # built per-cluster below — by (-count, value)
-            aggs.append(
-                F.get(  # null (not ANSI error) when the cluster is all-null
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col(f"__cnt_{attr}").isNotNull(),
-                                F.struct(
-                                    (-F.col(f"__cnt_{attr}")).alias("neg"),
-                                    F.col(attr).alias("val"),
-                                ),
-                            )
-                        )
-                    ),
-                    0,
-                )["val"].alias(attr)
-            )
+            v = F.col(attr)
+            if dtypes[attr] in ("float", "double"):  # mode keys -0.0 apart from 0.0
+                v = v + F.lit(0.0).cast(dtypes[attr])
+            aggs.append(F.mode(v, deterministic=True).alias(attr))
         else:
             aggs.append(getattr(F, rule)(attr).alias(attr))
 
-    if mode_attrs:
-        # one value-histogram window pass per mode attr (runs on the
-        # same comp partitioning), then the groupBy folds it
-        from pyspark.sql import Window
-
-        for attr in mode_attrs:
-            w = Window.partitionBy("comp", attr)
-            members = members.withColumn(
-                f"__cnt_{attr}",
-                F.when(F.col(attr).isNotNull(), F.count(attr).over(w)),
-            )
-    out = members.groupBy("comp").agg(*aggs)
-    if max_cluster_size is not None and not mode_attrs:
+    out = members.groupBy("cluster").agg(*aggs)
+    if max_cluster_size is not None and not has_mode:
         # without a mode rule the aggregate state is bounded (min/min_by/
         # max/sum), so a mega-cluster cannot OOM it and the guard needs
         # no up-front job.  It is a FILTER, not a projection: ColumnPruning
@@ -152,7 +121,7 @@ def er_resolve(
             | F.raise_error(
                 F.concat(
                     F.lit("er_resolve: cluster "),
-                    F.col("comp").cast("string"),
+                    F.col("cluster").cast("string"),
                     F.lit(
                         f" exceeds max_cluster_size={max_cluster_size}; "
                         "upstream blocking is likely broken — inspect "
@@ -161,7 +130,7 @@ def er_resolve(
                 )
             ).isNull()
         )
-    return out.drop("comp")
+    return out.drop("cluster")
 
 
 _PAIR_KINDS = ("exact", "lev_norm", "jw", "abs_diff")
@@ -478,14 +447,15 @@ def key_collision(
     .normalize` (lower, accent-fold, punctuation→space), so
     "Acme Corp.", "ACME CORP" and "corp acme" collide.  Canonical =
     most frequent ORIGINAL variant, ties to the lexicographically
-    smallest (the er_resolve mode fold: sort by (-count, value), take
-    the head — deterministic on any engine).
+    smallest (the min of (-count, value) structs, as
+    :func:`~backend_spark.operators.graph.label_propagation` picks its
+    arg-max — deterministic on any engine).
 
-    Scale shape: two keyed aggregates (variant counts, then per-key
-    histogram fold); the histogram array is bounded by the variant
-    count of one key — pathological keys mean the normalizer is
-    folding too hard, which the ``n_variants`` column itself surfaces.
-    NULL and empty-normalizing values are excluded.
+    Scale shape: a hash aggregate for the variant counts, then a sort
+    aggregate (the min struct holds a string, so its buffer is not
+    fixed-width) with O(1) state per key; pathological keys mean the
+    normalizer is folding too hard, which the ``n_variants`` column
+    itself surfaces.  NULL and empty-normalizing values are excluded.
 
     Output: (key, n_rows, n_variants, canonical), keys with at least
     ``min_variants`` distinct variants.
@@ -511,13 +481,8 @@ def key_collision(
         .agg(
             F.sum("__cnt").alias("n_rows"),
             F.count(F.lit(1)).alias("n_variants"),
-            F.get(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct((-F.col("__cnt")).alias("neg"), F.col("__v").alias("val"))
-                    )
-                ),
-                0,
+            F.min(
+                F.struct((-F.col("__cnt")).alias("neg"), F.col("__v").alias("val"))
             )["val"].alias("canonical"),
         )
         .where(F.col("n_variants") >= min_variants)

@@ -179,6 +179,30 @@ def check_cluster_cap(
         )
 
 
+def cluster_labels(
+    records: DataFrame,
+    id_col: str,
+    pairs: DataFrame,
+    left: str,
+    right: str,
+    max_cluster_size: "int | None" = None,
+    op_name: str = "cluster_labels",
+) -> DataFrame:
+    """The cluster step of entity resolution (the reference's
+    ``clique``): ``records`` plus ``cluster``, the min id of the
+    record's cluster over ``pairs`` (``left``, ``right``).  Components
+    run over the pair endpoints only; a record in no pair is its own
+    singleton (one left join + coalesce).  ``max_cluster_size`` runs
+    :func:`check_cluster_cap` on the pair ids' labels first."""
+    cc = connected_components(pairs, src=left, dst=right)
+    check_cluster_cap(cc, max_cluster_size, op_name)
+    return records.join(
+        cc.select(F.col("node").alias(id_col), F.col("comp").alias("cluster")),
+        id_col,
+        "left",
+    ).withColumn("cluster", F.coalesce(F.col("cluster"), F.col(id_col)))
+
+
 def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected simple-graph edge list: both directions, self loops
     and duplicates removed."""
@@ -347,12 +371,9 @@ def k_truss(
     """
     if k < 3:
         raise ValueError(f"k_truss: k must be >= 3, got {k}")
-    e = (
-        _sym_edges(edges, src, dst)
-        .where(F.col("a") < F.col("b"))
-        .transform(stage, eager=True)
+    e, n_edges = _cut(
+        _sym_edges(edges, src, dst).where(F.col("a") < F.col("b")), F.count(F.lit(1))
     )
-    n_edges = e.count()
     for _ in range(max_rounds):
         sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         n1 = sym.select(F.col("a").alias("__u"), F.col("b").alias("__w"))
@@ -652,8 +673,7 @@ def closeness_centrality(
     state).  Returns (node, closeness).
     """
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
-    nodes = sym.select(F.col("a").alias("node")).distinct().transform(stage, eager=True)
-    n_nodes = nodes.count()
+    nodes, n_nodes = _cut(sym.select(F.col("a").alias("node")).distinct(), F.count(F.lit(1)))
     if n_nodes == 0:
         return nodes.select("node", F.lit(0.0).alias("closeness"))
     known, done = _bfs(sym, nodes.select(F.col("node").alias("s"), "node"), max_hops, by=("s",))
@@ -710,8 +730,7 @@ def eigenvector_centrality(
     silently wrong).  Returns (node, eigenvector).
     """
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
-    nodes = sym.select(F.col("a").alias("node")).distinct().transform(stage, eager=True)
-    n_nodes = nodes.count()
+    nodes, n_nodes = _cut(sym.select(F.col("a").alias("node")).distinct(), F.count(F.lit(1)))
     if n_nodes == 0:
         return nodes.select("node", F.lit(0.0).alias("eigenvector"))
 
@@ -877,15 +896,14 @@ def closeness_centrality_approx(
         estimate = F.hll_sketch_estimate
         union_agg = lambda c: F.hll_union_agg(c, True)  # noqa: E731
         union2 = lambda a, b: F.hll_union(a, b, True)  # noqa: E731
-    state = (
+    state, n_nodes = _cut(
         sym.select(F.col("a").alias("node"))
         .groupBy("node")  # the groupBy dedups; a prior distinct would be a second exchange
         .agg(init_sk.alias("__sk"))
         .withColumn("__est", estimate(F.col("__sk")))
-        .withColumn("__sumdist", F.lit(0.0))
-        .transform(stage, eager=True)
+        .withColumn("__sumdist", F.lit(0.0)),
+        F.count(F.lit(1)),
     )
-    n_nodes = state.count()
     if n_nodes == 0:
         return state.select("node", F.lit(0.0).alias("closeness"))
     for hop in range(1, max_hops + 1):
@@ -950,8 +968,7 @@ def k_core(
     node, so ``max_iter`` bounds the node count peeled, not hops).
     Returns (node, core_degree) for the surviving nodes.
     """
-    alive = _sym_edges(edges, src, dst).transform(stage, eager=True)
-    n_alive = alive.count()
+    alive, n_alive = _cut(_sym_edges(edges, src, dst), F.count(F.lit(1)))
     for _ in range(max_iter):
         deg = alive.groupBy("a").agg(F.count(F.lit(1)).alias("__d"))
         keep = deg.where(F.col("__d") >= k).select("a")

@@ -15,6 +15,7 @@ These are crash gates, not value oracles — value semantics live in the
 operator suites and the DuckDB cross-checks.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -145,6 +146,75 @@ def test_semdedup_cluster_cap_fails_fast(spark, monkeypatch):
     # the undersized-n_clusters raise names the actionable remedy
     with pytest.raises(ValueError, match="n_clusters"):
         llm.semdedup(emb, n_clusters=1, max_cluster_size=5).collect()
+
+
+_CONSUMERS = {
+    "collect": lambda df: df.collect(),
+    "count": lambda df: df.count(),
+    "select_first": lambda df: df.select(df.columns[0]).collect(),
+}
+
+
+def _guarded(spark, monkeypatch, guard):
+    """(frame builder, error pattern) of each size guard, on an input
+    that trips it.  An eager guard raises while the frame is built, an
+    in-plan one when it is consumed."""
+    from backend_spark import llm
+    from backend_spark.operators import er_resolve
+
+    chain = spark.createDataFrame([(i, "x") for i in range(12)], "rid long, v string")
+    links = spark.createDataFrame([(i, i + 1) for i in range(11)], "left_id long, right_id long")
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog again") for i in range(4)],
+        "doc_id long, text string",
+    )
+    if guard == "er_resolve_mode":
+        return lambda: er_resolve(chain, links, "rid", {"v": "mode"}, max_cluster_size=5), (
+            "max_cluster_size")
+    if guard == "er_resolve_first":
+        return lambda: er_resolve(chain, links, "rid", {"v": "first"}, max_cluster_size=5), (
+            "er_resolve: cluster 0")
+    if guard == "dedup_minhash":
+        return lambda: llm.dedup_minhash(
+            docs, "doc_id", "text", max_cluster_size=1, num_perm=16, bands=8,
+            jaccard_threshold=0.5,
+        ), "dedup_minhash.*max_cluster_size"
+    if guard == "dedup_keep_best":
+        pairs = links.select(F.col("left_id").alias("id1"), F.col("right_id").alias("id2"))
+        return lambda: llm.dedup_keep_best(
+            chain.withColumnRenamed("rid", "doc_id"), "doc_id", pairs, score=F.lit(1.0),
+            max_cluster_size=5,
+        ), "dedup_keep_best.*max_cluster_size"
+    if guard == "semdedup":
+        emb = spark.createDataFrame(
+            [(i, [float(i % 3), 1.0]) for i in range(20)], "vec_id long, embedding array<double>"
+        )
+        return lambda: llm.semdedup(emb, n_clusters=2, max_cluster_size=3), (
+            "semdedup.*max_cluster_size")
+    # tfidf_cosine_pairs' in-plan quadratic raise_error: 'hot' is in 6 of
+    # 12 docs, admitted by the 0.5 fractional cap, over a limit of 2
+    monkeypatch.setattr(llm, "_TFIDF_QUADRATIC_LIMIT", 2)
+    text = F.concat(
+        F.when(F.col("id") % 2 == 0, F.lit("hot ")).otherwise(F.lit("")),
+        F.lit("tok"), F.col("id").cast("string"),
+    )
+    hot = spark.range(12).select(F.col("id").alias("doc_id"), text.alias("text"))
+    return lambda: llm.tfidf_cosine_pairs(hot, "doc_id", "text", threshold=0.0), (
+        "tfidf_cosine_pairs: term 'hot'")
+
+
+@pytest.mark.parametrize("consume", sorted(_CONSUMERS))
+@pytest.mark.parametrize(
+    "guard",
+    ["er_resolve_mode", "er_resolve_first", "dedup_minhash", "dedup_keep_best",
+     "semdedup", "tfidf_quadratic"],
+)
+def test_size_guard_fires_under_every_consumer(spark, monkeypatch, guard, consume):
+    # a guard that a count() or a narrow select can prune away protects
+    # nothing: every guard must raise however its result is consumed
+    build, pattern = _guarded(spark, monkeypatch, guard)
+    with pytest.raises(Exception, match=pattern):
+        _CONSUMERS[consume](build())
 
 
 def test_ks_test_empty_side_yields_null(spark):

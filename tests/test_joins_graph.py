@@ -1794,6 +1794,24 @@ def test_er_resolve_mode_tie_breaks_to_smallest(spark):
         er_resolve(recs, pairs, "rid", {"v": "median"})
     with pytest.raises(ValueError):
         er_resolve(recs, pairs, "rid", {"nope": "min"})
+    # floats: 0.0 and -0.0 count as one value and report 0.0 (positive);
+    # a date tie goes to the earlier date; an all-null cluster is null
+    import datetime
+    import math
+
+    d1, d2 = datetime.date(2020, 1, 1), datetime.date(2020, 1, 2)
+    nan = float("nan")
+    recs = spark.createDataFrame(
+        [(1, 0.0, d2, None), (2, -0.0, d1, None), (3, nan, d2, None), (4, nan, d1, None),
+         (10, -0.0, d2, None), (11, -0.0, d2, None), (12, 0.0, d1, None)],
+        "rid long, x double, d date, s string",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)], "left_id long, right_id long"
+    )
+    out = er_resolve(recs, pairs, "rid", {"x": "mode", "d": "mode", "s": "mode"}).collect()
+    got = {r.entity_id: (r.x, math.copysign(1.0, r.x), r.d, r.s) for r in out}
+    assert got == {1: (0.0, 1.0, d1, None), 10: (0.0, 1.0, d2, None)}
 
 
 def test_er_resolve_mega_cluster_guard(spark):

@@ -486,7 +486,8 @@ EXPECT = {
     "pack_sequences": (["Window"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     "stream_topk": (["Window"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     "review_queue": (["Window"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
-    "er_golden": (["Window"], ["CartesianProduct"]),
+    # survivorship is ONE aggregate: the mode rule is an aggregate, not a window
+    "er_golden": (["partial_mode"], ["CartesianProduct", "Window"]),
     # bin-blocked interval equi-join — keyed, never a nested loop
     "interval_join": (["BroadcastHashJoin"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     # hash-groupBy dedup + keyed survivor join

@@ -19,6 +19,10 @@ order, every frame the query's build passed to ``scale.stage`` as
 round, so the plan above its last cut shows only the final round, and
 the staged plans are the evidence for the loop itself.  ``jobs`` is
 the number of Spark jobs the build ran (the loops' convergence reads).
+The queries with a non-empty ``staged`` list are the registry's
+stage-using queries — the set to feed ``determinism_check.py
+--cluster`` (``jq -r 'to_entries[] | select(.value.staged != []) |
+.key' PATH``).
 Expression ids, plan ids and lambda-variable numbers are stripped, so
 the dumps of two checkouts diff cleanly, e.g. ``diff <(jq -S . a.json)
 <(jq -S . b.json)``; job counts of loops whose adaptive plans vary run
@@ -75,10 +79,9 @@ def _tree(node) -> dict:
 
 def _record_stage(staged: list) -> list:
     """Wrap ``scale.stage`` — the module binding and every
-    ``backend_spark`` module's from-import of it, as
-    ``tools/stage_census.py`` does — so each call appends the normalized
-    initial plan of the frame it receives to ``staged``.  Returns the
-    (module, real stage) pairs to restore."""
+    ``backend_spark`` module's from-import of it — so each call appends
+    the normalized initial plan of the frame it receives to ``staged``.
+    Returns the (module, real stage) pairs to restore."""
     import backend_spark.scale as scale_mod
 
     real = scale_mod.stage
