@@ -7521,12 +7521,13 @@ def oracle_sql() -> dict[str, str]:
                          FROM lineitem GROUP BY 1),
             d AS (SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag,
                          abs(CAST(l_extendedprice AS DOUBLE) - md) AS dv
-                  FROM lineitem l JOIN med USING (l_returnflag)),
+                  FROM lineitem l
+                  JOIN med ON l.l_returnflag IS NOT DISTINCT FROM med.l_returnflag),
             m AS (SELECT l_returnflag, quantile_cont(dv, 0.5) AS mad FROM d GROUP BY 1)
             SELECT d.l_orderkey, d.l_linenumber, round(d.dv, 6) AS dev,
                    round(m.mad, 6) AS mad,
                    round(d.dv, 6) > 3.0 * round(m.mad, 6) AS is_outlier
-            FROM d JOIN m USING (l_returnflag)
+            FROM d JOIN m ON d.l_returnflag IS NOT DISTINCT FROM m.l_returnflag
         """,
         "sentence_split": """
             WITH t AS (SELECT doc_id,

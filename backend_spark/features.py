@@ -14,7 +14,7 @@ mean/stddev = full shuffle) are exactly what these avoid.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from backend_spark.scale import spread_scan, stage
 
@@ -541,6 +541,7 @@ def mad_outliers(
     median of deviations) broadcast back onto the scan — the data
     itself never sorts or re-shuffles; an all-equal group has MAD 0 and
     flags any deviating row, which is the intended degenerate case.
+    Null group keys form a group of their own; every row is kept.
     """
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     # spread the scan (round 15): the exact-percentile partial state
@@ -548,16 +549,20 @@ def mad_outliers(
     # partition, so an under-split layout serialises it; no-op on
     # well-split 100 TB inputs
     df = spread_scan(df)
-    v = F.col(value_col).cast("double")
-    med = df.groupBy(*groups).agg(F.percentile(v, F.lit(0.5)).alias("__med"))
-    j = df.join(F.broadcast(med), groups)
+    keys = [f"__mg_{g}" for g in groups]
+
+    def attach(frame: DataFrame, stat: Column) -> DataFrame:
+        # null-safe group join, same rationale as winsorize: a null
+        # group is a real group and its rows must survive
+        per_group = frame.groupBy(*[F.col(g).alias(key) for g, key in zip(groups, keys)]).agg(stat)
+        cond = F.lit(True)
+        for g, key in zip(groups, keys):
+            cond = cond & F.col(g).eqNullSafe(F.col(key))
+        return frame.join(F.broadcast(per_group), cond, "inner").drop(*keys)
+
     dev = F.abs(F.col(value_col).cast("double") - F.col("__med"))
-    mad = (
-        j.withColumn("__dev", dev)
-        .groupBy(*groups)
-        .agg(F.percentile(F.col("__dev"), F.lit(0.5)).alias("__mad"))
-    )
-    out = j.join(F.broadcast(mad), groups)
+    j = attach(df, F.percentile(F.col(value_col).cast("double"), F.lit(0.5)).alias("__med"))
+    out = attach(j.withColumn("__dev", dev), F.percentile(F.col("__dev"), F.lit(0.5)).alias("__mad"))
     dev_r = F.round(dev, ndigits)
     mad_r = F.round(F.col("__mad"), ndigits)
     return out.select(

@@ -125,13 +125,17 @@ def _minhash_bands(
 
 
 def _band_pairs(banded1: DataFrame, banded2: DataFrame, self_join: bool = False) -> DataFrame:
-    """Candidate pairs (id1, id2) of two :func:`_minhash_bands` sides by
-    (band, key) equi-join: id1 < id2 for a ``self_join``, else
-    ``banded2`` is the small, broadcast side (the two sides then need
-    distinct id and ``keys_col`` names).  A pair agreeing in several
-    bands joins once per band; keeping only its FIRST agreeing band is an
-    in-stage filter that replaces a candidate ``distinct`` and its
-    exchange (bench corpus: 1.60M instances -> the same 1.48M pairs).
+    """Candidate pairs (id1, id2) of two banded sides by (band, key)
+    equi-join.  Each side has one (id, band-key array, ``__band``,
+    ``__key``) row per band, in that column order: the band-key array
+    holds a row's key in every band and ``__band``/``__key`` are its
+    posexplode (``_minhash_bands`` and ``embed_cosine_pairs`` build
+    them).  id1 < id2 for a ``self_join``, else ``banded2`` is the
+    small, broadcast side (the two sides then need distinct id and
+    key-array names).  A pair agreeing in several bands joins once per
+    band; keeping only its FIRST agreeing band is an in-stage filter
+    that replaces a candidate ``distinct`` and its exchange (bench
+    corpus: 1.60M instances -> the same 1.48M pairs).
     posexplode's band index is 0-based, array_position 1-based."""
     if self_join:
         banded1, banded2 = (banded1.toDF(f"id{i}", f"__k{i}", "__band", "__key") for i in (1, 2))
@@ -450,37 +454,13 @@ def embed_cosine_pairs(
         # spreading this scan was measured 2-3× WORSE at sf0.1 — with
         # literal plane coefficients the folds are cheap enough that
         # the extra exchange + downstream plan change dominate.)
-        sig = base.select(
-            "__id",
-            *[
-                _hyperplane_bits(F.col("__v"), n_planes, dim, seed=f"band{band}").alias(
-                    f"__bk{band}"
-                )
-                for band in range(n_bands)
-            ],
-        ).transform(stage, eager=False)
-        bucketed = sig.select(
-            "__id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(band).alias("band"),
-                            F.col(f"__bk{band}").alias("bucket"),
-                        )
-                        for band in range(n_bands)
-                    ]
-                )
-            ).alias("__b"),
+        keys = F.array(
+            *[_hyperplane_bits(F.col("__v"), n_planes, dim, seed=f"band{band}") for band in range(n_bands)]
         )
+        sig = base.select("__id", keys.alias("__keys")).transform(stage, eager=False)
+        banded = sig.select("__id", "__keys", F.posexplode("__keys").alias("__band", "__key"))
         # ids-only candidate shuffle; vectors re-attach by id below
-        ids = (
-            bucketed.select(F.col("__id").alias("id1"), "__b")
-            .join(bucketed.select(F.col("__id").alias("id2"), "__b"), "__b")
-            .where(F.col("id1") < F.col("id2"))
-            .select("id1", "id2")
-            .distinct()
-        )
+        ids = _band_pairs(banded, banded, self_join=True)
         # norms ride the re-attach joins — computed once per row, not
         # per candidate pair (same bit-identical split as exact mode)
         cand = ids.join(
@@ -1190,13 +1170,6 @@ def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
             lambda i: F.array_join(F.slice(toks, i, n), " "),
         )
     )
-
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """As above from raw text (normalize → tokenize → n-grams).  Prefer
-    staging the token array and calling :func:`word_ngrams_from_tokens`
-    when the caller reuses the tokens."""
-    return word_ngrams_from_tokens(fn.tokenize(fn.normalize(text)), n)
 
 
 def decontaminate(

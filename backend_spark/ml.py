@@ -377,15 +377,45 @@ def lr_train(
     return spark.createDataFrame(trace, "iter int, feature string, weight double")
 
 
-def _ridge_sums(df: DataFrame, feature_cols: list[str], label_col: str, qscale: float):
-    """Exact quantized moment sums for :func:`ridge_train`.
+def _det3(m):
+    # fixed parenthesization — mirrored verbatim by the SQL oracle so
+    # both engines walk the identical IEEE-754 expression tree
+    return (
+        m[0][0] * (m[1][1] * m[2][2] - m[1][2] * m[2][1])
+        - m[0][1] * (m[1][0] * m[2][2] - m[1][2] * m[2][0])
+        + m[0][2] * (m[1][0] * m[2][1] - m[1][1] * m[2][0])
+    )
+
+
+def _ridge_fit(
+    df: DataFrame,
+    keys: list[str],
+    feature_cols: list[str],
+    label_col: str,
+    l2: float,
+    qscale: float,
+    ndigits: int,
+    name: str,
+    max_groups: int | None = None,
+) -> DataFrame:
+    """The one ridge fit behind :func:`ridge_train` (``keys=[]``) and
+    :func:`ridge_train_by` (``keys=[group_col]``): exact quantized moment
+    sums per ``keys`` group, then the pinned d=2 Cramer solve per group
+    on the driver.  Returns (*keys, feature, weight), groups in key
+    order (nulls last), weights rounded to ``ndigits``; errors name
+    ``name`` (and the group).
 
     Each value is quantized to ``round(x * qscale)`` as BIGINT; every
     first- and second-order moment is then an exact integer, summed as
     DECIMAL(38,0) (Spark) / HUGEINT (the DuckDB oracle) — associative,
-    so identical under any partitioning.  Returns (n, sums) where sums
-    maps 'i'/'ij' index strings over [features..., label] to Python ints.
-    """
+    so identical under any partitioning."""
+    if len(feature_cols) != 2:
+        raise ValueError(f"{name}: exactly 2 feature columns supported (d=2 Cramer solve)")
+    if l2 < 0:
+        raise ValueError(f"{name}: l2 must be >= 0, got {l2}")
+    for key in keys:
+        if key not in df.columns:
+            raise ValueError(f"{name}: group column {key!r} not in df")
     cols = [*feature_cols, label_col]
     # Deliberately NOT spread_scan'd (round-15, measured): the decimal
     # moment sums over sf0.1 lineitem cost ~1.3 s single-task, and a
@@ -401,27 +431,53 @@ def _ridge_sums(df: DataFrame, feature_cols: list[str], label_col: str, qscale: 
     for i in range(len(qd)):
         for j in range(i, len(qd)):
             aggs.append(F.sum(qd[i] * qd[j]).alias(f"s{i}{j}"))
-    row = df.agg(*aggs).collect()[0]
-    n = row["n"]
-    if n == 0:
-        raise ValueError("ridge_train: empty input DataFrame")
-    sums = {}
-    for k, v in row.asDict().items():
-        if k == "n":
-            continue
-        if v is None:
-            raise OverflowError(f"ridge_train: DECIMAL(38,0) sum overflow in {k}")
-        sums[k[1:]] = int(v)
-    return n, sums
-
-
-def _det3(m):
-    # fixed parenthesization — mirrored verbatim by the SQL oracle so
-    # both engines walk the identical IEEE-754 expression tree
-    return (
-        m[0][0] * (m[1][1] * m[2][2] - m[1][2] * m[2][1])
-        - m[0][1] * (m[1][0] * m[2][2] - m[1][2] * m[2][0])
-        + m[0][2] * (m[1][0] * m[2][1] - m[1][1] * m[2][0])
+    rows = df.groupBy(*keys).agg(*aggs).collect()
+    # a global aggregate returns one n=0 row on empty input
+    if not rows or rows[0]["n"] == 0:
+        raise ValueError(f"{name}: empty input DataFrame")
+    if max_groups is not None and len(rows) > max_groups:
+        raise ValueError(
+            f"{name}: {len(rows)} groups exceed max_groups={max_groups} "
+            "— is the group column actually categorical?"
+        )
+    q1 = float(qscale)
+    q2 = q1 * q1
+    out = []
+    for row in sorted(rows, key=lambda r: [(r[key] is None, r[key]) for key in keys]):
+        g = [row[key] for key in keys]
+        # the error texts of ridge_train_by name the group
+        in_group, of_group = (f" in group {g[0]!r}", f" (group {g[0]!r})") if keys else ("", "")
+        s = {}
+        for k, v in row.asDict().items():
+            if k in keys or k == "n":
+                continue
+            if v is None:
+                raise OverflowError(f"{name}: DECIMAL(38,0) sum overflow in {k}{of_group}")
+            s[k[1:]] = int(v)
+        # real-space moments: each is double(int)/double — correctly rounded
+        a11 = float(row["n"])
+        a12 = float(s["0"]) / q1
+        a13 = float(s["1"]) / q1
+        a22 = float(s["00"]) / q2 + l2
+        a23 = float(s["01"]) / q2
+        a33 = float(s["11"]) / q2 + l2
+        b1 = float(s["2"]) / q1
+        b2 = float(s["02"]) / q2
+        b3 = float(s["12"]) / q2
+        A = [[a11, a12, a13], [a12, a22, a23], [a13, a23, a33]]
+        det = _det3(A)
+        if det == 0.0:
+            raise ValueError(f"{name}: singular normal equations{in_group} (raise l2)")
+        w0 = _det3([[b1, a12, a13], [b2, a22, a23], [b3, a23, a33]]) / det
+        w1 = _det3([[a11, b1, a13], [a12, b2, a23], [a13, b3, a33]]) / det
+        w2 = _det3([[a11, a12, b1], [a12, a22, b2], [a13, a23, b3]]) / det
+        out += [(*g, "__intercept__", w0), (*g, feature_cols[0], w1), (*g, feature_cols[1], w2)]
+    dtypes = dict(df.dtypes)
+    schema = ", ".join([*(f"{key} {dtypes[key]}" for key in keys), "feature string, weight double"])
+    # round via F.round (HALF_UP), not Python round (half-even) — the
+    # DuckDB oracles' round() is away-from-zero, matching F.round
+    return df.sparkSession.createDataFrame(out, schema).select(
+        *keys, "feature", F.round("weight", ndigits).alias("weight")
     )
 
 
@@ -456,41 +512,7 @@ def ridge_train(
     Returns (feature, weight): ``__intercept__`` first, then
     ``feature_cols`` in order.
     """
-    if len(feature_cols) != 2:
-        raise ValueError("ridge_train: exactly 2 feature columns supported (d=2 Cramer solve)")
-    if l2 < 0:
-        raise ValueError(f"ridge_train: l2 must be >= 0, got {l2}")
-    spark = df.sparkSession
-    n, s = _ridge_sums(df, feature_cols, label_col, qscale)
-    q1 = float(qscale)
-    q2 = q1 * q1
-    # real-space moments: each is double(int)/double — correctly rounded
-    a11 = float(n)
-    a12 = float(s["0"]) / q1
-    a13 = float(s["1"]) / q1
-    a22 = float(s["00"]) / q2 + l2
-    a23 = float(s["01"]) / q2
-    a33 = float(s["11"]) / q2 + l2
-    b1 = float(s["2"]) / q1
-    b2 = float(s["02"]) / q2
-    b3 = float(s["12"]) / q2
-    A = [[a11, a12, a13], [a12, a22, a23], [a13, a23, a33]]
-    det = _det3(A)
-    if det == 0.0:
-        raise ValueError("ridge_train: singular normal equations (raise l2)")
-    w0 = _det3([[b1, a12, a13], [b2, a22, a23], [b3, a23, a33]]) / det
-    w1 = _det3([[a11, b1, a13], [a12, b2, a23], [a13, b3, a33]]) / det
-    w2 = _det3([[a11, a12, b1], [a12, a22, b2], [a13, a23, b3]]) / det
-    rows = [
-        ("__intercept__", w0),
-        (feature_cols[0], w1),
-        (feature_cols[1], w2),
-    ]
-    # round via F.round (HALF_UP), not Python round (half-even) — the
-    # DuckDB oracle's round() is away-from-zero, matching F.round
-    return spark.createDataFrame(rows, "feature string, weight double").select(
-        "feature", F.round("weight", ndigits).alias("weight")
-    )
+    return _ridge_fit(df, [], feature_cols, label_col, l2, qscale, ndigits, "ridge_train")
 
 
 def ridge_score(
@@ -840,63 +862,8 @@ def ridge_train_by(
     Returns (group_col, feature, weight): ``__intercept__`` then the
     two features, per group.
     """
-    if len(feature_cols) != 2:
-        raise ValueError("ridge_train_by: exactly 2 feature columns supported (d=2 Cramer solve)")
-    if l2 < 0:
-        raise ValueError(f"ridge_train_by: l2 must be >= 0, got {l2}")
-    if group_col not in df.columns:
-        raise ValueError(f"ridge_train_by: group column {group_col!r} not in df")
-    cols = [*feature_cols, label_col]
-    q = [F.round(F.col(c).cast("double") * F.lit(qscale)).cast("long") for c in cols]
-    qd = [x.cast("decimal(38,0)") for x in q]
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for i, x in enumerate(qd):
-        aggs.append(F.sum(x).alias(f"s{i}"))
-    for i in range(len(qd)):
-        for j in range(i, len(qd)):
-            aggs.append(F.sum(qd[i] * qd[j]).alias(f"s{i}{j}"))
-    rows = df.groupBy(group_col).agg(*aggs).collect()
-    if not rows:
-        raise ValueError("ridge_train_by: empty input DataFrame")
-    if len(rows) > max_groups:
-        raise ValueError(
-            f"ridge_train_by: {len(rows)} groups exceed max_groups={max_groups} "
-            "— is the group column actually categorical?"
-        )
-    q1 = float(qscale)
-    q2 = q1 * q1
-    out = []
-    for row in sorted(rows, key=lambda r: (r[group_col] is None, r[group_col])):
-        g = row[group_col]
-        s = {}
-        for k, v in row.asDict().items():
-            if k in (group_col, "n"):
-                continue
-            if v is None:
-                raise OverflowError(f"ridge_train_by: DECIMAL(38,0) sum overflow in {k} (group {g!r})")
-            s[k[1:]] = int(v)
-        a11 = float(row["n"])
-        a12 = float(s["0"]) / q1
-        a13 = float(s["1"]) / q1
-        a22 = float(s["00"]) / q2 + l2
-        a23 = float(s["01"]) / q2
-        a33 = float(s["11"]) / q2 + l2
-        b1 = float(s["2"]) / q1
-        b2 = float(s["02"]) / q2
-        b3 = float(s["12"]) / q2
-        A = [[a11, a12, a13], [a12, a22, a23], [a13, a23, a33]]
-        det = _det3(A)
-        if det == 0.0:
-            raise ValueError(f"ridge_train_by: singular normal equations in group {g!r} (raise l2)")
-        w0 = _det3([[b1, a12, a13], [b2, a22, a23], [b3, a23, a33]]) / det
-        w1 = _det3([[a11, b1, a13], [a12, b2, a23], [a13, b3, a33]]) / det
-        w2 = _det3([[a11, a12, b1], [a12, a22, b2], [a13, a23, b3]]) / det
-        out.append((g, "__intercept__", round(w0, ndigits)))
-        out.append((g, feature_cols[0], round(w1, ndigits)))
-        out.append((g, feature_cols[1], round(w2, ndigits)))
-    gtype = dict(df.dtypes)[group_col]
-    return df.sparkSession.createDataFrame(
-        out, f"{group_col} {gtype}, feature string, weight double"
+    return _ridge_fit(
+        df, [group_col], feature_cols, label_col, l2, qscale, ndigits, "ridge_train_by", max_groups
     )
 
 

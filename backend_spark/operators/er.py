@@ -24,7 +24,7 @@ upstream is broken, which `skew_report` is for).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from backend_spark.operators.graph import cluster_labels
@@ -329,6 +329,13 @@ def sorted_neighborhood(
     )
 
 
+def _agrees(col: str) -> Column:
+    """The Fellegi-Sunter agreement rule: a 0/1 indicator column (or a
+    label) agrees iff its value is non-null and non-zero — NULL counts as
+    disagreement."""
+    return F.coalesce(F.col(col).cast("int"), F.lit(0)) != 0
+
+
 def fs_weights(
     pairs: DataFrame,
     feature_cols: list[str],
@@ -371,10 +378,10 @@ def fs_weights(
     s = float(smoothing)
     if s <= 0:
         raise ValueError("fs_weights: smoothing must be > 0 (keeps weights finite)")
-    lbl = (F.coalesce(F.col(label_col).cast("int"), F.lit(0)) != 0).cast("long")
+    lbl = _agrees(label_col).cast("long")
     aggs = [F.sum(lbl).alias("__nm"), F.sum(F.lit(1) - lbl).alias("__nu")]
     for c in feature_cols:
-        ind = (F.coalesce(F.col(c).cast("int"), F.lit(0)) != 0).cast("long")
+        ind = _agrees(c).cast("long")
         aggs.append(F.sum(ind * lbl).alias(f"__am_{c}"))
         aggs.append(F.sum(ind * (F.lit(1) - lbl)).alias(f"__au_{c}"))
     one = pairs.agg(*aggs)
@@ -422,8 +429,7 @@ def fs_score(
         raise ValueError(f"fs_score: column(s) not in pairs: {absent}")
     total = F.lit(0.0)
     for c in cols:
-        ind = F.coalesce(F.col(c).cast("int"), F.lit(0)) != 0
-        total = total + F.when(ind, F.lit(float(wrows[c]["w_agree"]))).otherwise(
+        total = total + F.when(_agrees(c), F.lit(float(wrows[c]["w_agree"]))).otherwise(
             F.lit(float(wrows[c]["w_disagree"]))
         )
     return pairs.withColumn(out_col, F.round(total, round_to))
@@ -655,12 +661,7 @@ def fs_em(
             "fs_em: need 0 < init_p < 1 and 0 < init_u < init_m < 1 "
             f"(got p={init_p}, m={init_m}, u={init_u})"
         )
-    inds = [
-        (F.coalesce(F.col(c).cast("int"), F.lit(0)) != 0)
-        .cast("int")
-        .alias(f"__a{i}")
-        for i, c in enumerate(feature_cols)
-    ]
+    inds = [_agrees(c).cast("int").alias(f"__a{i}") for i, c in enumerate(feature_cols)]
     names = [f"__a{i}" for i in range(k)]
     rows = (
         pairs.select(*inds)

@@ -25,8 +25,9 @@ Scale posture:
 * `join_topk` is blocking-join + per-left-row top-k window — the
   pure-Spark mapping of the reference's Elasticsearch msearch join
   (code/recipes.py:2265-2370): exploded blocking keys generate
-  candidates (never all-pairs), a score expression ranks them, and
-  `row_number() <= k` keeps the bucket.
+  candidates (never all-pairs), deduplicated as ids-only (left id,
+  ref id) pairs on the required unique ``ref_id``, a score expression
+  ranks them, and `row_number() <= k` keeps the bucket.
 """
 
 from __future__ import annotations
@@ -43,7 +44,6 @@ def join_strict(
     ref: DataFrame,
     strict: dict[str, str],
     select: dict[str, str] | None = None,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Equi left-outer join against a referential (reference in_memory
     strict join, code/recipes.py:2244-2264).
@@ -54,23 +54,20 @@ def join_strict(
     before the broadcast — the reference's filtered-projection cache
     (code/recipes.py:2175-2187) is just column pruning here.
     """
-    return prepare_join_strict(ref, strict, select, broadcast)(df)
+    return prepare_join_strict(ref, strict, select)(df)
 
 
 def prepare_join_strict(
     ref: DataFrame,
     strict: dict[str, str],
     select: dict[str, str] | None = None,
-    broadcast: bool = True,
 ) -> Callable[[DataFrame], DataFrame]:
     """``join_strict`` against ``ref`` as a function of the left frame:
-    the pruned (broadcast) referential projection, its key columns and
+    the pruned broadcast referential projection, its key columns and
     the rename/drop lists are built here, once; the returned function
     runs only the join, rename and drop of its own frame."""
     needed = list(dict.fromkeys(list(strict.values()) + list((select or {}).values())))
-    r = ref.select(*needed)
-    if broadcast:
-        r = F.broadcast(r)
+    r = F.broadcast(ref.select(*needed))
     keys = [(l, r[rt]) for l, rt in strict.items()]
     # retrieved columns are renamed {right_col: new}; the right join
     # keys not retrieved are dropped (reference code/recipes.py:2244-2264)
@@ -437,12 +434,11 @@ def join_topk(
     block_left: Column | str,
     block_right: Column | str,
     score: Callable[[DataFrame], Column],
+    *,
+    ref_id: str,
     k: int = 10,
-    keep_unmatched: bool = False,
     prefix: str = "hit_",
-    broadcast_ref: bool = False,
     tiebreak: list[str] | None = None,
-    ref_id: str | None = None,
 ) -> DataFrame:
     """Top-k candidate-retrieval join — the pure-Spark mapping of the
     reference's Elasticsearch msearch join + unfold + unnest
@@ -450,77 +446,51 @@ def join_topk(
 
     * ``block_left`` / ``block_right``: array columns (or expressions)
       of blocking keys (tokens / ngrams / phonetic codes).  Candidates
-      are pairs sharing ≥1 key — an equi-join on the exploded keys,
-      never a cartesian product.
+      are pairs sharing ≥1 non-null key — an equi-join on the exploded
+      keys, never a cartesian product.
+    * ``ref_id``: a unique ref key column.  The candidate dedup
+      shuffles **ids only** — (left_id, ref_id) pairs, one per pair
+      however many keys it shares — and the left/hit attributes are
+      re-attached afterwards (the left-attr join is keyed on
+      ``left_id``, the same partitioning the top-k window needs, so it
+      adds no extra Exchange).
     * ``score``: callable building the ranking Column from the joined
       frame (hit columns carry ``prefix``); replaces the BM25 score
       (implementation-defined ranking, SURVEY.md §7 watch-list).
+      Equal scores rank by ``tiebreak`` columns, ascending.
     * result: one row per (left row, hit), already "unfolded/unnested":
       hit columns prefixed, plus ``{prefix}score``,
       ``matchid_hit_matches_unfiltered`` (candidate count per left row,
       reference code/recipes.py:2341-2346) and ``{prefix}max_score``.
-    * ``keep_unmatched=False`` drops left rows with no candidate (the
-      reference's hits!="" filter, code/recipes.py:2348-2349);
-      ``True`` keeps them with null hit columns (left outer).
-    * ``ref_id``: a unique ref key column.  When given, the candidate
-      dedup shuffles **ids only** — (left_id, ref_id) pairs — and the
-      left/hit attributes are re-attached afterwards (the left-attr join
-      is keyed on ``left_id``, the same partitioning the top-k window
-      needs, so it adds no extra Exchange).  Without it the dedup
-      shuffles full rows; prefer ``ref_id`` at scale.
+      Left rows with no candidate are dropped (the reference's
+      hits!="" filter, code/recipes.py:2348-2349).
     """
     bl = F.col(block_left) if isinstance(block_left, str) else block_left
     br = F.col(block_right) if isinstance(block_right, str) else block_right
-
-    if ref_id is not None:
-        ref_keys = ref.select(F.col(ref_id).alias("__rid"), br.alias("__bk_arr")).select(
-            "__rid", F.explode("__bk_arr").alias("__bk")
-        )
-        if broadcast_ref:
-            ref_keys = F.broadcast(ref_keys)
-        left_keys = df.select(F.col(left_id), bl.alias("__bk_arr")).select(
-            left_id, F.explode("__bk_arr").alias("__bk")
-        )
-        pair_ids = left_keys.join(ref_keys, "__bk").select(left_id, "__rid").distinct()
-        hit_attrs = ref.select(*[F.col(c).alias(f"{prefix}{c}") for c in ref.columns])
-        if broadcast_ref:
-            hit_attrs = F.broadcast(hit_attrs)
-        pairs = (
-            pair_ids.join(df, left_id)
-            .join(hit_attrs, F.col("__rid") == F.col(f"{prefix}{ref_id}"))
-            .drop("__rid")
-        )
-    else:
-        # compute blocking keys on the original names, then prefix hit cols
-        hit_keys = (
-            ref.withColumn("__bk_arr", br)
-            .select(
-                *[F.col(c).alias(f"{prefix}{c}") for c in ref.columns],
-                F.explode("__bk_arr").alias("__bk"),
-            )
-        )
-        if broadcast_ref:
-            hit_keys = F.broadcast(hit_keys)
-
-        left_keys = df.withColumn("__bk", F.explode(bl))
-        pairs = left_keys.join(hit_keys, "__bk").drop("__bk").dropDuplicates([left_id] + [f"{prefix}{c}" for c in ref.columns])
-
+    ref_keys = ref.select(F.col(ref_id).alias("__rid"), br.alias("__bk_arr")).select(
+        "__rid", F.explode("__bk_arr").alias("__bk")
+    )
+    left_keys = df.select(F.col(left_id), bl.alias("__bk_arr")).select(
+        left_id, F.explode("__bk_arr").alias("__bk")
+    )
+    pair_ids = left_keys.join(ref_keys, "__bk").select(left_id, "__rid").distinct()
+    hit_attrs = ref.select(*[F.col(c).alias(f"{prefix}{c}") for c in ref.columns])
+    pairs = (
+        pair_ids.join(df, left_id)
+        .join(hit_attrs, F.col("__rid") == F.col(f"{prefix}{ref_id}"))
+        .drop("__rid")
+    )
     scored = pairs.withColumn(f"{prefix}score", score(pairs))
     order = [F.col(f"{prefix}score").desc()] + [F.col(c).asc() for c in (tiebreak or [])]
     w = Window.partitionBy(left_id).orderBy(*order)
     agg_w = Window.partitionBy(left_id)
-    topk = (
+    return (
         scored.withColumn("__rn", F.row_number().over(w))
         .withColumn("matchid_hit_matches_unfiltered", F.count(F.lit(1)).over(agg_w))
         .withColumn(f"{prefix}max_score", F.max(F.col(f"{prefix}score")).over(agg_w))
         .where(F.col("__rn") <= k)
         .drop("__rn")
     )
-    if keep_unmatched:
-        matched_ids = topk.select(left_id).distinct()
-        unmatched = df.join(matched_ids, left_id, "left_anti")
-        topk = topk.unionByName(unmatched, allowMissingColumns=True)
-    return topk
 
 
 def asof_join(

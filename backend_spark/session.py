@@ -18,19 +18,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def get_session(app_name: str = "backend_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
@@ -76,10 +63,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def event_ts_us(df: DataFrame, col: str = "ts"):

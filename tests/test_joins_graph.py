@@ -197,6 +197,7 @@ def test_join_topk_counts_and_scores(spark):
         block_left="blk",
         block_right=fn.ngrams(F.col("rname"), 2),
         score=lambda d: fn.levenshtein_norm(d["name"], d["hit_rname"]),
+        ref_id="rid",
         k=1,
         tiebreak=["hit_rid"],
     )
@@ -413,7 +414,9 @@ def test_embed_cosine_pairs_exact_and_lsh(spark):
     # with true cosine; parallel vectors share every band bucket, so the
     # banded path must find (0, 1)
     lsh = llm.embed_cosine_pairs(df, threshold=0.9, n_planes=2, n_bands=4, dim=4)
-    assert {(r.id1, r.id2) for r in lsh.collect()} == {(0, 1)}
+    # a list, not a set: the pair shares its bucket in all 4 bands and
+    # must still come out exactly once
+    assert [(r.id1, r.id2) for r in lsh.collect()] == [(0, 1)]
 
 
 def test_ann_lsh_subset_of_bruteforce(spark):
@@ -604,25 +607,42 @@ def test_repetition_stats_known_fractions(spark):
     assert rows[3].dup_word_frac == 0.0 and rows[3].top_ngram_frac == 0.0
 
 
-def test_join_topk_ref_id_path_matches_legacy(spark):
-    left = spark.createDataFrame(
-        [(1, "abcd"), (2, "abce"), (3, "qqqq")], "id long, name string"
-    ).withColumn("blk", fn.ngrams(F.col("name"), 2))
-    ref = spark.createDataFrame(
-        [(10, "abcd"), (11, "abce"), (12, "zzzz")], "rid long, rname string"
-    )
-    kw = dict(
+def test_join_topk_matches_python_topk(spark):
+    import random
+
+    rng = random.Random(7)
+    pool = ["a", "b", "c", "d", "e", None]
+
+    def keys():
+        return [rng.choice(pool) for _ in range(rng.randint(0, 4))]
+
+    # left 1 repeats a key inside its array next to a null key and ties
+    # refs 100-102 on score (tiebreak keeps 100, 101); left 2 shares no
+    # key with any ref row, left 3 has a null key array
+    left = [(1, 5, ["a", "a", None]), (2, 5, ["zz"]), (3, 0, None)]
+    left += [(i, rng.randint(0, 3), keys()) for i in range(4, 30)]
+    ref = [(100, 5, ["a", None, "a"]), (101, 5, ["a"]), (102, 5, ["a", "b"])]
+    ref += [(100 + i, rng.randint(0, 3), keys()) for i in range(3, 25)]
+    k = 2
+    out = join_topk(
+        spark.createDataFrame(left, "id long, v long, blk array<string>"),
+        spark.createDataFrame(ref, "rid long, rv long, rblk array<string>"),
         left_id="id",
         block_left="blk",
-        block_right=fn.ngrams(F.col("rname"), 2),
-        score=lambda d: fn.levenshtein_norm(d["name"], d["hit_rname"]),
-        k=2,
+        block_right="rblk",
+        score=lambda d: -F.abs(d["v"] - d["hit_rv"]),
+        ref_id="rid",
+        k=k,
         tiebreak=["hit_rid"],
     )
     cols = ["id", "hit_rid", "hit_score", "matchid_hit_matches_unfiltered", "hit_max_score"]
-    legacy = join_topk(left, ref, **kw).select(*cols)
-    by_id = join_topk(left, ref, ref_id="rid", **kw).select(*cols)
-    assert sorted(map(tuple, legacy.collect())) == sorted(map(tuple, by_id.collect()))
+    want = []
+    for lid, v, lk in left:
+        cands = [(-abs(v - rv), rid) for rid, rv, rk in ref if set(lk or []) & set(rk or []) - {None}]
+        for score, rid in sorted(cands, key=lambda c: (-c[0], c[1]))[:k]:
+            want.append((lid, rid, score, len(cands), max(c[0] for c in cands)))
+    assert sorted(map(tuple, out.select(*cols).collect())) == sorted(want)
+    assert [w[1] for w in want if w[0] == 1] == [100, 101]
 
 
 def test_quality_filter_rules(spark):

@@ -1226,6 +1226,20 @@ def test_mad_outliers_flags_and_degenerate_group(spark):
     assert by[("c", 9.0)].is_outlier and not by[("c", 5.0)].is_outlier
 
 
+def test_mad_outliers_keeps_null_group(spark):
+    from backend_spark.features import mad_outliers
+
+    rows = [("a", "x", 1.0), ("a", "x", 2.0), ("a", "x", 9.0), (None, None, 4.0), (None, None, 10.0)]
+    df = spark.createDataFrame(rows, "g string, h string, v double")
+    for groups in ("g", ["g", "h"]):
+        out = {r.v: r for r in mad_outliers(df, groups, "v", k=3.0).collect()}
+        assert len(out) == 5
+        # the null group is a group of its own: median 7, deviations 3, 3
+        assert (out[4.0].dev, out[4.0].mad, out[10.0].is_outlier) == (3.0, 3.0, False)
+        # a: median 2, deviations 1, 0, 7 -> MAD 1, only 9 is out
+        assert out[9.0].is_outlier and out[1.0].mad == 1.0
+
+
 def test_sentence_split_positions_and_counts(spark):
     from backend_spark import llm
 

@@ -37,8 +37,10 @@ EXPECT = {
     "groupby_agg": (["partial"], ["CartesianProduct"]),  # map-side combine
     "recipe_pipeline": (["PushedFilters", "BroadcastHashJoin"], ["CartesianProduct"]),
     # banded LSH near-dup: bucket equi-join only — the quadratic
-    # cross-join must never appear on the default path
-    "embed_banded": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
+    # cross-join must never appear on the default path, and a pair
+    # sharing several buckets is kept in its first agreeing band
+    # (array_position), not by a candidate distinct
+    "embed_banded": (["array_position"], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     "graph_metrics": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
     # two-path counting + pair enumeration: equi-joins only
     "square_clustering": ([], ["CartesianProduct", "BroadcastNestedLoopJoin"]),
