@@ -3816,8 +3816,8 @@ def _q_benford(spark, sf):
 
 def _q_shard_stats(spark, sf):
     """Range-clustered data-skipping manifest over lineitem: the
-    assign_row_ids distributed sort, 1-row total broadcast, one keyed
-    aggregate, bounded per-shard explode."""
+    prefix_sums distributed sort and its 1-row total broadcast, one
+    keyed aggregate, bounded per-shard explode."""
     from backend_spark.scale import shard_stats
 
     li = load_table(spark, sf, "lineitem")

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from backend_spark.scale import spread_scan, stage
+from backend_spark.scale import assign_row_ids, prefix_sums, spread_scan, stage
 
 
 def quantile_bins(
@@ -1827,8 +1827,6 @@ def label_encode(
     out = out_col or f"{col}_id"
     if out in df.columns:
         raise ValueError(f"label_encode: output column {out!r} collides with df")
-    from backend_spark.scale import assign_row_ids
-
     counts = (
         df.where(F.col(col).isNotNull())
         .groupBy(F.col(col).alias("__v"))
@@ -1870,14 +1868,10 @@ def ks_test(
 
     Scale shape: one map-side-combined count per (value, sample) pair,
     then the cumulative counts.  With ``by`` the running sums ride a
-    key-partitioned window (one exchange).  WITHOUT ``by`` a naive
-    global window would funnel every distinct value through one task —
-    instead the global path uses the assign_row_ids prefix-sum trick
-    (range exchange + partition-local running sums + one-row-per-
-    partition offsets broadcast), so a billion-distinct-value KS still
-    distributes.  Its partition-local stage is cut once (``stage``): the
-    cut freezes the sampled range boundaries that the offset pass and
-    the final join must share, so it must not be removed.
+    key-partitioned window (one exchange); without it they come from
+    :func:`backend_spark.scale.prefix_sums`, so a billion-distinct-value
+    KS still distributes (its cut stores each distinct value with both
+    counts, so a wide value type widens it).
     Output: by-cols + (n_a, n_b, d_stat, p_approx).
     """
     keys = [] if by is None else ([by] if isinstance(by, str) else list(by))
@@ -1908,37 +1902,11 @@ def ks_test(
             F.sum("__cb").over(wall).alias("__nb"),
         )
     else:
-        ranged = per_v.repartitionByRange("__v").withColumn(
-            "__pid", F.spark_partition_id()
+        ranked, tot = prefix_sums(
+            per_v, "__v", {"__ra": F.col("__ca"), "__rb": F.col("__cb")}
         )
-        w_local = Window.partitionBy("__pid").orderBy("__v")
-        wr = w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        local = ranged.select(
-            "__pid",
-            F.sum("__ca").over(wr).alias("__la"),
-            F.sum("__cb").over(wr).alias("__lb"),
-        ).transform(stage, eager=False)
-        ptot = local.groupBy("__pid").agg(
-            F.max("__la").alias("__ta"), F.max("__lb").alias("__tb")
-        )
-        w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-        offs = ptot.select(
-            "__pid",
-            F.coalesce(F.sum("__ta").over(w_off), F.lit(0)).alias("__oa"),
-            F.coalesce(F.sum("__tb").over(w_off), F.lit(0)).alias("__ob"),
-        )
-        tot = ptot.agg(
-            F.sum("__ta").cast("long").alias("__na"),
-            F.sum("__tb").cast("long").alias("__nb"),
-        )
-        staged = (
-            local.join(F.broadcast(offs), "__pid")
-            .select(
-                (F.col("__la") + F.col("__oa")).alias("__ra"),
-                (F.col("__lb") + F.col("__ob")).alias("__rb"),
-            )
-            .crossJoin(F.broadcast(tot))
-        )
+        tot = tot.select(F.col("__ra").alias("__na"), F.col("__rb").alias("__nb"))
+        staged = ranked.crossJoin(F.broadcast(tot))
     cross = F.abs(F.col("__ra") * F.col("__nb") - F.col("__rb") * F.col("__na"))
     agg = staged.groupBy(*keys).agg(
         F.max("__na").cast("long").alias("n_a"),
@@ -2053,21 +2021,18 @@ def rfm(
     Ties order deterministically by the key, so scores are
     engine-exact; monetary sums are fixed-point decimals.  Scale
     shape: one map-side-combined aggregate to |keys| rows, then each
-    score axis gets a DISTRIBUTED global rank via the assign_row_ids
-    prefix-sum (range exchange + partition-local row numbers +
-    broadcast offsets — a bare ``ntile().over(Window.orderBy(...))``
-    would funnel all |keys| rows through one task), and the ntile
-    bucket is recovered from (rank, N) with the standard integer
-    arithmetic (first ``N mod n`` buckets one row larger) — bit-exact
-    with ``ntile`` in any engine.
+    score axis gets a DISTRIBUTED global rank from
+    :func:`~backend_spark.scale.prefix_sums` (a bare
+    ``ntile().over(Window.orderBy(...))`` would funnel all |keys| rows
+    through one task), and the ntile bucket is recovered from (rank, N)
+    with the standard integer arithmetic (first ``N mod n`` buckets one
+    row larger) — bit-exact with ``ntile`` in any engine.
     """
     if n_tiles < 2:
         raise ValueError(f"rfm: n_tiles must be >= 2, got {n_tiles}")
     missing = [c for c in (key_col, ts_col, amount_col) if c not in df.columns]
     if missing:
         raise ValueError(f"rfm: column(s) not in df: {missing}")
-    from .scale import assign_row_ids
-
     dec = "decimal(38,0)"
     amt = F.floor(F.col(amount_col) * scale + F.lit(0.5)).cast(dec)
     agg = (
@@ -2081,8 +2046,8 @@ def rfm(
     )
     ranked = assign_row_ids(agg, ["recency", key_col], "__rr")
     ranked = assign_row_ids(ranked, ["frequency", key_col], "__rf")
-    ranked = assign_row_ids(ranked, ["__m", key_col], "__rm")
-    tot = ranked.agg(F.max("__rm").cast("long").alias("__N"))
+    ranked, tot = prefix_sums(ranked, ["__m", key_col], {"__rm": F.lit(1).cast("long")})
+    tot = tot.select(F.col("__rm").alias("__N"))
 
     n = int(n_tiles)
     q = f"(__N div {n})"          # base bucket size

@@ -2100,11 +2100,13 @@ def priority_sample(
     row can never be sampled; documented, not silently kept).
 
     Scale shape: the priority is map-side arithmetic in the scan
-    stage.  Grouped mode (``group_col``) ranks with ONE keyed window.
-    Global mode never funnels the corpus through a single-task sort:
-    a per-input-partition local top-k prunes to ``<= k * n_partitions``
-    rows first, and only that pruned set enters the final k-row
-    ordering.
+    stage, then ONE ``row_number() <= k`` window, keyed by
+    ``group_col`` when given.  Without a group the top k is cut in
+    source by ``orderBy().limit(k)`` (a ``TakeOrderedAndProject``:
+    each input partition keeps its own top k, only those
+    ``<= k * n_partitions`` rows meet in the final sort), so the window
+    numbers k rows and the corpus never funnels through one task, for
+    any k and whatever optimizer rules fire.
 
     Returns (group?, id, weight, priority, sample_rank) with
     ``priority`` rounded to ``ndigits`` for reporting; ranking uses
@@ -2120,39 +2122,20 @@ def priority_sample(
         df.where(F.col(weight_col).isNotNull() & (w > 0))
         .withColumn("__pr", w / u)
     )
+    groups = [group_col] if group_col else []
     out_cols = [
-        *([group_col] if group_col else []),
+        *groups,
         F.col(id_col),
         F.col(weight_col).alias("weight"),
         F.round("__pr", ndigits).alias("priority"),
         F.col("__rn").alias("sample_rank"),
     ]
-    if group_col is not None:
-        wspec = Window.partitionBy(group_col).orderBy(
-            F.col("__pr").desc(), F.col(id_col).asc()
-        )
-        return (
-            base.withColumn("__rn", F.row_number().over(wspec))
-            .where(F.col("__rn") <= k)
-            .select(*out_cols)
-        )
-    # global mode: local per-partition prune, then order the survivors.
-    # partitionBy(spark_partition_id) exchanges only by partition id —
-    # the heavy lifting (drop all but k rows per partition) happens in
-    # one keyed window; the final global window sees <= k*nparts rows.
-    local_w = Window.partitionBy("__pid").orderBy(
-        F.col("__pr").desc(), F.col(id_col).asc()
-    )
-    pruned = (
-        base.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lrn", F.row_number().over(local_w))
-        .where(F.col("__lrn") <= k)
-    )
-    final_w = Window.partitionBy(F.lit(0)).orderBy(
-        F.col("__pr").desc(), F.col(id_col).asc()
-    )
+    order = [F.col("__pr").desc(), F.col(id_col).asc()]
+    if not groups:
+        base = base.orderBy(*order).limit(k)
+    wspec = Window.partitionBy(*groups).orderBy(*order)
     return (
-        pruned.withColumn("__rn", F.row_number().over(final_w))
+        base.withColumn("__rn", F.row_number().over(wspec))
         .where(F.col("__rn") <= k)
         .select(*out_cols)
     )

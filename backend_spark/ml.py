@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from backend_spark import functions as fn
-from backend_spark.scale import stage
+from backend_spark.scale import prefix_sums, stage
 
 
 def _feature_pipeline(df: DataFrame, numerical, categorical):
@@ -690,17 +690,9 @@ def auc_score(
 
     Scale shape: scores are quantized to ``round(score, 6)`` and
     aggregated to one row per DISTINCT score first (≤ ~2e6 rows for
-    scores in [-1, 1] — bounded regardless of corpus size).  The
-    cumulative count over that table then uses the distributed
-    prefix-sum (the ``ks_test`` pattern, features.py): range-partition
-    by score, per-partition local running sums, and a broadcast of the
-    per-partition offsets — the only partition-less window runs over
-    the #shuffle-partitions offset rows, never over data-shaped input.
-    The local stage is cut once via :func:`backend_spark.scale.stage`:
-    the cut freezes the sampled range boundaries that the offset pass
-    and the rank pass must share, so it must not be removed (both stage
-    modes give a cut that is never recomputed; see SCALING.md "Lineage
-    cuts and fault tolerance").
+    scores in [-1, 1] — bounded regardless of corpus size); the
+    cumulative count over that table is
+    :func:`backend_spark.scale.prefix_sums`, never a one-task window.
 
     Returns one row: (auc, n_pos, n_neg).  Degenerate inputs (no
     positives or no negatives) yield NULL auc rather than a division
@@ -718,34 +710,7 @@ def auc_score(
             F.sum(F.when(F.col("__y") == 1.0, 1).otherwise(0)).alias("__pos"),
         )
     )
-    # distributed prefix sum of __cnt in __s order: local running sums
-    # within range partitions + broadcast per-partition offsets (exactly
-    # reproduces the global cumulative regardless of boundary placement;
-    # the stage cut pins the sampled range boundaries across the two
-    # reads of `local`)
-    ranged = per.repartitionByRange("__s").withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy("__s")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.select(
-        "__pid",
-        "__s",
-        "__cnt",
-        "__pos",
-        F.sum("__cnt").over(w_local).alias("__lcum"),
-    ).transform(stage, eager=False)
-    ptot = local.groupBy("__pid").agg(F.max("__lcum").alias("__t"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = ptot.select(
-        "__pid", F.coalesce(F.sum("__t").over(w_off), F.lit(0)).alias("__off")
-    )
-    ranked = local.join(F.broadcast(offs), "__pid").withColumn(
-        "__cum", F.col("__lcum") + F.col("__off")
-    )
+    ranked = prefix_sums(per, "__s", {"__cum": F.col("__cnt")})[0]
     # 2*avg_rank for every member of this tie group, exact integer
     two_rank = F.lit(2) * F.col("__cum") - F.col("__cnt") + F.lit(1)
     agg = ranked.agg(

@@ -12,7 +12,7 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _AGG = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
@@ -44,12 +44,10 @@ def stage(df: DataFrame, eager: bool = False) -> DataFrame:
       The right mode for long jobs on preemptible fleets.
 
     The rule: a staged frame is never recomputed from its lineage in
-    either mode, so a nondeterministic upstream (sampled
-    ``repartitionByRange`` boundaries, ``F.rand``) is frozen at the cut
-    and every downstream read sees the same rows.  Callers that need
-    this for correctness (``assign_row_ids``, ``compaction_plan``,
-    ``auc_score``, ``ks_test``) rely on it; a storage mode that
-    recomputes lost blocks would break them.
+    either mode, so a nondeterministic upstream (``F.rand``, sampled
+    range boundaries — see :func:`prefix_sums`) is frozen at the cut
+    and every downstream read sees the same rows; a storage mode that
+    recomputes lost blocks would break that.
 
     ``eager`` forces materialization now.
     """
@@ -97,7 +95,7 @@ def spread_scan(df: DataFrame, by: "str | None" = None) -> DataFrame:
     every result in this engine is partition-order-independent by the
     hash-exactness design (integer/decimal folds, keyed windows).  Do
     NOT insert it upstream of ``spark_partition_id``-dependent logic
-    (``assign_row_ids``/global ``ks_test`` manage their own layout).
+    (:func:`prefix_sums` manages its own layout).
     """
     if not undersplit(df):
         return df
@@ -296,51 +294,66 @@ def zorder_cluster(
     return parts.sortWithinPartitions("__z").drop("__z")
 
 
+def prefix_sums(
+    df: DataFrame,
+    order: "list[str | Column] | str | Column",
+    sums: "dict[str, Column]",
+) -> "tuple[DataFrame, DataFrame]":
+    """The one distributed prefix scan: inclusive running sums in a
+    global ``order`` without the single-task sort a bare
+    ``Window.orderBy`` forces.  ``sums`` maps output names to value
+    Columns (a NULL value adds nothing).  Returns ``(frame, totals)``:
+    ``df`` plus one running sum per name (an existing column of that
+    name is replaced in place), and a one-row frame of the grand sums
+    (0 when ``df`` is empty).  ``order`` must be total (include a
+    unique tie-break): a range boundary may split tied keys.
+
+    Strategy: range-repartition on ``order``, partition-local running
+    sums, then per-partition offsets (a window over one row per
+    partition) broadcast back; ``totals`` reads that per-partition
+    table, never the rows.  The boundary rule: ``repartitionByRange``
+    samples its boundaries, so the partition-local frame is cut once
+    (:func:`stage`) and the offsets and the final join read the same
+    placement.  Do not remove the cut.
+    """
+    keys = [order] if isinstance(order, (str, Column)) else list(order)
+    run = {n: f"__run{i}" for i, n in enumerate(sums)}
+    off = {n: f"__off{i}" for i, n in enumerate(sums)}
+
+    def running(c, w):  # a NULL-skipping window sum that reads 0, not NULL
+        return F.coalesce(F.sum(c).over(w), F.lit(0))
+
+    w_local = Window.partitionBy("__pid").orderBy(*keys).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    local = (
+        df.repartitionByRange(*keys)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumns({run[n]: running(v, w_local) for n, v in sums.items()})
+        .transform(stage, eager=False)
+    )
+    part = local.groupBy("__pid").agg(
+        *[F.sum(v).alias(run[n]) for n, v in sums.items()]
+    )
+    offs = part.select("__pid", *[running(run[n], w_off).alias(off[n]) for n in sums])
+    frame = (
+        local.join(F.broadcast(offs), "__pid")
+        .withColumns({n: F.col(run[n]) + F.col(off[n]) for n in sums})
+        .drop("__pid", *run.values(), *off.values())
+    )
+    totals = part.agg(*[F.coalesce(F.sum(run[n]), F.lit(0)).alias(n) for n in sums])
+    return frame, totals
+
+
 def assign_row_ids(
     df: DataFrame,
     order_cols: list[str] | str,
     out_col: str = "row_id",
 ) -> DataFrame:
-    """Global dense 1-based row numbers in ``order_cols`` order WITHOUT
-    the single-partition sort a bare
-    ``row_number().over(Window.orderBy(...))`` forces (Spark warns and
-    funnels the whole dataset through one task — the canonical
-    scale-killer for global ordering).
-
-    Strategy: range-repartition on the order key (Spark's distributed
-    sort), number rows partition-locally, then shift each partition by
-    the cumulative count of the partitions before it.  The offset table
-    is one row per partition — its window is trivially small — and is
-    broadcast back.  The partition-local stage is materialized once
-    (``localCheckpoint``) so the offset computation and the final join
-    see the identical range exchange (re-execution could re-sample
-    boundaries).
-
-    ``order_cols`` must be a total order (include a unique tie-break
-    column): ranges may split equal keys across partition boundaries,
-    which would otherwise make ids nondeterministic.
-    """
-    cols = [order_cols] if isinstance(order_cols, str) else list(order_cols)
-    from pyspark.sql import Window
-
-    base = (
-        df.repartitionByRange(*cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    w_local = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in cols])
-    local = base.withColumn(
-        "__local", F.row_number().over(w_local).cast("long")
-    ).transform(stage, eager=False)
-    counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.withColumn(
-        "__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).cast("long")
-    )
-    return (
-        local.join(F.broadcast(offs.select("__pid", "__off")), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__local"))
-        .drop("__pid", "__local", "__off")
-    )
+    """Global dense 1-based row numbers in ``order_cols`` order (a
+    total order): the :func:`prefix_sums` running count."""
+    return prefix_sums(df, order_cols, {out_col: F.lit(1).cast("long")})[0]
 
 
 def skew_report(
@@ -377,8 +390,6 @@ def skew_report(
         F.percentile(F.col("cnt").cast("double"), F.lit(0.5)).alias("p50_sz"),
         F.percentile(F.col("cnt").cast("double"), F.lit(0.99)).alias("p99_sz"),
     )
-    from pyspark.sql import Window
-
     # distributed top-k (TakeOrderedAndProject), then rank the k survivors —
     # a global row_number window would funnel ALL keys through one task
     w = Window.orderBy(F.col("cnt").desc(), F.col("key").asc())
@@ -662,7 +673,7 @@ def shard_stats(
     """Data-skipping statistics for a range-clustered layout — the
     per-shard (min, max, nulls, rows) manifest engines like
     Delta/Iceberg keep per file: rows take their position in
-    ``sort_cols`` order (the :func:`assign_row_ids` distributed sort —
+    ``sort_cols`` order (the :func:`prefix_sums` running count —
     never a single-partition window), split into ``n_shards`` equal
     contiguous ranges, and every listed column reports its per-shard
     envelope.  Read it two ways: as the manifest to ship beside a
@@ -676,7 +687,7 @@ def shard_stats(
     report schema; engine-canonical for int/string/date columns — the
     :func:`~backend_spark.quality.table_checksum` float caveat applies.
 
-    Scale shape: the assign_row_ids range sort, a 1-row total
+    Scale shape: the prefix_sums range sort and its 1-row total
     broadcast, ONE map-side-combined aggregate over shard keys, and a
     bounded per-shard explode into (shard, column) rows.
     """
@@ -689,13 +700,16 @@ def shard_stats(
         raise ValueError(f"shard_stats: column(s) not in df: {missing}")
     sorts = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
     # prune to the columns the manifest touches BEFORE the range sort —
-    # assign_row_ids materializes its input (localCheckpoint), so
+    # prefix_sums materializes its input (localCheckpoint), so
     # shipping unread columns through it costs real I/O (3.6 M-row
     # stress: 28.7 s full-width vs 8.9 s pruned)
     needed = list(dict.fromkeys([*sorts, *stat_cols]))
-    ranked = assign_row_ids(df.select(*needed), sorts, out_col="__rid")
-    total = ranked.agg(F.count(F.lit(1)).alias("__total"))
-    sharded = ranked.join(F.broadcast(total)).withColumn(
+    ranked, total = prefix_sums(
+        df.select(*needed), sorts, {"__rid": F.lit(1).cast("long")}
+    )
+    sharded = ranked.join(
+        F.broadcast(total.select(F.col("__rid").alias("__total")))
+    ).withColumn(
         "shard",
         F.floor(
             (F.col("__rid") - 1) * F.lit(int(n_shards)) / F.col("__total")
@@ -742,15 +756,9 @@ def compaction_plan(
     group lands within one file's size of the target; big-first order
     keeps the tail groups dense.
 
-    The prefix sum is computed WITHOUT a single-partition global
-    window (the assign_row_ids trick generalized from counts to
-    sums): range-repartition on the order key — Spark's distributed
-    sort — then partition-local running totals, then the one-row-per-
-    partition byte offsets broadcast back.  A million-file manifest
-    plans in seconds and the plan itself never funnels.
-    The partition-local stage is cut once (``stage``): the cut freezes
-    the sampled range boundaries that the offsets and the final join
-    must share, so it must not be removed.
+    The exclusive prefix is the :func:`prefix_sums` running byte total
+    minus the file's own bytes, so a million-file manifest plans
+    without funnelling through one task.
 
     Returns (path, bytes, bin, bin_seq): feed each bin's paths to one
     rewrite task (``spark.read.parquet(*paths).coalesce(1)``-style or
@@ -762,27 +770,14 @@ def compaction_plan(
     missing = [c for c in (path_col, size_col) if c not in df.columns]
     if missing:
         raise ValueError(f"compaction_plan: column(s) not in df: {missing}")
-    from pyspark.sql import Window
-
     cand = df.select(
         F.col(path_col).alias("path"), F.col(size_col).cast("long").alias("bytes")
     ).where(F.col("bytes") < cap)
-    base = cand.repartitionByRange(F.col("bytes").desc(), F.col("path")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("__pid").orderBy(F.col("bytes").desc(), F.col("path"))
-    local = base.withColumn(
-        "__run", F.sum("bytes").over(w_local).cast("long")
-    ).transform(stage, eager=False)
-    totals = local.groupBy("__pid").agg(F.sum("bytes").alias("__t"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.withColumn(
-        "__off", F.coalesce(F.sum("__t").over(w_off), F.lit(0)).cast("long")
-    )
-    planned = (
-        local.join(F.broadcast(offs.select("__pid", "__off")), "__pid")
-        .withColumn("__pre", F.col("__off") + F.col("__run") - F.col("bytes"))
-        .withColumn("bin", F.expr(f"__pre div CAST({int(target_bytes)} AS BIGINT)"))
+    ranked = prefix_sums(
+        cand, [F.col("bytes").desc(), F.col("path")], {"__run": F.col("bytes")}
+    )[0]
+    planned = ranked.withColumn("__pre", F.col("__run") - F.col("bytes")).withColumn(
+        "bin", F.expr(f"__pre div CAST({int(target_bytes)} AS BIGINT)")
     )
     w_bin = Window.partitionBy("bin").orderBy(F.col("bytes").desc(), F.col("path"))
     return planned.select(

@@ -157,8 +157,8 @@ _CONSUMERS = {
 
 def _guarded(spark, monkeypatch, guard):
     """(frame builder, error pattern) of each size guard, on an input
-    that trips it.  An eager guard raises while the frame is built, an
-    in-plan one when it is consumed."""
+    that trips it.  An eager guard (theil_sen, unnest) raises while the
+    frame is built, an in-plan one when it is consumed."""
     from backend_spark import llm
     from backend_spark.operators import er_resolve
 
@@ -191,6 +191,22 @@ def _guarded(spark, monkeypatch, guard):
         )
         return lambda: llm.semdedup(emb, n_clusters=2, max_cluster_size=3), (
             "semdedup.*max_cluster_size")
+    if guard == "theil_sen":
+        from backend_spark.features import theil_sen
+
+        series = spark.createDataFrame(
+            [("g", float(i), float(i % 2)) for i in range(3)], "g string, x double, y double"
+        )
+        return lambda: theil_sen(series, "g", "x", "y", max_group_rows=2), (
+            "theil_sen: group.*max_group_rows=2")
+    if guard == "unnest_max_keys":
+        from backend_spark.operators.reshape import op_unnest
+
+        maps = spark.createDataFrame(
+            [(i, {f"k{i}": i}) for i in range(3)], "id long, m map<string,long>"
+        )
+        return lambda: op_unnest(maps, "m", max_keys=2), (
+            "unnest: map column 'm' has more than 2")
     # tfidf_cosine_pairs' in-plan quadratic raise_error: 'hot' is in 6 of
     # 12 docs, admitted by the 0.5 fractional cap, over a limit of 2
     monkeypatch.setattr(llm, "_TFIDF_QUADRATIC_LIMIT", 2)
@@ -207,7 +223,7 @@ def _guarded(spark, monkeypatch, guard):
 @pytest.mark.parametrize(
     "guard",
     ["er_resolve_mode", "er_resolve_first", "dedup_minhash", "dedup_keep_best",
-     "semdedup", "tfidf_quadratic"],
+     "semdedup", "tfidf_quadratic", "theil_sen", "unnest_max_keys"],
 )
 def test_size_guard_fires_under_every_consumer(spark, monkeypatch, guard, consume):
     # a guard that a count() or a narrow select can prune away protects

@@ -475,6 +475,48 @@ def test_assign_row_ids_dense_global_order(spark):
     assert specs and all("__pid" in s or "__cnt" in s or "__off" in s for s in specs)
 
 
+def test_prefix_sums_matches_python_cumsum(spark):
+    from itertools import accumulate
+
+    from backend_spark import scale
+
+    # negative values: a partition's total is not the max of its running sum
+    rows = [
+        (i, (i * 37) % 101, None if i % 7 == 0 else (i * 13) % 17 - 8) for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "id long, k long, v long").repartition(5)
+    sums = {"n": F.lit(1).cast("long"), "s": F.col("v")}
+    # keep the range exchange's partitions so the offsets really carry
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        spread = df.repartitionByRange("k", "id").select(F.spark_partition_id()).distinct()
+        assert spread.count() >= 4
+        for desc in (False, True):
+            key = F.col("k").desc() if desc else F.col("k")
+            frame, totals = scale.prefix_sums(df, [key, "id"], sums)
+            ordered = sorted(rows, key=lambda t: (-t[1] if desc else t[1], t[0]))
+            running = accumulate(0 if t[2] is None else t[2] for t in ordered)
+            want = {t[0]: (rk + 1, s) for rk, (t, s) in enumerate(zip(ordered, running))}
+            assert frame.columns == ["id", "k", "v", "n", "s"]
+            assert {r.id: (r.n, r.s) for r in frame.collect()} == want
+            assert [tuple(r) for r in totals.collect()] == [
+                (200, sum(t[2] for t in rows if t[2] is not None))
+            ]
+        frame, totals = scale.prefix_sums(df.limit(0), "id", sums)
+        assert frame.collect() == [] and [tuple(r) for r in totals.collect()] == [(0, 0)]
+        # an existing out_col is replaced in place
+        ids = scale.assign_row_ids(df, ["k", "id"], out_col="v")
+        assert ids.columns == ["id", "k", "v"]
+        ranks = sorted(rows, key=lambda t: (t[1], t[0]))
+        assert {r.id: r.v for r in ids.collect()} == {
+            t[0]: rk + 1 for rk, t in enumerate(ranks)
+        }
+    finally:
+        spark.conf.set(coalesce, was)
+
+
 def test_resample_gapfill_emits_empty_buckets(spark):
     from backend_spark.features import resample_gapfill
 
@@ -868,15 +910,28 @@ def test_priority_sample_global_matches_bruteforce(spark):
 
     rows = [(i, float(1 + (i * 13) % 29)) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, w double").repartition(8)
-    out = llm.priority_sample(df, "doc_id", "w", k=7)
-    got = [(r.doc_id, r.sample_rank) for r in out.orderBy("sample_rank").collect()]
 
     def pr(i, w):
         h = int(hashlib.md5(f"prio:{i}".encode()).hexdigest()[:15], 16)
         return w / ((h + 1) / 2**60)
 
-    want = sorted(rows, key=lambda t: (-pr(*t), t[0]))[:7]
-    assert got == [(i, rk + 1) for rk, (i, _) in enumerate(want)]
+    ranked = sorted(rows, key=lambda t: (-pr(*t), t[0]))
+    # k above the optimizer's window group-limit threshold too: the top k
+    # must be cut in source (a per-partition top-k under
+    # TakeOrderedAndProject), never a single-partition exchange of the rows
+    limit = "spark.sql.optimizer.windowGroupLimitThreshold"
+    was = spark.conf.get(limit)
+    spark.conf.set(limit, "5")
+    try:
+        for k in (7, 3):
+            out = llm.priority_sample(df, "doc_id", "w", k=k)
+            got = [(r.doc_id, r.sample_rank) for r in out.orderBy("sample_rank").collect()]
+            assert got == [(i, rk + 1) for rk, (i, _) in enumerate(ranked[:k])]
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "TakeOrderedAndProject" in plan
+            assert "SinglePartition" not in plan and "hashpartitioning(__pid" not in plan
+    finally:
+        spark.conf.set(limit, was)
     # huge-weight row is always in the panel
     df2 = df.union(spark.createDataFrame([(999, 1e12)], "doc_id long, w double"))
     assert 999 in {r.doc_id for r in llm.priority_sample(df2, "doc_id", "w", k=7).collect()}
