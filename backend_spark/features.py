@@ -6,8 +6,9 @@ build_model; these produce such columns at corpus scale).
 
 Both operators follow the same 100 TB shape as ``llm.percentile_filter``:
 the per-group statistics reduce to |groups| (or |groups| x |bins|) rows
-in one map-side-combined aggregate, broadcast back onto the scan — the
-corpus itself never shuffles and never sorts.  The naive formulations
+in one map-side-combined aggregate, broadcast back onto the scan
+(:func:`backend_spark.scale.broadcast_back`) — the corpus itself never
+shuffles and never sorts.  The naive formulations
 (global ``ntile`` = every row through ONE partition; window
 mean/stddev = full shuffle) are exactly what these avoid.
 """
@@ -16,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from backend_spark.scale import assign_row_ids, prefix_sums, spread_scan, stage
+from backend_spark.scale import assign_row_ids, broadcast_back, prefix_sums, spread_scan, stage
 
 
 def quantile_bins(
@@ -38,12 +39,8 @@ def quantile_bins(
     out = out_col or f"{col}_bin"
     qs = [i / n_bins for i in range(1, n_bins)]
     bounds = F.percentile(F.col(col), F.array(*[F.lit(q) for q in qs])).alias("__bounds")
-    if group_col is not None:
-        thr = df.groupBy(group_col).agg(bounds)
-        joined = df.join(F.broadcast(thr), group_col, "inner")
-    else:
-        joined = df.join(F.broadcast(df.agg(bounds)))
-    binned = joined.withColumn(
+    keys = [] if group_col is None else [group_col]
+    binned = broadcast_back(df, df.groupBy(*keys).agg(bounds), keys).withColumn(
         out,
         F.aggregate(
             "__bounds",
@@ -71,12 +68,8 @@ def zscore(
         F.avg(col).alias("__mean"),
         F.stddev_samp(col).alias("__std"),
     ]
-    if group_col is not None:
-        stats = df.groupBy(group_col).agg(*aggs)
-        joined = df.join(F.broadcast(stats), group_col, "inner")
-    else:
-        joined = df.join(F.broadcast(df.agg(*aggs)))
-    scored = joined.withColumn(
+    keys = [] if group_col is None else [group_col]
+    scored = broadcast_back(df, df.groupBy(*keys).agg(*aggs), keys).withColumn(
         out,
         F.when(
             F.col("__std") > 0,
@@ -196,22 +189,27 @@ def winsorize(
     bounds = F.percentile(
         F.col(col), F.array(F.lit(lower), F.lit(upper))
     ).alias("__wb")
-    if group_col is not None:
-        # null-safe group join: a null group is a real group and its
-        # rows must survive ("keeps every row" is the contract)
-        thr = df.groupBy(F.col(group_col).alias("__wg")).agg(bounds)
-        joined = df.join(
-            F.broadcast(thr), F.col(group_col).eqNullSafe(F.col("__wg")), "inner"
-        ).drop("__wg")
-    else:
-        joined = df.join(F.broadcast(df.agg(bounds)))
-    return joined.withColumn(
+    keys = [] if group_col is None else [group_col]
+    return broadcast_back(df, df.groupBy(*keys).agg(bounds), keys).withColumn(
         out,
         F.least(
             F.greatest(F.col(col).cast("double"), F.element_at("__wb", 1)),
             F.element_at("__wb", 2),
         ),
     ).drop("__wb")
+
+
+def _median_mad(df: DataFrame, keys: list[str], x: Column) -> DataFrame:
+    """``df`` plus ``__med``, the per-group exact median of ``x``, and
+    ``__mad``, the per-group median of ``|x − __med|``: two percentile
+    aggregates, each broadcast back onto the scan."""
+    med = broadcast_back(
+        df, df.groupBy(*keys).agg(F.percentile(x, F.lit(0.5)).alias("__med")), keys
+    )
+    dev = F.abs(x - F.col("__med"))
+    return broadcast_back(
+        med, med.groupBy(*keys).agg(F.percentile(dev, F.lit(0.5)).alias("__mad")), keys
+    )
 
 
 def robust_scale(
@@ -236,25 +234,7 @@ def robust_scale(
     # spread the scan (round 15): same exact-percentile partial-state
     # rationale as mad_outliers; no-op on well-split layouts
     df = spread_scan(df)
-    med_agg = F.percentile(F.col(col), F.lit(0.5)).alias("__med")
-    if group_col is not None:
-        # null-safe group joins, same rationale as winsorize
-        med = df.groupBy(F.col(group_col).alias("__rg1")).agg(med_agg)
-        with_med = df.join(
-            F.broadcast(med), F.col(group_col).eqNullSafe(F.col("__rg1")), "inner"
-        ).drop("__rg1")
-        mad = with_med.groupBy(F.col(group_col).alias("__rg2")).agg(
-            F.percentile(F.abs(F.col(col) - F.col("__med")), F.lit(0.5)).alias("__mad")
-        )
-        joined = with_med.join(
-            F.broadcast(mad), F.col(group_col).eqNullSafe(F.col("__rg2")), "inner"
-        ).drop("__rg2")
-    else:
-        with_med = df.join(F.broadcast(df.agg(med_agg)))
-        mad = with_med.agg(
-            F.percentile(F.abs(F.col(col) - F.col("__med")), F.lit(0.5)).alias("__mad")
-        )
-        joined = with_med.join(F.broadcast(mad))
+    joined = _median_mad(df, [] if group_col is None else [group_col], F.col(col))
     scaled = F.when(F.col("__mad") > 0, (F.col(col) - F.col("__med")) / (F.lit(1.4826) * F.col("__mad"))).otherwise(F.lit(0.0))
     return joined.withColumn(out, F.round(scaled, ndigits)).drop("__med", "__mad")
 
@@ -541,7 +521,7 @@ def mad_outliers(
     median of deviations) broadcast back onto the scan — the data
     itself never sorts or re-shuffles; an all-equal group has MAD 0 and
     flags any deviating row, which is the intended degenerate case.
-    Null group keys form a group of their own; every row is kept.
+    NULL group keys follow :func:`~backend_spark.scale.broadcast_back`.
     """
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     # spread the scan (round 15): the exact-percentile partial state
@@ -549,20 +529,9 @@ def mad_outliers(
     # partition, so an under-split layout serialises it; no-op on
     # well-split 100 TB inputs
     df = spread_scan(df)
-    keys = [f"__mg_{g}" for g in groups]
-
-    def attach(frame: DataFrame, stat: Column) -> DataFrame:
-        # null-safe group join, same rationale as winsorize: a null
-        # group is a real group and its rows must survive
-        per_group = frame.groupBy(*[F.col(g).alias(key) for g, key in zip(groups, keys)]).agg(stat)
-        cond = F.lit(True)
-        for g, key in zip(groups, keys):
-            cond = cond & F.col(g).eqNullSafe(F.col(key))
-        return frame.join(F.broadcast(per_group), cond, "inner").drop(*keys)
-
-    dev = F.abs(F.col(value_col).cast("double") - F.col("__med"))
-    j = attach(df, F.percentile(F.col(value_col).cast("double"), F.lit(0.5)).alias("__med"))
-    out = attach(j.withColumn("__dev", dev), F.percentile(F.col("__dev"), F.lit(0.5)).alias("__mad"))
+    x = F.col(value_col).cast("double")
+    out = _median_mad(df, groups, x)
+    dev = F.abs(x - F.col("__med"))
     dev_r = F.round(dev, ndigits)
     mad_r = F.round(F.col("__mad"), ndigits)
     return out.select(
@@ -881,8 +850,7 @@ def target_encode(
         (F.col("__cs").cast("double") - qy.cast("double")) + F.lit(float(smoothing)) * prior
     ) / (F.col("__cn") - 1 + F.lit(float(smoothing)))
     return (
-        base.join(F.broadcast(cat), cat_col)
-        .join(F.broadcast(glob))
+        broadcast_back(broadcast_back(base, cat, [cat_col]), glob, [])
         .withColumn(out_col, F.round(enc / scale, ndigits))
         .drop("__cs", "__cn", "__gs", "__gn")
     )
@@ -1224,11 +1192,9 @@ def seasonal_adjust(
     group_stats = base.where(F.col("__q").isNotNull()).groupBy(*keys).agg(
         F.sum("__q").alias("__gs"), F.count("__q").alias("__gn")
     )
-    joined = base.join(F.broadcast(phase_stats), [*keys, phase_col], "left")
-    if keys:
-        joined = joined.join(F.broadcast(group_stats), keys, "left")
-    else:
-        joined = joined.join(F.broadcast(group_stats))
+    joined = broadcast_back(
+        broadcast_back(base, phase_stats, [*keys, phase_col]), group_stats, keys
+    )
     seasonal = (
         F.col("__ps").cast("double") / F.col("__pn")
         - F.col("__gs").cast("double") / F.col("__gn")
@@ -1289,8 +1255,7 @@ def benford(
     )
     counts = base.groupBy(*keys, "__d").agg(F.count(F.lit(1)).alias("n"))
     w_tot = counts.groupBy(*keys).agg(F.sum("n").alias("__tot"))
-    on = keys if keys else None
-    joined = counts.join(F.broadcast(w_tot), on) if on else counts.join(F.broadcast(w_tot))
+    joined = broadcast_back(counts, w_tot, keys)
     expected = F.element_at(F.array(*[F.lit(p) for p in _BENFORD_P]), F.col("__d"))
     obs = F.col("n").cast("double") / F.col("__tot").cast("double")
     return joined.select(

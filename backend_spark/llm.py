@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from backend_spark import functions as fn
 from backend_spark.operators.graph import check_cluster_cap, cluster_labels, connected_components
-from backend_spark.scale import spread_scan, stage
+from backend_spark.scale import broadcast_back, spread_scan, stage
 
 
 # ---------------------------------------------------------------------------
@@ -1403,7 +1403,7 @@ def percentile_filter(
         F.percentile(F.col(score_col), F.lit(q)).alias("__thr")
     )
     return (
-        df.join(F.broadcast(thr), group_col, "inner")
+        broadcast_back(df, thr, [group_col])
         .where(F.col(score_col) >= F.col("__thr"))
         .drop("__thr")
     )
@@ -2380,7 +2380,7 @@ def temperature_sample(
         fn.md5_long(F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))) % 1_000_000
     )
     return (
-        df.join(F.broadcast(rates), group_col)
+        broadcast_back(df, rates, [group_col])
         .where(bucket < F.col("__thr"))
         .drop("__thr")
     )
@@ -4945,9 +4945,8 @@ def boilerplate_lines(
     ``lines_col`` is an ``array<string>``; duplicate lines within one
     document count once (document frequency, not term frequency).
     Output: (``group_col``, line, doc_freq, group_docs, share), one row
-    per boilerplate line per group.  Documents with a NULL group drop
-    out (the group join is null-rejecting, standard SQL key semantics)
-    — bucket them explicitly upstream if ungrouped docs matter.
+    per boilerplate line per group.  Documents with a NULL group form a
+    group of their own (:func:`~backend_spark.scale.broadcast_back`).
 
     Scale shape: explode → distinct on (group, line, id) → ONE
     (group, line) count aggregate, map-side combinable; the per-group
@@ -4971,7 +4970,7 @@ def boilerplate_lines(
         F.count(F.lit(1)).alias("doc_freq")
     )
     return (
-        freq.join(F.broadcast(group_docs), group_col)
+        broadcast_back(freq, group_docs, [group_col])
         .withColumn("share", F.round(F.col("doc_freq") / F.col("group_docs"), ndigits))
         .where(
             (F.col("doc_freq") >= min_docs)

@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from backend_spark import functions as fn
-from backend_spark.scale import prefix_sums, stage
+from backend_spark.scale import broadcast_back, prefix_sums, stage
 
 
 def _feature_pipeline(df: DataFrame, numerical, categorical):
@@ -870,7 +870,7 @@ def ridge_apply_by(
         + F.col("__w2") * F.col(feature_cols[1]).cast("double")
     )
     return (
-        df.join(F.broadcast(w), group_col, "left")
+        broadcast_back(df, w, [group_col])
         .withColumn(out_col, F.round(pred, ndigits))
         .drop("__w0", "__w1", "__w2")
     )

@@ -220,7 +220,8 @@ def blocking_eval(
     defines (n_l·n_r cross-source, or n·(n−1)/2 self-dedup).
 
     Scale shape: two distinct-pair aggregates and one hash semi-join on
-    the normalized pair key; output is ONE row.
+    the normalized pair key, then three global counts cross-joined into
+    ONE row — one lazy plan, no job runs at build time.
     """
     if total_pairs <= 0:
         raise ValueError(f"total_pairs must be positive, got {total_pairs}")
@@ -234,12 +235,10 @@ def blocking_eval(
     c = norm(candidates)
     g = norm(gold)
     found = g.join(c, ["__a", "__b"], "left_semi")
-    n_c = c.count()
-    n_g = g.count()
-    n_f = found.count()
-    spark = candidates.sparkSession
-    base = spark.createDataFrame(
-        [(n_c, n_g, n_f)], "n_candidates long, n_gold long, n_found long"
+    base = (
+        c.agg(F.count(F.lit(1)).alias("n_candidates"))
+        .crossJoin(g.agg(F.count(F.lit(1)).alias("n_gold")))
+        .crossJoin(found.agg(F.count(F.lit(1)).alias("n_found")))
     )
     # ratios via F.round (HALF_UP), matching the oracle's round()
     return base.select(

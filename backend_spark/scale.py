@@ -81,15 +81,24 @@ def spread_scan(df: DataFrame, by: "str | None" = None) -> DataFrame:
     that scan (md5 shingle chains, regex scans, decimal moment sums)
     runs serially.
 
-    When :func:`undersplit` says so, this round-robins (or
-    hash-partitions, when ``by`` is given) the frame to
-    ``defaultParallelism`` partitions; otherwise it returns ``df``
-    itself, so on a well-laid-out 100 TB input (thousands of splits) it
-    is a provable no-op and callers can tell by identity whether it
-    fired.  The repartition ships each row once; callers should project
-    to the needed columns first so the exchange carries only what the
-    downstream compute reads.  Same SCAN-or-STAGED caveat as
-    :func:`undersplit`.
+    The one partition probe: when ``df``'s physical partitioning sits
+    below ``defaultParallelism``, this round-robins (or hash-partitions,
+    when ``by`` is given) the frame to ``defaultParallelism``
+    partitions; otherwise it returns ``df`` itself, so on a
+    well-laid-out 100 TB input (thousands of splits) it is a provable
+    no-op and callers can tell by identity whether it fired.  Operators
+    that must pin DOWNSTREAM shuffle parallelism read that answer
+    (``scan is not src``): AQE coalesces post-shuffle partitions by
+    BYTE size, which starves compute-dense stages whose cost per byte
+    is high (prefix joins, array-intersect verifies) whenever the whole
+    pipeline's data is physically tiny; on a well-split layout the
+    probe says no and AQE stays fully in charge.  The repartition ships
+    each row once; callers should project to the needed columns first
+    so the exchange carries only what the downstream compute reads.
+
+    Call it on SCAN or STAGED (checkpointed) frames only: the probe
+    materializes the physical plan, and under AQE a frame with a pending
+    Exchange would execute its upstream stages right there.
 
     Content-neutral: repartitioning never changes row multiset, and
     every result in this engine is partition-order-independent by the
@@ -97,32 +106,13 @@ def spread_scan(df: DataFrame, by: "str | None" = None) -> DataFrame:
     NOT insert it upstream of ``spark_partition_id``-dependent logic
     (:func:`prefix_sums` manages its own layout).
     """
-    if not undersplit(df):
-        return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target, F.col(by)) if by else df.repartition(target)
-
-
-def undersplit(df: DataFrame) -> bool:
-    """True when ``df``'s physical partitioning sits below
-    ``defaultParallelism`` — the one partition probe behind
-    :func:`spread_scan`, exposed for operators that must pin DOWNSTREAM
-    shuffle parallelism (not just the scan's).  AQE coalesces
-    post-shuffle partitions by BYTE size, which starves compute-dense
-    stages whose cost per byte is high (prefix joins, array-intersect
-    verifies) whenever the whole pipeline's data is physically tiny; on
-    a well-split 100 TB layout this returns False and callers leave AQE
-    fully in charge.
-
-    Call it on SCAN or STAGED (checkpointed) frames only: the probe
-    materializes the physical plan, and under AQE a frame with a pending
-    Exchange would execute its upstream stages right there.
-    """
-    spark = df.sparkSession
     try:
-        return df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+        if df.rdd.getNumPartitions() >= target:
+            return df
     except Exception:  # pragma: no cover - planning failure => assume well-split
-        return False
+        return df
+    return df.repartition(target, F.col(by)) if by else df.repartition(target)
 
 
 def salted_agg(
@@ -354,6 +344,28 @@ def assign_row_ids(
     """Global dense 1-based row numbers in ``order_cols`` order (a
     total order): the :func:`prefix_sums` running count."""
     return prefix_sums(df, order_cols, {out_col: F.lit(1).cast("long")})[0]
+
+
+def broadcast_back(rows: DataFrame, table: DataFrame, keys: "list[str]") -> DataFrame:
+    """The one per-group statistic join: left-join the small per-key
+    ``table`` (typically ``rows.groupBy(*keys).agg(...)``, |groups|
+    rows) onto ``rows`` through a broadcast, so the scan itself never
+    shuffles.  Returns ``rows``' columns in their order, then
+    ``table``'s non-key columns.  With ``keys=[]`` the table is one row
+    (``groupBy().agg(...)`` is the global aggregate) joined to every
+    row, so the grouped and the global form are one call.
+
+    The null-key rule: keys match null-safe (``eqNullSafe``), so a NULL
+    key is a group of its own, as ``groupBy`` forms it, and every row
+    of ``rows`` is kept; a row whose key ``table`` lacks gets NULL
+    statistics.  An operator that must drop NULL keys filters them
+    before it aggregates.
+    """
+    if not keys:
+        return rows.join(F.broadcast(table))
+    tmp = {k: f"__bb{i}" for i, k in enumerate(keys)}
+    on = functools.reduce(operator.and_, [F.col(k).eqNullSafe(F.col(t)) for k, t in tmp.items()])
+    return rows.join(F.broadcast(table.withColumnsRenamed(tmp)), on, "left").drop(*tmp.values())
 
 
 def skew_report(

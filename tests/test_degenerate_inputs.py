@@ -261,3 +261,67 @@ def test_jw_empty_strings(spark):
     df = spark.createDataFrame([("", ""), ("", "abc")], "a string, b string")
     rows = df.select(fn.jw(F.col("a"), F.col("b")).alias("s")).collect()
     assert all(r.s is not None for r in rows)
+
+
+# --- NULL group keys -------------------------------------------------------
+# Every per-group statistic rejoins through scale.broadcast_back, whose rule
+# is that a NULL key is a group of its own: an operator must give the same
+# rows for a NULL group as for the same rows under an unused key.
+
+_SENTINEL = "~null~"
+
+
+def _null_key_ops():
+    from backend_spark import features, llm, ml
+
+    return {
+        "zscore": lambda d, w: features.zscore(d, "x", group_col="grp"),
+        "quantile_bins": lambda d, w: features.quantile_bins(d, "x", 3, group_col="grp"),
+        "winsorize": lambda d, w: features.winsorize(d, "x", 0.25, 0.75, group_col="grp"),
+        "robust_scale": lambda d, w: features.robust_scale(d, "x", group_col="grp"),
+        "mad_outliers": lambda d, w: features.mad_outliers(d, "grp", "x", k=1.0),
+        "seasonal_adjust": lambda d, w: features.seasonal_adjust(d, "phase", "x", by="grp"),
+        "benford": lambda d, w: features.benford(d, "x", by="grp"),
+        "percentile_filter": lambda d, w: llm.percentile_filter(d, "x", "grp", q=0.5),
+        "temperature_sample": lambda d, w: llm.temperature_sample(d, "grp", "id", alpha=0.5),
+        "boilerplate_lines": lambda d, w: llm.boilerplate_lines(d, "id", "grp", "lines"),
+        "ridge_apply_by": lambda d, w: ml.ridge_apply_by(d, w, "grp", ["x", "x2"]),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["zscore", "quantile_bins", "winsorize", "robust_scale", "mad_outliers",
+     "seasonal_adjust", "benford", "percentile_filter", "temperature_sample",
+     "boilerplate_lines", "ridge_apply_by"],
+)
+def test_null_group_key_is_a_group(spark, op):
+    rows = [
+        (i, g, x, float(i % 3), i % 2, ["header", f"body {i}"])
+        for i, (g, x) in enumerate(
+            [("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 40.0)]
+            + [(None, 10.0), (None, 25.0), (None, 30.0), (None, 31.0), (None, 900.0)]
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, grp string, x double, x2 double, phase int, lines array<string>"
+    )
+    weights = spark.createDataFrame(
+        [(g, f, w) for g in ("a", None) for f, w in
+         (("__intercept__", 1.0 if g else 2.0), ("x", 0.5), ("x2", -1.0 if g else 3.0))],
+        "grp string, feature string, weight double",
+    )
+
+    def sentinel(d):
+        return d.withColumn("grp", F.coalesce(F.col("grp"), F.lit(_SENTINEL)))
+
+    def rows_of(d):
+        return sorted(repr(sorted(r.asDict().items())) for r in d.collect())
+
+    run = _null_key_ops()[op]
+    got = run(df, weights)
+    want = run(sentinel(df), sentinel(weights)).withColumn(
+        "grp", F.when(F.col("grp") != _SENTINEL, F.col("grp"))
+    )
+    assert rows_of(got) == rows_of(want)
+    assert got.where(F.col("grp").isNull()).count() > 0

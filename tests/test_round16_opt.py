@@ -5,8 +5,8 @@ a tax on every many-small-shuffle query (attribution 1.96x slower,
 interleaved A/B); round 16 restores Spark's 1m default and instead has
 the two operators that actually needed the parallelism — the PPJoin
 prefix operators ``containment_pairs`` / ``ngram_jaccard_pairs`` — pin
-their own hot stages with user-numbered repartitions gated on the
-``undersplit`` degenerate-layout signal.  These tests pin that gate:
+their own hot stages with user-numbered repartitions gated on
+``spread_scan``'s partition probe.  These tests pin that gate:
 the repartitions fire on single-partition inputs, vanish on well-split
 ones, and never change results — for every operator of the shared
 similarity-join kernel.
@@ -15,18 +15,10 @@ similarity-join kernel.
 from pyspark.sql import functions as F
 
 from backend_spark import llm
-from backend_spark.scale import undersplit
 
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_undersplit_signal(spark):
-    narrow = spark.createDataFrame([(i,) for i in range(100)], "id long").coalesce(1)
-    assert undersplit(narrow)
-    wide = narrow.repartition(spark.sparkContext.defaultParallelism)
-    assert not undersplit(wide)
 
 
 TEXTS = [
