@@ -7587,11 +7587,11 @@ def oracle_sql() -> dict[str, str]:
             g AS (SELECT DISTINCT src, g FROM g0),
             per AS (SELECT src, count(*) AS grams_a FROM g GROUP BY 1),
             sh AS (SELECT a.src AS src_a, b.src AS src_b, count(*) AS shared
-                   FROM g a JOIN g b ON a.g = b.g AND a.src <> b.src
+                   FROM g a JOIN g b ON a.g = b.g AND a.src IS DISTINCT FROM b.src
                    GROUP BY 1, 2)
             SELECT src_a, src_b, grams_a, shared,
                    round(CAST(shared AS DOUBLE) / grams_a, 6) AS overlap
-            FROM sh JOIN per ON per.src = sh.src_a
+            FROM sh JOIN per ON per.src IS NOT DISTINCT FROM sh.src_a
         """,
         "extract_links": """
             WITH h AS (SELECT c_custkey,

@@ -17,7 +17,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from backend_spark.scale import assign_row_ids, broadcast_back, prefix_sums, spread_scan, stage
+from backend_spark import functions as fn
+from backend_spark.scale import (
+    assign_row_ids,
+    broadcast_back,
+    check_group_cap,
+    prefix_sums,
+    spread_scan,
+    stage,
+)
 
 
 def quantile_bins(
@@ -56,11 +64,10 @@ def zscore(
     col: str,
     group_col: str | None = None,
     out_col: str | None = None,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Per-group standardization ``(x - mean) / stddev`` (sample
-    stddev), rounded to ``ndigits`` so the result is reproducible
-    cross-engine despite summation-order float drift.  Groups with zero
+    stddev), rounded to 4 places (not ``fn.NDIGITS``) so the result is
+    reproducible cross-engine despite summation-order float drift.  Groups with zero
     variance (or a single row) get null, never a division error.
     """
     out = out_col or f"{col}_z"
@@ -73,7 +80,7 @@ def zscore(
         out,
         F.when(
             F.col("__std") > 0,
-            F.round((F.col(col) - F.col("__mean")) / F.col("__std"), ndigits),
+            F.round((F.col(col) - F.col("__mean")) / F.col("__std"), 4),
         ),
     )
     return scored.drop("__mean", "__std")
@@ -90,7 +97,8 @@ def resample_gapfill(
     ``bucket``-width bins (same units as ``ts_col``) and emit EVERY
     bucket between each key's first and last event — empty buckets
     appear with ``n_events = 0`` (and null sum), which downstream
-    models need and a plain groupBy silently omits.
+    models need and a plain groupBy silently omits.  Sums are rounded
+    to 2 places.
 
     Shuffle budget: one keyed aggregate for the bin stats and one for
     the per-key span (same key — AQE reuses the exchange); the dense
@@ -217,7 +225,6 @@ def robust_scale(
     col: str,
     group_col: str | None = None,
     out_col: str | None = None,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Median/MAD standardization: ``(x − median) / (1.4826 · MAD)``
     with MAD = median(|x − median|) — the outlier-robust alternative
@@ -236,7 +243,7 @@ def robust_scale(
     df = spread_scan(df)
     joined = _median_mad(df, [] if group_col is None else [group_col], F.col(col))
     scaled = F.when(F.col("__mad") > 0, (F.col(col) - F.col("__med")) / (F.lit(1.4826) * F.col("__mad"))).otherwise(F.lit(0.0))
-    return joined.withColumn(out, F.round(scaled, ndigits)).drop("__med", "__mad")
+    return joined.withColumn(out, F.round(scaled, fn.NDIGITS)).drop("__med", "__mad")
 
 
 def rolling_agg(
@@ -245,7 +252,6 @@ def rolling_agg(
     ts_us_col: str,
     value_col: str,
     window_us: int,
-    ndigits: int = 6,
     scale: int = 100,
 ) -> DataFrame:
     """Event-time rolling aggregates: per key, count / sum / avg of
@@ -276,10 +282,10 @@ def rolling_agg(
     return (
         df.withColumn("__ss", ssum)
         .withColumn("roll_cnt", cnt)
-        .withColumn("roll_sum", F.round(F.col("__ss") / scale, ndigits))
+        .withColumn("roll_sum", F.round(F.col("__ss") / scale, fn.NDIGITS))
         .withColumn(
             "roll_avg",
-            F.round(F.col("__ss") / (F.lit(float(scale)) * F.col("roll_cnt")), ndigits),
+            F.round(F.col("__ss") / (F.lit(float(scale)) * F.col("roll_cnt")), fn.NDIGITS),
         )
         .drop("__ss")
     )
@@ -319,7 +325,6 @@ def histogram(
     df: DataFrame,
     col: str,
     bins: int = 10,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Fixed-width histogram over [min, max]: the profiling readout
     :func:`~backend_spark.profile.profile`'s scalar ranges don't give.
@@ -352,13 +357,14 @@ def histogram(
         F.count(F.lit(1)).alias("cnt")
     )
     grid = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
+    width = (F.col("__hi") - F.col("__lo")) / F.lit(bins)
     return (
         grid.join(F.broadcast(stats))
         .join(counts, "bin", "left")
         .select(
             F.col("bin").cast("long").alias("bin"),
-            F.round(F.col("__lo") + F.col("bin") * ((F.col("__hi") - F.col("__lo")) / F.lit(bins)), ndigits).alias("lo"),
-            F.round(F.col("__lo") + (F.col("bin") + 1) * ((F.col("__hi") - F.col("__lo")) / F.lit(bins)), ndigits).alias("hi"),
+            F.round(F.col("__lo") + F.col("bin") * width, fn.NDIGITS).alias("lo"),
+            F.round(F.col("__lo") + (F.col("bin") + 1) * width, fn.NDIGITS).alias("hi"),
             F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
         )
     )
@@ -433,7 +439,7 @@ def transition_counts(
             "src",
             "dst",
             "cnt",
-            F.round(F.col("cnt") / F.sum("cnt").over(tot), 6).alias("p"),
+            F.round(F.col("cnt") / F.sum("cnt").over(tot), fn.NDIGITS).alias("p"),
         )
     )
 
@@ -457,8 +463,6 @@ def feature_hash(
     one map-side-combinable groupBy on (id, bucket); no driver state,
     no vocabulary, no second pass.
     """
-    from backend_spark import functions as fn
-
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
     toks = df.select(
@@ -476,10 +480,9 @@ def cdf_normalize(
     df: DataFrame,
     group_cols: list[str] | str,
     value_col: str,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-group rank-based CDF transform (quantile normalization):
-    ``round(percent_rank(), ndigits)`` of ``value_col`` within each
+    ``round(percent_rank(), fn.NDIGITS)`` of ``value_col`` within each
     group — maps any distribution onto [0, 1], the standard monotone
     feature transform when absolute magnitudes are meaningless across
     sources.  Ties share a rank in both engines (SQL percent_rank
@@ -498,7 +501,7 @@ def cdf_normalize(
         )
     w = Window.partitionBy(*groups).orderBy(value_col)
     return df.withColumn(
-        f"{value_col}_cdf", F.round(F.percent_rank().over(w), ndigits)
+        f"{value_col}_cdf", F.round(F.percent_rank().over(w), fn.NDIGITS)
     )
 
 
@@ -507,13 +510,12 @@ def mad_outliers(
     group_cols: list[str] | str,
     value_col: str,
     k: float = 3.0,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Robust outlier flagging by median absolute deviation: a row is an
     outlier when ``|x − median| > k·MAD`` within its group — the
     heavy-tail-safe alternative to z-scores (zscore's mean/std are
     themselves dragged by the outliers they're meant to find).
-    Adds ``dev`` (= round(|x − med|, ndigits)), ``mad`` and
+    Adds ``dev`` (= round(|x − med|, fn.NDIGITS)), ``mad`` and
     ``is_outlier``; the comparison runs on the ROUNDED values so the
     boundary is deterministic cross-engine.
 
@@ -532,8 +534,8 @@ def mad_outliers(
     x = F.col(value_col).cast("double")
     out = _median_mad(df, groups, x)
     dev = F.abs(x - F.col("__med"))
-    dev_r = F.round(dev, ndigits)
-    mad_r = F.round(F.col("__mad"), ndigits)
+    dev_r = F.round(dev, fn.NDIGITS)
+    mad_r = F.round(F.col("__mad"), fn.NDIGITS)
     return out.select(
         *df.columns,
         dev_r.alias("dev"),
@@ -547,7 +549,6 @@ def interpolate_linear(
     key_col: str,
     order_col: str,
     value_col: str,
-    ndigits: int = 6,
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Per-key linear interpolation of null gaps: a null ``value_col``
@@ -557,7 +558,7 @@ def interpolate_linear(
     :func:`fill_forward` for sensor/metric series where step-function
     LOCF biases downstream features.
 
-    Output adds ``<value_col>_interp`` = round(interpolated, ndigits)
+    Output adds ``<value_col>_interp`` = round(interpolated, fn.NDIGITS)
     (observed rows pass through their own value, rounded).
 
     Scale shape: ONE (key, order) window partitioning evaluated in two
@@ -586,7 +587,7 @@ def interpolate_linear(
             pv + (nv - pv) * ((t - pt) / (nt - pt)),
         ).otherwise(F.when(pv.isNotNull() & nv.isNotNull(), pv))
     )
-    return df.withColumn(f"{value_col}_interp", F.round(interp, ndigits))
+    return df.withColumn(f"{value_col}_interp", F.round(interp, fn.NDIGITS))
 
 
 def rolling_anomaly(
@@ -755,7 +756,6 @@ def decay_agg(
     value_col: str,
     halflife: float,
     scale: int = 10**6,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Exponential time-decay aggregate per key: each event contributes
     ``value * 0.5^((t_ref - t) / halflife)`` with ``t_ref`` the global
@@ -797,8 +797,8 @@ def decay_agg(
         .groupBy(key_col)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(q).cast("double") / scale, ndigits).alias("decayed_sum"),
-            F.round(F.sum(w).cast("double") / scale, ndigits).alias("decayed_weight"),
+            F.round(F.sum(q).cast("double") / scale, fn.NDIGITS).alias("decayed_sum"),
+            F.round(F.sum(w).cast("double") / scale, fn.NDIGITS).alias("decayed_weight"),
         )
     )
 
@@ -809,7 +809,6 @@ def target_encode(
     target_col: str,
     smoothing: float = 10.0,
     scale: int = 10**6,
-    ndigits: int = 6,
     out_col: str = "encoded",
 ) -> DataFrame:
     """Leave-one-out target encoding with prior smoothing — the
@@ -851,7 +850,7 @@ def target_encode(
     ) / (F.col("__cn") - 1 + F.lit(float(smoothing)))
     return (
         broadcast_back(broadcast_back(base, cat, [cat_col]), glob, [])
-        .withColumn(out_col, F.round(enc / scale, ndigits))
+        .withColumn(out_col, F.round(enc / scale, fn.NDIGITS))
         .drop("__cs", "__cn", "__gs", "__gn")
     )
 
@@ -922,8 +921,8 @@ def cusum(
     s_lo = F.col("__clo") - F.least(F.lit(0).cast("long"), F.min("__clo").over(wcum))
     h_scaled = F.lit(int(round(float(h) * scale))).cast("long")
     return (
-        out.withColumn("cusum_hi", F.round(s_hi / scale, 6))
-        .withColumn("cusum_lo", F.round(s_lo / scale, 6))
+        out.withColumn("cusum_hi", F.round(s_hi / scale, fn.NDIGITS))
+        .withColumn("cusum_lo", F.round(s_lo / scale, fn.NDIGITS))
         .withColumn(
             "cusum_alarm", ((s_hi > h_scaled) | (s_lo > h_scaled)).cast("int")
         )
@@ -936,7 +935,6 @@ def rank_corr(
     by: list[str] | str,
     x_col: str,
     y_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group Spearman rank correlation with exact average-rank tie
     handling — the monotonic-association screen feature pipelines run
@@ -954,7 +952,7 @@ def rank_corr(
     y-axis windows and the final aggregate all reuse it (two in-place
     sorts, no re-exchange, map-side-combined agg).  All sums are exact
     BIGINTs; the epilogue (products, sqrt, divide) runs in fixed IEEE
-    double order, rounded to ``round_to``.  Rows with a NULL in either
+    double order, rounded to ``fn.NDIGITS``.  Rows with a NULL in either
     column are dropped; groups with fewer than 2 rows or zero variance
     on either side yield NULL rho.
     """
@@ -989,7 +987,7 @@ def rank_corr(
     return agg.select(
         *keys,
         F.col("n"),
-        F.round(F.when(den > 0, num / F.sqrt(den)), round_to).alias("rho"),
+        F.round(F.when(den > 0, num / F.sqrt(den)), fn.NDIGITS).alias("rho"),
     )
 
 
@@ -997,7 +995,6 @@ def mutual_info(
     df: DataFrame,
     feature_cols: list[str],
     label_col: str,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Mutual information I(feature; label) per categorical feature —
     the model-free screen for which attributes carry signal about a
@@ -1068,7 +1065,7 @@ def mutual_info(
         ),
     )
     return staged.select(
-        "feature", F.col("__n").alias("n"), F.round(mi, ndigits).alias("mi")
+        "feature", F.col("__n").alias("n"), F.round(mi, fn.NDIGITS).alias("mi")
     )
 
 
@@ -1078,7 +1075,6 @@ def assoc_rules(
     item_col: str,
     min_pair_count: int = 2,
     max_basket_size: int = 10_000,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Association-rule mining over (basket, item) pairs — the classic
     co-occurrence miner (Agrawal & Srikant 1994, A-Priori at the
@@ -1144,11 +1140,11 @@ def assoc_rules(
     pc = F.col("pair_count").cast("double")
     return scored.select(
         "antecedent", "consequent", "pair_count",
-        F.round(pc / nb, ndigits).alias("support"),
-        F.round(pc / F.col("__ca").cast("double"), ndigits).alias("confidence"),
+        F.round(pc / nb, fn.NDIGITS).alias("support"),
+        F.round(pc / F.col("__ca").cast("double"), fn.NDIGITS).alias("confidence"),
         F.round(
             (pc * nb) / (F.col("__ca").cast("double") * F.col("__cc").cast("double")),
-            ndigits,
+            fn.NDIGITS,
         ).alias("lift"),
     )
 
@@ -1159,7 +1155,6 @@ def seasonal_adjust(
     value_col: str,
     by: list[str] | str | None = None,
     scale: int = 1_000_000,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Seasonal decomposition by period-phase means — the deterministic
     "subtract the hour-of-day/day-of-week profile" step that has to
@@ -1202,13 +1197,13 @@ def seasonal_adjust(
     return (
         joined.withColumn(
             "seasonal",
-            F.when(F.col("__q").isNotNull(), F.round(seasonal, ndigits)),
+            F.when(F.col("__q").isNotNull(), F.round(seasonal, fn.NDIGITS)),
         )
         .withColumn(
             "adjusted",
             F.when(
                 F.col("__q").isNotNull(),
-                F.round(F.col(value_col).cast("double") - seasonal, ndigits),
+                F.round(F.col(value_col).cast("double") - seasonal, fn.NDIGITS),
             ),
         )
         .drop("__q", "__ps", "__pn", "__gs", "__gn")
@@ -1224,7 +1219,6 @@ def benford(
     df: DataFrame,
     value_col: str,
     by: list[str] | str | None = None,
-    ndigits: int = 6,
 ) -> DataFrame:
     """First-significant-digit distribution vs Benford's law — the
     classic fabricated-number screen for financial/count columns
@@ -1262,9 +1256,9 @@ def benford(
         *keys,
         F.col("__d").alias("digit"),
         "n",
-        F.round(obs, ndigits).alias("observed_p"),
-        F.round(expected, ndigits).alias("expected_p"),
-        F.round(obs - expected, ndigits).alias("deviation"),
+        F.round(obs, fn.NDIGITS).alias("observed_p"),
+        F.round(expected, fn.NDIGITS).alias("expected_p"),
+        F.round(obs - expected, fn.NDIGITS).alias("deviation"),
     )
 
 
@@ -1275,7 +1269,6 @@ def acf(
     value_col: str,
     max_lag: int = 3,
     scale: int = 1_000_000,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-series autocorrelation function at lags ``1..max_lag`` — the
     seasonality/persistence screen run before picking a forecasting or
@@ -1292,7 +1285,7 @@ def acf(
 
     with S = sum v, Q = sum v^2, P_k = sum v_t*v_{t+k}, H_k/T_k the
     head/tail partial sums — every term an exact integer, so the only
-    float op is the final division (rounded ``round_to``), identical on
+    float op is the final division (rounded ``fn.NDIGITS``), identical on
     any engine.  The n^2*P_k term bounds series length: it must stay
     under decimal(38,0), i.e. n^3 * (mean|x| * scale)^2 < 10^38 —
     ~4.6M points per series at scale=1e6 and |x|~1e3; drop ``scale``
@@ -1351,7 +1344,7 @@ def acf(
                             + (n - F.lit(k).cast(dec)) * s * s
                         ).cast(dec).cast("double")
                         / (n * den).cast(dec).cast("double"),
-                        round_to,
+                        fn.NDIGITS,
                     ),
                 ).alias("acf"),
             )
@@ -1369,7 +1362,6 @@ def weighted_median(
     value_col: str,
     weight_col: str,
     scale: int = 1_000_000,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group weighted (lower) median: the smallest value whose
     cumulative weight reaches half the group total — the robust center
@@ -1406,7 +1398,7 @@ def weighted_median(
     )
     return staged.groupBy(*keys).agg(
         F.max("__n").alias("n"),
-        F.round(F.max("__tw").cast("double") / scale, round_to).alias("total_w"),
+        F.round(F.max("__tw").cast("double") / scale, fn.NDIGITS).alias("total_w"),
         F.min(F.when(F.col("__cw") * 2 >= F.col("__tw"), F.col("__v"))).alias("wmedian"),
     )
 
@@ -1416,7 +1408,6 @@ def gini(
     by: "list[str] | str",
     value_col: str,
     scale: int = 1_000_000,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group Gini concentration of a non-negative quantity — the
     one-number answer to "is this corpus dominated by a few sources /
@@ -1428,7 +1419,7 @@ def gini(
     (i = 1-based ascending rank).  Values quantize to fixed-point
     BIGINTs and both sums fold as exact decimals — equal values commute
     in sum(i*x_i), so tie order is irrelevant; the single float
-    division rounds to ``round_to``.  NULLs drop; negative values
+    division rounds to ``fn.NDIGITS``.  NULLs drop; negative values
     raise upstream semantics questions, so they drop too and are
     counted in ``n_dropped``.
 
@@ -1464,7 +1455,7 @@ def gini(
             (F.lit(2).cast(dec) * F.col("__is")).cast("double")
             / (n * F.col("__s")).cast("double")
             - (n + 1).cast("double") / n.cast("double"),
-            round_to,
+            fn.NDIGITS,
         ),
     )
     return g.select(*keys, "n", "n_dropped", gini_val.alias("gini"))
@@ -1475,7 +1466,6 @@ def theil_sen(
     by: "list[str] | str",
     x_col: str,
     y_col: str,
-    round_to: int = 6,
     max_group_rows: "int | None" = 2000,
 ) -> DataFrame:
     """Per-group Theil-Sen robust trend: slope = median of all pairwise
@@ -1510,28 +1500,13 @@ def theil_sen(
         F.col(x_col).cast("double").alias("__x"),
         F.col(y_col).cast("double").alias("__y"),
     )
-    if max_group_rows is not None:
-        if max_group_rows < 2:
-            raise ValueError(
-                f"theil_sen: max_group_rows must be >= 2 or None, got {max_group_rows}"
-            )
-        oversized = (
-            base.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_group_rows)
-            .orderBy(F.desc("n"), *keys)
-            .limit(5)
-            .collect()
-        )
-        if oversized:
-            detail = ", ".join(
-                f"{'|'.join(str(r[k]) for k in keys)}={r['n']}" for r in oversized
-            )
-            raise ValueError(
-                f"theil_sen: group(s) exceed max_group_rows={max_group_rows} "
-                f"(largest: {detail}); pairs are quadratic in the group — "
-                "det_sample the groups down or raise the cap deliberately"
-            )
+    if max_group_rows is not None and max_group_rows < 2:
+        raise ValueError(f"theil_sen: max_group_rows must be >= 2 or None, got {max_group_rows}")
+    check_group_cap(
+        base, keys, max_group_rows, "theil_sen", "max_group_rows",
+        "pairs are quadratic in the group — det_sample the groups down or raise the cap "
+        "deliberately",
+    )
     wg = Window.partitionBy(*keys)
     rid_w = wg.orderBy("__x", "__y")
     ranked = base.select(
@@ -1602,8 +1577,8 @@ def theil_sen(
         *keys,
         "n",
         F.coalesce(F.col("n_pairs"), F.lit(0)).alias("n_pairs"),
-        F.round("__slope", round_to).alias("slope"),
-        F.round(F.col("__my") - F.col("__slope") * F.col("__mx"), round_to).alias("intercept"),
+        F.round("__slope", fn.NDIGITS).alias("slope"),
+        F.round(F.col("__my") - F.col("__slope") * F.col("__mx"), fn.NDIGITS).alias("intercept"),
     )
 
 
@@ -1660,7 +1635,7 @@ def seq_patterns(
         .select(
             "pattern",
             "cnt",
-            F.round(F.col("cnt").cast("double") / F.col("__tot").cast("double"), 6).alias(
+            F.round(F.col("cnt").cast("double") / F.col("__tot").cast("double"), fn.NDIGITS).alias(
                 "share"
             ),
         )
@@ -1674,7 +1649,6 @@ def attribution(
     channel_col: str,
     conversion_col: str,
     model: str = "last",
-    round_to: int = 6,
 ) -> DataFrame:
     """Marketing-style conversion attribution: credit each conversion
     to the touch (non-conversion) events that preceded it within the
@@ -1760,7 +1734,7 @@ def attribution(
         )
     return credited.groupBy("channel").agg(
         F.count(F.lit(1)).cast("long").alias("journeys"),
-        F.round(F.sum("__micro").cast("double") / 1e6, round_to).alias("credit"),
+        F.round(F.sum("__micro").cast("double") / 1e6, fn.NDIGITS).alias("credit"),
     )
 
 
@@ -1816,7 +1790,6 @@ def ks_test(
     a: str,
     b: str,
     by: "list[str] | str | None" = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov drift test — the
     nonparametric complement to ``psi``: D = sup over observed values of
@@ -1829,7 +1802,7 @@ def ks_test(
     Exactness: the supremum is maximized as the INTEGER cross-product
     |cum_a * n_b - cum_b * n_a| over per-distinct-value cumulative
     counts, so D is a ratio of exact integers; only the final division
-    and the p-value exponential are floats (rounded ``round_to``).
+    and the p-value exponential are floats (rounded ``fn.NDIGITS``).
 
     Scale shape: one map-side-combined count per (value, sample) pair,
     then the cumulative counts.  With ``by`` the running sums ride a
@@ -1897,8 +1870,8 @@ def ks_test(
         *keys,
         "n_a",
         "n_b",
-        F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), F.round(d, round_to)).alias("d_stat"),
-        F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), F.round(p, round_to)).alias("p_approx"),
+        F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), F.round(d, fn.NDIGITS)).alias("d_stat"),
+        F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), F.round(p, fn.NDIGITS)).alias("p_approx"),
     )
 
 
@@ -1908,7 +1881,6 @@ def twap(
     ts_col: str,
     value_col: str,
     scale: int = 1_000_000,
-    round_to: int = 6,
     tie_break: "str | None" = None,
 ) -> DataFrame:
     """Time-weighted average per key — the piecewise-constant integral
@@ -1922,7 +1894,7 @@ def twap(
     Exactness: timestamps must already be integers (epoch micros — see
     ``session.event_ts_us``); values quantize to fixed point, so every
     duration-weighted product folds as an exact decimal and only the
-    final division is float (rounded ``round_to``).  Equal timestamps
+    final division is float (rounded ``fn.NDIGITS``).  Equal timestamps
     within a key make the lead() pairing order-dependent (the tied
     readings swap holding durations) — pass ``tie_break`` (a unique
     column) to pin a total order; tied readings then hold 0 duration
@@ -1963,7 +1935,7 @@ def twap(
                 F.col("span") > 0,
                 F.col("__wsum").cast("double") / F.col("span").cast("double") / scale,
             ),
-            round_to,
+            fn.NDIGITS,
         ).alias("twap"),
     )
 
@@ -1975,7 +1947,6 @@ def rfm(
     amount_col: str,
     n_tiles: int = 5,
     scale: int = 1_000_000,
-    round_to: int = 6,
 ) -> DataFrame:
     """RFM customer segmentation — Recency (latest activity), Frequency
     (event count), Monetary (fixed-point amount sum) per key, each
@@ -2030,7 +2001,7 @@ def rfm(
         key_col,
         "recency",
         "frequency",
-        F.round(F.col("__m").cast("double") / scale, round_to).alias("monetary"),
+        F.round(F.col("__m").cast("double") / scale, fn.NDIGITS).alias("monetary"),
         tile("__rr").alias("r_score"),
         tile("__rf").alias("f_score"),
         tile("__rm").alias("m_score"),
@@ -2195,7 +2166,6 @@ def pop_change(
     value_col: str,
     agg: str = "sum",
     scale: int = 1_000_000,
-    round_to: int = 6,
 ) -> DataFrame:
     """Period-over-period change — the BI staple behind every "vs last
     month" tile: aggregate ``value_col`` per (key, period), then report
@@ -2227,17 +2197,17 @@ def pop_change(
         )
     else:
         metric = F.count(F.col(value_col)).cast("double")
-    per = df.groupBy(*keys, period_col).agg(F.round(metric, round_to).alias("value"))
+    per = df.groupBy(*keys, period_col).agg(F.round(metric, fn.NDIGITS).alias("value"))
     w = Window.partitionBy(*keys).orderBy(period_col)
     prev = F.lag("value").over(w)
     return per.select(
         *keys,
         period_col,
         "value",
-        F.round(prev, round_to).alias("prev_value"),
-        F.round(F.col("value") - prev, round_to).alias("change"),
+        F.round(prev, fn.NDIGITS).alias("prev_value"),
+        F.round(F.col("value") - prev, fn.NDIGITS).alias("change"),
         F.round(
-            F.when(prev != 0, (F.col("value") - prev) / prev), round_to
+            F.when(prev != 0, (F.col("value") - prev) / prev), fn.NDIGITS
         ).alias("pct_change"),
     )
 
@@ -2247,7 +2217,6 @@ def session_stats(
     key_col: str,
     ts_col: str,
     gap_us: int,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-session engagement metrics — the table sessionization exists
     to feed: one row per (key, session) with event depth, start/end,

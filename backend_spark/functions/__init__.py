@@ -20,6 +20,15 @@ import pandas as pd  # noqa: F401 — resolves postponed pandas_udf type hints
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Output precision, the one rule for every operator: a float is rounded
+# HALF_UP to NDIGITS places (`F.round` on a Column, Python `round` on a
+# value computed on the driver) before it leaves the operator.  Float
+# sums differ in their last bits between engines and partitionings;
+# these are the digits the DuckDB oracles round to, so outputs hash
+# identically across engines.  An operator whose oracle keeps fewer
+# digits writes its literal and names it in its docstring.
+NDIGITS = 6
+
 # ---------------------------------------------------------------------------
 # normalization / tokenization (reference: code/tools.py:109-155)
 # ---------------------------------------------------------------------------
@@ -491,7 +500,7 @@ def ordered_sum(key: Column, value: Column) -> Column:
 
     Float addition is not associative, so ``F.sum`` over doubles depends
     on partition and arrival order: a total sitting on a ``round(·,
-    ndigits)`` boundary can flip with parallelism.  Sorting the
+    NDIGITS)`` boundary can flip with parallelism.  Sorting the
     collected (key, value) pairs fixes the fold order, so the result is
     bit-identical at any partition count and matches an oracle that
     sums with ``ORDER BY key``.  The group's pairs are collected into

@@ -26,8 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from backend_spark import functions as fn
-from backend_spark.operators.graph import check_cluster_cap, cluster_labels, connected_components
-from backend_spark.scale import broadcast_back, spread_scan, stage
+from backend_spark.operators.graph import cluster_labels, connected_components
+from backend_spark.scale import broadcast_back, check_group_cap, spread_scan, stage
 
 
 # ---------------------------------------------------------------------------
@@ -78,10 +78,13 @@ def _shingle_hashes(
 ) -> DataFrame:
     """Staged ``(id_col, __hs)``: md5_long of each ``shingle_n``-char
     shingle of the normalized text (``distinct``: as a set).  ``spread``
-    first, as this chain is the dominant per-row compute.  The stage cut
-    is load-bearing: ``__hs`` is read inside ``num_perm`` min-fold
-    lambdas, where a computed array re-runs the chain per reference
-    (measured ~10x)."""
+    first, as this chain is the dominant per-row compute.  The array is
+    computed once per row with or without the stage cut (the optimized
+    plan holds one ``md5`` chain under the ``num_perm`` min-fold
+    lambdas), and a first run takes the same time either way.  The cut
+    stays because a built frame that runs again (bench.py suite 1's
+    timed re-saves) re-reads it instead of re-hashing every shingle
+    (BENCH_NOTES "One per-group statistic join")."""
     src = df.select(F.col(id_col), F.col(text_col))
     if spread:
         src = spread_scan(src, by=id_col)
@@ -176,7 +179,7 @@ def _jaccard_verify(
     inter = F.size(F.array_intersect("__h1", "__h2")).cast("double")
     union = (F.col("__n1") + F.col("__n2")).cast("double") - inter
     return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
+        verified.withColumn("jaccard", F.round(inter / union, fn.NDIGITS))
         .where(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
@@ -230,7 +233,7 @@ def _rare_first_prefix(
     return (
         cand.join(sh.toDF("id1", "__h1"), "id1")
         .join(sh.toDF("id2", "__h2"), "id2")
-        .withColumn(measure, F.round(ratio(inter), 6))
+        .withColumn(measure, F.round(ratio(inter), fn.NDIGITS))
         .where(F.col(measure) >= threshold)
         .select("id1", "id2", measure)
     )
@@ -277,10 +280,10 @@ def dedup_minhash(
     duplicate cluster exceeds the cap, raise with the offending cluster
     ids instead of silently anti-joining half the corpus away (the
     er_resolve mega-cluster guard, shared via
-    :func:`~backend_spark.operators.graph.check_cluster_cap`)."""
+    :func:`~backend_spark.scale.check_group_cap`)."""
     pairs = minhash_lsh_pairs(df, id_col, text_col, **lsh_kwargs)
     cc = connected_components(pairs, src="id1", dst="id2")
-    check_cluster_cap(cc, max_cluster_size, "dedup_minhash")
+    check_group_cap(cc, ["comp"], max_cluster_size, "dedup_minhash")
     losers = cc.where(F.col("node") != F.col("comp")).select(F.col("node").alias(id_col))
     return df.join(losers, id_col, "left_anti")
 
@@ -408,7 +411,6 @@ def embed_cosine_pairs(
     n_planes: int = 16,
     n_bands: int = 4,
     dim: int = 64,
-    round_to: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id1, id2, cosine) with
     cosine >= threshold and id1 < id2.
@@ -486,7 +488,7 @@ def embed_cosine_pairs(
                     fn.cosine_dot(F.col("__v1"), F.col("__v2")),
                     F.col("__na") * F.col("__nb"),
                 ),
-                round_to,
+                fn.NDIGITS,
             ),
         )
         .where(F.col("cosine") >= threshold)
@@ -500,7 +502,6 @@ def semdedup(
     vec_col: str = "embedding",
     n_clusters: int = 8,
     threshold: float = 0.95,
-    round_to: int = 6,
     max_cluster_size: "int | None | str" = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup over an embedding
@@ -516,7 +517,7 @@ def semdedup(
       ``md5_long('sem:' || id)`` (hash-ordered reservoir — uniform,
       engine-independent); cluster index = their hash rank.
     * assignment = argmax cosine over the broadcast centroid table
-      (rounded to ``round_to`` first; ties → smaller cluster index).
+      (rounded to ``fn.NDIGITS`` first; ties → smaller cluster index).
     * the intra-cluster rule is the *prefix* variant: a row is dropped
       when ANY smaller-id cluster member (kept or not) is ≥ threshold.
       True SemDeDup drops vs *kept* members only; the prefix rule is a
@@ -544,7 +545,7 @@ def semdedup(
     BY DESIGN — size ``n_clusters ≳ corpus_size / 1e4`` (SemDeDup's
     own regime) and the same data sails through with bounded work.
     A collapsed assignment (one centroid soaking the corpus) raises at
-    any ``n_clusters``.  The guard is the shared ``check_cluster_cap``
+    any ``n_clusters``.  The guard is the shared ``check_group_cap``
     ids-only aggregate and runs AT PLAN-CONSTRUCTION TIME (one small
     Spark job, like ``dedup_minhash``/``er_resolve``'s guards; its
     lineage cut is reused by the pair join, so an executed query pays
@@ -568,7 +569,7 @@ def semdedup(
         .select("cluster", F.col("__v").alias("__cent"))
     )
     sims = base.join(F.broadcast(cent)).withColumn(
-        "__s", F.round(fn.cosine_similarity(F.col("__v"), F.col("__cent")), round_to)
+        "__s", F.round(fn.cosine_similarity(F.col("__v"), F.col("__cent")), fn.NDIGITS)
     )
     w = Window.partitionBy("__id").orderBy(F.col("__s").desc(), F.col("cluster").asc())
     assigned = (
@@ -592,9 +593,8 @@ def semdedup(
         # before the pair join, not run for days inside it.  One
         # ids-only aggregate; reuses the shared engine guard.
         assigned = assigned.transform(stage, eager=False)  # cap read + join share the cut
-        check_cluster_cap(
-            assigned, max_cluster_size, "semdedup",
-            node_col="__id", comp_col="cluster",
+        check_group_cap(
+            assigned, ["cluster"], max_cluster_size, "semdedup",
             remedy=(
                 "raise n_clusters so clusters stay under the cap "
                 "(SemDeDup's own regime: K ~ corpus_size / 1e4), raise "
@@ -649,7 +649,7 @@ def semdedup(
     prior = (
         a.join(b, pair_keys)
         .where(F.col("__jd") < F.col("__id"))
-        .withColumn("__ps", F.round(fn.cosine_similarity(F.col("__v"), F.col("__vj")), round_to))
+        .withColumn("__ps", F.round(fn.cosine_similarity(F.col("__v"), F.col("__vj")), fn.NDIGITS))
         .groupBy("__id")
         .agg(F.max("__ps").alias("max_prior_sim"))
     )
@@ -846,16 +846,18 @@ def simhash_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _cosine_topk(pairs: DataFrame, k: int, round_to: int) -> DataFrame:
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
     """Shared scoring tail of the cosine searches: over candidate
     ``pairs`` (query_id, __qv, neighbor_id, __cv) drop self-matches,
-    score the cosine rounded to ``round_to``, and keep each query's
+    score the cosine rounded to ``fn.NDIGITS``, and keep each query's
     ``k`` best (ties to the smaller neighbor_id).  Returns (query_id,
     neighbor_id, cosine)."""
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
         pairs.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(fn.cosine_similarity(F.col("__qv"), F.col("__cv")), round_to))
+        .withColumn(
+            "cosine", F.round(fn.cosine_similarity(F.col("__qv"), F.col("__cv")), fn.NDIGITS)
+        )
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
         .select("query_id", "neighbor_id", "cosine")
@@ -868,7 +870,6 @@ def ann_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors: broadcast the (small) query set
     against the corpus — one pass over the corpus, no shuffle of the
@@ -878,7 +879,7 @@ def ann_topk_bruteforce(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    return _cosine_topk(q.crossJoin(c), k, round_to)
+    return _cosine_topk(q.crossJoin(c), k)
 
 
 def _hyperplane_bits(vec: Column, n_planes: int, dim: int, seed: str = "plane") -> Column:
@@ -931,7 +932,6 @@ def ann_topk_lsh(
     k: int = 5,
     n_planes: int = 6,
     dim: int = 64,
-    round_to: int = 6,
 ) -> DataFrame:
     """Scale path: random-hyperplane LSH bucketing, cosine only within
     the query's bucket — the corpus-side shuffle keys on the bucket id,
@@ -950,7 +950,7 @@ def ann_topk_lsh(
             _hyperplane_bits(F.col(vec_col), n_planes, dim).alias("__bucket"),
         )
     )
-    return _cosine_topk(qb.join(cb, "__bucket"), k, round_to)
+    return _cosine_topk(qb.join(cb, "__bucket"), k)
 
 
 def _ivf_fit(corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int, seed: int):
@@ -1007,7 +1007,6 @@ def ann_topk_ivf(
     n_centroids: int = 8,
     n_probe: int = 2,
     seed: int = 42,
-    round_to: int = 6,
     index_path: str | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans-partition the corpus into
@@ -1045,7 +1044,7 @@ def ann_topk_ivf(
         .where(F.col("__pr") <= n_probe)
         .select("query_id", "__qv", "__cell")
     )
-    return _cosine_topk(F.broadcast(probes).join(assigned, "__cell"), k, round_to)
+    return _cosine_topk(F.broadcast(probes).join(assigned, "__cell"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1067,16 +1066,18 @@ def text_stats(df: DataFrame, text_col: str, lang: str = "en") -> list[Column]:
     n = F.size(toks)
     safe_n = F.greatest(n.cast("double"), F.lit(1.0))
     mean_len = F.round(
-        F.aggregate(toks, F.lit(0.0), lambda a, t: a + F.length(t).cast("double")) / safe_n, 6
+        F.aggregate(toks, F.lit(0.0), lambda a, t: a + F.length(t).cast("double")) / safe_n,
+        fn.NDIGITS,
     )
     stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     stop_ratio = F.round(
-        F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast("double") / safe_n, 6
+        F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast("double") / safe_n,
+        fn.NDIGITS,
     )
     punct_ratio = F.round(
         F.regexp_count(F.col(text_col), F.lit(r"[^\w\s]")).cast("double")
         / F.greatest(F.length(text_col).cast("double"), F.lit(1.0)),
-        6,
+        fn.NDIGITS,
     )
     return [
         n.alias("n_tokens"),
@@ -1266,7 +1267,7 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str, ngram_n: int = 2
                 F.lit(1.0)
                 - F.size(F.array_distinct(col)).cast("double")
                 / F.size(col).cast("double"),
-                6,
+                fn.NDIGITS,
             )
         )
 
@@ -1291,7 +1292,7 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str, ngram_n: int = 2
                     F.col("__tot") > 0,
                     F.col("__top").cast("double") / F.col("__tot").cast("double"),
                 ).otherwise(F.lit(0.0)),
-                6,
+                fn.NDIGITS,
             ).alias("top_ngram_frac"),
         )
     )
@@ -1413,12 +1414,11 @@ def char_entropy(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Per-document Shannon entropy of the normalized character
     distribution — a cheap gibberish/boilerplate signal (random byte
     soup scores high, single-char runs score near zero; natural text
-    sits in a narrow band).
+    sits in a narrow band).  Rounded to 4 places, not ``fn.NDIGITS``.
 
     Identity ``H = ln(n) - (Σ c·ln c) / n`` turns the whole computation
     into one explode + two keyed aggregates (char histogram, then per-doc
@@ -1429,7 +1429,7 @@ def char_entropy(
     fixed ``ch`` order (the normalized alphabet is ≤ ~40 symbols, so the
     collected array is tiny).  Rationale: ``F.sum`` over doubles is
     partition-order dependent, so a value sitting exactly on a
-    ``round(·, ndigits)`` boundary *could* flip with parallelism; the
+    ``round(·, 4)`` boundary *could* flip with parallelism; the
     fixed-order fold plus DuckDB's ``ORDER BY`` aggregate modifier in
     the oracle makes both engines compute the same left fold
     bit-identically at any partition count.  (Historical note: the
@@ -1462,7 +1462,7 @@ def char_entropy(
         .select(
             F.col(id_col),
             F.col("__n").alias("n_chars_norm"),
-            F.round(F.log("__n") - F.col("__s") / F.col("__n"), ndigits).alias("entropy"),
+            F.round(F.log("__n") - F.col("__s") / F.col("__n"), 4).alias("entropy"),
         )
     )
 
@@ -1488,7 +1488,6 @@ def script_mix(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-document character-class composition — the fractions of
     Latin letters, digits, whitespace, ASCII punctuation, Cyrillic,
@@ -1502,7 +1501,7 @@ def script_mix(
     ''))`` per class — pure Column expressions in ONE codegen'd
     projection over the scan: no explode, no shuffle, no UDF; 100 TB
     cost is a single pass over the text bytes.  Fractions are
-    ``round(count / n_chars, ndigits)``; empty/NULL text yields
+    ``round(count / n_chars, fn.NDIGITS)``; empty/NULL text yields
     n_chars=0 with all fractions 0.0.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
@@ -1515,7 +1514,7 @@ def script_mix(
     for c in counts.values():
         classified = c if classified is None else classified + c
     frac = lambda c: F.when(n == 0, F.lit(0.0)).otherwise(  # noqa: E731
-        F.round(c.cast("double") / n, ndigits)
+        F.round(c.cast("double") / n, fn.NDIGITS)
     )
     return df.select(
         F.col(id_col),
@@ -1539,7 +1538,8 @@ def collocations(
     Two corpus aggregates (unigrams, bigrams — both map-side combined
     over materialized token arrays), totals in-plan, then two joins on
     the term (AQE broadcasts the unigram vocabulary).  No ranking, so
-    cross-engine ``ln`` drift can't reorder anything; PMI is rounded.
+    cross-engine ``ln`` drift can't reorder anything; PMI is rounded to 4
+    places.
     """
     toks = df.select(
         fn.tokenize(fn.normalize(F.col(text_col))).alias("__toks")
@@ -1602,7 +1602,6 @@ def unigram_logprob(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Per-document mean unigram log-probability under the corpus's own
     unigram distribution — the perplexity-style quality signal CCNet
@@ -1613,7 +1612,8 @@ def unigram_logprob(
     unigram counts, a token->probability join (AQE broadcasts the
     vocabulary when it fits), one per-doc aggregate.  The corpus total
     is computed in-plan and broadcast — nothing collects.  Output
-    rounded so cross-engine ``ln`` summation drift cannot surface.
+    rounded to 4 places (not ``fn.NDIGITS``) so cross-engine ``ln``
+    summation drift cannot surface.
     """
     toks = df.select(
         F.col(id_col), F.explode(fn.tokenize(fn.normalize(F.col(text_col)))).alias("term")
@@ -1627,7 +1627,7 @@ def unigram_logprob(
     )
     return lp.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        F.round(F.avg("__lp"), ndigits).alias("avg_logprob"),
+        F.round(F.avg("__lp"), 4).alias("avg_logprob"),
     )
 
 
@@ -1800,7 +1800,6 @@ def tfidf_cosine_pairs(
     max_df_frac: float = 0.5,
     max_df: int | None = None,
     scale: int = 10**4,
-    ndigits: int = 6,
     allow_quadratic: bool = False,
 ) -> DataFrame:
     """Document pairs with TF-IDF **cosine** similarity >= threshold —
@@ -1928,7 +1927,7 @@ def tfidf_cosine_pairs(
             F.col("__dot").cast("double"),
             F.sqrt(F.col("__n1").cast("double")) * F.sqrt(F.col("__n2").cast("double")),
         ),
-        ndigits,
+        fn.NDIGITS,
     )
     return (
         dots.join(norms.select(F.col(id_col).alias("id1"), F.col("__s2").alias("__n1")), "id1")
@@ -1948,7 +1947,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    round_to: int = 4,
 ) -> DataFrame:
     """BM25 top-k retrieval — the actual ranking function behind the
     reference's Elasticsearch msearch join (Lucene practical scoring;
@@ -1964,9 +1962,9 @@ def bm25_topk(
     literal-free cross join of one row is avoided — it is folded into
     the postings); candidates come from the term-keyed postings join
     (an inverted index lookup, never all-pairs), and the final top-k is
-    one window per query id.  Ranking sorts on the ROUNDED score then
-    doc id so the order is reproducible across engines and summation
-    orders.
+    one window per query id.  Ranking sorts on the score ROUNDED to 4
+    places (not ``fn.NDIGITS``) then doc id so the order is
+    reproducible across engines and summation orders.
     """
     q_terms = (
         queries.select(
@@ -2004,7 +2002,7 @@ def bm25_topk(
         q_terms.join(postings, "__t")
         .join(dfreq, "__t")
         .groupBy("__qid", "__did")
-        .agg(F.round(F.sum(term_score), round_to).alias("score"))
+        .agg(F.round(F.sum(term_score), 4).alias("score"))
     )
     w = Window.partitionBy("__qid").orderBy(F.col("score").desc(), F.col("__did").asc())
     return (
@@ -2080,7 +2078,6 @@ def priority_sample(
     k: int,
     group_col: str | None = None,
     salt: str = "prio",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement — Duffield/
     Lund/Thorup *priority sampling* (JACM 2007): each row draws
@@ -2109,7 +2106,7 @@ def priority_sample(
     any k and whatever optimizer rules fire.
 
     Returns (group?, id, weight, priority, sample_rank) with
-    ``priority`` rounded to ``ndigits`` for reporting; ranking uses
+    ``priority`` rounded to ``fn.NDIGITS`` for reporting; ranking uses
     the full double with ``id`` as the deterministic tie-break.
     """
     if k < 1:
@@ -2127,7 +2124,7 @@ def priority_sample(
         *groups,
         F.col(id_col),
         F.col(weight_col).alias("weight"),
-        F.round("__pr", ndigits).alias("priority"),
+        F.round("__pr", fn.NDIGITS).alias("priority"),
         F.col("__rn").alias("sample_rank"),
     ]
     order = [F.col("__pr").desc(), F.col(id_col).asc()]
@@ -2339,7 +2336,6 @@ def temperature_sample(
     id_col: str,
     alpha: float = 0.7,
     salt: str = "ts",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Temperature-based mixture resampling (mT5 §3.1 / XLM-R style):
     downsample each group so the kept distribution follows
@@ -2369,7 +2365,7 @@ def temperature_sample(
     )
     rates = stats.select(
         group_col,
-        F.round(F.col("__r") / F.col("__rmax"), ndigits).alias("sample_rate"),
+        F.round(F.col("__r") / F.col("__rmax"), fn.NDIGITS).alias("sample_rate"),
     ).withColumn(
         # integer gate derived from the *rounded* rate: both engines
         # round-then-scale, so the threshold can't split on a pow() ulp
@@ -2557,7 +2553,6 @@ def nb_score(
     model: DataFrame,
     id_col: str,
     text_col: str,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Score documents with an :func:`nb_train` model: per (doc, label),
     ``log_prior + Σ_positions log_cond(token)``, tokens outside the
@@ -2571,7 +2566,7 @@ def nb_score(
     Returns (id, label, score, margin) for the
     argmax label; ``margin`` = lead over the runner-up label, the
     confidence value a pipeline thresholds on (null when the model has
-    a single label).
+    a single label); both rounded to 4 places, not ``fn.NDIGITS``.
 
     The float fold runs in fixed position order per (doc, label) — the
     same hash-stability rationale as :func:`char_entropy`.
@@ -2661,8 +2656,8 @@ def nb_score(
     return scored.select(
         F.col(id_col),
         "label",
-        F.round("score", ndigits).alias("score"),
-        F.round("margin", ndigits).alias("margin"),
+        F.round("score", 4).alias("score"),
+        F.round("margin", 4).alias("margin"),
     )
 
 
@@ -2671,7 +2666,6 @@ def dup_ngram_fraction(
     id_col: str,
     text_col: str,
     n: int = 5,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Cross-document duplicate n-gram rate: for each doc, the fraction
     of its distinct word ``n``-grams that also occur in at least one
@@ -2714,7 +2708,7 @@ def dup_ngram_fraction(
         .select(
             F.col(id_col),
             "n_grams",
-            F.round(F.col("__dup").cast("double") / F.col("n_grams"), ndigits).alias("dup_frac"),
+            F.round(F.col("__dup").cast("double") / F.col("n_grams"), fn.NDIGITS).alias("dup_frac"),
         )
     )
 
@@ -2724,7 +2718,6 @@ def ngram_novelty(
     id_col: str,
     text_col: str,
     n: int = 5,
-    ndigits: int = 6,
 ) -> DataFrame:
     """First-occurrence novelty: per doc, the fraction of its distinct
     word ``n``-grams whose FIRST corpus occurrence (min doc id) is this
@@ -2759,7 +2752,7 @@ def ngram_novelty(
         .select(
             F.col(id_col),
             "n_grams",
-            F.round(F.col("__nov") / F.col("n_grams"), ndigits).alias("novel_frac"),
+            F.round(F.col("__nov") / F.col("n_grams"), fn.NDIGITS).alias("novel_frac"),
         )
     )
 
@@ -2816,7 +2809,6 @@ def blocklist_hit_rate(
     text_col: str,
     terms: list,
     max_rate: float = 0.0,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Token-blocklist scoring (the C4 "bad words" gate): fraction of a
     doc's tokens that appear in ``terms`` (exact token match after
@@ -2846,7 +2838,7 @@ def blocklist_hit_rate(
     toks = fn.tokenize(fn.normalize(F.col(text_col)))
     hits = F.size(F.filter(toks, lambda t: t.isin(norm_terms)))
     n = F.size(toks)
-    rate = F.when(n > 0, F.round(hits.cast("double") / n.cast("double"), ndigits)).otherwise(
+    rate = F.when(n > 0, F.round(hits.cast("double") / n.cast("double"), fn.NDIGITS)).otherwise(
         F.lit(0.0)
     )
     return df.select(
@@ -2858,9 +2850,9 @@ def blocklist_hit_rate(
     )
 
 
-def _sq_dist(v: Column, c: Column, ndigits: int) -> Column:
+def _sq_dist(v: Column, c: Column) -> Column:
     """Squared euclidean distance of two equal-length double arrays,
-    folded left to right in index order and rounded to ``ndigits`` —
+    folded left to right in index order and rounded to ``fn.NDIGITS`` —
     the same IEEE fold in every engine, rounded before any comparison
     so cross-engine float noise cannot flip an argmin/argmax."""
     return F.round(
@@ -2869,7 +2861,7 @@ def _sq_dist(v: Column, c: Column, ndigits: int) -> Column:
             F.lit(0.0),
             lambda acc, x: acc + x,
         ),
-        ndigits,
+        fn.NDIGITS,
     )
 
 
@@ -2878,7 +2870,6 @@ def _lloyd(
     id_col: str,
     centroids: dict,
     n_iter: int,
-    ndigits: int,
     scale: int = 1_000_000,
 ):
     """Deterministic Lloyd's k-means over an ``(id_col, __s, __sub)``
@@ -2928,7 +2919,7 @@ def _lloyd(
             F.transform(
                 F.element_at(books, F.col("__s") + 1),
                 lambda c: F.struct(
-                    _sq_dist(F.col("__sub"), c["cv"], ndigits).alias("__d"),
+                    _sq_dist(F.col("__sub"), c["cv"]).alias("__d"),
                     c["cluster"].alias("cluster"),
                 ),
             )
@@ -2974,7 +2965,6 @@ def kmeans_assign(
     n_iter: int = 3,
     salt: str = "km",
     scale: int = 1_000_000,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Deterministic Lloyd's KMeans over an embedding column — the real
     iterative-refinement upgrade of :func:`semdedup`'s one-shot
@@ -3011,7 +3001,7 @@ def kmeans_assign(
     # one subspace: a literal __s folds the codebook pick away
     sub = base.select("__id", F.lit(0).alias("__s"), F.col("__v").alias("__sub"))
     cents = {0: {ci: list(r["__v"]) for ci, r in enumerate(init)}}
-    asg, _ = _lloyd(sub, "__id", cents, n_iter, ndigits, scale)
+    asg, _ = _lloyd(sub, "__id", cents, n_iter, scale)
     return asg.select(F.col("__id").alias(id_col), "cluster", "dist")
 
 
@@ -3079,7 +3069,6 @@ def kcenter_coreset(
     id_col: str,
     vec_col: str,
     k: int = 8,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Greedy k-center / farthest-point sampling over an embedding
     column (Gonzalez 1985; the coreset selection of Sener & Savarese
@@ -3091,7 +3080,7 @@ def kcenter_coreset(
     coverage).
 
     Deterministic: no RNG anywhere; distances are rounded to
-    ``ndigits`` *before* every comparison (the :func:`kmeans_assign`
+    ``fn.NDIGITS`` *before* every comparison (the :func:`kmeans_assign`
     convention, so cross-engine float noise can't flip an argmax) and
     ties break on the smaller id.  Returns the ``k`` selected rows as
     (id, sel_rank, dist) where ``dist`` is the point's min distance to
@@ -3121,7 +3110,7 @@ def kcenter_coreset(
     have_mind = False
     for r in range(2, k + 1):
         cent = F.array(*[F.lit(float(x)) for x in center])
-        step = _sq_dist(F.col("__v"), cent, ndigits)
+        step = _sq_dist(F.col("__v"), cent)
         mind = F.least(F.col("__mind"), step) if have_mind else step
         base = base.select("__id", "__v", mind.alias("__mind")).transform(stage, eager=True)
         have_mind = True
@@ -3147,7 +3136,6 @@ def mmr_rerank(
     vec_col: str,
     k: int = 8,
     lam: float = 0.7,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): greedily pick ``k`` items maximizing
@@ -3157,7 +3145,7 @@ def mmr_rerank(
     labeling batch), killing the near-duplicate pile-up pure relevance
     ranking produces.
 
-    Deterministic: similarities and the MMR score round to ``ndigits``
+    Deterministic: similarities and the MMR score round to ``fn.NDIGITS``
     *before* every comparison (the :func:`kmeans_assign` convention),
     ties to the smaller id; first pick is pure-relevance argmax (the
     running max-sim starts at 0).  Same shape as
@@ -3179,7 +3167,7 @@ def mmr_rerank(
     ).transform(stage, eager=True)
     picks = []
     for r in range(1, k + 1):
-        mmr = F.round(F.lit(lam) * F.col("__rel") - F.lit(1.0 - lam) * F.col("__ms"), ndigits)
+        mmr = F.round(F.lit(lam) * F.col("__rel") - F.lit(1.0 - lam) * F.col("__ms"), fn.NDIGITS)
         top = (
             base.withColumn("__mmr", mmr)
             .orderBy(F.col("__mmr").desc(), F.col("__id").asc())
@@ -3197,7 +3185,7 @@ def mmr_rerank(
                 "__rel",
                 "__v",
                 F.greatest(
-                    F.col("__ms"), F.round(fn.cosine_similarity(F.col("__v"), cvec), ndigits)
+                    F.col("__ms"), F.round(fn.cosine_similarity(F.col("__v"), cvec), fn.NDIGITS)
                 ).alias("__ms"),
             )
             .transform(stage, eager=True)
@@ -3218,7 +3206,6 @@ def _pq_fit(
     k: int,
     n_iter: int,
     salt: str,
-    ndigits: int,
 ):
     """Shared front of :func:`pq_encode` and :func:`ann_pq`: cast the
     vectors to doubles, check the dimension splits into ``m``
@@ -3279,7 +3266,7 @@ def _pq_fit(
     centroids: dict = {s: {} for s in range(m)}
     for r in init_rows:
         centroids[r["__s"]][r["__rn"] - 1] = list(r["__sub"])
-    return (*_lloyd(sub, id_col, centroids, n_iter, ndigits), dsub)
+    return (*_lloyd(sub, id_col, centroids, n_iter), dsub)
 
 
 def pq_encode(
@@ -3290,7 +3277,6 @@ def pq_encode(
     k: int = 16,
     n_iter: int = 2,
     salt: str = "pq",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Product quantization (Jégou et al. 2011) — the compression
     behind FAISS-style IVF-PQ and the standard way a 100 TB vector
@@ -3313,7 +3299,7 @@ def pq_encode(
     the codes is a broadcast of the m×k codebook — the ann_ivf pattern
     with a 64×-smaller corpus side.
     """
-    fit = _pq_fit(df, id_col, vec_col, m, k, n_iter, salt, ndigits)
+    fit = _pq_fit(df, id_col, vec_col, m, k, n_iter, salt)
     if fit is None:
         return df.sparkSession.createDataFrame(
             [], f"{id_col} long, codes string, recon_err double"
@@ -3328,7 +3314,7 @@ def pq_encode(
                 lambda x: x["v"],
             )
         ).alias("codes"),
-        F.round(fn.ordered_sum(F.col("__s"), F.col("dist")), ndigits).alias("recon_err"),
+        F.round(fn.ordered_sum(F.col("__s"), F.col("dist")), fn.NDIGITS).alias("recon_err"),
     )
 
 
@@ -3343,7 +3329,6 @@ def ann_pq(
     n_iter: int = 2,
     topk: int = 5,
     salt: str = "pq",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k search over product-quantized
     codes (Jégou et al. 2011) — the serving half of :func:`pq_encode`:
@@ -3365,7 +3350,7 @@ def ann_pq(
     if topk < 1:
         raise ValueError(f"topk must be >= 1, got {topk}")
     spark = df.sparkSession
-    fit = _pq_fit(df, id_col, vec_col, m, k, n_iter, salt, ndigits)
+    fit = _pq_fit(df, id_col, vec_col, m, k, n_iter, salt)
     if fit is None:
         return spark.createDataFrame([], f"q_id long, {id_col} long, adist double")
     asg, cents_by_s, dsub = fit
@@ -3386,10 +3371,10 @@ def ann_pq(
                 tbl_rows.append((q["qid"], s, ci, d))
     tbl = spark.createDataFrame(tbl_rows, "qid long, s int, cluster int, qd double")
     pairs = codes.join(F.broadcast(tbl), ["s", "cluster"]).select(
-        "qid", F.col(id_col), "s", F.round("qd", ndigits).alias("__qd")
+        "qid", F.col(id_col), "s", F.round("qd", fn.NDIGITS).alias("__qd")
     )
     ad = pairs.groupBy("qid", id_col).agg(
-        F.round(fn.ordered_sum(F.col("s"), F.col("__qd")), ndigits).alias("adist")
+        F.round(fn.ordered_sum(F.col("s"), F.col("__qd")), fn.NDIGITS).alias("adist")
     )
     w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col(id_col).asc())
     return (
@@ -3403,7 +3388,6 @@ def quantize_embeddings(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-vector int8 quantization for embedding storage: each vector
     is mapped to ``q_i = floor((x_i - min) / scale + 0.5)`` in 0..255
@@ -3432,10 +3416,10 @@ def quantize_embeddings(
     deq = F.zip_with(q, v, lambda qq, x: F.abs(qq.cast("double") * scale + lo - x))
     return df.select(
         F.col(id_col),
-        F.round(scale, ndigits).alias("scale"),
-        F.round(lo, ndigits).alias("offset"),
+        F.round(scale, fn.NDIGITS).alias("scale"),
+        F.round(lo, fn.NDIGITS).alias("offset"),
         F.to_json(q).alias("q"),
-        F.round(F.array_max(deq), ndigits).alias("max_err"),
+        F.round(F.array_max(deq), fn.NDIGITS).alias("max_err"),
     )
 
 
@@ -3501,7 +3485,6 @@ def perplexity_buckets(
     text_col: str,
     lang_col: str,
     n_buckets: int = 3,
-    ndigits: int = 4,
 ) -> DataFrame:
     """CCNet-style per-language quality bands (Wenzek et al. 2020): rank
     each language's documents by LM score and cut into ``n_buckets``
@@ -3517,7 +3500,8 @@ def perplexity_buckets(
     interpolation differs.  Docs with < 2 tokens have no bigrams and
     are absent, inherited from the scorer.
 
-    Returns (id, lang, avg_bigram_lp, bucket, band) — bucket 1..n,
+    Returns (id, lang, avg_bigram_lp, bucket, band) — the score rounded
+    to 4 places like the scorer's, bucket 1..n,
     band head/middle/tail when ``n_buckets`` is 3 else ``str(bucket)``.
 
     Scale posture: the scorer's keyed aggregates plus ONE window
@@ -3526,7 +3510,7 @@ def perplexity_buckets(
     a salted partition key and merge band boundaries, or accept the
     documented single-reducer-per-language cost.
     """
-    lp = bigram_logprob(df, id_col, text_col, ndigits=ndigits)
+    lp = bigram_logprob(df, id_col, text_col)
     labeled = lp.join(df.select(F.col(id_col), F.col(lang_col).alias("lang")), id_col)
     w = Window.partitionBy("lang").orderBy(
         F.col("avg_bigram_lp").desc(), F.col(id_col).asc()
@@ -3668,19 +3652,19 @@ def quality_filter(
     mean_len = F.round(
         F.aggregate(F.col("__toks"), F.lit(0.0), lambda a, t: a + F.length(t).cast("double"))
         / safe_n,
-        6,
+        fn.NDIGITS,
     )
     stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     stop_hits = F.size(F.filter(F.col("__toks"), lambda t: F.array_contains(stop, t)))
     symbol_ratio = F.round(
-        F.regexp_count(F.col("__text"), F.lit(QUALITY_SYMBOLS)).cast("double") / safe_n, 6
+        F.regexp_count(F.col("__text"), F.lit(QUALITY_SYMBOLS)).cast("double") / safe_n, fn.NDIGITS
     )
     dup_frac = F.when(F.size("__grams") <= 0, F.lit(0.0)).otherwise(
         F.round(
             F.lit(1.0)
             - F.size(F.array_distinct("__grams")).cast("double")
             / F.size("__grams").cast("double"),
-            6,
+            fn.NDIGITS,
         )
     )
     stats = base.select(
@@ -3893,7 +3877,6 @@ def source_mix(
     source_col: str = "source",
     lang_col: str = "lang",
     text_col: str = "text",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Corpus mixture report: per (source, lang) document counts, token
     and character volume, and share of the corpus — the first table any
@@ -3919,7 +3902,7 @@ def source_mix(
             "n_docs",
             "n_tokens",
             "n_chars",
-            F.round(F.col("n_docs") / F.col("__total"), ndigits).alias("doc_share"),
+            F.round(F.col("n_docs") / F.col("__total"), fn.NDIGITS).alias("doc_share"),
         )
     )
 
@@ -3928,7 +3911,6 @@ def bigram_logprob(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Per-document mean bigram conditional log-probability
     ``mean(ln c(w_{i-1} w_i) / c(w_{i-1}·))`` under the corpus's own
@@ -3947,7 +3929,8 @@ def bigram_logprob(
     doc in fixed position order (same hash-stability rationale as
     :func:`char_entropy`).  Docs with < 2 tokens have no bigrams and
     are absent from the output, matching the oracle.
-    Returns (id, n_bigrams, avg_bigram_lp).
+    Returns (id, n_bigrams, avg_bigram_lp), the mean rounded to 4
+    places (not ``fn.NDIGITS``).
     """
     arr = fn.tokenize(fn.normalize(F.col(text_col)))
     pairs = F.zip_with(
@@ -3982,7 +3965,7 @@ def bigram_logprob(
     return folded.select(
         F.col(id_col),
         "n_bigrams",
-        F.round(F.col("__s") / F.col("n_bigrams"), ndigits).alias("avg_bigram_lp"),
+        F.round(F.col("__s") / F.col("n_bigrams"), 4).alias("avg_bigram_lp"),
     )
 
 
@@ -3991,7 +3974,6 @@ def kn_bigram_logprob(
     id_col: str,
     text_col: str,
     discount: float = 0.75,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-document average log-probability under an interpolated
     Kneser-Ney bigram model trained on the corpus itself (Kneser &
@@ -4066,7 +4048,7 @@ def kn_bigram_logprob(
     return folded.select(
         F.col(id_col),
         "n_bigrams",
-        F.round(F.col("__s") / F.col("n_bigrams"), ndigits).alias("avg_kn_lp"),
+        F.round(F.col("__s") / F.col("n_bigrams"), fn.NDIGITS).alias("avg_kn_lp"),
     )
 
 
@@ -4077,7 +4059,6 @@ def dsir_weights(
     text_col: str,
     buckets: int = 8192,
     alpha: float = 1.0,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al.
     2023): score every ``raw`` document by how much more likely its
@@ -4163,7 +4144,7 @@ def dsir_weights(
             F.sum("__n").alias("n_feats"),
             fn.ordered_sum(F.col("__b"), F.col("__w")).alias("__s"),
         )
-        .select(F.col(id_col), "n_feats", F.round("__s", ndigits).alias("logweight"))
+        .select(F.col(id_col), "n_feats", F.round("__s", fn.NDIGITS).alias("logweight"))
     )
 
 
@@ -4219,7 +4200,6 @@ def bloom_decontaminate(
     m_bits: int = 1 << 18,
     k: int = 4,
     threshold: float = 0.5,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Benchmark decontamination through a Bloom filter: build
     :func:`bloom_bits` from the benchmark's word ``n``-grams, probe
@@ -4285,7 +4265,7 @@ def bloom_decontaminate(
         .select(
             F.col(id_col),
             "n_grams",
-            F.round(F.col("__h") / F.col("n_grams"), ndigits).alias("hit_frac"),
+            F.round(F.col("__h") / F.col("n_grams"), fn.NDIGITS).alias("hit_frac"),
             (F.col("__h") / F.col("n_grams") >= threshold).alias("flagged"),
         )
     )
@@ -4536,14 +4516,14 @@ def extract_audio_features(
                 if len(x) > 1
                 else 0.0
             )
-            return round(rms, 6), round(zcr, 6)
+            return round(rms, fn.NDIGITS), round(zcr, fn.NDIGITS)
         if real_decode:
             raise NotImplementedError(
                 "payload is not a decodable WAV and soundfile is unavailable — "
                 "plug a codec in here when deploying"
             )
         d = hashlib.md5(b).digest()
-        return round(d[0] / 255.0, 6), round(d[1] / 255.0, 6)
+        return round(d[0] / 255.0, fn.NDIGITS), round(d[1] / 255.0, fn.NDIGITS)
 
     def _batches(it):
         for pdf in it:
@@ -4775,14 +4755,13 @@ def group_centroid(
     group_col: str,
     vec_col: str,
     qscale: float = 1e6,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-group mean embedding (class centroids for semdedup seeding,
     label prototypes, cluster summaries) whose values are HASH-EXACT
     cross-engine: each component is quantized to ``round(x*qscale)``
     BIGINT before summing, so the per-(group, dim) totals are exact
     integers under any partitioning, and the mean is the fixed double
-    chain ``(sum/qscale)/n`` rounded to ``ndigits``.
+    chain ``(sum/qscale)/n`` rounded to ``fn.NDIGITS``.
 
     Scale shape: posexplode to (group, dim) rows, ONE map-side-combined
     aggregate (long sums combine in the map stage), then a per-group
@@ -4810,7 +4789,7 @@ def group_centroid(
         "__i",
         "__n",
         F.round(
-            (F.col("__s") / F.lit(float(qscale))) / F.col("__n"), ndigits
+            (F.col("__s") / F.lit(float(qscale))) / F.col("__n"), fn.NDIGITS
         ).alias("__c"),
     )
     return (
@@ -4875,7 +4854,8 @@ def source_overlap(
     decontamination (a high off-diagonal cell means two "independent"
     sources share boilerplate or mirrored content and will double-count
     in training).  Returns (src_a, src_b, grams_a, shared, overlap)
-    with overlap = round(shared / grams_a, 6), a != b.
+    with overlap = round(shared / grams_a, 6), a != b.  A NULL source
+    is a source of its own, as ``groupBy`` forms it.
 
     Scale shape: one distinct (group, gram) projection, then ONE
     map-side-combined groupBy(gram) collecting the gram's source SET —
@@ -4896,16 +4876,18 @@ def source_overlap(
         toks.select("src", F.explode(word_ngrams_from_tokens(F.col("__toks"), n)).alias("g"))
         .distinct()
     )
-    per_src = grams.groupBy("src").agg(F.count(F.lit(1)).alias("grams_a"))
-    by_gram = grams.groupBy("g").agg(F.collect_set("src").alias("__ss"))
+    per_src = grams.groupBy(F.col("src").alias("src_a")).agg(F.count(F.lit(1)).alias("grams_a"))
+    # the set holds (src) structs: collect_set skips a NULL value, not
+    # a struct whose field is NULL
+    by_gram = grams.groupBy("g").agg(F.collect_set(F.struct("src")).alias("__ss"))
     pairs = by_gram.select(
         F.explode(
             F.flatten(
                 F.transform(
                     "__ss",
                     lambda a: F.transform(
-                        F.filter("__ss", lambda b: b != a),
-                        lambda b: F.struct(a.alias("src_a"), b.alias("src_b")),
+                        F.filter("__ss", lambda b: ~b["src"].eqNullSafe(a["src"])),
+                        lambda b: F.struct(a["src"].alias("src_a"), b["src"].alias("src_b")),
                     ),
                 )
             )
@@ -4913,13 +4895,13 @@ def source_overlap(
     ).select("p.src_a", "p.src_b")
     shared = pairs.groupBy("src_a", "src_b").agg(F.count(F.lit(1)).alias("shared"))
     return (
-        shared.join(F.broadcast(per_src), shared.src_a == per_src.src, "inner")
+        broadcast_back(shared, per_src, ["src_a"])
         .select(
             "src_a",
             "src_b",
             "grams_a",
             "shared",
-            F.round(F.col("shared") / F.col("grams_a"), 6).alias("overlap"),
+            F.round(F.col("shared") / F.col("grams_a"), fn.NDIGITS).alias("overlap"),
         )
     )
 
@@ -4931,7 +4913,6 @@ def boilerplate_lines(
     lines_col: str,
     min_share: float = 0.5,
     min_docs: int = 2,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-group boilerplate detection (CCNet, Wenzek et al. 2020 §4.1;
     the measurement half of C4's line dedup): a line is boilerplate
@@ -4971,7 +4952,7 @@ def boilerplate_lines(
     )
     return (
         broadcast_back(freq, group_docs, [group_col])
-        .withColumn("share", F.round(F.col("doc_freq") / F.col("group_docs"), ndigits))
+        .withColumn("share", F.round(F.col("doc_freq") / F.col("group_docs"), fn.NDIGITS))
         .where(
             (F.col("doc_freq") >= min_docs)
             & (F.col("doc_freq") >= F.col("group_docs") * F.lit(min_share))
@@ -4986,7 +4967,6 @@ def oov_rate(
     id_col: str,
     text_col: str,
     word_col: str = "token",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-document out-of-vocabulary rate against a reference
     vocabulary (:func:`build_vocab` output, a tokenizer's word list, or
@@ -5026,7 +5006,7 @@ def oov_rate(
             "n_oov",
             F.when(
                 F.col("n_tokens") > 0,
-                F.round(F.col("n_oov") / F.col("n_tokens"), ndigits),
+                F.round(F.col("n_oov") / F.col("n_tokens"), fn.NDIGITS),
             ).alias("oov_rate"),
         )
     )
@@ -5115,7 +5095,6 @@ def pca_top(
     dim: int,
     scale: int = 1000,
     n_iter: int = 30,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Top principal component of an embedding column — deterministic,
     hash-exact PCA for corpus-level embedding analytics (dominant
@@ -5221,7 +5200,7 @@ def pca_top(
             raise ValueError("pca_top: zero covariance (constant vectors?)")
         x = [y[i] / norm for i in range(d)]
     lam = norm / float(n * n * scale * scale)
-    rows = [(i, round(x[i], ndigits), round(lam, ndigits)) for i in range(d)]
+    rows = [(i, round(x[i], fn.NDIGITS), round(lam, fn.NDIGITS)) for i in range(d)]
     return df.sparkSession.createDataFrame(
         rows, "dim int, loading double, eigenvalue double"
     )
@@ -5231,7 +5210,6 @@ def zipf_fit(
     df: DataFrame,
     text_col: str,
     top_n: int = 100,
-    round_to: int = 6,
 ) -> DataFrame:
     """Zipf rank-frequency diagnostic: OLS of ln(freq) on ln(rank) over
     the corpus's ``top_n`` most frequent tokens.  Natural text sits
@@ -5250,8 +5228,6 @@ def zipf_fit(
     """
     if top_n < 3:
         raise ValueError(f"zipf_fit: top_n must be >= 3, got {top_n}")
-    from backend_spark import functions as fn
-
     toks = df.select(
         F.explode(fn.tokenize(fn.normalize(F.col(text_col)))).alias("token")
     ).where(F.col("token") != "")
@@ -5296,12 +5272,12 @@ def zipf_fit(
     den_y = n * F.col("__syy") - F.col("__sy") * F.col("__sy")
     return stats.select(
         "n_terms",
-        F.round(slope, round_to).alias("slope"),
+        F.round(slope, fn.NDIGITS).alias("slope"),
         F.round(
-            F.when(n > 0, (F.col("__sy") - slope * F.col("__sx")) / n), round_to
+            F.when(n > 0, (F.col("__sy") - slope * F.col("__sx")) / n), fn.NDIGITS
         ).alias("intercept"),
         F.round(
-            F.when((den > 0) & (den_y > 0), (num * num) / (den * den_y)), round_to
+            F.when((den > 0) & (den_y > 0), (num * num) / (den * den_y)), fn.NDIGITS
         ).alias("r2"),
     )
 
@@ -5372,7 +5348,6 @@ def dup_report(
     bands: int = 4,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    round_to: int = 6,
 ) -> DataFrame:
     """Corpus duplication audit — the headline "how duplicated are we"
     table a crawl snapshot is judged by BEFORE anyone runs the actual
@@ -5409,6 +5384,6 @@ def dup_report(
         F.round(
             (F.col("size") * F.col("n_clusters")).cast("double")
             / F.col("__n").cast("double"),
-            round_to,
+            fn.NDIGITS,
         ).alias("share"),
     )

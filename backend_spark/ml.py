@@ -223,7 +223,6 @@ def classifier_eval(
     df: DataFrame,
     gold_col: str,
     pred_col: str,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Per-label evaluation of a (gold, prediction) pair — the report
     card for :func:`~backend_spark.llm.nb_score`,
@@ -236,7 +235,7 @@ def classifier_eval(
     support, pred_cnt, tp, precision, recall, f1).  Zero denominators
     score 0.0 (sklearn's ``zero_division=0`` convention); ``f1`` is
     computed from the *unrounded* precision/recall, then all three
-    round to ``ndigits``.
+    round to ``fn.NDIGITS``.
 
     Scale: ONE keyed count over (gold, pred) pairs — ≤ |labels|²
     rows — and everything else is arithmetic on that tiny table.
@@ -279,9 +278,9 @@ def classifier_eval(
         "support",
         "pred_cnt",
         "tp",
-        F.round(prec, ndigits).alias("precision"),
-        F.round(rec, ndigits).alias("recall"),
-        F.round(f1, ndigits).alias("f1"),
+        F.round(prec, fn.NDIGITS).alias("precision"),
+        F.round(rec, fn.NDIGITS).alias("recall"),
+        F.round(f1, fn.NDIGITS).alias("f1"),
     )
 
 
@@ -394,7 +393,6 @@ def _ridge_fit(
     label_col: str,
     l2: float,
     qscale: float,
-    ndigits: int,
     name: str,
     max_groups: int | None = None,
 ) -> DataFrame:
@@ -402,7 +400,7 @@ def _ridge_fit(
     :func:`ridge_train_by` (``keys=[group_col]``): exact quantized moment
     sums per ``keys`` group, then the pinned d=2 Cramer solve per group
     on the driver.  Returns (*keys, feature, weight), groups in key
-    order (nulls last), weights rounded to ``ndigits``; errors name
+    order (nulls last), weights rounded to ``fn.NDIGITS``; errors name
     ``name`` (and the group).
 
     Each value is quantized to ``round(x * qscale)`` as BIGINT; every
@@ -477,7 +475,7 @@ def _ridge_fit(
     # round via F.round (HALF_UP), not Python round (half-even) — the
     # DuckDB oracles' round() is away-from-zero, matching F.round
     return df.sparkSession.createDataFrame(out, schema).select(
-        *keys, "feature", F.round("weight", ndigits).alias("weight")
+        *keys, "feature", F.round("weight", fn.NDIGITS).alias("weight")
     )
 
 
@@ -487,7 +485,6 @@ def ridge_train(
     label_col: str,
     l2: float = 1e-3,
     qscale: float = 1e6,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Closed-form normal-equations ridge regression whose weights are
     HASH-EXACT across engines — the deterministic linear counterpart of
@@ -501,7 +498,7 @@ def ridge_train(
     The 3x3 solve (2 features + intercept; Cramer's rule with a pinned
     parenthesization) then runs on correctly-rounded doubles derived
     from those integers, an identical IEEE-754 expression tree in both
-    engines; weights are rounded to ``ndigits``.  Ridge ``l2`` is added
+    engines; weights are rounded to ``fn.NDIGITS``.  Ridge ``l2`` is added
     to the non-intercept diagonal only.
 
     Scale shape: ONE map-side-combined aggregate over the data (10
@@ -512,7 +509,7 @@ def ridge_train(
     Returns (feature, weight): ``__intercept__`` first, then
     ``feature_cols`` in order.
     """
-    return _ridge_fit(df, [], feature_cols, label_col, l2, qscale, ndigits, "ridge_train")
+    return _ridge_fit(df, [], feature_cols, label_col, l2, qscale, "ridge_train")
 
 
 def ridge_score(
@@ -521,11 +518,10 @@ def ridge_score(
     label_col: str,
     l2: float = 1e-3,
     qscale: float = 1e6,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Train :func:`ridge_train` on ``df`` and score every row with the
-    ROUNDED weights: ``pred = round(w0 + w1*x1 + w2*x2, ndigits)`` and
-    ``resid = round(label - pred, ndigits)``.  Because the weights are
+    ROUNDED weights: ``pred = round(w0 + w1*x1 + w2*x2, fn.NDIGITS)`` and
+    ``resid = round(label - pred, fn.NDIGITS)``.  Because the weights are
     rounded before scoring, both engines multiply identical doubles in
     an identical order — the whole train→score path is hash-exact (the
     gap VERDICT r8 flagged for build_model/apply_model).
@@ -538,18 +534,18 @@ def ridge_score(
     ``localCheckpoint`` first, as ``er_pipeline`` does.
     """
     w = {r["feature"]: r["weight"] for r in ridge_train(
-        df, feature_cols, label_col, l2=l2, qscale=qscale, ndigits=ndigits
+        df, feature_cols, label_col, l2=l2, qscale=qscale
     ).collect()}
     pred = F.round(
         F.lit(w["__intercept__"])
         + F.lit(w[feature_cols[0]]) * F.col(feature_cols[0]).cast("double")
         + F.lit(w[feature_cols[1]]) * F.col(feature_cols[1]).cast("double"),
-        ndigits,
+        fn.NDIGITS,
     )
     return df.select(
         "*",
         pred.alias("pred"),
-        F.round(F.col(label_col).cast("double") - pred, ndigits).alias("resid"),
+        F.round(F.col(label_col).cast("double") - pred, fn.NDIGITS).alias("resid"),
     )
 
 
@@ -558,7 +554,6 @@ def ridge_apply(
     weights,
     feature_cols: list[str],
     out_col: str = "pred",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Score rows with a persisted/collected ridge model — the
     :func:`apply_model` counterpart for the hash-exact linear path
@@ -581,7 +576,7 @@ def ridge_apply(
     pred = F.lit(w["__intercept__"])
     for c in feature_cols:
         pred = pred + F.lit(w[c]) * F.col(c).cast("double")
-    return df.withColumn(out_col, F.round(pred, ndigits))
+    return df.withColumn(out_col, F.round(pred, fn.NDIGITS))
 
 
 def threshold_sweep(
@@ -589,7 +584,6 @@ def threshold_sweep(
     score_col: str,
     label_col: str,
     thresholds: list[float],
-    ndigits: int = 6,
 ) -> DataFrame:
     """Precision/recall/F1 at each decision threshold — the PR-curve
     table that picks the operating point for a link classifier
@@ -623,9 +617,9 @@ def threshold_sweep(
     f1 = F.when(prec + rec > 0, (F.lit(2.0) * prec * rec) / (prec + rec)).otherwise(F.lit(0.0))
     return agg.select(
         "threshold", "tp", "fp", "fn_",
-        F.round(prec, ndigits).alias("precision"),
-        F.round(rec, ndigits).alias("recall"),
-        F.round(f1, ndigits).alias("f1"),
+        F.round(prec, fn.NDIGITS).alias("precision"),
+        F.round(rec, fn.NDIGITS).alias("recall"),
+        F.round(f1, fn.NDIGITS).alias("f1"),
     )
 
 
@@ -634,7 +628,6 @@ def calibration_bins(
     score_col: str,
     label_col: str,
     n_bins: int = 10,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Reliability-diagram table: scores in [0, 1] bucket into
     ``n_bins`` fixed-width bins; each bin reports its count, mean
@@ -670,8 +663,8 @@ def calibration_bins(
     return agg.select(
         "bin",
         "n",
-        F.round((F.col("__sq") / F.lit(1e6)) / F.col("n"), ndigits).alias("mean_score"),
-        F.round(F.col("__pos") / F.col("n"), ndigits).alias("pos_rate"),
+        F.round((F.col("__sq") / F.lit(1e6)) / F.col("n"), fn.NDIGITS).alias("mean_score"),
+        F.round(F.col("__pos") / F.col("n"), fn.NDIGITS).alias("pos_rate"),
     )
 
 
@@ -679,7 +672,6 @@ def auc_score(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    ndigits: int = 6,
 ) -> DataFrame:
     """EXACT ROC-AUC via the tie-aware Mann-Whitney rank statistic —
     the single-number ranking metric :func:`build_model` selects on,
@@ -699,7 +691,7 @@ def auc_score(
     error; rows with a NULL score or label are dropped (a NULL score
     has no rank).
     """
-    s = F.round(F.col(score_col).cast("double"), 6)
+    s = F.round(F.col(score_col).cast("double"), fn.NDIGITS)
     y = F.col(label_col).cast("double")
     per = (
         df.where(F.col(score_col).isNotNull() & F.col(label_col).isNotNull())
@@ -724,7 +716,7 @@ def auc_score(
             (F.col("__s2").cast("double")
              - F.col("n_pos").cast("double") * (F.col("n_pos") + 1).cast("double"))
             / (F.lit(2.0) * F.col("n_pos").cast("double") * F.col("n_neg").cast("double")),
-            ndigits,
+            fn.NDIGITS,
         ),
     )
     return agg.select(auc.alias("auc"), "n_pos", "n_neg")
@@ -736,7 +728,6 @@ def psi(
     score_col: str,
     n_bins: int = 10,
     eps: float = 1e-6,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Population Stability Index per bin — the standard score-drift
     monitor between a reference (training-time) score distribution and
@@ -755,7 +746,7 @@ def psi(
     the ≤ ``n_bins``-row bin table — both corpora stream through one
     aggregate each.  ``ln`` is the one function with cross-engine
     1-ulp wobble (same accepted class as exp in lr_train); terms are
-    rounded to ``ndigits``.
+    rounded to ``fn.NDIGITS``.
 
     Returns (bin, p_expected, p_actual, psi_term).
     """
@@ -796,9 +787,9 @@ def psi(
     )
     return jj.select(
         "bin",
-        F.round(p, ndigits).alias("p_expected"),
-        F.round(q, ndigits).alias("p_actual"),
-        F.round((p - q) * F.log(p / q), ndigits).alias("psi_term"),
+        F.round(p, fn.NDIGITS).alias("p_expected"),
+        F.round(q, fn.NDIGITS).alias("p_actual"),
+        F.round((p - q) * F.log(p / q), fn.NDIGITS).alias("psi_term"),
     )
 
 
@@ -809,7 +800,6 @@ def ridge_train_by(
     label_col: str,
     l2: float = 1e-3,
     qscale: float = 1e6,
-    ndigits: int = 6,
     max_groups: int = 100_000,
 ) -> DataFrame:
     """Per-group :func:`ridge_train` — one hash-exact linear model per
@@ -828,7 +818,7 @@ def ridge_train_by(
     two features, per group.
     """
     return _ridge_fit(
-        df, [group_col], feature_cols, label_col, l2, qscale, ndigits, "ridge_train_by", max_groups
+        df, [group_col], feature_cols, label_col, l2, qscale, "ridge_train_by", max_groups
     )
 
 
@@ -838,7 +828,6 @@ def ridge_apply_by(
     group_col: str,
     feature_cols: list[str],
     out_col: str = "pred",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Score with :func:`ridge_train_by` output: the per-group weight
     triples pivot to one row per group and BROADCAST-join back on the
@@ -871,7 +860,7 @@ def ridge_apply_by(
     )
     return (
         broadcast_back(df, w, [group_col])
-        .withColumn(out_col, F.round(pred, ndigits))
+        .withColumn(out_col, F.round(pred, fn.NDIGITS))
         .drop("__w0", "__w1", "__w2")
     )
 
@@ -881,7 +870,6 @@ def isotonic_calibrate(
     score_col: str,
     label_col: str,
     n_bins: int = 100,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Isotonic (PAV) probability calibration of classifier scores —
     the standard nonparametric step between a ranker's raw scores and
@@ -957,10 +945,12 @@ def isotonic_calibrate(
         bins.join(iso, "bin")
         .select(
             "bin",
-            F.round(F.col("bin").cast("double") / n_bins, ndigits).alias("score_lo"),
+            F.round(F.col("bin").cast("double") / n_bins, fn.NDIGITS).alias("score_lo"),
             "n",
-            F.round(F.col("__s").cast("double") / F.col("n").cast("double"), ndigits).alias("y_rate"),
-            F.round(F.col("__iso"), ndigits).alias("calibrated"),
+            F.round(
+                F.col("__s").cast("double") / F.col("n").cast("double"), fn.NDIGITS
+            ).alias("y_rate"),
+            F.round(F.col("__iso"), fn.NDIGITS).alias("calibrated"),
         )
     )
 
@@ -971,7 +961,6 @@ def ece(
     label_col: str,
     n_bins: int = 10,
     scale: int = 1_000_000,
-    round_to: int = 6,
 ) -> DataFrame:
     """Expected Calibration Error — the one-number companion to
     :func:`isotonic_calibrate` and the ``calibration_bins`` reliability
@@ -1021,5 +1010,5 @@ def ece(
     return folded.select(
         "n",
         "n_bins_used",
-        F.round(F.col("__wsum") / F.col("n").cast("double"), round_to).alias("ece"),
+        F.round(F.col("__wsum") / F.col("n").cast("double"), fn.NDIGITS).alias("ece"),
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from backend_spark import functions as fn
 from backend_spark.operators.graph import cluster_labels
 from backend_spark.scale import stage
 
@@ -168,8 +169,6 @@ def pair_features(
     hash join on the record id — no blocking logic here, that already
     happened upstream.
     """
-    from backend_spark import functions as fn
-
     spec: list[tuple[str, str]] = []
     for attr, kinds in features.items():
         if attr not in records.columns:
@@ -196,7 +195,7 @@ def pair_features(
         elif kind == "jw":
             c = F.round(fn.jw(a, b), 4)
         else:
-            c = F.round(F.abs(a.cast("double") - b.cast("double")), 6)
+            c = F.round(F.abs(a.cast("double") - b.cast("double")), fn.NDIGITS)
         cols.append(c.alias(f"f_{attr}_{kind}"))
     return j.select(left_col, right_col, *cols)
 
@@ -247,10 +246,10 @@ def blocking_eval(
         "n_found",
         F.when(
             F.col("n_gold") > 0,
-            F.round(F.col("n_found") / F.col("n_gold"), 6),
+            F.round(F.col("n_found") / F.col("n_gold"), fn.NDIGITS),
         ).alias("pair_completeness"),
         F.round(
-            F.lit(1.0) - F.col("n_candidates") / F.lit(float(total_pairs)), 6
+            F.lit(1.0) - F.col("n_candidates") / F.lit(float(total_pairs)), fn.NDIGITS
         ).alias("reduction_ratio"),
     )
 
@@ -340,7 +339,6 @@ def fs_weights(
     feature_cols: list[str],
     label_col: str,
     smoothing: float = 0.5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Fellegi-Sunter match-weight estimation from labeled pairs — the
     classical probabilistic-record-linkage step the reference leaves to
@@ -367,7 +365,7 @@ def fs_weights(
     explode of the 1-row result.  No per-feature jobs, no shuffle
     beyond the aggregate.  Counts are exact BIGINTs; the probabilities
     and log2 weights are the only floating step, rounded to
-    ``round_to`` so the output hashes identically cross-engine.
+    ``fn.NDIGITS`` so the output hashes identically cross-engine.
     """
     missing = [c for c in [*feature_cols, label_col] if c not in pairs.columns]
     if missing:
@@ -391,10 +389,10 @@ def fs_weights(
         rows.append(
             F.struct(
                 F.lit(c).alias("feature"),
-                F.round(m, round_to).alias("m_prob"),
-                F.round(u, round_to).alias("u_prob"),
-                F.round(F.log2(m / u), round_to).alias("w_agree"),
-                F.round(F.log2((1 - m) / (1 - u)), round_to).alias("w_disagree"),
+                F.round(m, fn.NDIGITS).alias("m_prob"),
+                F.round(u, fn.NDIGITS).alias("u_prob"),
+                F.round(F.log2(m / u), fn.NDIGITS).alias("w_agree"),
+                F.round(F.log2((1 - m) / (1 - u)), fn.NDIGITS).alias("w_disagree"),
             )
         )
     return one.select(F.explode(F.array(*rows)).alias("__s")).select("__s.*")
@@ -405,7 +403,6 @@ def fs_score(
     weights: DataFrame,
     feature_cols: list[str] | None = None,
     out_col: str = "match_weight",
-    round_to: int = 6,
 ) -> DataFrame:
     """Apply :func:`fs_weights` output to (any) candidate pairs: total
     match weight = Σ per-feature w_agree (agreeing) / w_disagree
@@ -431,7 +428,7 @@ def fs_score(
         total = total + F.when(_agrees(c), F.lit(float(wrows[c]["w_agree"]))).otherwise(
             F.lit(float(wrows[c]["w_disagree"]))
         )
-    return pairs.withColumn(out_col, F.round(total, round_to))
+    return pairs.withColumn(out_col, F.round(total, fn.NDIGITS))
 
 
 def key_collision(
@@ -465,8 +462,6 @@ def key_collision(
     Output: (key, n_rows, n_variants, canonical), keys with at least
     ``min_variants`` distinct variants.
     """
-    from backend_spark import functions as fn
-
     if min_variants < 1:
         raise ValueError(f"key_collision: min_variants must be >= 1, got {min_variants}")
     if col not in df.columns:
@@ -617,7 +612,6 @@ def fs_em(
     init_p: float = 0.1,
     init_m: float = 0.9,
     init_u: float = 0.1,
-    ndigits: int = 6,
 ) -> DataFrame:
     """UNSUPERVISED Fellegi-Sunter estimation via EM over agreement
     patterns (Winkler 1988; the algorithm behind Splink) — when no
@@ -701,11 +695,11 @@ def fs_em(
     out = [
         (
             c,
-            round(m[i], ndigits),
-            round(u[i], ndigits),
-            round(math.log2(m[i] / u[i]), ndigits),
-            round(math.log2((1.0 - m[i]) / (1.0 - u[i])), ndigits),
-            round(p, ndigits),
+            round(m[i], fn.NDIGITS),
+            round(u[i], fn.NDIGITS),
+            round(math.log2(m[i] / u[i]), fn.NDIGITS),
+            round(math.log2((1.0 - m[i]) / (1.0 - u[i])), fn.NDIGITS),
+            round(p, fn.NDIGITS),
         )
         for i, c in enumerate(feature_cols)
     ]

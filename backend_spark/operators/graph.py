@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from backend_spark import functions as fn
-from backend_spark.scale import stage
+from backend_spark.scale import check_group_cap, stage
 
 
 def _cut(df: DataFrame, read: Column) -> "tuple[DataFrame, object]":
@@ -135,50 +135,6 @@ def connected_components(
     raise _no_fixpoint("connected_components", "max_iter", max_iter)
 
 
-def check_cluster_cap(
-    comp: DataFrame,
-    max_cluster_size: "int | None",
-    op_name: str,
-    node_col: str = "node",
-    comp_col: str = "comp",
-    remedy: "str | None" = None,
-) -> None:
-    """Fail fast when a connected component exceeds ``max_cluster_size``
-    — the shared guard behind er_resolve / dedup's cluster consumers.
-    A mega-cluster means upstream blocking/banding collapsed (a blank
-    key matching everything); downstream per-cluster work would then
-    funnel the corpus through one task or OOM an executor mid-shuffle.
-    Raising early with the offending cluster ids turns that opaque
-    death into an actionable message (inspect with ``skew_report``).
-
-    Count-only aggregate on the (node, comp) labels — never touches
-    row data; no-op when ``max_cluster_size`` is None.
-    """
-    if max_cluster_size is None:
-        return
-    if max_cluster_size < 1:
-        raise ValueError(
-            f"max_cluster_size must be >= 1 or None, got {max_cluster_size}"
-        )
-    oversized = (
-        comp.groupBy(comp_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_cluster_size)
-        .orderBy(F.desc("n"), comp_col)
-        .limit(5)
-        .collect()
-    )
-    if oversized:
-        detail = ", ".join(f"{r[comp_col]}={r['n']}" for r in oversized)
-        raise ValueError(
-            f"{op_name}: cluster(s) exceed max_cluster_size="
-            f"{max_cluster_size} (largest: {detail}); "
-            + (remedy if remedy is not None else
-               "upstream blocking is likely broken — inspect with "
-               "skew_report or raise the cap")
-        )
-
-
 def cluster_labels(
     records: DataFrame,
     id_col: str,
@@ -193,9 +149,10 @@ def cluster_labels(
     record's cluster over ``pairs`` (``left``, ``right``).  Components
     run over the pair endpoints only; a record in no pair is its own
     singleton (one left join + coalesce).  ``max_cluster_size`` runs
-    :func:`check_cluster_cap` on the pair ids' labels first."""
+    :func:`~backend_spark.scale.check_group_cap` on the pair ids'
+    labels first."""
     cc = connected_components(pairs, src=left, dst=right)
-    check_cluster_cap(cc, max_cluster_size, op_name)
+    check_group_cap(cc, ["comp"], max_cluster_size, op_name)
     return records.join(
         cc.select(F.col("node").alias(id_col), F.col("comp").alias("cluster")),
         id_col,
@@ -255,7 +212,7 @@ def node_metrics(
                     F.when(F.col("degree") < 2, F.lit(0.0)).otherwise(
                         2.0 * F.col("triangles") / (F.col("degree") * (F.col("degree") - 1.0))
                     ),
-                    6,
+                    fn.NDIGITS,
                 ),
             )
         if "triangles" not in metrics:
@@ -309,7 +266,7 @@ def pagerank(
     alpha: float = 0.85,
     max_iter: int = 20,
     tol: float = 1.0e-6,
-    round_to: int | None = 6,
+    round_to: int | None = fn.NDIGITS,
 ) -> DataFrame:
     """PageRank on the undirected matched-pairs graph (networkx
     semantics: damping ``alpha``, uniform 1/N start, L1 convergence at
@@ -319,7 +276,9 @@ def pagerank(
     Each iteration is one equi-join + one hash aggregate on node ids
     (map-side combinable), lineage truncated per round — the same
     shuffle budget as a groupBy per iteration, no driver-side state
-    (see :func:`_random_walk`).  Returns (node, pagerank).
+    (see :func:`_random_walk`).  Returns (node, pagerank), rounded to
+    ``round_to`` places; ``round_to=None`` returns the raw power
+    iteration.
     """
     sym = _sym_edges(edges, src, dst).transform(stage, eager=False)
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("__deg"))
@@ -406,7 +365,7 @@ def personalized_pagerank(
     dst: str = "dst",
     alpha: float = 0.85,
     max_iter: int = 10,
-    round_to: int | None = 6,
+    round_to: int | None = fn.NDIGITS,
 ) -> DataFrame:
     """Personalized PageRank: random walks restart at the ``sources``
     set instead of uniformly — the locality-aware ranking behind
@@ -422,7 +381,7 @@ def personalized_pagerank(
 
     Scale shape: :func:`pagerank`'s shuffle budget; the teleport set is
     a broadcast literal, never a join.  Returns (node, ppr) for every
-    node of the graph.
+    node of the graph, rounded like :func:`pagerank`'s.
     """
     if not sources:
         raise ValueError("personalized_pagerank: sources must be non-empty")
@@ -442,7 +401,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 8,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """HITS hubs-and-authorities on the DIRECTED edge list (Kleinberg
     1999) — the link-graph quality signal for web-corpus curation:
@@ -460,9 +418,8 @@ def hits(
     and normalizes ONCE at the end by the exact integer L1 totals (two
     correctly-rounded IEEE divides).  Keep ``max_iter`` modest: the
     vectors grow like (principal eigenvalue)^(2k); BIGINT holds ~2^62,
-    so e.g. mean-degree-100 graphs cap at max_iter ≈ 4 — raise
-    ``round_to`` precision questions, not correctness ones, beyond
-    that (the guard below raises on overflow risk via ANSI sum).
+    so e.g. mean-degree-100 graphs cap at max_iter ≈ 4 — beyond that
+    the guard below raises on overflow risk via ANSI sum.
 
     Scale shape: per half-iteration ONE node-keyed equi-join + ONE
     map-side-combinable hash aggregate, lineage cut each round —
@@ -500,18 +457,13 @@ def hits(
     totals = joined.agg(
         F.sum("__h").alias("__th"), F.sum("__a").alias("__ta")
     )
-    out = joined.join(F.broadcast(totals)).select(
+    hub = F.when(F.col("__th") > 0, F.col("__h") / F.col("__th")).otherwise(F.lit(0.0))
+    auth = F.when(F.col("__ta") > 0, F.col("__a") / F.col("__ta")).otherwise(F.lit(0.0))
+    return joined.join(F.broadcast(totals)).select(
         "node",
-        F.when(F.col("__th") > 0, F.col("__h") / F.col("__th")).otherwise(F.lit(0.0)).alias("hub"),
-        F.when(F.col("__ta") > 0, F.col("__a") / F.col("__ta")).otherwise(F.lit(0.0)).alias(
-            "authority"
-        ),
+        F.round(hub, fn.NDIGITS).alias("hub"),
+        F.round(auth, fn.NDIGITS).alias("authority"),
     )
-    if round_to is not None:
-        out = out.withColumn("hub", F.round("hub", round_to)).withColumn(
-            "authority", F.round("authority", round_to)
-        )
-    return out
 
 
 def op_clique(
@@ -652,7 +604,6 @@ def closeness_centrality(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 30,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Exact closeness centrality for every node (networkx default
     semantics, i.e. Wasserman-Faust improved:
@@ -682,14 +633,13 @@ def closeness_centrality(
     per_src = known.groupBy("s").agg(
         F.count(F.lit(1)).alias("__r"), F.sum("d").alias("__sum")
     )
-    c = (
+    c = F.round(
         F.when(F.col("__sum") > 0,
                ((F.col("__r") - 1) / F.lit(n_nodes - 1))
                * ((F.col("__r") - 1) / F.col("__sum")))
-        .otherwise(F.lit(0.0))
+        .otherwise(F.lit(0.0)),
+        fn.NDIGITS,
     )
-    if round_to is not None:
-        c = F.round(c, round_to)
     return per_src.select(F.col("s").alias("node"), c.alias("closeness"))
 
 
@@ -708,7 +658,6 @@ def eigenvector_centrality(
     dst: str = "dst",
     max_iter: int = 30,
     tol: float = 1.0e-6,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Eigenvector centrality by power iteration (networkx
     ``eigenvector_centrality`` semantics: uniform 1/N start,
@@ -773,17 +722,13 @@ def eigenvector_centrality(
                 f"(L1 delta never dropped below n*tol); raise max_iter or pass "
                 f"tol=0 for an explicit fixed-round run"
             )
-    out = x.select("node", F.col("__x").alias("eigenvector"))
-    if round_to is not None:
-        out = out.withColumn("eigenvector", F.round("eigenvector", round_to))
-    return out
+    return x.select("node", F.round("__x", fn.NDIGITS).alias("eigenvector"))
 
 
 def square_clustering(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Square (C4) clustering coefficient per node — networkx
     ``square_clustering`` (Lind et al. 2005), the last metric of the
@@ -841,9 +786,9 @@ def square_clustering(
         F.sum("sq").alias("num"),
         F.sum(F.col("ku") - F.col("degm") + F.col("kw") - F.col("degm") + F.col("sq")).alias("pot"),
     )
-    c = F.when(F.col("pot") > 0, F.col("num") / F.col("pot")).otherwise(F.lit(0.0))
-    if round_to is not None:
-        c = F.round(c, round_to)
+    c = F.round(
+        F.when(F.col("pot") > 0, F.col("num") / F.col("pot")).otherwise(F.lit(0.0)), fn.NDIGITS
+    )
     return (
         deg.join(agg, "node", "left")
         .select("node", F.coalesce(c, F.lit(0.0)).alias("square_clustering"))
@@ -856,7 +801,6 @@ def closeness_centrality_approx(
     dst: str = "dst",
     max_hops: int = 30,
     lg_config_k: int = 12,
-    round_to: int | None = 6,
     exact_sets: bool = False,
 ) -> DataFrame:
     """Approximate closeness centrality via the ANF/HyperANF
@@ -933,14 +877,13 @@ def closeness_centrality_approx(
             break
     else:
         raise _no_fixpoint("closeness_centrality_approx", "max_hops", max_hops)
-    c = (
+    c = F.round(
         F.when(F.col("__sumdist") > 0,
                ((F.col("__est") - 1) / F.lit(float(n_nodes - 1)))
                * ((F.col("__est") - 1) / F.col("__sumdist")))
-        .otherwise(F.lit(0.0))
+        .otherwise(F.lit(0.0)),
+        fn.NDIGITS,
     )
-    if round_to is not None:
-        c = F.round(c, round_to)
     return state.select("node", c.alias("closeness"))
 
 
@@ -1045,7 +988,6 @@ def link_prediction(
     src: str = "src",
     dst: str = "dst",
     max_degree: int | None = None,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Common-neighbor link prediction over the undirected simple
     graph: for every NON-adjacent pair (u < v) sharing at least one
@@ -1091,21 +1033,16 @@ def link_prediction(
     )
     du = deg.select(F.col("w").alias("u"), F.col("dw").alias("__du"))
     dv = deg.select(F.col("w").alias("v"), F.col("dw").alias("__dv"))
-    out = pairs.join(du, "u").join(dv, "v").select(
+    jaccard = F.col("common_neighbors").cast("double") / (
+        F.col("__du") + F.col("__dv") - F.col("common_neighbors")
+    )
+    return pairs.join(du, "u").join(dv, "v").select(
         "u",
         "v",
         "common_neighbors",
-        (
-            F.col("common_neighbors").cast("double")
-            / (F.col("__du") + F.col("__dv") - F.col("common_neighbors"))
-        ).alias("jaccard"),
-        "adamic_adar",
+        F.round(jaccard, fn.NDIGITS).alias("jaccard"),
+        F.round("adamic_adar", fn.NDIGITS).alias("adamic_adar"),
     )
-    if round_to is not None:
-        out = out.withColumn("jaccard", F.round("jaccard", round_to)).withColumn(
-            "adamic_adar", F.round("adamic_adar", round_to)
-        )
-    return out
 
 
 def modularity(
@@ -1115,7 +1052,6 @@ def modularity(
     dst: str = "dst",
     node_col: str = "node",
     community_col: str = "community",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Newman modularity Q of a community assignment over the
     undirected simple graph: Q = Σ_c (e_c / m − (d_c / 2m)²), with
@@ -1167,7 +1103,7 @@ def modularity(
         (F.first("__2m") / 2).cast("long").alias("n_edges"),
         F.round(
             fn.ordered_sum(F.col("__ca"), F.col("__term")),
-            ndigits,
+            fn.NDIGITS,
         ).alias("modularity"),
     )
 
@@ -1312,7 +1248,6 @@ def bipartite_projection(
     right_col: str,
     min_common: int = 2,
     max_left_degree: "int | None" = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Project a bipartite incidence (user-item, order-part,
     doc-entity) onto its RIGHT side: for every pair of right nodes
@@ -1333,8 +1268,8 @@ def bipartite_projection(
     edge set, so the similarity stays a true Jaccard of the surviving
     neighbor sets.  Edges are deduplicated first
     (simple-graph semantics), so multiplicities don't inflate counts.
-    Jaccard is a single division of exact integers (rounded
-    ``round_to``).  No cross product, no collect.
+    Jaccard is a single division of exact integers, rounded to
+    ``fn.NDIGITS``.  No cross product, no collect.
     """
     if min_common < 1:
         raise ValueError(f"bipartite_projection: min_common must be >= 1, got {min_common}")
@@ -1374,7 +1309,7 @@ def bipartite_projection(
             F.round(
                 F.col("common").cast("double")
                 / (F.col("__da") + F.col("__db") - F.col("common")).cast("double"),
-                round_to,
+                fn.NDIGITS,
             ).alias("jaccard"),
         )
     )

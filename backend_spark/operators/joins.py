@@ -342,7 +342,6 @@ def geo_join(
     right_id: str,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    ndigits_km: int = 1,
 ) -> DataFrame:
     """Radius join on coordinates — the geo-blocking counterpart of the
     fuzzy text joins (the reference scores geo distance in its scoring
@@ -359,8 +358,8 @@ def geo_join(
     matches beyond ~60°.  Lon cell ids wrap at the antimeridian
     (pmod), so candidates survive the ±180° seam.  The join is a plain
     (lat_cell, lon_cell) equi-join — shuffle-keyed blocking, no cross
-    product — followed by the exact haversine verify (rounded to
-    ``ndigits_km``, the scoring library's precision).  Returns
+    product — followed by the exact haversine verify, rounded to 1
+    place (the scoring library's precision, not ``fn.NDIGITS``).  Returns
     (left_id, right_id, dist_km).
     """
     from backend_spark import functions as fn
@@ -410,7 +409,7 @@ def geo_join(
     )
     dist = fn.haversine_km(F.col("__la"), F.col("__lo"), F.col("__ra"), F.col("__ro"))
     out = (
-        cand.withColumn("dist_km", F.round(dist, ndigits_km))
+        cand.withColumn("dist_km", F.round(dist, 1))
         .where(F.col("dist_km") <= radius_km)
         .select(left_id, right_id, "dist_km")
     )

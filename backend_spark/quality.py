@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from backend_spark import functions as fn
+
 _CHECKS = ("not_null", "unique", "min", "max", "in_set", "regex")
 
 
@@ -274,7 +276,6 @@ def cidr_filter(
     explodes into 256 bins; typical blocklists (/16../24) take 1-2.
     Malformed addresses/CIDRs are NULL and never match.
     """
-    from backend_spark import functions as fn
     from backend_spark.operators.joins import range_join
 
     pts = df.withColumn("__ip", fn.ipv4_long(F.col(ip_col))).where(
@@ -316,8 +317,6 @@ def table_checksum(
     (scientific-notation thresholds differ) — pre-round or format them
     explicitly before checksumming.
     """
-    from backend_spark import functions as fn
-
     use = list(cols) if cols is not None else list(df.columns)
     missing = [c for c in use if c not in df.columns]
     if missing:
@@ -350,7 +349,6 @@ def ab_test(
     conv_col: str,
     control: str,
     z_crit: float = 1.96,
-    round_to: int = 6,
 ) -> DataFrame:
     """Two-proportion z-test of every treatment arm against the named
     control — the go/no-go readout of an experiment exposure log
@@ -401,12 +399,12 @@ def ab_test(
         "arm",
         "n",
         "conv",
-        F.round(p_t, round_to).alias("rate"),
+        F.round(p_t, fn.NDIGITS).alias("rate"),
         "control_n",
         "control_conv",
-        F.round(p_c, round_to).alias("control_rate"),
-        F.round(p_t - p_c, round_to).alias("lift"),
-        F.round(z, round_to).alias("z"),
+        F.round(p_c, fn.NDIGITS).alias("control_rate"),
+        F.round(p_t - p_c, fn.NDIGITS).alias("lift"),
+        F.round(z, fn.NDIGITS).alias("z"),
         F.when(z.isNotNull(), F.abs(z) >= z_crit).alias("significant"),
     )
 
@@ -485,7 +483,6 @@ def disparate_impact(
     outcome_col: str,
     reference: str,
     threshold: float = 0.8,
-    round_to: int = 6,
 ) -> DataFrame:
     """Disparate-impact audit — per-group positive-outcome rates and
     their ratio to a named reference group, flagged by the four-fifths
@@ -523,9 +520,9 @@ def disparate_impact(
             "group",
             "n",
             "positives",
-            F.round(rate, round_to).alias("rate"),
-            F.round(F.col("__ref"), round_to).alias("ref_rate"),
-            F.round(ratio, round_to).alias("di_ratio"),
+            F.round(rate, fn.NDIGITS).alias("rate"),
+            F.round(F.col("__ref"), fn.NDIGITS).alias("ref_rate"),
+            F.round(ratio, fn.NDIGITS).alias("di_ratio"),
             F.when(ratio.isNotNull(), ratio < threshold).alias("adverse"),
         )
     )
@@ -573,7 +570,6 @@ def ri_check(
     fact_key: str,
     dim_key: "str | None" = None,
     top_k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Referential-integrity audit (the dbt ``relationships`` test at
     scale): how many fact rows point at a dimension key that does not
@@ -620,7 +616,7 @@ def ri_check(
         )
     )
     n_orphans = orphans.agg(F.coalesce(F.sum("cnt"), F.lit(0))).collect()[0][0]
-    rate = round((n_orphans + nulls) / n_facts, round_to) if n_facts else None
+    rate = round((n_orphans + nulls) / n_facts, fn.NDIGITS) if n_facts else None
     summary = spark.createDataFrame(
         [("summary", None, int(n_facts), rate), ("null", None, int(nulls), None)],
         "kind string, key string, n long, orphan_rate double",

@@ -15,6 +15,8 @@ import operator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from backend_spark import functions as fn
+
 _AGG = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 STAGE_MODE_CONF = "spark.backend_spark.stage.mode"
@@ -372,7 +374,6 @@ def skew_report(
     df: DataFrame,
     keys: list[str] | str,
     top_k: int = 5,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Pre-flight skew diagnostic for a planned groupBy/join key: the
     ``top_k`` heaviest key values with their row counts, corpus share,
@@ -414,14 +415,56 @@ def skew_report(
         "rank",
         "key",
         "cnt",
-        F.round(F.col("cnt") / F.col("n_rows"), ndigits).alias("share"),
-        F.round(F.col("cnt") * F.col("n_keys") / F.col("n_rows"), ndigits).alias("skew"),
+        F.round(F.col("cnt") / F.col("n_rows"), fn.NDIGITS).alias("share"),
+        F.round(F.col("cnt") * F.col("n_keys") / F.col("n_rows"), fn.NDIGITS).alias("skew"),
         "n_keys",
-        F.round(F.col("n_rows").cast("double") / F.col("n_keys"), ndigits).alias("mean_sz"),
+        F.round(F.col("n_rows").cast("double") / F.col("n_keys"), fn.NDIGITS).alias("mean_sz"),
         "p50_sz",
         "p99_sz",
         "max_sz",
     )
+
+
+def check_group_cap(
+    df: DataFrame,
+    keys: "list[str]",
+    cap: "int | None",
+    op_name: str,
+    cap_name: str = "max_cluster_size",
+    remedy: str = (
+        "a cluster this large means upstream blocking is likely broken — "
+        "inspect with skew_report or raise the cap"
+    ),
+) -> None:
+    """Fail fast when a group of ``df`` by ``keys`` holds more than
+    ``cap`` rows — the shared size guard in front of work that is
+    quadratic or single-task per group (er_resolve / dedup clusters,
+    semdedup's in-cluster pairs, theil_sen's pairwise slopes).  A
+    mega-group would funnel the corpus through one task or OOM an
+    executor mid-shuffle; raising first with the largest offenders
+    (up to 5, as ``key=rows``) turns that opaque death into an
+    actionable message naming ``op_name``, ``cap_name`` and ``remedy``.
+
+    One count-only keyed aggregate, collected at build time; no-op when
+    ``cap`` is None.
+    """
+    if cap is None:
+        return
+    if cap < 1:
+        raise ValueError(f"{cap_name} must be >= 1 or None, got {cap}")
+    oversized = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > cap)
+        .orderBy(F.desc("n"), *keys)
+        .limit(5)
+        .collect()
+    )
+    if oversized:
+        detail = ", ".join(f"{'|'.join(str(r[k]) for k in keys)}={r['n']}" for r in oversized)
+        raise ValueError(
+            f"{op_name}: group(s) exceed {cap_name}={cap} (largest: {detail}); {remedy}"
+        )
 
 
 def hll_distinct(
@@ -429,7 +472,6 @@ def hll_distinct(
     value_col: str,
     group_cols: list[str] | None = None,
     p: int = 8,
-    ndigits: int = 2,
 ) -> DataFrame:
     """Mergeable HyperLogLog distinct-count estimate built from scratch
     on deterministic md5 hashing (Flajolet et al. 2007) — the sketch
@@ -452,7 +494,8 @@ def hll_distinct(
 
     One keyed aggregate reducing each group to ≤ m register rows, then
     a per-group fold — the data shuffles once, pre-combined map-side.
-    Returns group_cols + (n_registers, distinct_est).
+    Returns group_cols + (n_registers, distinct_est), the estimate
+    rounded to 2 places (its oracle's precision, not ``fn.NDIGITS``).
     """
     if not (4 <= p <= 16):
         raise ValueError(f"p must be in [4, 16], got {p}")
@@ -460,8 +503,6 @@ def hll_distinct(
     m = 1 << p
     w = 60 - p  # md5_long yields 60 bits (15 hex chars)
     alpha_mm = (0.7213 / (1.0 + 1.079 / m)) * m * m
-    from backend_spark import functions as fn
-
     staged = df.select(
         *keys, fn.md5_long(F.col(value_col).cast("string")).alias("__h")
     )
@@ -488,7 +529,7 @@ def hll_distinct(
         F.lit(float(m)) * F.log(F.lit(float(m)) / v_empty),
     ).otherwise(e_raw)
     return folded.select(
-        *keys, "n_registers", F.round(est, ndigits).alias("distinct_est")
+        *keys, "n_registers", F.round(est, 2).alias("distinct_est")
     )
 
 
@@ -635,7 +676,6 @@ def rollup_merge(
     keys: list[str] | str,
     value_cols: list[str] | str,
     scale: int = 1_000_000,
-    ndigits: int = 6,
 ) -> DataFrame:
     """Fold a union of :func:`rollup_partials` batches into the final
     rollup: counts and fixed-point sums add, mins/maxes extremize —
@@ -643,7 +683,7 @@ def rollup_merge(
     the identical result (the invariant the tests pin by comparing a
     two-batch merge against the direct single-pass aggregate).  Emits
     per key: ``n_rows`` and each column's (n, sum, min, max, avg), sums
-    and avgs descaled to doubles rounded ``ndigits``.
+    and avgs descaled to doubles rounded to ``fn.NDIGITS``.
 
     Merging touches |keys| × n_batches aggregate rows only — the raw
     data is never re-read; this is incremental view maintenance, the
@@ -666,11 +706,11 @@ def rollup_merge(
         s = F.col(f"__sum_{c}").cast("double") / F.lit(float(scale))
         out_cols += [
             F.col(f"{c}_n"),
-            F.round(s, ndigits).alias(f"{c}_sum"),
+            F.round(s, fn.NDIGITS).alias(f"{c}_sum"),
             F.col(f"{c}_min"),
             F.col(f"{c}_max"),
             F.round(
-                F.when(F.col(f"{c}_n") > 0, s / F.col(f"{c}_n")), ndigits
+                F.when(F.col(f"{c}_n") > 0, s / F.col(f"{c}_n")), fn.NDIGITS
             ).alias(f"{c}_avg"),
         ]
     return merged.select(*out_cols)

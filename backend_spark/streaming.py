@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from backend_spark import functions as fn
+
 
 def read_stream(
     spark: SparkSession,
@@ -238,8 +240,6 @@ def pack_stream(
     stateful operator at 100 TB/day.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from backend_spark import functions as fn
 
     shard = (
         fn.md5_long(F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))) % shards
@@ -663,14 +663,14 @@ def cusum_stream(
         his, los, alarms = [], [], []
         for raw in pdf[value_col]:
             if raw is None or (isinstance(raw, float) and raw != raw):
-                his.append(round(s_hi / scale, 6))
-                los.append(round(s_lo / scale, 6))
+                his.append(round(s_hi / scale, fn.NDIGITS))
+                los.append(round(s_lo / scale, fn.NDIGITS))
                 alarms.append(int(s_hi > h_scaled or s_lo > h_scaled))
                 continue
             s_hi = max(0, s_hi + _half_up((raw - tgt - slack) * scale))
             s_lo = max(0, s_lo + _half_up((tgt - raw - slack) * scale))
-            his.append(round(s_hi / scale, 6))
-            los.append(round(s_lo / scale, 6))
+            his.append(round(s_hi / scale, fn.NDIGITS))
+            los.append(round(s_lo / scale, fn.NDIGITS))
             alarms.append(int(s_hi > h_scaled or s_lo > h_scaled))
         state.update((str(s_hi), str(s_lo)))
         yield pdf.assign(cusum_hi=his, cusum_lo=los, cusum_alarm=alarms)[

@@ -325,3 +325,25 @@ def test_null_group_key_is_a_group(spark, op):
     )
     assert rows_of(got) == rows_of(want)
     assert got.where(F.col("grp").isNull()).count() > 0
+
+
+def test_source_overlap_null_source_is_a_source(spark):
+    # one text in sources a, a, b, NULL, NULL: the NULL source pairs with
+    # a and b, as the same source under an unused name does
+    from backend_spark import llm
+
+    df = spark.createDataFrame(
+        [(i, s, "the quick brown fox jumps") for i, s in enumerate(["a", "a", "b", None, None])],
+        "id long, src string, t string",
+    )
+
+    def matrix(d):
+        return sorted(
+            (repr((r.src_a, r.src_b, r.grams_a, r.shared, r.overlap))
+             for r in llm.source_overlap(d, "id", "t", "src", n=3).collect())
+        )
+
+    got = matrix(df)
+    want = matrix(df.withColumn("src", F.coalesce(F.col("src"), F.lit(_SENTINEL))))
+    assert got == sorted(w.replace(repr(_SENTINEL), "None") for w in want)
+    assert len(got) == 6 and "(None, 'a', 3, 3, 1.0)" in got

@@ -256,7 +256,7 @@ def test_semdedup_prefix_rule_drops_superset_of_kept_only(_spark, steps):
     def cos_r(u, v):
         num = u[0] * v[0] + u[1] * v[1]
         den = math.sqrt(u[0] ** 2 + u[1] ** 2) * math.sqrt(v[0] ** 2 + v[1] ** 2)
-        return round(num / den, 6)  # same round_to=6 as the operator
+        return round(num / den, 6)  # the operator rounds to fn.NDIGITS = 6
 
     # reference kept-only SemDeDup: sequential scan in id order
     kept = []
